@@ -42,7 +42,7 @@ def _best(fn, repeats=3):
 
 def run_phases(spark) -> dict:
     from stream_lib_spark.agg import (
-        SketchSpec, _prepare_input, collect_sketch, sketch_agg, sketch_partials,
+        STATE_COL, SketchSpec, _project, collect_sketch, sketch_agg, sketch_partials,
     )
 
     li = spark.read.parquet(f"{bench.SF_DIR}/lineitem.parquet")
@@ -50,7 +50,7 @@ def run_phases(spark) -> dict:
 
     def phases(name, df, col, spec):
         spark.sparkContext.setJobDescription(f"{name}: scan+hash only")
-        prepared, _ = _prepare_input(df, [], col, spec)
+        prepared, _ = _project(df, [], {STATE_COL: (col, spec)})
         out[f"{name}.scan_hash"] = _best(lambda: _noop(prepared))
         spark.sparkContext.setJobDescription(f"{name}: + partial build")
         out[f"{name}.partials"] = _best(

@@ -1,18 +1,25 @@
 """Spark aggregation layer: sketch states as distributed aggregates.
 
 Topology (the reference's advertised map-reduce contract,
-``quantile/TDigest.java:48``, made explicit):
+``quantile/TDigest.java:48``, made explicit).  ONE pipeline serves every
+entry point and any number of sketches per scan:
 
-1. **partial** — ``mapInPandas`` over each input partition: vectorized
-   numpy update of one sketch per (grouping key) per partition, emitted
-   as a single BinaryType row per key.  This is the map-side combine:
-   the shuffle moves O(partitions × keys) sketch blobs, never rows.
-2. **(optional) fan-in** — for global aggregates over many partitions,
+1. **projection** — one N-column projection: JVM-side hashing /
+   casting of each requested column (``_project``).
+2. **partial** — a batch source (the projected DataFrame, or the direct
+   parquet row-group read) feeds one kernel per shape: ``mapInArrow``
+   (global) or ``mapInPandas`` (keyed) vectorized numpy updates of one
+   sketch per (grouping key) per task, emitted as one BinaryType column
+   per sketch.  This is the map-side combine: the shuffle moves
+   O(partitions × keys) sketch blobs, never rows.
+3. **(optional) fan-in** — for global aggregates over many partitions,
    an intermediate ``groupBy(pmod(partial_id, fan_in))`` merge level
    bounds reduce-side state (SURVEY.md §4 item 2).
-3. **merge** — ``groupBy(keys).applyInPandas``: fold partials with the
-   sketch's monoid merge.
-4. **finalize** — estimate/quantile/top-k, driver-side or via UDF.
+4. **merge** — fold partials with the sketch's monoid merge: keyed by
+   ``repartition(keys)`` + ``mapInPandas``, global by
+   ``repartition(1)`` or, below the fan-in threshold, on the driver in
+   ``collect_sketch``.  Every fold is ``_fold``.
+5. **finalize** — estimate/quantile/top-k, driver-side or via UDF.
 
 Hashing happens **JVM-side** (``F.xxhash64``, whole-stage codegen) by
 default, so the Python worker only ever sees int64 hashes / float64
@@ -21,7 +28,7 @@ values through Arrow — no per-row Python anywhere.  A murmur64 mode
 reference's MurmurHash64A dispatch (``hash/MurmurHash.java:135-217``).
 
 Skew: value-skew in the data (hot conv_id/tool values) is absorbed by
-step 1 — every input partition contributes at most one partial per key,
+step 2 — every input partition contributes at most one partial per key,
 so a key seen in every row still produces only #partitions blobs.
 ``salted_split`` is provided for the *exact* aggregation paths (oracle
 queries, top-k reconciliation) where Spark's groupBy would shuffle raw
@@ -30,6 +37,8 @@ rows.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import urllib.parse
 from collections.abc import Iterator
@@ -39,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .hashing import murmur64a_array, murmur64a_chunked, xxhash64_long
 from .sketches.base import (
@@ -210,31 +220,60 @@ class SketchSpec:
         return sk
 
 
-def _prepare_input(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
-                   hash_mode: str = "xxhash64") -> tuple[DataFrame, bool]:
-    """Project to (keys..., __in) with JVM-side hashing / casting where
-    possible.  Returns (df, python_hash) — python_hash=True means the
-    Python side must murmur-hash the raw items itself."""
-    mode = spec.input_mode
-    kc = [F.col(k) for k in keys]
-    df = df.where(F.col(col).isNotNull())  # offer(null) is a no-op; also
-    # keeps xxhash64(NULL)==seed from polluting the hash domain
-    if mode == "hash":
-        if hash_mode == "xxhash64":
-            return df.select(*kc, F.xxhash64(F.col(col)).alias("__in")), False
-        # murmur parity mode: ship raw strings, hash vectorized in numpy
-        return df.select(*kc, F.col(col).cast("string").alias("__in")), True
-    if mode == "value":
-        # try_cast like the ivalue path: under ANSI mode (Spark 4
-        # default) a malformed string would otherwise abort the job
-        cast_col = F.col(col).try_cast("double")
-        return df.where(cast_col.isNotNull()).select(*kc, cast_col.alias("__in")), False
-    if mode == "ivalue":
-        # mask on the CAST: a failed long cast is null too, and a null in
-        # a keyed batch would flip the pandas column to float64
-        cast_col = F.col(col).try_cast("long")  # ANSI-safe: malformed → null
-        return df.where(cast_col.isNotNull()).select(*kc, cast_col.alias("__in")), False
-    return df.select(*kc, F.col(col).cast("string").alias("__in")), False
+
+# ---------------------------------------------------------------------------
+# The pipeline.  Every entry point (sketch_agg, multi_sketch_agg,
+# sketch_partials/merge_partials, the spark-submit CLI, the checkpoint
+# job) runs the same parts for N >= 1 sketches:
+#
+#   projection  _project: (keys..., __in_<name>...) with JVM-side
+#               hashing / casting
+#   source      classic: the projected DataFrame; direct: _row_groups,
+#               the same batches read by pyarrow inside the tasks
+#   kernel      global: _arrow_global_build; keyed: _keyed_build
+#   merge       _merge: fan-in level, keyed fold, global fold + the
+#               driver-fold marker; every blob fold is _fold
+# ---------------------------------------------------------------------------
+
+
+def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
+             hash_mode: str = "xxhash64") -> tuple[DataFrame, bool]:
+    """Project to (keys..., __in_<name>...) with JVM-side hashing /
+    casting.  A row enters only if at least one requested column is
+    non-null after its cast (offer(null) is a no-op; also keeps
+    xxhash64(NULL)==seed out of the hash domain); each column keeps its
+    own nulls for the kernel to skip.  Returns (df, python_hash) —
+    python_hash=True means the kernel murmur-hashes the raw strings of
+    hash-mode columns itself."""
+    python_hash = hash_mode != "xxhash64"
+    # with one sketch the row filter alone makes its column non-null
+    nullable = len(sketches) > 1
+    valid, proj = [], [F.col(k) for k in keys]
+    for name, (col, spec) in sketches.items():
+        c, mode = F.col(col), spec.input_mode
+        ok = c.isNotNull()
+        if mode in ("value", "ivalue"):
+            # try_cast: under ANSI mode (Spark 4 default) a malformed
+            # string would otherwise abort the job; a failed cast is null
+            expr = c.try_cast("double" if mode == "value" else "long")
+            ok = ok & expr.isNotNull()
+        elif mode == "hash" and not python_hash:
+            expr = F.xxhash64(c)
+        else:  # item, or murmur parity mode: raw strings hashed in numpy
+            expr = c.cast("string")
+        valid.append(ok)
+        if nullable and (mode == "ivalue" or (mode == "hash" and not python_hash)):
+            if keys:
+                # never ship a nullable long to pandas: one null turns the
+                # column float64 and rounds int64 payloads to 53 bits
+                # (silent HLL inflation / CMS scatter / Bloom false
+                # negatives) — ship value-or-0 plus a validity mask
+                proj += [F.coalesce(expr, F.lit(0)).alias(f"__in_{name}"),
+                         ok.alias(f"__nn_{name}")]
+                continue
+            expr = F.when(ok, expr)
+        proj.append(expr.alias(f"__in_{name}"))
+    return df.where(functools.reduce(operator.or_, valid)).select(*proj), python_hash
 
 
 def _np_from_arrow(arr, mode: str, python_hash: bool):
@@ -271,23 +310,22 @@ def _np_from_arrow(arr, mode: str, python_hash: bool):
             vc.field("counts").to_numpy())
 
 
-def _arrow_global_build(specs: dict[str, SketchSpec], modes: dict[str, str],
-                        python_hash: bool):
-    """mapInArrow kernel: fold every batch of a partition into one
-    sketch per name; emit a single binary row.
+def _arrow_global_build(specs: dict[str, SketchSpec], python_hash: bool):
+    """Global kernel (mapInArrow): fold every batch of a partition into
+    one sketch per name; emit a single binary row.
 
     r8: item-mode columns feeding Space-Saving / bottom-k are BUFFERED
     and folded in large flushes (same bounded-buffer pattern and
-    ~4M-row bound as the keyed path) instead of once per ~64k-row Arrow
-    batch: one C++ value_counts + one update over the combined chunk
-    replaces dozens, cutting the per-batch unique-count / truncation
-    overhead ~4x.  Scoped to exactly these two kinds because their
-    gate-checked outputs are batching-invariant (Space-Saving gates run
-    in the exact regime where any batching yields identical bytes, the
-    heavy-hitter guarantee holds under any fold, and bottom-k is a pure
-    min-k of hashes); reference-family and count-then-estimate item
-    sketches keep per-batch folds — their internal tip-over points are
-    batch-order-sensitive."""
+    ~4M-row bound as the keyed kernel) instead of once per ~64k-row
+    Arrow batch: one C++ value_counts + one update over the combined
+    chunk replaces dozens, cutting the per-batch unique-count /
+    truncation overhead ~4x.  Scoped to exactly these two kinds because
+    their gate-checked outputs are batching-invariant (Space-Saving
+    gates run in the exact regime where any batching yields identical
+    bytes, the heavy-hitter guarantee holds under any fold, and bottom-k
+    is a pure min-k of hashes); reference-family and
+    count-then-estimate item sketches keep per-batch folds — their
+    internal tip-over points are batch-order-sensitive."""
     _ITEM_BUFFERED_KINDS = ("spacesaving", "bottomk")
     _FLUSH_ROWS = 1 << 22
 
@@ -295,7 +333,7 @@ def _arrow_global_build(specs: dict[str, SketchSpec], modes: dict[str, str],
         states = {n: specs[n].new() for n in specs}
         buffered = [
             n for n, spec in specs.items()
-            if modes[n] == "item" and spec.kind in _ITEM_BUFFERED_KINDS
+            if spec.input_mode == "item" and spec.kind in _ITEM_BUFFERED_KINDS
             and not spec.reference_family
         ]
         bufs: dict[str, list] = {n: [] for n in buffered}
@@ -320,10 +358,10 @@ def _arrow_global_build(specs: dict[str, SketchSpec], modes: dict[str, str],
                 if n in bufs:
                     bufs[n].append(col.combine_chunks())
                     continue
-                got = _np_from_arrow(col, modes[n], python_hash)
+                got = _np_from_arrow(col, spec.input_mode, python_hash)
                 if got is None:
                     continue
-                if modes[n] == "item":
+                if spec.input_mode == "item":
                     spec.update(states[n], got[0], got[1])
                 else:
                     spec.update(states[n], got)
@@ -339,32 +377,117 @@ def _arrow_global_build(specs: dict[str, SketchSpec], modes: dict[str, str],
     return build
 
 
+def _key_groups(pdf: pd.DataFrame, keys: list[str]):
+    """(key tuple, row positions) per key group of ``pdf``; null keys
+    form their own group (dropna=False), positions keep row order.
+    Global (no keys): one group of every row."""
+    if not keys:
+        yield (), slice(None)
+        return
+    for key, idx in pdf.groupby(keys, dropna=False, sort=False).indices.items():
+        yield (key if isinstance(key, tuple) else (key,)), idx
+
+
+def _valid(pdf: pd.DataFrame, name: str) -> np.ndarray:
+    """Which rows of a keyed batch hold a value for sketch ``name``."""
+    mask = f"__nn_{name}"
+    if mask in pdf:
+        return pdf[mask].to_numpy(dtype=bool)
+    return pdf[f"__in_{name}"].notna().to_numpy()
+
+
+def _update(spec: SketchSpec, sk, arr: np.ndarray, python_hash: bool = False):
+    """Fold one key's non-null pandas input into ``sk`` by input mode."""
+    mode = spec.input_mode
+    if mode == "item":
+        vc = pd.Series(arr).value_counts()
+        return spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
+    if mode == "hash" and python_hash:
+        arr = murmur64a_array(arr.astype(object)).view(np.int64)
+    return spec.update(sk, arr.astype(np.float64 if mode == "value" else np.int64, copy=False))
+
+
+def _keyed_build(specs: dict[str, SketchSpec], keys: list[str], python_hash: bool):
+    """Keyed kernel (mapInPandas): one state per (key, sketch) per
+    partition, emitted as one (keys..., <name>...) row per key.
+
+    Batches are buffered and the per-key update flushed in larger
+    chunks: the python-call overhead is per (key x flush), so a 200-key
+    partition of N batches pays 200 update chains instead of 200*N,
+    while memory stays bounded at ~FLUSH_ROWS rows of (key,
+    int64/float64) columns (~100 MB worst case)."""
+    names = list(specs)
+    FLUSH_ROWS = 1 << 22
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        states: dict[tuple, dict] = {}
+        buf: list[pd.DataFrame] = []
+        buf_rows = 0
+
+        def flush():
+            nonlocal buf, buf_rows
+            if not buf:
+                return
+            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+            buf, buf_rows = [], 0
+            cols = {}
+            for n in names:
+                ok = _valid(pdf, n)
+                cols[n] = (pdf[f"__in_{n}"].to_numpy(), None if ok.all() else ok)
+            for key, idx in _key_groups(pdf, keys):
+                group = states.get(key)
+                if group is None:
+                    group = states[key] = {n: specs[n].new() for n in names}
+                for n, (vals, ok) in cols.items():
+                    arr = vals[idx if ok is None else idx[ok[idx]]]
+                    if len(arr):
+                        _update(specs[n], group[n], arr, python_hash)
+
+        for pdf in batches:
+            ok = np.logical_or.reduce([_valid(pdf, n) for n in names])
+            if not ok.all():
+                pdf = pdf[ok]
+            if len(pdf) == 0:
+                continue
+            buf.append(pdf)
+            buf_rows += len(pdf)
+            if buf_rows >= FLUSH_ROWS:
+                flush()
+        flush()
+        rows = [list(k) + [g[n].to_bytes() for n in names] for k, g in states.items()]
+        yield pd.DataFrame(rows, columns=keys + names)
+
+    return build
+
+
 # ---------------------------------------------------------------------------
-# r8: direct parquet row-group scan for GLOBAL sketch builds (guide §8
-# "co-locate instead of join" / §4: eliminate the JVM→Python boundary).
+# r8: direct parquet row-group read (guide §8 "co-locate instead of
+# join" / §4: eliminate the JVM→Python boundary).
 #
-# The classic global build feeds every row through Spark's
-# InternalRow→Arrow writer into the Python worker; measured floor ~0.8 s
-# per 1M-row task for a single int64 column (a no-op mapInArrow consumer
-# costs the same — the feed, not the kernel, is the cost).  When the
-# input is provably a bare local-filesystem parquet scan, the same rows
-# can be read straight off the column chunks by pyarrow INSIDE the
-# Python task (~0.02 s per 1M int64 rows), with hashing done by the
-# bit-parity ``xxhash64_long`` kernel.  Spark still distributes the
-# work: the task list is one row per parquet row group, so parallelism
-# equals the scan's natural split and scales with input size.
+# The classic build feeds every row through Spark's InternalRow→Arrow
+# writer into the Python worker; measured floor ~0.8 s per 1M-row task
+# for a single int64 column (a no-op mapInArrow consumer costs the same
+# — the feed, not the kernel, is the cost).  When the input is provably
+# a bare local-filesystem parquet scan, the same rows can be read
+# straight off the column chunks by pyarrow INSIDE the Python task
+# (~0.02 s per 1M int64 rows), with hashing done by the bit-parity
+# ``xxhash64_long`` kernel.  Spark still distributes the work: the task
+# list is one row per parquet row group, so parallelism equals the
+# scan's natural split and scales with input size.  One task reads all
+# requested columns of its row group once and feeds the same kernels.
 #
-# Strict eligibility (anything else falls back to the classic path):
-#   * global aggregate (no keys), non-reference-family, kind in
-#     _DIRECT_SCAN_KINDS: hll/cms/bloom are batching-invariant monoids
-#     (direct result BYTE-identical to the classic path — pinned by
+# Strict eligibility — EVERY sketch of the request must qualify, else
+# every sketch takes the classic path:
+#   * non-reference-family, not conservative; global kinds
+#     _DIRECT_SCAN_KINDS, keyed kinds _DIRECT_SCAN_KEYED_KINDS with
+#     string keys.  hll/cms/bloom are batching-invariant monoids (direct
+#     result BYTE-identical to the classic path — pinned by
 #     tests/test_direct_scan.py); tdigest/kll build state is
 #     batch-boundary-sensitive, so the direct result is deterministic
 #     but not byte-equal — admissible because no declared query exposes
 #     digest bytes (quantile gates output within-bound booleans, and
 #     both paths' estimates sit inside the published rank bound — also
-#     pinned by tests/test_direct_scan.py); conservative CMS is
-#     order-dependent and excluded;
+#     pinned by tests/test_direct_scan.py);
 #   * analyzed plan is a bare LogicalRelation over an unpartitioned
 #     HadoopFsRelation/Parquet (no Filter/Project/Limit above it);
 #   * every input file is file:// (an executor on another host could
@@ -376,10 +499,10 @@ def _arrow_global_build(specs: dict[str, SketchSpec], modes: dict[str, str],
 #     same footer metadata Spark itself reads — above that each file
 #     becomes one task without row-group splitting, and above
 #     $SPARK_GRAFT_DIRECT_SCAN_MAX_FILES (default 65536) the path
-#     disengages entirely (driver task-list bound).
+#     disengages entirely (driver task-list bound); a malformed knob
+#     disengages it too.
 # Kill switch: SPARK_GRAFT_DIRECT_SCAN=0.
 _DIRECT_SCAN_KINDS = ("hll", "cms", "tdigest", "kll", "bloom")
-
 
 #: kinds safe for the KEYED direct build: their per-key merged state is
 #: a batching-invariant monoid, so the result is byte-identical to the
@@ -389,13 +512,37 @@ _DIRECT_SCAN_KINDS = ("hll", "cms", "tdigest", "kll", "bloom")
 _DIRECT_SCAN_KEYED_KINDS = ("hll", "cms", "bloom")
 
 
-def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
-    """Return [(local_path, row_group_index)] for a bare local parquet
-    scan of ``df`` (row_group_index -1 = whole file), or None if the
-    plan/layout is not provably eligible.  ``cols``/``wants`` are the
-    columns the build will read and their expected arrow types (a
-    string column accepts large_string — same values either way)."""
+def _env_int(name: str, default: int) -> int | None:
+    """Integer env knob of the direct path; None (path off) if malformed."""
     try:
+        return int(os.environ.get(name, default))
+    except ValueError:
+        return None
+
+
+def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
+                  hash_mode: str) -> tuple[list, dict] | None:
+    """([(local_path, row_group_index)], {name: arrow type}) for a direct
+    read of ``sketches`` (row_group_index -1 = whole file), or None if
+    any guard refuses it."""
+    if os.environ.get("SPARK_GRAFT_DIRECT_SCAN", "1") != "1":
+        return None
+    allowed = _DIRECT_SCAN_KEYED_KINDS if keys else _DIRECT_SCAN_KINDS
+    wants: dict = {}
+    try:
+        schema = df.schema
+        if not all(isinstance(schema[k].dataType, T.StringType) for k in keys):
+            return None  # the keyed build groups via pandas; string keys only
+        for name, (col, spec) in sketches.items():
+            if spec.reference_family or spec.kind not in allowed or spec.params.get("conservative"):
+                return None
+            dtype = schema[col].dataType
+            if spec.input_mode == "hash" and hash_mode == "xxhash64" and isinstance(dtype, T.LongType):
+                wants[name] = pa.int64()
+            elif spec.input_mode == "value" and not keys and isinstance(dtype, T.DoubleType):
+                wants[name] = pa.float64()
+            else:
+                return None
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
             return None
@@ -409,16 +556,8 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
         files = df.inputFiles()
     except Exception:
         return None
-    max_files = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", "65536"))
-    if not files or len(files) > max_files:
-        return None
-    paths = []
-    for uri in files:
-        parsed = urllib.parse.urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            return None
-        paths.append(urllib.parse.unquote(parsed.path))
-    max_footers = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", "4096"))
+    max_files = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", 65536)
+    max_footers = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", 4096)
     # below ~1M total rows the path's constant cost (plan probe, footer
     # read, one extra job) exceeds the per-row feed saving — measured
     # crossover on the alternating frozen-bench A/B: 600k-row tables
@@ -426,7 +565,18 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
     # threshold is work-based, not scale-tuned: any production input is
     # far above it, and the no-footer branch (file count beyond the
     # driver's footer budget) implies scale and always engages.
-    min_rows = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", "1000000"))
+    min_rows = _env_int("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", 1000000)
+    if None in (max_files, max_footers, min_rows) or not files or len(files) > max_files:
+        return None
+    paths = []
+    for uri in files:
+        parsed = urllib.parse.urlparse(uri)
+        if parsed.scheme not in ("file", ""):
+            return None
+        paths.append(urllib.parse.unquote(parsed.path))
+    # a string column accepts large_string — same values either way
+    col_types = {k: pa.string() for k in keys}
+    col_types.update({sketches[n][0]: want for n, want in wants.items()})
     tasks: list = []
     try:
         if len(paths) <= max_footers:
@@ -435,7 +585,7 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
             total_rows = 0
             for p in paths:
                 pf = pq.ParquetFile(p)
-                for c, want in zip(cols, wants):
+                for c, want in col_types.items():
                     idx = pf.schema_arrow.get_field_index(c)
                     if idx < 0:
                         return None  # renamed/missing column: fall back
@@ -452,150 +602,59 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
             tasks = [(p, -1) for p in paths]
     except Exception:
         return None
-    return tasks or None
+    return (tasks, wants) if tasks else None
 
 
-def _direct_scan_build(tasks: list, col: str, spec: SketchSpec,
-                       want: "pa.DataType"):
-    """mapInArrow kernel over task-INDEX rows (the (path, row_group)
-    list rides in the closure — a pure-JVM Range feed, so the only
-    Python crossing is the one-row partial result): each task reads its
-    row groups' column chunk with pyarrow and folds it into one sketch;
-    emits a single partial row (same contract as the classic global
-    build)."""
-    mode = spec.input_mode
+def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
+                wants: dict):
+    """Direct batch source over task-INDEX rows (the (path, row_group)
+    list rides in the closure): each task reads its row groups' column
+    chunks with pyarrow and yields one Arrow record batch per row group
+    shaped like the projection's — (keys..., __in_<name>...), hashed by
+    ``xxhash64_long`` where the projection hashes with the JVM's
+    xxhash64, nulls kept for the kernel to skip."""
+    read = list(dict.fromkeys(keys + [col for col, _ in sketches.values()]))
 
-    def build(batches):
+    def source(id_batches):
         import pyarrow.parquet as pq
 
-        sk = spec.new()
-        for rb in batches:
-            for i in rb.column("id").to_pylist():
-                p, rg = tasks[i]
-                pf = pq.ParquetFile(p)
-                tbl = (pf.read_row_group(rg, columns=[col]) if rg >= 0
-                       else pf.read(columns=[col]))
-                arr = tbl.column(0)
-                if isinstance(arr, pa.ChunkedArray):
-                    arr = arr.combine_chunks()
-                if arr.type != want:
-                    # only reachable in no-footer mode; the safe cast is
-                    # exactly Spark's schema-widening read (int32→int64)
-                    arr = arr.cast(want)
-                if arr.null_count:
-                    arr = arr.drop_null()
-                if len(arr) == 0:
-                    continue
-                vals = arr.to_numpy(zero_copy_only=False)
-                if mode == "hash":
-                    vals = xxhash64_long(vals)
-                else:
-                    vals = vals.astype(np.float64, copy=False)
-                spec.update(sk, vals)
-        yield pa.RecordBatch.from_pydict(
-            {STATE_COL: pa.array([sk.to_bytes()], type=pa.binary())})
-
-    return build
-
-
-def _direct_scan_keyed_build(tasks: list, keys: list, col: str,
-                             spec: SketchSpec, out_cols: list):
-    """mapInPandas kernel for the KEYED direct build: each task reads
-    keys+value columns of its row groups, drops value-null rows in
-    Arrow (a pandas round trip first would flip an int64 value column
-    with nulls to float64), folds per-key states across all its row
-    groups and emits one (keys..., sketch) row per key — the same
-    contract, grouping semantics (null keys kept: dropna=False) and
-    per-key fold as the classic keyed build."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        states: dict[tuple, object] = {}
-        for pdf_ids in batches:
-            for i in pdf_ids["id"]:
+        for ids in id_batches:
+            for i in np.asarray(ids["id"]):
                 p, rg = tasks[int(i)]
                 pf = pq.ParquetFile(p)
-                tbl = (pf.read_row_group(rg, columns=keys + [col]) if rg >= 0
-                       else pf.read(columns=keys + [col]))
-                vcol = tbl.column(len(keys))
-                if vcol.null_count:
-                    tbl = tbl.filter(pc.is_valid(tbl.column(len(keys))))
-                if tbl.num_rows == 0:
-                    continue
-                pdf = tbl.to_pandas()
-                for key, sub in pdf.groupby(keys, dropna=False, sort=False)[col]:
-                    key = key if isinstance(key, tuple) else (key,)
-                    hashes = xxhash64_long(sub.to_numpy())
-                    sk = states.get(key)
-                    if sk is None:
-                        sk = states[key] = spec.new()
-                    spec.update(sk, hashes)
-        rows = [list(k) + [s.to_bytes()] for k, s in states.items()]
-        yield pd.DataFrame(rows, columns=out_cols)
+                tbl = (pf.read_row_group(rg, columns=read) if rg >= 0
+                       else pf.read(columns=read))
+                cols = {k: tbl.column(k).combine_chunks() for k in keys}
+                for name, (col, _) in sketches.items():
+                    arr = tbl.column(col).combine_chunks()
+                    if arr.type != wants[name]:
+                        # only reachable in no-footer mode; the safe cast is
+                        # exactly Spark's schema-widening read (int32→int64)
+                        arr = arr.cast(wants[name])
+                    if arr.type == pa.int64():
+                        hashed = xxhash64_long(arr.fill_null(0).to_numpy())
+                        arr = pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False))
+                    cols[f"__in_{name}"] = arr
+                yield pa.RecordBatch.from_pydict(cols)
 
-    return build
+    return source
 
 
-def _direct_parquet_partials(df: DataFrame, keys: list[str], col: str,
-                             spec: SketchSpec, hash_mode: str) -> DataFrame | None:
-    """Fast partial build reading parquet row groups directly in the
-    Python tasks.  Returns None (caller uses the classic path) unless
-    every eligibility guard holds; results are byte-identical to the
-    classic path for the monoid kinds (pinned by
-    tests/test_direct_scan.py)."""
-    if os.environ.get("SPARK_GRAFT_DIRECT_SCAN", "1") != "1":
-        return None
-    allowed = _DIRECT_SCAN_KEYED_KINDS if keys else _DIRECT_SCAN_KINDS
-    if spec.reference_family or spec.kind not in allowed:
-        return None
-    if spec.kind == "cms" and spec.params.get("conservative"):
-        return None
-    mode = spec.input_mode
-    try:
-        dtype = df.schema[col].dataType
-        key_types = [df.schema[k].dataType for k in keys]
-    except Exception:
-        return None
-    if keys and not all(isinstance(t, T.StringType) for t in key_types):
-        return None  # the keyed build groups via pandas; string keys only
-    if mode == "hash":
-        if hash_mode != "xxhash64" or not isinstance(dtype, T.LongType):
-            return None
-        want = pa.int64()
-    elif mode == "value":
-        if keys or not isinstance(dtype, T.DoubleType):
-            return None
-        want = pa.float64()
-    else:
-        return None
-    tasks = _direct_scan_tasks(df, keys + [col],
-                               [pa.string()] * len(keys) + [want])
-    if not tasks:
-        return None
-    sess = df.sparkSession
-    # one Range partition per task: a pure-JVM feed of one long each (a
-    # createDataFrame of the task rows would route through a Python RDD
-    # — two extra worker crossings per task, measured ~0.4 s of fixed
-    # overhead at sf0.1)
-    tdf = sess.range(0, len(tasks), 1, numPartitions=len(tasks))
-    if keys:
-        key_fields = [df.schema[k] for k in keys]
-        out_schema = T.StructType(
-            key_fields + [T.StructField(STATE_COL, T.BinaryType())])
-        out = tdf.mapInPandas(
-            _direct_scan_keyed_build(tasks, keys, col, spec,
-                                     keys + [STATE_COL]),
-            schema=out_schema)
-    else:
-        out = tdf.mapInArrow(_direct_scan_build(tasks, col, spec, want),
-                             schema=f"{STATE_COL} binary")
-    # unlike the classic path, the partial count is KNOWN exactly here;
-    # let merge_partials size the fan-in level from it instead of the
-    # shuffle-conf upper bound
-    out._slp_n_partials = len(tasks)
-    return out
+def _keyed_frames(batches, names: list[str]):
+    """Arrow batches → the keyed projection's pandas frames: the same
+    row rule, and with several sketches each long column shipped as
+    value-or-0 plus its ``__nn_`` validity mask (see ``_project``)."""
+    for rb in batches:
+        ok = functools.reduce(pc.or_, [rb.column(f"__in_{n}").is_valid() for n in names])
+        if ok.false_count:
+            rb = rb.filter(ok)
+        if len(names) > 1:
+            cols = dict(zip(rb.schema.names, rb.columns))
+            for n in names:
+                arr = cols[f"__in_{n}"]
+                cols[f"__in_{n}"], cols[f"__nn_{n}"] = arr.fill_null(0), arr.is_valid()
+            rb = pa.RecordBatch.from_pydict(cols)
+        yield rb.to_pandas()
 
 
 # r8 NOTE (measured, rejected): spreading a serial scan (single parquet
@@ -612,87 +671,33 @@ def _direct_parquet_partials(df: DataFrame, keys: list[str], col: str,
 # _ensure_parallelism exists and stays.
 
 
-def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
-                    hash_mode: str = "xxhash64") -> DataFrame:
-    """Partition-local sketch build: one (keys..., sketch BinaryType)
-    row per key per input partition.  Vectorized: numpy kernels over
-    whole Arrow batches; the global (key-less) path runs ``mapInArrow``
-    with zero-copy buffer access — no per-row Python anywhere."""
-    direct = _direct_parquet_partials(df, keys, col, spec, hash_mode)
-    if direct is not None:
-        return direct
-    prepared, python_hash = _prepare_input(df, keys, col, spec, hash_mode)
-
-    if not keys:
-        prepared = prepared.withColumnRenamed("__in", f"__in_{STATE_COL}")
-        build = _arrow_global_build({STATE_COL: spec}, {STATE_COL: spec.input_mode}, python_hash)
-        return prepared.mapInArrow(build, schema=f"{STATE_COL} binary")
-    key_fields = [prepared.schema[k] for k in keys]
-    out_schema = T.StructType(key_fields + [T.StructField(STATE_COL, T.BinaryType())])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, object] = {}
-
-        def upd(key: tuple, series: pd.Series):
-            arr = series.to_numpy()
-            if spec.input_mode == "hash":
-                if python_hash:
-                    arr = murmur64a_array(arr.astype(object)).view(np.int64)
-                else:
-                    arr = arr.astype(np.int64, copy=False)
-            elif spec.input_mode == "value":
-                arr = arr.astype(np.float64, copy=False)
-            elif spec.input_mode == "ivalue":
-                arr = arr.astype(np.int64, copy=False)
-            sk = states.get(key)
-            if sk is None:
-                sk = states[key] = spec.new()
-            if spec.input_mode == "item":
-                vc = pd.Series(arr).value_counts()
-                spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
-            else:
-                spec.update(sk, arr[~pd.isna(arr)] if arr.dtype == object else arr)
-
-        # Buffer Arrow batches and flush the per-key update in larger
-        # chunks: the python-call overhead is per (key x flush), so a
-        # 200-key partition of N batches pays 200 update chains instead
-        # of 200*N, while memory stays bounded at ~FLUSH_ROWS rows of
-        # (key, int64/float64) columns (~100 MB worst case).
-        FLUSH_ROWS = 1 << 22
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-
-        def flush():
-            nonlocal buf, buf_rows
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, buf_rows = [], 0
-            for key, sub in pdf.groupby(keys, dropna=False, sort=False)["__in"]:
-                upd(key if isinstance(key, tuple) else (key,), sub)
-
-        for pdf in batches:
-            col_in = pdf["__in"]
-            mask = col_in.notna()
-            if not mask.all():
-                pdf = pdf[mask]
-                col_in = pdf["__in"]
-            if len(pdf) == 0:
-                continue
-            if keys:
-                buf.append(pdf)
-                buf_rows += len(pdf)
-                if buf_rows >= FLUSH_ROWS:
-                    flush()
-            else:
-                upd((), col_in)
-        flush()
-        rows = [list(k) + [s.to_bytes()] for k, s in states.items()]
-        if not rows and not keys:
-            rows = [[spec.new().to_bytes()]]
-        yield pd.DataFrame(rows, columns=keys + [STATE_COL])
-
-    return prepared.mapInPandas(build, schema=out_schema)
+def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
+           hash_mode: str = "xxhash64") -> tuple[DataFrame, int | None]:
+    """Partition-local build of every sketch: one (keys..., <name>
+    BinaryType...) row per key per task.  Returns (partials, n): n is
+    the direct path's exact task count, None on the classic path (whose
+    partition count the merge can only estimate)."""
+    specs = {name: spec for name, (_, spec) in sketches.items()}
+    fields = [T.StructField(n, T.BinaryType()) for n in specs]
+    direct = _direct_tasks(df, keys, sketches, hash_mode)
+    if direct is None:
+        feed, python_hash = _project(df, keys, sketches, hash_mode)
+        source = n = None
+    else:
+        tasks, wants = direct
+        # one Range partition per task: a pure-JVM feed of one long each (a
+        # createDataFrame of the task rows would route through a Python RDD
+        # — two extra worker crossings per task, measured ~0.4 s of fixed
+        # overhead at sf0.1)
+        feed = df.sparkSession.range(0, len(tasks), 1, numPartitions=len(tasks))
+        source, python_hash, n = _row_groups(tasks, keys, sketches, wants), False, len(tasks)
+    if keys:
+        kernel = _keyed_build(specs, keys, python_hash)
+        run = kernel if source is None else lambda it: kernel(_keyed_frames(source(it), list(specs)))
+        return feed.mapInPandas(run, schema=T.StructType([df.schema[k] for k in keys] + fields)), n
+    kernel = _arrow_global_build(specs, python_hash)
+    run = kernel if source is None else lambda it: kernel(source(it))
+    return feed.mapInArrow(run, schema=T.StructType(fields)), n
 
 
 def _auto_fan_in(n_parts: int, threshold: int = 64) -> int | None:
@@ -745,49 +750,68 @@ def _estimate_partitions(df: DataFrame) -> int:
     return max(n_files, shuffle_conf, sess.sparkContext.defaultParallelism, n_repart)
 
 
-def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
-                   fan_in: int | None | str = "auto",
-                   finalize_compress: bool = True) -> DataFrame:
-    """Tree-merge partial sketches to one row per key.
+def _fold(blobs, spec: SketchSpec, sk=None, final: bool = True):
+    """THE blob fold: merge serialized partials into ``sk`` (None =
+    start from the first blob).  ``final`` finalizes the result: an
+    empty fold is the empty sketch, and t-digest/KLL are compressed —
+    KLL's level-0 array is in fold order, so skipping it would make the
+    bytes depend on shuffle arrival."""
+    for b in blobs:
+        s = sketch_from_bytes(bytes(b))
+        sk = s if sk is None else sk.merge(s)
+    if final:
+        sk = spec.new() if sk is None else sk
+        if isinstance(sk, (TDigest, KLL)):
+            sk.compress()
+    return sk
 
-    ``fan_in``: insert an intermediate merge level over buckets of
-    partials (bounds reduce-side fan-in for global aggregates across
-    huge partition counts).  Bucketing is deterministic
-    (pmod(xxhash64 of monotonically_increasing_id), fan_in) only in
-    topology, not in result: all merges are commutative monoids.
-    Default ``"auto"``: for GLOBAL aggregates the level is inserted
-    automatically once the partials span > 64 partitions (keyed
-    aggregates already spread across the groupBy reducers; pass an int
-    to force a level there too).
-    """
+
+def _fold_frames(frames, keys: list[str], specs: dict[str, SketchSpec]) -> pd.DataFrame:
+    """Fold streamed (keys..., <name>...) blob frames into one finalized
+    row per key — exactly one row for a global fold, even on no input."""
+    states: dict[tuple, dict] = {} if keys else {(): {}}
+    for pdf in frames:
+        cols = {n: pdf[n].to_numpy() for n in specs}
+        for key, idx in _key_groups(pdf, keys):
+            st = states.setdefault(key, {})
+            for n, spec in specs.items():
+                st[n] = _fold(cols[n][idx], spec, st.get(n), final=False)
+    rows = [list(k) + [_fold((), specs[n], st.get(n)).to_bytes() for n in specs]
+            for k, st in states.items()]
+    return pd.DataFrame(rows, columns=keys + list(specs))
+
+
+def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
+           fan_in: int | None | str = "auto", n_partials: int | None = None) -> DataFrame:
+    """Tree-merge the partials of every sketch to one row per key (see
+    ``merge_partials``); ``n_partials`` is an exact partial count, else
+    ``"auto"`` estimates it."""
     if fan_in == "auto":
-        n_exact = getattr(partials, "_slp_n_partials", None)
         fan_in = None if keys else _auto_fan_in(
-            n_exact if n_exact is not None else _estimate_partitions(partials))
+            n_partials if n_partials is not None else _estimate_partitions(partials))
     key_fields = [partials.schema[k] for k in keys]
-    out_schema = T.StructType(key_fields + [T.StructField(STATE_COL, T.BinaryType())])
+    fields = [T.StructField(n, T.BinaryType()) for n in specs]
+    out_schema = T.StructType(key_fields + fields)
 
     if fan_in:
-        bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).alias("__bkt")
-        mid_schema = T.StructType(
-            key_fields + [T.StructField("__bkt", T.IntegerType()), T.StructField(STATE_COL, T.BinaryType())]
-        )
+        bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
+        mid_schema = T.StructType(key_fields + [T.StructField("__bkt", T.IntegerType())] + fields)
 
         def merge_mid(pdf: pd.DataFrame) -> pd.DataFrame:
-            blobs = pdf[STATE_COL]
-            sk = sketch_from_bytes(blobs.iloc[0])
-            for b in blobs.iloc[1:]:
-                sk.merge(sketch_from_bytes(b))
             head = pdf[keys + ["__bkt"]].iloc[:1].reset_index(drop=True)
-            head[STATE_COL] = [sk.to_bytes()]
+            for n, spec in specs.items():
+                head[n] = [_fold(pdf[n], spec, final=False).to_bytes()]
             return head
 
         partials = (
-            partials.withColumn("__bkt", bucket.cast("int"))
+            partials.withColumn("__bkt", bucket)
             .groupBy(*(keys + ["__bkt"]))
             .applyInPandas(merge_mid, schema=mid_schema)
             .drop("__bkt")
         )
+
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield _fold_frames(batches, keys, specs)
 
     if keys:
         # shuffle by key, then fold EVERY key group of a partition in one
@@ -796,42 +820,13 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
         # per key (200 tools: 1.76s of overhead for 0.1s of merging).
         # Merge order within a key is partition row order; all sketch
         # merges are commutative monoids, so results don't depend on it.
-        def merge_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            states: dict[tuple, object] = {}
-            for pdf in batches:
-                for key, blobs in pdf.groupby(keys, dropna=False, sort=False)[STATE_COL]:
-                    key = key if isinstance(key, tuple) else (key,)
-                    sk = states.get(key)
-                    for b in blobs:
-                        s = sketch_from_bytes(bytes(b))
-                        sk = s if sk is None else sk.merge(s)
-                    states[key] = sk
-            rows = []
-            for key, sk in states.items():
-                if finalize_compress and isinstance(sk, (TDigest, KLL)):
-                    sk.compress()
-                rows.append(list(key) + [sk.to_bytes()])
-            yield pd.DataFrame(rows, columns=keys + [STATE_COL])
-
-        return partials.repartition(*keys).mapInPandas(merge_groups, schema=out_schema)
+        return partials.repartition(*keys).mapInPandas(fold, schema=out_schema)
 
     # Global aggregate: explicit single-reducer fold via repartition(1) +
     # mapInPandas. The exchange moves only sketch blobs (one per input
     # partition / fan-in bucket); partial building upstream stays fully
     # parallel. Guarantees exactly one output row even on empty input.
-    def merge_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = None
-        for pdf in batches:
-            for b in pdf[STATE_COL]:
-                s = sketch_from_bytes(bytes(b))
-                sk = s if sk is None else sk.merge(s)
-        if sk is None:
-            sk = spec.new()
-        if finalize_compress and isinstance(sk, (TDigest, KLL)):
-            sk.compress()
-        yield pd.DataFrame({STATE_COL: [sk.to_bytes()]})
-
-    out = partials.repartition(1).mapInPandas(merge_all, schema=out_schema)
+    out = partials.repartition(1).mapInPandas(fold, schema=out_schema)
     if not fan_in:
         # r8 optimization: when no fan-in level was needed (<= 64
         # partials), the final fold moves <= 64 small blobs — the same
@@ -844,16 +839,59 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
         # untouched — executing it distributed gives the same bytes
         # (merges are commutative monoids; the associativity law is
         # pinned by tests/test_fan_in_auto.py).
-        out._slp_driver_fold = (partials, spec, finalize_compress)
+        out._slp_driver_fold = (partials, specs)
     return out
+
+
+def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
+                    hash_mode: str = "xxhash64") -> DataFrame:
+    """Partition-local sketch build: one (keys..., sketch BinaryType)
+    row per key per partition (per row group on the direct read).
+    Vectorized: numpy kernels over whole Arrow batches — no per-row
+    Python anywhere."""
+    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[0]
+
+
+def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
+                   fan_in: int | None | str = "auto") -> DataFrame:
+    """Tree-merge partial sketches to one row per key.
+
+    ``fan_in``: insert an intermediate merge level over buckets of
+    partials (bounds reduce-side fan-in for global aggregates across
+    huge partition counts).  Bucketing is deterministic
+    (pmod(xxhash64 of monotonically_increasing_id), fan_in) only in
+    topology, not in result: all merges are commutative monoids.
+    Default ``"auto"``: for GLOBAL aggregates the level is inserted
+    automatically once the partials span > 64 partitions (estimated
+    from plan metadata; keyed aggregates already spread across the
+    groupBy reducers; pass an int to force a level there too).
+    """
+    return _merge(partials, keys, {STATE_COL: spec}, fan_in)
 
 
 def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
                hash_mode: str = "xxhash64", fan_in: int | None | str = "auto") -> DataFrame:
-    """Full two-level sketch aggregation → (keys..., sketch).  Global
-    aggregates over >64 partitions automatically get a third (fan-in)
-    merge level — see ``merge_partials``."""
-    return merge_partials(sketch_partials(df, keys, col, spec, hash_mode), keys, spec, fan_in)
+    """Full two-level sketch aggregation → (keys..., sketch): a
+    one-sketch ``multi_sketch_agg``.  Global aggregates over >64
+    partials automatically get a third (fan-in) merge level — see
+    ``merge_partials``; below it ``collect_sketch`` folds the partials
+    on the driver.
+
+    Rows: null values (and, for value kinds, strings that do not cast)
+    are skipped, never an ANSI-mode error; null keys form their own
+    group.  Direct read: a bare, unpartitioned, local ``file://``
+    parquet input of at least ``$SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS``
+    (default 1M) rows is read by the tasks themselves with pyarrow, one
+    task per row group, when the sketch is hll/cms/bloom over a LongType
+    column (xxhash64 mode; keyed: string keys only) or, global only,
+    tdigest/kll over a DoubleType column — never reference-family or
+    conservative CMS.  hll/cms/bloom bytes are identical on both paths;
+    tdigest/kll bytes differ between the direct and classic paths
+    (partial boundaries move), both within the published rank bound.
+    ``SPARK_GRAFT_DIRECT_SCAN=0`` turns the direct read off.
+    """
+    partials, n = _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)
+    return _merge(partials, keys, {STATE_COL: spec}, fan_in, n)
 
 
 def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
@@ -865,214 +903,45 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
     the JVM→Python boundary dominate; a pipeline that needs distinct
     conv_ids, token frequencies, latency quantiles and a tool Bloom
     filter should pay for them once, not once per sketch.  Returns one
-    row per key group with one BinaryType column per sketch name.
+    row per key group with one BinaryType column per sketch name.  Each
+    sketch's bytes equal its one-sketch ``sketch_agg`` wherever the
+    kind is insensitive to batching (hll, cms, bloom, ...).
+
+    Rows: a row enters the build only if at least one requested column
+    is non-null after its cast (``try_cast`` — a malformed numeric
+    string is skipped, never an ANSI-mode error), and each sketch skips
+    its own nulls.  Keyed: null keys form their own group, and a key
+    whose rows are null in every requested column yields no row.
+
+    Direct read: engages only if EVERY sketch of the request qualifies
+    under ``sketch_agg``'s rules (global: hll/cms/bloom over LongType,
+    tdigest/kll over DoubleType; keyed: hll/cms/bloom with string
+    keys); one task then reads all requested columns of its row group
+    once.  Otherwise every sketch takes the classic path.  tdigest/kll
+    bytes differ between the two paths, both within the rank bound.
     """
     keys = keys or []
-    python_hash = hash_mode != "xxhash64"
-    proj = [F.col(k) for k in keys]
-    modes: dict[str, str] = {}
-    for name, (col, spec) in sketches.items():
-        mode = spec.input_mode
-        modes[name] = mode
-        c = F.col(col)
-        if mode == "ivalue" or (mode == "hash" and not python_hash):
-            # ivalue takes this path regardless of hash_mode — values
-            # ARE the input, they are never murmur-hashed
-            if keys:
-                # Keyed path: NEVER ship a nullable long — a single null
-                # in a batch turns the pandas column float64 and rounds
-                # int64 payloads to 53 bits (silent HLL inflation / CMS
-                # scatter / Bloom false negatives).  Ship a non-null
-                # long plus a separate validity mask instead.
-                if mode == "hash":
-                    base, valid = F.xxhash64(c), c.isNotNull()
-                else:  # ivalue: mask on the CAST (a failed cast is null too)
-                    tc = c.try_cast("long")
-                    base, valid = F.coalesce(tc, F.lit(0)), tc.isNotNull()
-                proj.append(base.alias(f"__in_{name}"))
-                proj.append(valid.alias(f"__nn_{name}"))
-                continue
-            # Global path reads Arrow buffers directly (nulls dropped
-            # before numpy conversion), so the nullable column is safe.
-            expr = F.when(c.isNotNull(), F.xxhash64(c)) if mode == "hash" else c.try_cast("long")
-        elif mode == "hash":
-            expr = c.cast("string")
-        elif mode == "value":
-            expr = c.cast("double")
-        else:
-            expr = c.cast("string")
-        proj.append(expr.alias(f"__in_{name}"))
-    prepared = df.select(*proj)
-
-    key_fields = [prepared.schema[k] for k in keys]
-    state_fields = [T.StructField(n, T.BinaryType()) for n in sketches]
-    out_schema = T.StructType(key_fields + state_fields)
-    names = list(sketches)
-    specs = {n: sketches[n][1] for n in names}
-
-    if not keys:
-        arrow_build = _arrow_global_build(specs, modes, python_hash)
-        partials = prepared.mapInArrow(arrow_build, schema=T.StructType(state_fields))
-        return _merge_multi(partials, [], names, specs, out_schema)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, dict[str, object]] = {}
-
-        def upd(key: tuple, sub: pd.DataFrame):
-            group = states.get(key)
-            if group is None:
-                group = states[key] = {n: specs[n].new() for n in names}
-            for n in names:
-                col_in = sub[f"__in_{n}"]
-                if modes[n] == "ivalue" or (modes[n] == "hash" and not python_hash):
-                    # non-null int64 column + separate validity mask —
-                    # the dtype stays int64 even when nulls were present
-                    valid = sub[f"__nn_{n}"].to_numpy()
-                    arr = col_in.to_numpy()
-                    if not valid.all():
-                        arr = arr[valid.astype(bool)]
-                    if len(arr) == 0:
-                        continue
-                    specs[n].update(group[n], arr.astype(np.int64, copy=False))
-                    continue
-                mask = col_in.notna()
-                arr = col_in[mask].to_numpy() if not mask.all() else col_in.to_numpy()
-                if len(arr) == 0:
-                    continue
-                spec = specs[n]
-                if modes[n] == "hash":
-                    arr = murmur64a_array(arr.astype(object)).view(np.int64)
-                    spec.update(group[n], arr)
-                elif modes[n] == "value":
-                    spec.update(group[n], arr.astype(np.float64, copy=False))
-                else:
-                    vc = pd.Series(arr).value_counts()
-                    spec.update(group[n], vc.index.to_numpy(), vc.to_numpy())
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if keys:
-                for key, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    upd(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                upd((), pdf)
-        rows = [list(k) + [grp[n].to_bytes() for n in names] for k, grp in states.items()]
-        if not rows and not keys:
-            rows = [[specs[n].new().to_bytes() for n in names]]
-        yield pd.DataFrame(rows, columns=keys + names)
-
-    partials = prepared.mapInPandas(build, schema=out_schema)
-    return _merge_multi(partials, keys, names, specs, out_schema)
-
-
-def _merge_multi(partials: DataFrame, keys: list[str], names: list[str],
-                 specs: dict[str, SketchSpec], out_schema: T.StructType,
-                 fan_in: int | None | str = "auto") -> DataFrame:
-    def merge_cols(pdf: pd.DataFrame, compress: bool) -> dict:
-        out = {}
-        for n in names:
-            sk = None
-            for b in pdf[n]:
-                s = sketch_from_bytes(bytes(b))
-                sk = s if sk is None else sk.merge(s)
-            if sk is None:
-                sk = specs[n].new()
-            if compress and isinstance(sk, (TDigest, KLL)):
-                sk.compress()
-            out[n] = [sk.to_bytes()]
-        return out
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge_cols(pdf, compress=True)
-        head = pdf[keys].iloc[:1].reset_index(drop=True) if keys else pd.DataFrame(index=[0])
-        for n in names:
-            head[n] = out[n]
-        return head
-
-    if keys:
-        # one Arrow stream per partition, not per group — see
-        # merge_partials' keyed branch for the measured rationale
-        def merge_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            states: dict[tuple, dict] = {}
-            for pdf in batches:
-                for key, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    key = key if isinstance(key, tuple) else (key,)
-                    st = states.setdefault(key, {})
-                    for n in names:
-                        sk = st.get(n)
-                        for b in sub[n]:
-                            s = sketch_from_bytes(bytes(b))
-                            sk = s if sk is None else sk.merge(s)
-                        st[n] = sk
-            rows = []
-            for key, st in states.items():
-                row = list(key)
-                for n in names:
-                    sk = st[n] if st[n] is not None else specs[n].new()
-                    if isinstance(sk, (TDigest, KLL)):
-                        sk.compress()
-                    row.append(sk.to_bytes())
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=keys + names)
-
-        return partials.repartition(*keys).mapInPandas(merge_groups, schema=out_schema)
-
-    if fan_in == "auto":
-        fan_in = _auto_fan_in(_estimate_partitions(partials))
-    if fan_in:
-        bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
-        mid_schema = T.StructType(
-            [T.StructField("__bkt", T.IntegerType())]
-            + [out_schema[n] for n in names]
-        )
-
-        def merge_mid(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_cols(pdf, compress=False)
-            head = pd.DataFrame({"__bkt": [int(pdf["__bkt"].iloc[0])]})
-            for n in names:
-                head[n] = out[n]
-            return head
-
-        partials = (
-            partials.withColumn("__bkt", bucket)
-            .groupBy("__bkt")
-            .applyInPandas(merge_mid, schema=mid_schema)
-            .drop("__bkt")
-        )
-
-    def merge_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [p for p in batches if len(p)]
-        yield merge_group(pd.concat(pdfs) if pdfs else pd.DataFrame(columns=names))
-
-    return partials.repartition(1).mapInPandas(merge_all, schema=out_schema)
+    partials, n = _build(df, keys, sketches, hash_mode)
+    return _merge(partials, keys, {name: spec for name, (_, spec) in sketches.items()}, "auto", n)
 
 
 def collect_sketch(df_or_merged: DataFrame):
     """Collect a single global sketch blob to the driver (one small
     row — NOT a data collect).
 
-    Fast path (r8): a global ``merge_partials`` result below the fan-in
-    threshold carries its partials DataFrame; collecting those <= 64
-    blobs and folding driver-side skips the repartition(1) exchange,
-    the Python merge stage and one whole job — the driver pulls exactly
-    the bytes the single-reducer task would have pulled.  Bytes are
-    identical (commutative-monoid merges, same fold order)."""
+    Fast path (r8): a global merge below the fan-in threshold carries
+    its partials DataFrame; collecting those <= 64 blobs and folding
+    driver-side skips the repartition(1) exchange, the Python merge
+    stage and one whole job — the driver pulls exactly the bytes the
+    single-reducer task would have pulled.  Bytes are identical
+    (commutative-monoid merges, same fold)."""
     fold = getattr(df_or_merged, "_slp_driver_fold", None)
-    if fold is not None:
-        partials, spec, finalize_compress = fold
-        sk = None
+    if fold is not None and STATE_COL in fold[1]:
+        partials, specs = fold
         # toPandas → Arrow transfer of the binary blobs (the session
         # enables arrow.pyspark); py4j row collect pickles each ~1 MB
         # CMS partial through the gateway socket instead
-        for b in partials.select(STATE_COL).toPandas()[STATE_COL]:
-            s = sketch_from_bytes(bytes(b))
-            sk = s if sk is None else sk.merge(s)
-        if sk is None:
-            sk = spec.new()
-        if finalize_compress and isinstance(sk, (TDigest, KLL)):
-            sk.compress()
-        return sk
+        return _fold(partials.select(STATE_COL).toPandas()[STATE_COL], specs[STATE_COL])
     row = df_or_merged.select(STATE_COL).collect()
     if len(row) != 1:
         raise ValueError(f"expected one merged sketch row, got {len(row)}")

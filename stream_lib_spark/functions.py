@@ -40,65 +40,64 @@ def quantile_udf(q: float):
     return _q
 
 
+def _driver_row(df: DataFrame, names: list[str], values) -> DataFrame:
+    """One-row DataFrame of doubles: a global sketch finalized on the
+    driver."""
+    return df.sparkSession.createDataFrame(
+        [tuple(float(v) for v in values)],
+        T.StructType([T.StructField(n, T.DoubleType()) for n in names]))
+
+
+_TOPK_FIELDS = (
+    T.StructField("item", T.StringType()),
+    T.StructField("count", T.LongType()),
+    T.StructField("error", T.LongType()),
+    T.StructField("rank", T.IntegerType()),
+)
+
+
 def approx_count_distinct(df: DataFrame, col: str, keys: list[str] | None = None,
                           p: int = 14, **kw) -> DataFrame:
-    """HLL++ distinct count → (keys..., approx_distinct double)."""
+    """HLL++ distinct count → (keys..., approx_distinct double).  A
+    global count is finalized on the driver (``collect_sketch``), which
+    skips the merge exchange/stage AND the ArrowEvalPython finalize
+    stage below the fan-in threshold; value identical."""
     keys = keys or []
     merged = sketch_agg(df, keys, col, SketchSpec("hll", p=p), **kw)
-    if not keys and hasattr(merged, "_slp_driver_fold"):
-        # r8: global finalize driver-side (collect_sketch fast path) —
-        # skips the merge exchange/stage AND the ArrowEvalPython
-        # finalize stage; value identical (same sketch bytes)
-        sk = collect_sketch(merged)
-        return df.sparkSession.createDataFrame(
-            [(float(sk.cardinality()),)],
-            T.StructType([T.StructField("approx_distinct", T.DoubleType())]))
+    if not keys:
+        return _driver_row(df, ["approx_distinct"], [collect_sketch(merged).cardinality()])
     return merged.select(*keys, hll_cardinality(F.col("sketch")).alias("approx_distinct"))
 
 
 def approx_quantiles(df: DataFrame, col: str, qs: list[float],
                      keys: list[str] | None = None, kind: str = "tdigest", **kw) -> DataFrame:
-    """t-digest / KLL quantiles → (keys..., q_<x> double ...)."""
+    """t-digest / KLL quantiles → (keys..., q_<x> double ...); global
+    quantiles are finalized on the driver like approx_count_distinct."""
     keys = keys or []
     spec = SketchSpec(kind, compression=100.0) if kind == "tdigest" else SketchSpec(kind, k=200)
     merged = sketch_agg(df, keys, col, spec, **kw)
     names = [f"q_{str(q).replace('.', '_')}" for q in qs]
-    if not keys and hasattr(merged, "_slp_driver_fold"):
-        # r8: same driver-side global finalize as approx_count_distinct
+    if not keys:
         sk = collect_sketch(merged)
-        return df.sparkSession.createDataFrame(
-            [tuple(float(sk.quantile(q)) for q in qs)],
-            T.StructType([T.StructField(n, T.DoubleType()) for n in names]))
+        return _driver_row(df, names, [sk.quantile(q) for q in qs])
     cols = [quantile_udf(q)(F.col("sketch")).alias(n) for q, n in zip(qs, names)]
     return merged.select(*keys, *cols)
 
 
 def approx_topk(df: DataFrame, col: str, k: int, capacity: int | None = None,
                 keys: list[str] | None = None, **kw) -> DataFrame:
-    """Space-Saving top-k → (keys..., item, count, error, rank)."""
+    """Space-Saving top-k → (keys..., item, count, error, rank).  Global
+    top-k is finalized on the driver: the merged sketch is one blob and
+    the explode is k rows."""
     keys = keys or []
     cap = capacity or max(4 * k, 64)
     merged = sketch_agg(df, keys, col, SketchSpec("spacesaving", capacity=cap), **kw)
-    if not keys and hasattr(merged, "_slp_driver_fold"):
-        # r8: global finalize driver-side — the merged sketch is one
-        # blob and the explode is k rows; skips merge + explode stages
-        sk = collect_sketch(merged)
+    if not keys:
         rows = [(str(item), int(cnt), int(err), i)
-                for i, (item, cnt, err) in enumerate(sk.top_k(k), 1)]
-        schema = T.StructType([
-            T.StructField("item", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("error", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-        ])
-        return df.sparkSession.createDataFrame(rows, schema)
+                for i, (item, cnt, err) in enumerate(collect_sketch(merged).top_k(k), 1)]
+        return df.sparkSession.createDataFrame(rows, T.StructType(list(_TOPK_FIELDS)))
 
-    out_fields = [merged.schema[kk] for kk in keys] + [
-        T.StructField("item", T.StringType()),
-        T.StructField("count", T.LongType()),
-        T.StructField("error", T.LongType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
+    out_fields = [merged.schema[kk] for kk in keys] + list(_TOPK_FIELDS)
 
     def explode_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []

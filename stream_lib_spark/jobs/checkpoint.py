@@ -39,9 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
-from ..agg import STATE_COL, SketchSpec, sketch_from_bytes
-from ..sketches.kll import KLL
-from ..sketches.tdigest import TDigest
+from ..agg import STATE_COL, SketchSpec, _fold, _project, _update
 
 
 @dataclass
@@ -102,7 +100,7 @@ class CheckpointedSketchJob:
             return 0
         spec, keys, col = self.spec, self.keys, self.col
         bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
-        prepared = _prepare(bucketed, keys, col, spec)
+        prepared, _ = _project(bucketed, keys + ["__bucket"], {STATE_COL: (col, spec)})
 
         key_fields = [prepared.schema[k] for k in keys]
         out_schema = T.StructType(
@@ -122,7 +120,7 @@ class CheckpointedSketchJob:
             groups = pdf.groupby(keys, dropna=False, sort=True) if keys else [((), pdf)]
             for key, sub in groups:
                 t0 = time.time()  # per-KEY wall, not cumulative since bucket start
-                sk = _update_from_pdf(spec, sub["__in"])
+                sk = _update(spec, spec.new(), sub[f"__in_{STATE_COL}"].to_numpy())
                 blob = sk.to_bytes()
                 rows.append(
                     [bucket]
@@ -173,19 +171,11 @@ class CheckpointedSketchJob:
 
         def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("bucket")  # deterministic fold order
-            sk = None
-            for b in pdf[STATE_COL]:
-                s = sketch_from_bytes(bytes(b))
-                sk = s if sk is None else sk.merge(s)
-            if sk is None:  # empty partials table (nothing built yet)
-                sk = spec.new()
-            if isinstance(sk, (TDigest, KLL)):
-                # same canonicalization as agg.merge_partials: KLL's
-                # level-0 array is in fold order, so skipping compress()
-                # here would make the final bytes (and state_sha256)
-                # depend on shuffle arrival — breaking the byte-identical
-                # resume contract for quantile sketches
-                sk.compress()
+            # the library's one fold: an empty partials table (nothing
+            # built yet) gives the empty sketch, and t-digest/KLL get the
+            # same final compress as every merge — without it the bytes
+            # (and state_sha256) would depend on shuffle arrival
+            sk = _fold(pdf[STATE_COL], spec)
             head = pdf[keys].iloc[:1].reset_index(drop=True) if keys else pd.DataFrame(index=[0])
             head[STATE_COL] = [sk.to_bytes()]
             head["rows_seen"] = [int(pdf["rows_seen"].sum())]
@@ -216,25 +206,3 @@ class CheckpointedSketchJob:
             "bucket", *self.keys, "rows_seen", "state_sha256", "wall_ms"
         )
 
-
-def _prepare(df: DataFrame, keys: list[str], col: str, spec: SketchSpec) -> DataFrame:
-    from ..agg import _prepare_input
-
-    prepared, python_hash = _prepare_input(df, keys + ["__bucket"], col, spec)
-    assert not python_hash
-    return prepared
-
-
-def _update_from_pdf(spec: SketchSpec, series: pd.Series):
-    import numpy as np
-
-    sk = spec.new()
-    arr = series.to_numpy()
-    if spec.input_mode in ("hash", "ivalue"):
-        spec.update(sk, arr.astype(np.int64, copy=False))
-    elif spec.input_mode == "value":
-        spec.update(sk, arr.astype(np.float64, copy=False))
-    else:
-        vc = pd.Series(arr).value_counts()
-        spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
-    return sk

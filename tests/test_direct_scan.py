@@ -1,4 +1,5 @@
-"""Round-8 direct parquet row-group scan path (agg._direct_parquet_partials).
+"""Round-8 direct parquet row-group scan path (agg._direct_tasks /
+agg._row_groups, fed to the shared kernels by agg._build).
 
 Contract under test:
   * ``xxhash64_long`` is bit-parity with Spark's ``F.xxhash64`` over
@@ -13,11 +14,15 @@ Contract under test:
     digest bytes — quantile gates output within_bound booleans);
   * every ineligible shape (filter/project above the scan, non-xxhash64
     hash mode, non-long hash column, non-whitelisted kind, conservative
-    CMS, kill switch) falls back to the classic path.
+    CMS, kill switch, malformed knob) falls back to the classic path;
+  * a multi-sketch request reads directly only when every sketch is
+    eligible, with the same bytes as the one-sketch builds.
 """
 from __future__ import annotations
 
+import io
 import os
+from contextlib import redirect_stdout
 
 import numpy as np
 import pyarrow as pa
@@ -27,9 +32,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_lib_spark.agg import (
+    STATE_COL,
     SketchSpec,
-    _direct_parquet_partials,
+    _build,
     collect_sketch,
+    multi_sketch_agg,
     sketch_agg,
 )
 from stream_lib_spark.hashing import xxhash64_long
@@ -45,6 +52,18 @@ def _engage_at_any_size():
     os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
     yield
     os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", None)
+
+
+def _direct_count(df, keys, col, spec, hash_mode="xxhash64"):
+    """Exact task count of the direct build; None = classic path."""
+    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[1]
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def _both(df, col, spec, hash_mode="xxhash64"):
@@ -69,10 +88,10 @@ def test_min_rows_threshold(spark, sf_dir):
     hll = SketchSpec("hll", p=12)
     os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = str(10**12)
     try:
-        assert _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64") is None
+        assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is None
     finally:
         os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
-    assert _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64") is not None
+    assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is not None
 
 
 def test_xxhash64_long_golden_and_fuzz(spark):
@@ -100,7 +119,7 @@ def test_xxhash64_long_golden_and_fuzz(spark):
 def test_monoid_kinds_byte_identical(spark, sf_dir, col, spec):
     for d in (sf_dir, SF_CORRECTNESS):  # sparse AND denser HLL regimes
         df = spark.read.parquet(f"{d}/lineitem.parquet")
-        assert _direct_parquet_partials(df, [], col, spec, "xxhash64") is not None
+        assert _direct_count(df, [], col, spec, "xxhash64") is not None
         direct, classic = _both(df, col, spec)
         assert direct.to_bytes() == classic.to_bytes()
 
@@ -119,7 +138,7 @@ def test_multi_row_group_file_with_nulls(spark, tmp_path):
     assert pq.ParquetFile(path).metadata.num_row_groups > 4
     df = spark.read.parquet(path)
     spec = SketchSpec("hll", p=12)
-    tasks = _direct_parquet_partials(df, [], "k", spec, "xxhash64")
+    tasks = _direct_count(df, [], "k", spec, "xxhash64")
     assert tasks is not None
     direct, classic = _both(df, "k", spec)
     assert direct.to_bytes() == classic.to_bytes()
@@ -157,8 +176,10 @@ def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
     assert pq.ParquetFile(path).metadata.num_row_groups == 70  # > 64 tasks
     df = spark.read.parquet(path)
     spec = SketchSpec("hll", p=12)
-    partials = _direct_parquet_partials(df, [], "k", spec, "xxhash64")
-    assert partials is not None and partials._slp_n_partials == 70
+    assert _direct_count(df, [], "k", spec) == 70
+    wide = sketch_agg(df, [], "k", spec)
+    assert "FlatMapGroupsInPandas" in _plan(wide)  # fan-in level
+    assert not hasattr(wide, "_slp_driver_fold")
     direct, classic = _both(df, "k", spec)
     assert direct.to_bytes() == classic.to_bytes()
 
@@ -171,8 +192,8 @@ def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
     df2 = spark.read.parquet(str(ddir))
     os.environ["SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS"] = "1"
     try:
-        partials = _direct_parquet_partials(df2, [], "k", spec, "xxhash64")
-        assert partials is not None and partials._slp_n_partials == 2
+        assert _direct_count(df2, [], "k", spec) == 2
+        assert hasattr(sketch_agg(df2, [], "k", spec), "_slp_driver_fold")
         direct, _ = _both(df2, "k", spec)
     finally:
         os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", None)
@@ -186,11 +207,17 @@ def _both_keyed(df, keys, col, spec):
         out["sketch"] = out["sketch"].map(bytes)
         return out.sort_values(keys, na_position="first",
                                ignore_index=True)
-    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
-    direct = run()
-    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-    classic = run()
-    os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
+    old = os.environ.get("SPARK_GRAFT_DIRECT_SCAN")
+    try:
+        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
+        direct = run()
+        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
+        classic = run()
+    finally:
+        if old is None:
+            os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
+        else:
+            os.environ["SPARK_GRAFT_DIRECT_SCAN"] = old
     return direct, classic
 
 
@@ -200,8 +227,7 @@ def test_keyed_byte_identical(spark, sf_dir):
     ev = spark.read.parquet(f"{SF_CORRECTNESS}/events.parquet")
     for spec in (SketchSpec("hll", p=12),
                  SketchSpec("cms", eps=1e-3, confidence=0.99)):
-        assert _direct_parquet_partials(
-            ev, ["event_type"], "user_id", spec, "xxhash64") is not None
+        assert _direct_count(ev, ["event_type"], "user_id", spec, "xxhash64") is not None
         direct, classic = _both_keyed(ev, ["event_type"], "user_id", spec)
         assert direct.equals(classic)
 
@@ -221,7 +247,7 @@ def test_keyed_null_keys_and_values(spark, tmp_path):
                    row_group_size=4_000)
     df = spark.read.parquet(path)
     spec = SketchSpec("hll", p=12)
-    assert _direct_parquet_partials(df, ["k"], "v", spec, "xxhash64") is not None
+    assert _direct_count(df, ["k"], "v", spec, "xxhash64") is not None
     direct, classic = _both_keyed(df, ["k"], "v", spec)
     assert direct.equals(classic)
     assert direct["k"].isna().any()  # the null-key group survived
@@ -230,35 +256,115 @@ def test_keyed_null_keys_and_values(spark, tmp_path):
 def test_keyed_ineligible_shapes(spark, sf_dir):
     ev = spark.read.parquet(f"{SF_CORRECTNESS}/events.parquet")
     # long key column: the keyed build groups via pandas, string keys only
-    assert _direct_parquet_partials(
-        ev, ["user_id"], "event_id", SketchSpec("hll", p=12), "xxhash64") is None
+    assert _direct_count(ev, ["user_id"], "event_id", SketchSpec("hll", p=12), "xxhash64") is None
     # keyed quantile kinds expose per-key estimates: excluded
-    assert _direct_parquet_partials(
-        ev, ["event_type"], "value",
+    assert _direct_count(ev, ["event_type"], "value",
         SketchSpec("tdigest", compression=100.0), "xxhash64") is None
 
 
 def test_ineligible_shapes_fall_back(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     hll = SketchSpec("hll", p=12)
-    assert _direct_parquet_partials(li.where(F.col("l_orderkey") > 5), [],
-                                    "l_orderkey", hll, "xxhash64") is None
-    assert _direct_parquet_partials(li.select("l_orderkey"), [],
-                                    "l_orderkey", hll, "xxhash64") is None
-    assert _direct_parquet_partials(li.limit(10), [],
-                                    "l_orderkey", hll, "xxhash64") is None
-    assert _direct_parquet_partials(li, [], "l_orderkey", hll, "murmur64") is None
-    assert _direct_parquet_partials(li, [], "l_returnflag", hll, "xxhash64") is None
-    assert _direct_parquet_partials(li, [], "l_quantity", SketchSpec("qdigest", compression_factor=64),
+    assert _direct_count(li.where(F.col("l_orderkey") > 5), [],
+                         "l_orderkey", hll, "xxhash64") is None
+    assert _direct_count(li.select("l_orderkey"), [],
+                         "l_orderkey", hll, "xxhash64") is None
+    assert _direct_count(li.limit(10), [],
+                         "l_orderkey", hll, "xxhash64") is None
+    assert _direct_count(li, [], "l_orderkey", hll, "murmur64") is None
+    assert _direct_count(li, [], "l_returnflag", hll, "xxhash64") is None
+    assert _direct_count(li, [], "l_quantity", SketchSpec("qdigest", compression_factor=64),
         "xxhash64") is None
-    assert _direct_parquet_partials(li, [], "l_partkey",
+    assert _direct_count(li, [], "l_partkey",
         SketchSpec("cms", eps=1e-3, confidence=0.99, conservative=True),
         "xxhash64") is None
     os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
     try:
-        assert _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64") is None
+        assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is None
     finally:
         os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
     # and the fallback computes the same bytes as the engaged path
     direct, classic = _both(li, "l_orderkey", hll)
     assert direct.to_bytes() == classic.to_bytes()
+
+
+@pytest.mark.parametrize("knob", ["SPARK_GRAFT_DIRECT_SCAN_MAX_FILES",
+                                  "SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS",
+                                  "SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"])
+def test_malformed_knob_fails_closed(spark, sf_dir, knob):
+    """A malformed integer knob turns the direct read off (classic
+    result) instead of raising ValueError out of the aggregation."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    hll = SketchSpec("hll", p=12)
+    old = os.environ.get(knob)
+    os.environ[knob] = "garbage"
+    try:
+        assert _direct_count(li, [], "l_orderkey", hll) is None
+        got = collect_sketch(sketch_agg(li, [], "l_orderkey", hll))
+    finally:
+        if old is None:
+            os.environ.pop(knob, None)
+        else:
+            os.environ[knob] = old
+    _, classic = _both(li, "l_orderkey", hll)
+    assert got.to_bytes() == classic.to_bytes()
+
+
+def test_multi_sketch_direct_read(spark):
+    """hll(long) + tdigest(double) in one request read the row groups
+    directly (no parquet scan node); each blob equals its one-sketch
+    direct build."""
+    li = spark.read.parquet(f"{SF_CORRECTNESS}/lineitem.parquet")
+    hll, td = SketchSpec("hll", p=14), SketchSpec("tdigest", compression=100.0)
+    multi = multi_sketch_agg(li, {"h": ("l_orderkey", hll),
+                                  "t": ("l_extendedprice", td)})
+    assert "Scan parquet" not in _plan(multi) and "Range" in _plan(multi)
+    row = multi.collect()[0]
+    assert bytes(row["h"]) == collect_sketch(sketch_agg(li, [], "l_orderkey", hll)).to_bytes()
+    assert _direct_count(li, [], "l_extendedprice", td) is not None
+    assert bytes(row["t"]) == collect_sketch(sketch_agg(li, [], "l_extendedprice", td)).to_bytes()
+
+
+def test_multi_sketch_mixed_request_goes_classic(spark):
+    """One ineligible sketch (a string hash column) sends every sketch
+    of the request down the classic path."""
+    li = spark.read.parquet(f"{SF_CORRECTNESS}/lineitem.parquet")
+    hll = SketchSpec("hll", p=14)
+    mixed = {"h": ("l_orderkey", hll), "f": ("l_returnflag", hll)}
+    assert _build(li, [], mixed)[1] is None
+    multi = multi_sketch_agg(li, mixed)
+    assert "Scan parquet" in _plan(multi)
+    assert bytes(multi.collect()[0]["h"]) == collect_sketch(
+        sketch_agg(li, [], "l_orderkey", hll)).to_bytes()
+
+
+def test_multi_sketch_keyed_direct_read(spark, tmp_path):
+    """Keyed hll + cms in one direct request, with null keys and nulls
+    scattered over both value columns: each per-key blob equals the
+    one-sketch classic build (nulls are skipped per column, and no
+    hash is rounded through float64)."""
+    rng = np.random.default_rng(5)
+    n = 30_000
+    keys = pa.array([None if r < 0.1 else f"k{int(r * 4)}"
+                     for r in rng.random(n)], type=pa.string())
+
+    def longs():
+        return pa.array([None if r < 0.07 else int(r * 2**62)
+                         for r in rng.random(n)], type=pa.int64())
+
+    path = str(tmp_path / "keyed_multi.parquet")
+    pq.write_table(pa.table({"k": keys, "a": longs(), "b": longs()}), path,
+                   row_group_size=4_000)
+    df = spark.read.parquet(path)
+    hll, cms = SketchSpec("hll", p=12), SketchSpec("cms", eps=1e-3, confidence=0.99)
+    sketches = {"h": ("a", hll), "c": ("b", cms)}
+    assert _build(df, ["k"], sketches)[1] is not None
+    multi = multi_sketch_agg(df, sketches, keys=["k"])
+    assert "Scan parquet" not in _plan(multi)
+    rows = multi.collect()
+    assert any(r["k"] is None for r in rows)  # the null-key group survived
+    for name, (col, spec) in sketches.items():
+        _, classic = _both_keyed(df, ["k"], col, spec)
+        want = {k if isinstance(k, str) else None: b
+                for k, b in zip(classic["k"], classic["sketch"])}
+        assert {r["k"]: bytes(r[name]) for r in rows} == want

@@ -178,6 +178,46 @@ def test_multi_sketch_matches_individual(spark, events):
     assert bytes(multi["h"]) == bytes(single["sketch"])
 
 
+@pytest.mark.parametrize("keys", [[], ["event_type"]], ids=["global", "keyed"])
+@pytest.mark.parametrize("spec", [
+    SketchSpec("hll", p=13),
+    SketchSpec("cms", eps=1e-3, confidence=0.99),
+    SketchSpec("bloom", n_elements=2_000, fpp=0.01),
+], ids=["hll", "cms", "bloom"])
+def test_multi_sketch_kinds_match_individual(spark, events, keys, spec):
+    """Alongside a second sketch, and with nulls scattered over both
+    columns, each multi_sketch_agg blob equals its one-sketch
+    sketch_agg."""
+    from stream_lib_spark.agg import multi_sketch_agg
+
+    df = (events.withColumn("user_id", F.when(F.col("event_id") % 7 != 0, F.col("user_id")))
+          .withColumn("value", F.when(F.col("event_id") % 5 != 0, F.col("value"))))
+    multi = multi_sketch_agg(df, {"s": ("user_id", spec),
+                                  "t": ("value", SketchSpec("tdigest", compression=100.0))},
+                             keys=keys)
+    single = sketch_agg(df, keys, "user_id", spec)
+    got = {tuple(r[k] for k in keys): bytes(r["s"]) for r in multi.collect()}
+    want = {tuple(r[k] for k in keys): bytes(r["sketch"]) for r in single.collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]], ids=["global", "keyed"])
+def test_multi_sketch_skips_malformed_numeric_strings(spark, keys):
+    """Under ANSI mode a plain cast of "abc" to double aborts the job;
+    multi_sketch_agg must skip it like sketch_agg does."""
+    from stream_lib_spark.agg import multi_sketch_agg
+
+    df = spark.createDataFrame(
+        [("a", "1.5"), ("a", "abc"), ("b", "2.5"), ("b", None)], "k string, s string")
+    spec = SketchSpec("tdigest", compression=100.0)
+    multi = multi_sketch_agg(df, {"t": ("s", spec)}, keys=keys).collect()
+    single = sketch_agg(df, keys, "s", spec).collect()
+    weights = {tuple(r[k] for k in keys): sketch_from_bytes(bytes(r["t"])).total for r in multi}
+    assert weights == {tuple(r[k] for k in keys): sketch_from_bytes(bytes(r["sketch"])).total
+                       for r in single}
+    assert sum(weights.values()) == 2
+
+
 def test_salted_two_phase_exact_agg(spark):
     # north rule: explicit salted-key repartitioning for skewed exact
     # aggregation — two-phase (key, salt) -> key matches direct groupBy
