@@ -7,11 +7,11 @@ entry point and any number of sketches per scan:
 1. **projection** — one N-column projection: JVM-side hashing /
    casting of each requested column (``_project``).
 2. **partial** — a batch source (the projected DataFrame, or the direct
-   parquet row-group read) feeds one kernel per shape: ``mapInArrow``
-   (global) or ``mapInPandas`` (keyed) vectorized numpy updates of one
-   sketch per (grouping key) per task, emitted as one BinaryType column
-   per sketch.  This is the map-side combine: the shuffle moves
-   O(partitions × keys) sketch blobs, never rows.
+   parquet row-group read) feeds ONE ``mapInArrow`` kernel (a global
+   build is the zero-key case): vectorized numpy updates of one sketch
+   per (grouping key) per task straight off the Arrow batches, emitted
+   as one BinaryType column per sketch.  This is the map-side combine:
+   the shuffle moves O(partitions × keys) sketch blobs, never rows.
 3. **(optional) fan-in** — for global aggregates over many partitions,
    an intermediate ``groupBy(pmod(partial_id, fan_in))`` merge level
    bounds reduce-side state (SURVEY.md §4 item 2).
@@ -46,11 +46,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .hashing import murmur64a_array, murmur64a_chunked, xxhash64_long
+from .hashing import murmur64a_chunked, xxhash64_long
 from .sketches.base import (
     KIND_BLOOM,
     KIND_CMS,
@@ -230,7 +231,8 @@ class SketchSpec:
 #               hashing / casting
 #   source      classic: the projected DataFrame; direct: _row_groups,
 #               the same batches read by pyarrow inside the tasks
-#   kernel      global: _arrow_global_build; keyed: _keyed_build
+#   kernel      _kernel, one mapInArrow build for every shape (global =
+#               zero keys); every Arrow column enters a sketch via _offer
 #   merge       _merge: fan-in level, keyed fold, global fold + the
 #               driver-fold marker; every blob fold is _fold
 # ---------------------------------------------------------------------------
@@ -242,12 +244,12 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
     casting.  A row enters only if at least one requested column is
     non-null after its cast (offer(null) is a no-op; also keeps
     xxhash64(NULL)==seed out of the hash domain); each column keeps its
-    own nulls for the kernel to skip.  Returns (df, python_hash) —
-    python_hash=True means the kernel murmur-hashes the raw strings of
-    hash-mode columns itself."""
+    own nulls for the kernel to skip (Arrow keeps an int64 column's
+    validity bitmap, so a nullable long reaches numpy unrounded).  The
+    input columns come last, in ``sketches`` order.  Returns (df,
+    python_hash) — python_hash=True means the kernel murmur-hashes the
+    raw strings of hash-mode columns itself."""
     python_hash = hash_mode != "xxhash64"
-    # with one sketch the row filter alone makes its column non-null
-    nullable = len(sketches) > 1
     valid, proj = [], [F.col(k) for k in keys]
     for name, (col, spec) in sketches.items():
         c, mode = F.col(col), spec.input_mode
@@ -259,122 +261,44 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
             ok = ok & expr.isNotNull()
         elif mode == "hash" and not python_hash:
             expr = F.xxhash64(c)
+            if len(sketches) > 1:  # the row filter alone covers one sketch
+                expr = F.when(ok, expr)  # xxhash64(NULL) is the seed, not null
         else:  # item, or murmur parity mode: raw strings hashed in numpy
             expr = c.cast("string")
         valid.append(ok)
-        if nullable and (mode == "ivalue" or (mode == "hash" and not python_hash)):
-            if keys:
-                # never ship a nullable long to pandas: one null turns the
-                # column float64 and rounds int64 payloads to 53 bits
-                # (silent HLL inflation / CMS scatter / Bloom false
-                # negatives) — ship value-or-0 plus a validity mask
-                proj += [F.coalesce(expr, F.lit(0)).alias(f"__in_{name}"),
-                         ok.alias(f"__nn_{name}")]
-                continue
-            expr = F.when(ok, expr)
         proj.append(expr.alias(f"__in_{name}"))
     return df.where(functools.reduce(operator.or_, valid)).select(*proj), python_hash
 
 
-def _np_from_arrow(arr, mode: str, python_hash: bool):
-    """Arrow column → numpy input for a sketch update, with no per-row
-    Python: string hashing reads the Arrow offsets/data buffers directly
-    (``murmur64a_chunked``); numeric columns are zero-copy views.
-    Returns None for an all-null/empty column; for 'item' mode returns
-    (values, counts) from Arrow's C++ value_counts."""
+def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
+    """THE update: fold one Arrow column into ``sk`` with no per-row
+    Python.  Nulls are dropped; string hashing reads the Arrow
+    offsets/data buffers directly (``murmur64a_chunked``); numeric
+    columns are zero-copy views; 'item' mode folds the exact
+    (values, counts) table of Arrow's C++ value_counts."""
     if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
     if arr.null_count:
         arr = arr.drop_null()
+    mode = spec.input_mode
     if len(arr) == 0:
-        return None
-    if mode == "hash":
-        if python_hash:
-            width = 8 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else 4
-            dtype = np.int64 if width == 8 else np.int32
-            offsets = np.frombuffer(arr.buffers()[1], dtype=dtype,
-                                    count=len(arr) + 1, offset=arr.offset * width)
-            data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-            return murmur64a_chunked(data, offsets).view(np.int64)
-        return arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    if mode == "value":
-        return arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-    if mode == "ivalue":
-        return arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    vc = pa.compute.value_counts(arr)
-    # r8: to_numpy converts the Arrow string values in C (one object
-    # array), ~4.5x faster than round-tripping through to_pylist +
-    # np.array for the same object-dtype result (measured 0.68s ->
-    # 0.15s per 1M rows; bytes identical)
-    return (vc.field("values").to_numpy(zero_copy_only=False),
-            vc.field("counts").to_numpy())
-
-
-def _arrow_global_build(specs: dict[str, SketchSpec], python_hash: bool):
-    """Global kernel (mapInArrow): fold every batch of a partition into
-    one sketch per name; emit a single binary row.
-
-    r8: item-mode columns feeding Space-Saving / bottom-k are BUFFERED
-    and folded in large flushes (same bounded-buffer pattern and
-    ~4M-row bound as the keyed kernel) instead of once per ~64k-row
-    Arrow batch: one C++ value_counts + one update over the combined
-    chunk replaces dozens, cutting the per-batch unique-count /
-    truncation overhead ~4x.  Scoped to exactly these two kinds because
-    their gate-checked outputs are batching-invariant (Space-Saving
-    gates run in the exact regime where any batching yields identical
-    bytes, the heavy-hitter guarantee holds under any fold, and bottom-k
-    is a pure min-k of hashes); reference-family and
-    count-then-estimate item sketches keep per-batch folds — their
-    internal tip-over points are batch-order-sensitive."""
-    _ITEM_BUFFERED_KINDS = ("spacesaving", "bottomk")
-    _FLUSH_ROWS = 1 << 22
-
-    def build(batches):
-        states = {n: specs[n].new() for n in specs}
-        buffered = [
-            n for n, spec in specs.items()
-            if spec.input_mode == "item" and spec.kind in _ITEM_BUFFERED_KINDS
-            and not spec.reference_family
-        ]
-        bufs: dict[str, list] = {n: [] for n in buffered}
-        buf_rows = 0
-
-        def flush():
-            nonlocal buf_rows
-            for n in buffered:
-                if not bufs[n]:
-                    continue
-                arr = pa.chunked_array(bufs[n])
-                bufs[n] = []
-                got = _np_from_arrow(arr, "item", python_hash)
-                if got is not None:
-                    specs[n].update(states[n], got[0], got[1])
-            buf_rows = 0
-
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            for n, spec in specs.items():
-                col = tbl.column(f"__in_{n}")
-                if n in bufs:
-                    bufs[n].append(col.combine_chunks())
-                    continue
-                got = _np_from_arrow(col, spec.input_mode, python_hash)
-                if got is None:
-                    continue
-                if spec.input_mode == "item":
-                    spec.update(states[n], got[0], got[1])
-                else:
-                    spec.update(states[n], got)
-            if buffered:
-                buf_rows += rb.num_rows
-                if buf_rows >= _FLUSH_ROWS:
-                    flush()
-        flush()
-        yield pa.RecordBatch.from_pydict(
-            {n: pa.array([states[n].to_bytes()], type=pa.binary()) for n in specs}
-        )
-
-    return build
+        return sk
+    if mode == "item":
+        vc = pc.value_counts(arr)
+        # r8: to_numpy converts the Arrow string values in C (one object
+        # array), ~4.5x faster than round-tripping through to_pylist +
+        # np.array for the same object-dtype result (measured 0.68s ->
+        # 0.15s per 1M rows; bytes identical)
+        return spec.update(sk, vc.field("values").to_numpy(zero_copy_only=False),
+                           vc.field("counts").to_numpy())
+    if mode == "hash" and python_hash:
+        width = 8 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else 4
+        offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64 if width == 8 else np.int32,
+                                count=len(arr) + 1, offset=arr.offset * width)
+        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+        return spec.update(sk, murmur64a_chunked(data, offsets).view(np.int64))
+    return spec.update(sk, arr.to_numpy(zero_copy_only=False).astype(
+        np.float64 if mode == "value" else np.int64, copy=False))
 
 
 def _key_groups(pdf: pd.DataFrame, keys: list[str]):
@@ -388,74 +312,75 @@ def _key_groups(pdf: pd.DataFrame, keys: list[str]):
         yield (key if isinstance(key, tuple) else (key,)), idx
 
 
-def _valid(pdf: pd.DataFrame, name: str) -> np.ndarray:
-    """Which rows of a keyed batch hold a value for sketch ``name``."""
-    mask = f"__nn_{name}"
-    if mask in pdf:
-        return pdf[mask].to_numpy(dtype=bool)
-    return pdf[f"__in_{name}"].notna().to_numpy()
+def _groups(tbl: pa.Table, keys: list[str]):
+    """(key tuple of Python values, the group's rows) per key group of
+    an Arrow table: null keys form their own group, rows keep their
+    order.  Grouping reads the key columns alone; one stable sort by
+    group makes every group a zero-copy slice.  Global (no keys): one
+    group of every row."""
+    if not keys:
+        return [((), tbl)]
+    codes = tbl.select(keys).to_pandas().groupby(keys, dropna=False, sort=False).ngroup().to_numpy()
+    order = np.argsort(codes, kind="stable")
+    tbl = tbl.take(order).combine_chunks()
+    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+    return [(tuple(tbl.column(k)[int(i)].as_py() for k in keys), tbl.slice(i, j - i))
+            for i, j in zip(starts, [*starts[1:], len(order)])]
 
 
-def _update(spec: SketchSpec, sk, arr: np.ndarray, python_hash: bool = False):
-    """Fold one key's non-null pandas input into ``sk`` by input mode."""
-    mode = spec.input_mode
-    if mode == "item":
-        vc = pd.Series(arr).value_counts()
-        return spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
-    if mode == "hash" and python_hash:
-        arr = murmur64a_array(arr.astype(object)).view(np.int64)
-    return spec.update(sk, arr.astype(np.float64 if mode == "value" else np.int64, copy=False))
+def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
+            python_hash: bool):
+    """THE build kernel (mapInArrow): fold a partition's Arrow batches
+    into one state per (key, sketch) and emit one (keys..., <name>...)
+    batch in ``schema`` — exactly one row for a global (zero-key) build,
+    even on no input.
 
-
-def _keyed_build(specs: dict[str, SketchSpec], keys: list[str], python_hash: bool):
-    """Keyed kernel (mapInPandas): one state per (key, sketch) per
-    partition, emitted as one (keys..., <name>...) row per key.
-
-    Batches are buffered and the per-key update flushed in larger
-    chunks: the python-call overhead is per (key x flush), so a 200-key
-    partition of N batches pays 200 update chains instead of 200*N,
-    while memory stays bounded at ~FLUSH_ROWS rows of (key,
-    int64/float64) columns (~100 MB worst case)."""
-    names = list(specs)
+    Buffering: a keyed build buffers every column and folds per key in
+    flushes of ~FLUSH_ROWS rows, so the python-call overhead is per
+    (key x flush) — a 200-key partition of N batches pays 200 update
+    chains instead of 200*N — while memory stays bounded (~100 MB
+    worst case).  A global build folds each batch as it arrives, except
+    r8's item-mode Space-Saving / bottom-k columns: one C++ value_counts
+    + one update over a large flush replaces dozens, cutting the
+    per-batch unique-count / truncation overhead ~4x.  Those two kinds
+    only, because their gate-checked outputs are batching-invariant
+    (Space-Saving gates run in the exact regime where any batching
+    yields identical bytes, the heavy-hitter guarantee holds under any
+    fold, and bottom-k is a pure min-k of hashes); reference-family and
+    count-then-estimate item sketches keep per-batch folds — their
+    internal tip-over points are batch-order-sensitive."""
     FLUSH_ROWS = 1 << 22
+    buffered = [n for n, spec in specs.items() if keys or (
+        spec.kind in ("spacesaving", "bottomk") and spec.input_mode == "item"
+        and not spec.reference_family)]
+    per_batch = [n for n in specs if n not in buffered]
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, dict] = {}
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
+    def build(batches):
+        states: dict[tuple, dict] = {} if keys else {(): {n: s.new() for n, s in specs.items()}}
 
-        def flush():
-            nonlocal buf, buf_rows
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, buf_rows = [], 0
-            cols = {}
-            for n in names:
-                ok = _valid(pdf, n)
-                cols[n] = (pdf[f"__in_{n}"].to_numpy(), None if ok.all() else ok)
-            for key, idx in _key_groups(pdf, keys):
+        def fold(tbl: pa.Table, names: list[str]):
+            for key, rows in _groups(tbl, keys):
                 group = states.get(key)
                 if group is None:
-                    group = states[key] = {n: specs[n].new() for n in names}
-                for n, (vals, ok) in cols.items():
-                    arr = vals[idx if ok is None else idx[ok[idx]]]
-                    if len(arr):
-                        _update(specs[n], group[n], arr, python_hash)
+                    group = states[key] = {n: s.new() for n, s in specs.items()}
+                for n in names:
+                    _offer(specs[n], group[n], rows.column(f"__in_{n}"), python_hash)
 
-        for pdf in batches:
-            ok = np.logical_or.reduce([_valid(pdf, n) for n in names])
-            if not ok.all():
-                pdf = pdf[ok]
-            if len(pdf) == 0:
-                continue
-            buf.append(pdf)
-            buf_rows += len(pdf)
-            if buf_rows >= FLUSH_ROWS:
-                flush()
-        flush()
-        rows = [list(k) + [g[n].to_bytes() for n in names] for k, g in states.items()]
-        yield pd.DataFrame(rows, columns=keys + names)
+        buf, buf_rows = [], 0
+        for rb in batches:
+            if per_batch:
+                fold(pa.Table.from_batches([rb]), per_batch)
+            if buffered:
+                buf.append(rb.select(keys + [f"__in_{n}" for n in buffered]))
+                buf_rows += rb.num_rows
+                if buf_rows >= FLUSH_ROWS:
+                    fold(pa.Table.from_batches(buf), buffered)
+                    buf, buf_rows = [], 0
+        if buf:
+            fold(pa.Table.from_batches(buf), buffered)
+        yield pa.RecordBatch.from_pylist(
+            [{**dict(zip(keys, key)), **{n: group[n].to_bytes() for n in specs}}
+             for key, group in states.items()], schema=schema)
 
     return build
 
@@ -474,7 +399,7 @@ def _keyed_build(specs: dict[str, SketchSpec], keys: list[str], python_hash: boo
 # ``xxhash64_long`` kernel.  Spark still distributes the work: the task
 # list is one row per parquet row group, so parallelism equals the
 # scan's natural split and scales with input size.  One task reads all
-# requested columns of its row group once and feeds the same kernels.
+# requested columns of its row group once and feeds the same kernel.
 #
 # Strict eligibility — EVERY sketch of the request must qualify, else
 # every sketch takes the classic path:
@@ -612,7 +537,10 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
     chunks with pyarrow and yields one Arrow record batch per row group
     shaped like the projection's — (keys..., __in_<name>...), hashed by
     ``xxhash64_long`` where the projection hashes with the JVM's
-    xxhash64, nulls kept for the kernel to skip."""
+    xxhash64, with the projection's row rule (a row whose requested
+    columns are all null is dropped), other nulls kept for the kernel
+    to skip.  A read or cast failure names the file, the row group and
+    the kill switch."""
     read = list(dict.fromkeys(keys + [col for col, _ in sketches.values()]))
 
     def source(id_batches):
@@ -621,40 +549,31 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
         for ids in id_batches:
             for i in np.asarray(ids["id"]):
                 p, rg = tasks[int(i)]
-                pf = pq.ParquetFile(p)
-                tbl = (pf.read_row_group(rg, columns=read) if rg >= 0
-                       else pf.read(columns=read))
-                cols = {k: tbl.column(k).combine_chunks() for k in keys}
-                for name, (col, _) in sketches.items():
-                    arr = tbl.column(col).combine_chunks()
-                    if arr.type != wants[name]:
-                        # only reachable in no-footer mode; the safe cast is
-                        # exactly Spark's schema-widening read (int32→int64)
-                        arr = arr.cast(wants[name])
-                    if arr.type == pa.int64():
-                        hashed = xxhash64_long(arr.fill_null(0).to_numpy())
-                        arr = pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False))
-                    cols[f"__in_{name}"] = arr
-                yield pa.RecordBatch.from_pydict(cols)
+                try:
+                    pf = pq.ParquetFile(p)
+                    tbl = (pf.read_row_group(rg, columns=read) if rg >= 0
+                           else pf.read(columns=read))
+                    cols = {k: tbl.column(k).combine_chunks() for k in keys}
+                    for name, (col, _) in sketches.items():
+                        arr = tbl.column(col).combine_chunks()
+                        if arr.type != wants[name]:
+                            # only reachable in no-footer mode; the safe cast is
+                            # exactly Spark's schema-widening read (int32→int64)
+                            arr = arr.cast(wants[name])
+                        if arr.type == pa.int64():
+                            hashed = xxhash64_long(arr.fill_null(0).to_numpy())
+                            arr = pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False))
+                        cols[f"__in_{name}"] = arr
+                except (OSError, KeyError, pa.ArrowException) as e:
+                    where = f"row group {rg}" if rg >= 0 else "whole file"
+                    raise RuntimeError(
+                        f"direct parquet read of {p} ({where}) failed: {e}; "
+                        "set SPARK_GRAFT_DIRECT_SCAN=0 to use the classic read") from e
+                rb = pa.RecordBatch.from_pydict(cols)
+                ok = functools.reduce(pc.or_, [rb.column(f"__in_{n}").is_valid() for n in sketches])
+                yield rb.filter(ok) if ok.false_count else rb
 
     return source
-
-
-def _keyed_frames(batches, names: list[str]):
-    """Arrow batches → the keyed projection's pandas frames: the same
-    row rule, and with several sketches each long column shipped as
-    value-or-0 plus its ``__nn_`` validity mask (see ``_project``)."""
-    for rb in batches:
-        ok = functools.reduce(pc.or_, [rb.column(f"__in_{n}").is_valid() for n in names])
-        if ok.false_count:
-            rb = rb.filter(ok)
-        if len(names) > 1:
-            cols = dict(zip(rb.schema.names, rb.columns))
-            for n in names:
-                arr = cols[f"__in_{n}"]
-                cols[f"__in_{n}"], cols[f"__nn_{n}"] = arr.fill_null(0), arr.is_valid()
-            rb = pa.RecordBatch.from_pydict(cols)
-        yield rb.to_pandas()
 
 
 # r8 NOTE (measured, rejected): spreading a serial scan (single parquet
@@ -678,7 +597,7 @@ def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sketch
     the direct path's exact task count, None on the classic path (whose
     partition count the merge can only estimate)."""
     specs = {name: spec for name, (_, spec) in sketches.items()}
-    fields = [T.StructField(n, T.BinaryType()) for n in specs]
+    schema = T.StructType([df.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs])
     direct = _direct_tasks(df, keys, sketches, hash_mode)
     if direct is None:
         feed, python_hash = _project(df, keys, sketches, hash_mode)
@@ -691,13 +610,9 @@ def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sketch
         # overhead at sf0.1)
         feed = df.sparkSession.range(0, len(tasks), 1, numPartitions=len(tasks))
         source, python_hash, n = _row_groups(tasks, keys, sketches, wants), False, len(tasks)
-    if keys:
-        kernel = _keyed_build(specs, keys, python_hash)
-        run = kernel if source is None else lambda it: kernel(_keyed_frames(source(it), list(specs)))
-        return feed.mapInPandas(run, schema=T.StructType([df.schema[k] for k in keys] + fields)), n
-    kernel = _arrow_global_build(specs, python_hash)
+    kernel = _kernel(specs, keys, to_arrow_schema(schema), python_hash)
     run = kernel if source is None else lambda it: kernel(source(it))
-    return feed.mapInArrow(run, schema=T.StructType(fields)), n
+    return feed.mapInArrow(run, schema=schema), n
 
 
 def _auto_fan_in(n_parts: int, threshold: int = 64) -> int | None:

@@ -36,10 +36,12 @@ import time
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..agg import STATE_COL, SketchSpec, _fold, _project, _update
+from ..agg import STATE_COL, SketchSpec, _fold, _groups, _offer, _project
 
 
 @dataclass
@@ -113,26 +115,22 @@ class CheckpointedSketchJob:
                 T.StructField("wall_ms", T.LongType()),
             ]
         )
+        arrow_schema = to_arrow_schema(out_schema)
 
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket = int(pdf["__bucket"].iloc[0])
+        def build(tbl: pa.Table) -> pa.Table:
+            bucket = tbl.column("__bucket")[0].as_py()
             rows = []
-            groups = pdf.groupby(keys, dropna=False, sort=True) if keys else [((), pdf)]
-            for key, sub in groups:
+            for key, sub in _groups(tbl, keys):
                 t0 = time.time()  # per-KEY wall, not cumulative since bucket start
-                sk = _update(spec, spec.new(), sub[f"__in_{STATE_COL}"].to_numpy())
-                blob = sk.to_bytes()
-                rows.append(
-                    [bucket]
-                    + list(key if isinstance(key, tuple) else (key,))
-                    + [blob, len(sub), hashlib.sha256(blob).hexdigest(),
-                       int((time.time() - t0) * 1000)]
-                )
-            return pd.DataFrame(rows, columns=["bucket"] + keys + [STATE_COL, "rows_seen", "state_sha256", "wall_ms"])
+                blob = _offer(spec, spec.new(), sub.column(f"__in_{STATE_COL}")).to_bytes()
+                rows.append({"bucket": bucket, **dict(zip(keys, key)), STATE_COL: blob,
+                             "rows_seen": sub.num_rows, "state_sha256": hashlib.sha256(blob).hexdigest(),
+                             "wall_ms": int((time.time() - t0) * 1000)})
+            return pa.Table.from_pylist(rows, schema=arrow_schema)
 
-        partials = prepared.groupBy("__bucket").applyInPandas(build, schema=out_schema)
+        partials = prepared.groupBy("__bucket").applyInArrow(build, schema=out_schema)
         partials.write.mode("append").parquet(self.partials_path)
-        # buckets with ZERO matching rows produce no applyInPandas group
+        # buckets with ZERO matching rows produce no applyInArrow group
         # and hence no partial row — without a marker they would never be
         # "done" and every resume would re-scan the full input for them
         # forever.  Append an empty-sketch marker row (rows_seen=0, keys

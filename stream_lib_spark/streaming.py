@@ -22,9 +22,10 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from .agg import SketchSpec, sketch_from_bytes, sketch_agg
+from .agg import STATE_COL, SketchSpec, _offer, _project, collect_sketch, sketch_agg, sketch_from_bytes
 
 
 class SketchStateStore:
@@ -127,8 +128,9 @@ def streaming_sketch_query(stream_df: DataFrame, col: str, spec: SketchSpec,
         current, last_id = store.read()
         if batch_id <= last_id:
             return  # replayed batch after restart — already applied
-        rows = sketch_agg(batch_df, [], col, spec).collect()
-        batch_sketch = sketch_from_bytes(bytes(rows[0]["sketch"]))
+        # below the fan-in threshold collect_sketch folds the partials on
+        # the driver: one exchange and one job fewer per micro-batch
+        batch_sketch = collect_sketch(sketch_agg(batch_df, [], col, spec))
         merged = batch_sketch if current is None else current.merge(batch_sketch)
         store.write(merged, batch_id)
 
@@ -174,116 +176,55 @@ def windowed_streaming_sketch(stream_df: DataFrame, ts_col: str, duration: str,
         )
         return keyed_streaming_sketch(df, ["window_start"], col, spec)
 
-    mode = spec.input_mode
-    c = F.col(col)
-    if mode == "hash":
-        in_col = F.xxhash64(c).alias("__in")
-    elif mode == "value":
-        in_col = c.cast("double").alias("__in")
-    elif mode == "ivalue":
-        c = c.try_cast("long")
-        in_col = c.alias("__in")
-    else:
-        in_col = c.cast("string").alias("__in")
     win = F.window(F.col(ts_col), duration)
-    prepared = (
-        stream_df.withWatermark(ts_col, watermark)
-        .where(c.isNotNull())
-        .select(
-            F.col(ts_col),  # keep the watermarked attribute in the plan
-            win["start"].cast("string").alias("window_start"),
-            win["end"].alias("__wend"),
-            in_col,
-        )
-    )
-
+    timed = (stream_df.withWatermark(ts_col, watermark)
+             .withColumn("window_start", win["start"].cast("string"))
+             .withColumn("__wend", win["end"]))
+    # the watermarked attribute stays in the plan as a pass-through key
+    prepared, _ = _project(timed, [ts_col, "window_start", "__wend"], {STATE_COL: (col, spec)})
     out_schema = "window_start string, sketch binary, estimate double, is_final boolean"
 
     def fold(key, pdfs, state: GroupState):
-        import numpy as np
-
         if state.hasTimedOut:
             # watermark passed window end: finalize and EVICT
             blob = bytes(state.get[0])
             state.remove()
-            sk = sketch_from_bytes(blob)
-            est = float(sk.cardinality()) if hasattr(sk, "cardinality") else float("nan")
-            yield pd.DataFrame({"window_start": [key[0]], "sketch": [blob],
-                                "estimate": [est], "is_final": [True]})
+            yield _row({"window_start": key[0]}, sketch_from_bytes(blob), blob, is_final=True)
             return
         sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else spec.new()
-        wend_ms = None
-        for pdf in pdfs:
-            if wend_ms is None and len(pdf):
-                wend_ms = int(pd.Timestamp(pdf["__wend"].iloc[0]).value // 1_000_000)
-            arr = pdf["__in"].dropna()
-            if len(arr) == 0:
-                continue
-            if mode in ("hash", "ivalue"):
-                spec.update(sk, arr.to_numpy().astype(np.int64, copy=False))
-            elif mode == "value":
-                spec.update(sk, arr.to_numpy().astype(np.float64, copy=False))
-            else:
-                vc = arr.value_counts()
-                spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
-        state.update((sk.to_bytes(),))
-        if wend_ms is not None:
+        pdfs = [pdf for pdf in pdfs if len(pdf)]
+        blob = _fold_pdfs(sk, pdfs, spec).to_bytes()
+        state.update((blob,))
+        if pdfs:
             # evict when the watermark passes the window end (must stay
             # strictly ahead of the current watermark)
+            wend_ms = int(pd.Timestamp(pdfs[0]["__wend"].iloc[0]).value // 1_000_000)
             state.setTimeoutTimestamp(max(wend_ms, state.getCurrentWatermarkMs() + 1))
-        est = float(sk.cardinality()) if hasattr(sk, "cardinality") else float("nan")
-        yield pd.DataFrame({"window_start": [key[0]], "sketch": [sk.to_bytes()],
-                            "estimate": [est], "is_final": [False]})
+        yield _row({"window_start": key[0]}, sk, blob, is_final=False)
 
     return prepared.groupBy("window_start").applyInPandasWithState(
         fold, out_schema, "blob binary", "Update", GroupStateTimeout.EventTimeTimeout
     )
 
 
-def _keyed_prepared(stream_df: DataFrame, keys: list[str], col: str,
-                    spec: SketchSpec):
-    """Shared input projection of both keyed stateful backends:
-    (prepared df, input mode, output schema).  The value column is
-    JVM-hashed / cast BEFORE the stateful operator so the Python side
-    only ever folds typed numpy arrays."""
-    from pyspark.sql import functions as F
+def _row(head: dict, sk, blob: bytes, **extra):
+    """One output row of a stateful sketch operator: ``head`` columns,
+    ``sk``'s bytes ``blob``, its cardinality estimate (NaN for kinds
+    without one), then ``extra`` columns."""
+    import pandas as pd
 
-    mode = spec.input_mode
-    c = F.col(col)
-    if mode == "hash":
-        in_col = F.xxhash64(c).alias("__in")
-    elif mode == "value":
-        in_col = c.cast("double").alias("__in")
-    elif mode == "ivalue":
-        c = c.try_cast("long")  # ANSI-safe; filter below masks failed casts
-        in_col = c.alias("__in")
-    else:
-        in_col = c.cast("string").alias("__in")
-    # offer(null) is a no-op — and filtering BEFORE the stateful operator
-    # keeps the hash column non-null so its pandas dtype stays int64.
-    # (A nullable long arrives as float64 and rounds hashes to 53 bits,
-    # silently corrupting per-key state across micro-batches.)
-    prepared = stream_df.where(c.isNotNull()).select(*[F.col(k) for k in keys], in_col)
-    out_schema = ", ".join(f"{k} string" for k in keys) + ", sketch binary, estimate double"
-    return prepared, mode, out_schema
+    est = float(sk.cardinality()) if hasattr(sk, "cardinality") else float("nan")
+    return pd.DataFrame({**{k: [v] for k, v in head.items()}, "sketch": [blob],
+                         "estimate": [est], **{k: [v] for k, v in extra.items()}})
 
 
-def _fold_pdfs(sk, pdfs, mode: str, spec: SketchSpec):
+def _fold_pdfs(sk, pdfs, spec: SketchSpec):
     """Fold an iterator of micro-batch pandas frames into sketch ``sk``
-    — the single update loop both stateful backends run."""
-    import numpy as np
-
+    — the update every stateful backend runs: each frame's LAST column
+    (the ``_project`` input column) goes through the library's one
+    Arrow update, ``agg._offer``."""
     for pdf in pdfs:
-        arr = pdf["__in"].dropna()  # defensive; input is pre-filtered
-        if len(arr) == 0:
-            continue
-        if mode in ("hash", "ivalue"):
-            spec.update(sk, arr.to_numpy().astype(np.int64, copy=False))
-        elif mode == "value":
-            spec.update(sk, arr.to_numpy().astype(np.float64, copy=False))
-        else:
-            vc = arr.value_counts()
-            spec.update(sk, vc.index.to_numpy(), vc.to_numpy())
+        _offer(spec, sk, pa.Array.from_pandas(pdf.iloc[:, -1]))
     return sk
 
 
@@ -303,26 +244,24 @@ def keyed_streaming_sketch(stream_df: DataFrame, keys: list[str], col: str,
     Spark 4 ``transformWithStateInPandas`` engine — state bytes are
     identical between the two backends (byte-parity tested).
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    prepared, mode, out_schema = _keyed_prepared(stream_df, keys, col, spec)
-    state_schema = "blob binary"
+    prepared, _ = _project(stream_df, keys, {STATE_COL: (col, spec)})
 
     def fold(key, pdfs, state: GroupState):
-        if state.exists:
-            sk = sketch_from_bytes(bytes(state.get[0]))
-        else:
-            sk = spec.new()
-        _fold_pdfs(sk, pdfs, mode, spec)
-        state.update((sk.to_bytes(),))
-        est = float(sk.cardinality()) if hasattr(sk, "cardinality") else float("nan")
-        yield pd.DataFrame({**{k: [str(v)] for k, v in zip(keys, key)},
-                            "sketch": [sk.to_bytes()], "estimate": [est]})
+        sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else spec.new()
+        blob = _fold_pdfs(sk, pdfs, spec).to_bytes()
+        state.update((blob,))
+        yield _row({k: str(v) for k, v in zip(keys, key)}, sk, blob)
 
     return prepared.groupBy(*keys).applyInPandasWithState(
-        fold, out_schema, state_schema, "Update", GroupStateTimeout.NoTimeout
+        fold, _keyed_schema(keys), "blob binary", "Update", GroupStateTimeout.NoTimeout
     )
+
+
+def _keyed_schema(keys: list[str]) -> str:
+    """Output schema of both keyed backends."""
+    return ", ".join(f"{k} string" for k in keys) + ", sketch binary, estimate double"
 
 
 def keyed_streaming_sketch_tws(stream_df: DataFrame, keys: list[str], col: str,
@@ -347,9 +286,9 @@ def keyed_streaming_sketch_tws(stream_df: DataFrame, keys: list[str], col: str,
     Prefer this backend on Spark 4+: state schema evolution, TTL,
     timers, and multiple named state variables come with the new
     engine, none of which the legacy operator offers."""
-    prepared, mode, out_schema = _keyed_prepared(stream_df, keys, col, spec)
+    prepared, _ = _project(stream_df, keys, {STATE_COL: (col, spec)})
     return prepared.groupBy(*keys).transformWithStateInPandas(
-        make_sketch_processor(keys, mode, spec), outputStructType=out_schema,
+        make_sketch_processor(keys, spec.input_mode, spec), outputStructType=_keyed_schema(keys),
         outputMode="Update", timeMode="None",
     )
 
@@ -358,8 +297,8 @@ def make_sketch_processor(keys: list[str], mode: str, spec: SketchSpec):
     """The ``StatefulProcessor`` behind ``keyed_streaming_sketch_tws``,
     exposed so its fold/state logic is testable without the TWS engine
     (whose Python protocol needs protobuf): anything implementing
-    ``getValueState(name, schema) -> {get(), update(tuple)}`` drives it."""
-    import pandas as pd
+    ``getValueState(name, schema) -> {get(), update(tuple)}`` drives it.
+    ``mode`` is ``spec.input_mode``; the update reads it from ``spec``."""
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class _SketchProcessor(StatefulProcessor):
@@ -369,11 +308,9 @@ def make_sketch_processor(keys: list[str], mode: str, spec: SketchSpec):
         def handleInputRows(self, key, rows, timerValues):
             prior = self._state.get()
             sk = sketch_from_bytes(bytes(prior[0])) if prior is not None else spec.new()
-            _fold_pdfs(sk, rows, mode, spec)
-            self._state.update((sk.to_bytes(),))
-            est = float(sk.cardinality()) if hasattr(sk, "cardinality") else float("nan")
-            yield pd.DataFrame({**{k: [str(v)] for k, v in zip(keys, key)},
-                                "sketch": [sk.to_bytes()], "estimate": [est]})
+            blob = _fold_pdfs(sk, rows, spec).to_bytes()
+            self._state.update((blob,))
+            yield _row({k: str(v) for k, v in zip(keys, key)}, sk, blob)
 
         def close(self) -> None:
             pass

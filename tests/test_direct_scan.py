@@ -201,6 +201,27 @@ def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
     assert direct.to_bytes() == classic.to_bytes()
 
 
+def test_task_read_error_names_kill_switch(spark, tmp_path):
+    """No-footer mode never opens the files on the driver, so schema
+    drift surfaces inside a task: the error must name the file, the row
+    group and the kill switch instead of a bare pyarrow error."""
+    ddir = tmp_path / "drift.parquet"
+    ddir.mkdir()
+    pq.write_table(pa.table({"k": pa.array(range(100), type=pa.int64())}), str(ddir / "a.parquet"))
+    pq.write_table(pa.table({"j": pa.array(range(100), type=pa.int64())}), str(ddir / "b.parquet"))
+    df = spark.read.schema("k long").parquet(str(ddir))
+    spec = SketchSpec("hll", p=12)
+    os.environ["SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS"] = "1"
+    try:
+        assert _direct_count(df, [], "k", spec) == 2
+        with pytest.raises(Exception) as err:
+            collect_sketch(sketch_agg(df, [], "k", spec))
+    finally:
+        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", None)
+    msg = str(err.value)
+    assert "SPARK_GRAFT_DIRECT_SCAN=0" in msg and "b.parquet" in msg and "whole file" in msg
+
+
 def _both_keyed(df, keys, col, spec):
     def run():
         out = sketch_agg(df, keys, col, spec).toPandas()

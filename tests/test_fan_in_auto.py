@@ -134,3 +134,29 @@ def test_global_sketch_agg_plan_shape(spark):
     node_ids = {m for m in re.findall(r"\((\d+)\) Exchange", dplan)}
     assert len(node_ids) == 1  # still exactly one blob exchange
     assert "MapInArrow" in dplan and "Range" in dplan  # pure-JVM task feed
+
+
+def test_keyed_sketch_agg_plan_shape(spark):
+    """Regression pin for the keyed plan: pruned scan → the one
+    MapInArrow build kernel → ONE exchange (the key repartition)
+    carrying only sketch blobs → the MapInPandas fold.  A pandas build
+    below the exchange, a second exchange or an unpruned scan is a
+    regression."""
+    import os
+    import re
+
+    from stream_lib_spark.agg import SketchSpec, sketch_agg
+
+    df = spark.read.parquet(f"{SF}/lineitem.parquet")
+    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
+    try:
+        out = sketch_agg(df, ["l_returnflag"], "l_orderkey", SketchSpec("hll", p=12))
+    finally:
+        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
+    plan = _plan(out)
+    node_ids = {m for m in re.findall(r"\((\d+)\) Exchange", plan)}
+    assert len(node_ids) == 1
+    assert "ReadSchema: struct<l_orderkey:bigint,l_returnflag:string>" in plan  # pruned scan
+    tree = plan[: plan.index("(1) Scan")]
+    assert tree.count("MapInPandas") == tree.count("MapInArrow") == 1
+    assert tree.index("MapInPandas") < tree.index("Exchange") < tree.index("MapInArrow")

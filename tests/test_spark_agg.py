@@ -235,3 +235,29 @@ def test_salted_two_phase_exact_agg(spark):
     direct = t.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
     assert two_phase.exceptAll(direct).count() == 0
     assert direct.exceptAll(two_phase).count() == 0
+
+
+@pytest.mark.parametrize("keys,col,spec,hash_mode", [
+    (["g"], "props", SketchSpec("hll", p=12), "murmur64"),
+    (["g"], "event_type", SketchSpec("spacesaving", capacity=16), "xxhash64"),
+    (["g"], "props", SketchSpec("bottomk", k=8), "xxhash64"),
+    (["g", "event_type"], "user_id", SketchSpec("cms", eps=1e-2, confidence=0.9), "xxhash64"),
+], ids=["hll-murmur64", "spacesaving-exact", "bottomk", "null-key"])
+def test_keyed_blob_equals_global_over_key(spark, events, keys, col, spec, hash_mode):
+    """The keyed build is the global build with keys: each key's blob
+    from a keyed sketch_agg equals the global blob over that key's rows,
+    byte for byte.  Every case has a null-key group (the last one inside
+    a two-column key); Space-Saving runs in its exact regime (5 items,
+    capacity 16)."""
+    import functools
+    import operator
+
+    df = events.withColumn(
+        "g", F.when(F.col("event_id") % 7 != 0, (F.col("event_id") % 3).cast("string")))
+    keyed = {tuple(r[k] for k in keys): bytes(r["sketch"])
+             for r in sketch_agg(df, keys, col, spec, hash_mode).collect()}
+    assert any(k[0] is None for k in keyed)
+    for key, blob in keyed.items():
+        sub = df.where(functools.reduce(
+            operator.and_, [F.col(k).eqNullSafe(F.lit(v)) for k, v in zip(keys, key)]))
+        assert blob == collect_sketch(sketch_agg(sub, [], col, spec, hash_mode)).to_bytes(), key

@@ -97,6 +97,25 @@ def test_keyed_stateful_streaming(spark, dirs, sf_dir):
         assert abs(row["estimate"] - exact[et]) <= bound, (et, row["estimate"], exact[et])
 
 
+def test_keyed_streaming_skips_malformed_numeric_strings(spark, dirs):
+    """Under ANSI mode (the Spark 4 default) a plain cast of "abc" to
+    double aborts the query; the keyed streaming projection must skip
+    the malformed string (and the null) like batch sketch_agg does."""
+    from stream_lib_spark.agg import sketch_from_bytes
+    from stream_lib_spark.streaming import keyed_streaming_sketch
+
+    df = spark.createDataFrame(
+        [("a", "1.5"), ("a", "abc"), ("b", "2.5"), ("b", None)], "k string, s string")
+    df.write.parquet(dirs["input"])
+    spec = SketchSpec("tdigest", compression=100.0)
+    stream = spark.readStream.schema(df.schema).parquet(dirs["input"])
+    final = _final_by_batch(keyed_streaming_sketch(stream, ["k"], "s", spec), "k", dirs["ckpt"])
+    got = {k: sketch_from_bytes(bytes(r["sketch"])).total for k, r in final.items()}
+    want = {r["k"]: sketch_from_bytes(bytes(r["sketch"])).total
+            for r in sketch_agg(df, ["k"], "s", spec).collect()}
+    assert got == want == {"a": 1, "b": 1}
+
+
 def test_tws_processor_fold_parity(spark, dirs, sf_dir):
     """The Spark 4 TWS backend's StatefulProcessor must land per-key
     state BYTES identical to the classic applyInPandasWithState backend
