@@ -13,12 +13,14 @@ entry point and any number of sketches per scan:
    as one BinaryType column per sketch.  This is the map-side combine:
    the shuffle moves O(partitions × keys) sketch blobs, never rows.
 3. **(optional) fan-in** — for global aggregates over many partitions,
-   an intermediate ``groupBy(pmod(partial_id, fan_in))`` merge level
+   an intermediate merge level keyed by ``pmod(partial_id, fan_in)``
    bounds reduce-side state (SURVEY.md §4 item 2).
-4. **merge** — fold partials with the sketch's monoid merge: keyed by
-   ``repartition(keys)`` + ``mapInPandas``, global by
-   ``repartition(1)`` or, below the fan-in threshold, on the driver in
-   ``collect_sketch``.  Every fold is ``_fold``.
+4. **merge** — fold partials with the sketch's monoid merge.  Every
+   merge level (the fan-in level, the keyed fold, the global fold) is
+   ONE ``mapInArrow`` fold kernel over ``repartition(keys)`` (global:
+   ``repartition(1)``); below the fan-in threshold a global fold runs
+   on the driver in ``collect_sketch`` instead.  Every blob fold is
+   ``_fold``.
 5. **finalize** — estimate/quantile/top-k, driver-side or via UDF.
 
 Hashing happens **JVM-side** (``F.xxhash64``, whole-stage codegen) by
@@ -41,10 +43,8 @@ import functools
 import operator
 import os
 import urllib.parse
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -195,32 +195,6 @@ class SketchSpec:
             return ReferenceFamilyLogLog(**p)
         return self._FACTORIES[self.kind][0](self.params)
 
-    def update(self, sk, arr: np.ndarray, counts: np.ndarray | None = None):
-        mode = self.input_mode
-        if self.reference_family:
-            if counts is None:
-                if mode == "ivalue":
-                    arr, counts = np.unique(arr.astype(np.int64, copy=False),
-                                            return_counts=True)
-                else:
-                    counts = np.ones(len(arr), dtype=np.int64)
-            sk.update_batch(arr, counts)
-            return sk
-        if mode == "hash":
-            sk.update_hashed(arr) if self.kind != "bloom" else sk.add_hashed(arr)
-        elif mode == "value":
-            sk.add_values(arr)
-        elif mode == "ivalue":  # non-negative ints folded as exact counts
-            if counts is not None:
-                sk.update_batch(arr.astype(np.int64, copy=False), counts)
-            else:
-                u, c = np.unique(arr.astype(np.int64, copy=False), return_counts=True)
-                sk.update_batch(u, c)
-        else:  # item: arr = items, counts = exact in-batch frequencies
-            sk.update_batch(arr, counts if counts is not None else np.ones(len(arr), dtype=np.int64))
-        return sk
-
-
 
 # ---------------------------------------------------------------------------
 # The pipeline.  Every entry point (sketch_agg, multi_sketch_agg,
@@ -233,8 +207,9 @@ class SketchSpec:
 #               the same batches read by pyarrow inside the tasks
 #   kernel      _kernel, one mapInArrow build for every shape (global =
 #               zero keys); every Arrow column enters a sketch via _offer
-#   merge       _merge: fan-in level, keyed fold, global fold + the
-#               driver-fold marker; every blob fold is _fold
+#   merge       _merge: fan-in level, keyed fold and global fold are each
+#               one _fold_level (the mapInArrow kernel _fold_batches) +
+#               the driver-fold marker; every blob fold is _fold
 # ---------------------------------------------------------------------------
 
 
@@ -272,10 +247,11 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
 
 def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
     """THE update: fold one Arrow column into ``sk`` with no per-row
-    Python.  Nulls are dropped; string hashing reads the Arrow
-    offsets/data buffers directly (``murmur64a_chunked``); numeric
-    columns are zero-copy views; 'item' mode folds the exact
-    (values, counts) table of Arrow's C++ value_counts."""
+    Python, dispatched on ``spec.input_mode``.  Nulls are dropped;
+    string hashing reads the Arrow offsets/data buffers directly
+    (``murmur64a_chunked``); numeric columns are zero-copy views;
+    'item' mode folds the exact (values, counts) table of Arrow's C++
+    value_counts, 'ivalue' mode the exact counts of ``np.unique``."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
     if arr.null_count:
@@ -289,27 +265,23 @@ def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
         # array), ~4.5x faster than round-tripping through to_pylist +
         # np.array for the same object-dtype result (measured 0.68s ->
         # 0.15s per 1M rows; bytes identical)
-        return spec.update(sk, vc.field("values").to_numpy(zero_copy_only=False),
-                           vc.field("counts").to_numpy())
+        sk.update_batch(vc.field("values").to_numpy(zero_copy_only=False), vc.field("counts").to_numpy())
+        return sk
     if mode == "hash" and python_hash:
         width = 8 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else 4
         offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64 if width == 8 else np.int32,
                                 count=len(arr) + 1, offset=arr.offset * width)
         data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-        return spec.update(sk, murmur64a_chunked(data, offsets).view(np.int64))
-    return spec.update(sk, arr.to_numpy(zero_copy_only=False).astype(
-        np.float64 if mode == "value" else np.int64, copy=False))
-
-
-def _key_groups(pdf: pd.DataFrame, keys: list[str]):
-    """(key tuple, row positions) per key group of ``pdf``; null keys
-    form their own group (dropna=False), positions keep row order.
-    Global (no keys): one group of every row."""
-    if not keys:
-        yield (), slice(None)
-        return
-    for key, idx in pdf.groupby(keys, dropna=False, sort=False).indices.items():
-        yield (key if isinstance(key, tuple) else (key,)), idx
+        vals = murmur64a_chunked(data, offsets).view(np.int64)
+    else:
+        vals = arr.to_numpy(zero_copy_only=False).astype(np.float64 if mode == "value" else np.int64, copy=False)
+    if mode == "hash":
+        sk.add_hashed(vals) if spec.kind == "bloom" else sk.update_hashed(vals)
+    elif mode == "value":
+        sk.add_values(vals)
+    else:  # ivalue: non-negative ints folded as exact counts
+        sk.update_batch(*np.unique(vals, return_counts=True))
+    return sk
 
 
 def _groups(tbl: pa.Table, keys: list[str]):
@@ -681,68 +653,60 @@ def _fold(blobs, spec: SketchSpec, sk=None, final: bool = True):
     return sk
 
 
-def _fold_frames(frames, keys: list[str], specs: dict[str, SketchSpec]) -> pd.DataFrame:
-    """Fold streamed (keys..., <name>...) blob frames into one finalized
-    row per key — exactly one row for a global fold, even on no input."""
-    states: dict[tuple, dict] = {} if keys else {(): {}}
-    for pdf in frames:
-        cols = {n: pdf[n].to_numpy() for n in specs}
-        for key, idx in _key_groups(pdf, keys):
-            st = states.setdefault(key, {})
-            for n, spec in specs.items():
-                st[n] = _fold(cols[n][idx], spec, st.get(n), final=False)
-    rows = [list(k) + [_fold((), specs[n], st.get(n)).to_bytes() for n in specs]
-            for k, st in states.items()]
-    return pd.DataFrame(rows, columns=keys + list(specs))
+def _fold_batches(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
+                  final: bool):
+    """THE merge kernel (mapInArrow): fold a partition's (keys...,
+    <name>...) blob batches into one state per (key, sketch) and emit
+    one batch in ``schema`` — exactly one row for a global (zero-key)
+    fold, even on no input.  Every state is finalized by ``_fold`` when
+    ``final``; a fan-in level passes False and emits its states
+    uncompressed, as the build does."""
+
+    def fold(batches):
+        states: dict[tuple, dict] = {} if keys else {(): {}}
+        for rb in batches:
+            for key, rows in _groups(pa.Table.from_batches([rb]), keys):
+                st = states.setdefault(key, {})
+                for n, spec in specs.items():
+                    st[n] = _fold(rows.column(n).to_pylist(), spec, st.get(n), final=False)
+        yield pa.RecordBatch.from_pylist(
+            [{**dict(zip(keys, key)), **{n: _fold((), specs[n], st.get(n), final).to_bytes() for n in specs}}
+             for key, st in states.items()], schema=schema)
+
+    return fold
+
+
+def _fold_level(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
+                final: bool = True) -> DataFrame:
+    """One merge level: shuffle the partials by key (a global fold: into
+    one partition) and fold EVERY key group of a partition in one Arrow
+    stream.  A repartition + map, not groupBy.applyInArrow/applyInPandas:
+    a grouped apply makes a separate Arrow round trip per GROUP —
+    measured ~8ms of plumbing per key (200 tools: 1.76s of overhead for
+    0.1s of merging).  The exchange moves only sketch blobs, so the
+    build upstream stays fully parallel.  Merge order within a key is
+    partition row order; all sketch merges are commutative monoids, so
+    results don't depend on it."""
+    schema = T.StructType([partials.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs])
+    shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
+    return shuffled.mapInArrow(_fold_batches(specs, keys, to_arrow_schema(schema), final), schema=schema)
 
 
 def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
            fan_in: int | None | str = "auto", n_partials: int | None = None) -> DataFrame:
     """Tree-merge the partials of every sketch to one row per key (see
     ``merge_partials``); ``n_partials`` is an exact partial count, else
-    ``"auto"`` estimates it."""
+    ``"auto"`` estimates it.  The fan-in level is the keyed fold with
+    one more key, ``__bkt``, left unfinalized."""
     if fan_in == "auto":
         fan_in = None if keys else _auto_fan_in(
             n_partials if n_partials is not None else _estimate_partitions(partials))
-    key_fields = [partials.schema[k] for k in keys]
-    fields = [T.StructField(n, T.BinaryType()) for n in specs]
-    out_schema = T.StructType(key_fields + fields)
-
     if fan_in:
         bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
-        mid_schema = T.StructType(key_fields + [T.StructField("__bkt", T.IntegerType())] + fields)
-
-        def merge_mid(pdf: pd.DataFrame) -> pd.DataFrame:
-            head = pdf[keys + ["__bkt"]].iloc[:1].reset_index(drop=True)
-            for n, spec in specs.items():
-                head[n] = [_fold(pdf[n], spec, final=False).to_bytes()]
-            return head
-
-        partials = (
-            partials.withColumn("__bkt", bucket)
-            .groupBy(*(keys + ["__bkt"]))
-            .applyInPandas(merge_mid, schema=mid_schema)
-            .drop("__bkt")
-        )
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield _fold_frames(batches, keys, specs)
-
-    if keys:
-        # shuffle by key, then fold EVERY key group of a partition in one
-        # Arrow stream (mapInPandas).  groupBy.applyInPandas would make a
-        # separate Arrow round trip per GROUP — measured ~8ms of plumbing
-        # per key (200 tools: 1.76s of overhead for 0.1s of merging).
-        # Merge order within a key is partition row order; all sketch
-        # merges are commutative monoids, so results don't depend on it.
-        return partials.repartition(*keys).mapInPandas(fold, schema=out_schema)
-
-    # Global aggregate: explicit single-reducer fold via repartition(1) +
-    # mapInPandas. The exchange moves only sketch blobs (one per input
-    # partition / fan-in bucket); partial building upstream stays fully
-    # parallel. Guarantees exactly one output row even on empty input.
-    out = partials.repartition(1).mapInPandas(fold, schema=out_schema)
-    if not fan_in:
+        partials = _fold_level(partials.withColumn("__bkt", bucket), keys + ["__bkt"], specs,
+                               final=False).drop("__bkt")
+    out = _fold_level(partials, keys, specs)
+    if not keys and not fan_in:
         # r8 optimization: when no fan-in level was needed (<= 64
         # partials), the final fold moves <= 64 small blobs — the same
         # bytes the single-reducer task would pull.  Mark the DataFrame
@@ -771,15 +735,21 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
                    fan_in: int | None | str = "auto") -> DataFrame:
     """Tree-merge partial sketches to one row per key.
 
+    Every merge level is the same Arrow fold kernel: the partials are
+    repartitioned by key (a global merge: into one partition) and one
+    ``mapInArrow`` task folds every key group it holds — exactly one row
+    for a global merge, even on no input.
+
     ``fan_in``: insert an intermediate merge level over buckets of
     partials (bounds reduce-side fan-in for global aggregates across
-    huge partition counts).  Bucketing is deterministic
+    huge partition counts) — the keyed fold with one more key, the
+    bucket, left unfinalized.  Bucketing is deterministic
     (pmod(xxhash64 of monotonically_increasing_id), fan_in) only in
     topology, not in result: all merges are commutative monoids.
     Default ``"auto"``: for GLOBAL aggregates the level is inserted
     automatically once the partials span > 64 partitions (estimated
     from plan metadata; keyed aggregates already spread across the
-    groupBy reducers; pass an int to force a level there too).
+    key repartition's reducers; pass an int to force a level there too).
     """
     return _merge(partials, keys, {STATE_COL: spec}, fan_in)
 
@@ -853,10 +823,11 @@ def collect_sketch(df_or_merged: DataFrame):
     fold = getattr(df_or_merged, "_slp_driver_fold", None)
     if fold is not None and STATE_COL in fold[1]:
         partials, specs = fold
-        # toPandas → Arrow transfer of the binary blobs (the session
-        # enables arrow.pyspark); py4j row collect pickles each ~1 MB
-        # CMS partial through the gateway socket instead
-        return _fold(partials.select(STATE_COL).toPandas()[STATE_COL], specs[STATE_COL])
+        # toArrow: an Arrow transfer of the binary blobs; py4j row
+        # collect pickles each ~1 MB CMS partial through the gateway
+        # socket instead
+        blobs = partials.select(STATE_COL).toArrow().column(STATE_COL).to_pylist()
+        return _fold(blobs, specs[STATE_COL])
     row = df_or_merged.select(STATE_COL).collect()
     if len(row) != 1:
         raise ValueError(f"expected one merged sketch row, got {len(row)}")

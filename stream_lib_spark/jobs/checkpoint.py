@@ -35,8 +35,8 @@ import os
 import time
 from dataclasses import dataclass, field
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -166,31 +166,30 @@ class CheckpointedSketchJob:
             key_fields
             + [T.StructField(STATE_COL, T.BinaryType()), T.StructField("rows_seen", T.LongType())]
         )
+        arrow_schema = to_arrow_schema(out_schema)
+        # computed here: a closure that captures the DataFrame cannot
+        # run on an executor
+        in_schema = to_arrow_schema(partials.schema)
 
-        def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("bucket")  # deterministic fold order
+        def merge(tbl: pa.Table) -> pa.Table:
+            tbl = tbl.sort_by("bucket")  # deterministic fold order
             # the library's one fold: an empty partials table (nothing
             # built yet) gives the empty sketch, and t-digest/KLL get the
             # same final compress as every merge — without it the bytes
             # (and state_sha256) would depend on shuffle arrival
-            sk = _fold(pdf[STATE_COL], spec)
-            head = pdf[keys].iloc[:1].reset_index(drop=True) if keys else pd.DataFrame(index=[0])
-            head[STATE_COL] = [sk.to_bytes()]
-            head["rows_seen"] = [int(pdf["rows_seen"].sum())]
-            return head
+            sk = _fold(tbl.column(STATE_COL).to_pylist(), spec)
+            return pa.Table.from_pylist([{
+                **{k: tbl.column(k)[0].as_py() for k in keys}, STATE_COL: sk.to_bytes(),
+                "rows_seen": pc.sum(tbl.column("rows_seen")).as_py() or 0}], schema=arrow_schema)
 
         if keys:
             # drop the empty-bucket marker rows (null keys, rows_seen=0):
             # they exist only to mark lineage coverage, not key groups
             real = partials.where(F.col("rows_seen") > 0)
-            return real.groupBy(*keys).applyInPandas(merge_fn, schema=out_schema)
-        def merge_stream(it):
-            batches = list(it)
-            pdf = (pd.concat(batches) if batches
-                   else pd.DataFrame(columns=["bucket", STATE_COL, "rows_seen"]))
-            yield merge_fn(pdf)
-
-        return partials.repartition(1).mapInPandas(merge_stream, schema=out_schema)
+            return real.groupBy(*keys).applyInArrow(merge, schema=out_schema)
+        return partials.repartition(1).mapInArrow(
+            lambda it: merge(pa.Table.from_batches(list(it), schema=in_schema)).to_batches(),
+            schema=out_schema)
 
     def run(self, df: DataFrame) -> DataFrame:
         """Build any missing partials, then merge. Safe to re-invoke

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -178,7 +179,11 @@ def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
     spec = SketchSpec("hll", p=12)
     assert _direct_count(df, [], "k", spec) == 70
     wide = sketch_agg(df, [], "k", spec)
-    assert "FlatMapGroupsInPandas" in _plan(wide)  # fan-in level
+    # fan-in level: a third MapInArrow (build, fan-in level, final
+    # fold), no pandas operator
+    plan = _plan(wide)
+    assert "InPandas" not in plan
+    assert len(set(re.findall(r"\((\d+)\) MapInArrow", plan))) == 3
     assert not hasattr(wide, "_slp_driver_fold")
     direct, classic = _both(df, "k", spec)
     assert direct.to_bytes() == classic.to_bytes()

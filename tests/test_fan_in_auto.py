@@ -3,6 +3,7 @@ intermediate merge level (no single reducer fed by hundreds of blobs),
 and the result must stay byte-identical for exact monoids."""
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -27,6 +28,14 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _map_in_arrow(plan: str) -> int:
+    """Number of MapInArrow nodes in a formatted plan; every merge level
+    is one, so no pandas operator (MapInPandas, FlatMapGroupsInPandas)
+    may be left in it."""
+    assert "InPandas" not in plan
+    return len(set(re.findall(r"\((\d+)\) MapInArrow", plan)))
+
+
 def test_auto_fan_in_sizing():
     assert _auto_fan_in(8) is None
     assert _auto_fan_in(64) is None
@@ -39,9 +48,10 @@ def test_global_merge_gets_fan_in_level_above_threshold(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     wide = sketch_agg(ev.repartition(96), [], "user_id", SketchSpec("hll", p=12))
     narrow = sketch_agg(ev.repartition(8), [], "user_id", SketchSpec("hll", p=12))
-    # the fan-in level shows up as a grouped applyInPandas stage
-    assert "FlatMapGroupsInPandas" in _plan(wide)
-    assert "FlatMapGroupsInPandas" not in _plan(narrow)
+    # the fan-in level shows up as a third MapInArrow node (build,
+    # fan-in level, final fold)
+    assert _map_in_arrow(_plan(wide)) == 3
+    assert _map_in_arrow(_plan(narrow)) == 2
     # exact monoid ⇒ byte-identical result regardless of merge topology
     assert bytes(wide.collect()[0]["sketch"]) == bytes(narrow.collect()[0]["sketch"])
 
@@ -54,7 +64,7 @@ def test_multi_sketch_fan_in_byte_identical(spark):
     }
     wide = multi_sketch_agg(ev.repartition(96), sketches)
     narrow = multi_sketch_agg(ev.repartition(4), sketches)
-    assert "FlatMapGroupsInPandas" in _plan(wide)
+    assert _map_in_arrow(_plan(wide)) == 3
     w, n = wide.collect()[0], narrow.collect()[0]
     assert bytes(w["h"]) == bytes(n["h"]) and bytes(w["c"]) == bytes(n["c"])
 
@@ -64,9 +74,43 @@ def test_explicit_fan_in_still_respected(spark):
     partials = sketch_partials(ev.repartition(8), [], "user_id", SketchSpec("hll", p=12))
     forced = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=3)
     off = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=None)
-    assert "FlatMapGroupsInPandas" in _plan(forced)
-    assert "FlatMapGroupsInPandas" not in _plan(off)
+    assert _map_in_arrow(_plan(forced)) == 3
+    assert _map_in_arrow(_plan(off)) == 2
     assert bytes(forced.collect()[0]["sketch"]) == bytes(off.collect()[0]["sketch"])
+
+
+@pytest.mark.parametrize("spec", [
+    SketchSpec("hll", p=12),
+    SketchSpec("cms", eps=1e-2, confidence=0.99),
+], ids=["hll", "cms"])
+def test_keyed_fan_in_byte_identical(spark, spec):
+    """A forced fan-in level on a KEYED merge (the keyed fold with the
+    bucket as one more key) gives every key the same bytes as no level."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    partials = sketch_partials(ev.repartition(8), ["event_type"], "event_id", spec)
+    forced = merge_partials(partials, ["event_type"], spec, fan_in=3)
+    off = merge_partials(partials, ["event_type"], spec, fan_in=None)
+    assert _map_in_arrow(_plan(forced)) == 3
+    assert _map_in_arrow(_plan(off)) == 2
+    f = {r["event_type"]: bytes(r["sketch"]) for r in forced.collect()}
+    o = {r["event_type"]: bytes(r["sketch"]) for r in off.collect()}
+    assert len(f) == 5
+    assert f == o
+
+
+@pytest.mark.parametrize("fan_in", [None, 3])
+def test_empty_input_distributed(spark, fan_in):
+    """Executed distributed (``.collect()``, never the driver fold): a
+    global aggregate over no rows is exactly one row holding the empty
+    sketch, a keyed one is zero rows — for tasks that see no rows and
+    for an input with no partitions at all."""
+    spec = SketchSpec("hll", p=12)
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    for empty in (ev.repartition(4).where(F.col("user_id") < 0), spark.createDataFrame([], ev.schema)):
+        rows = sketch_agg(empty, [], "user_id", spec, fan_in=fan_in).collect()
+        assert len(rows) == 1
+        assert bytes(rows[0]["sketch"]) == spec.new().to_bytes()
+        assert sketch_agg(empty, ["event_type"], "user_id", spec, fan_in=fan_in).collect() == []
 
 
 @pytest.mark.parametrize("kind,spec", [
@@ -94,10 +138,9 @@ def test_quantile_sketch_fan_in_topology(spark, kind, spec):
 def test_global_sketch_agg_plan_shape(spark):
     """Regression pin for the global-aggregate plan: pruned scan →
     partition-local MapInArrow partials → ONE exchange carrying only
-    sketch blobs → single MapInPandas fold.  A second exchange or an
+    sketch blobs → single MapInArrow fold.  A second exchange or an
     unpruned scan is a scale regression."""
     import os
-    import re
 
     from stream_lib_spark.agg import SketchSpec, sketch_agg
 
@@ -116,10 +159,11 @@ def test_global_sketch_agg_plan_shape(spark):
     node_ids = {m for m in re.findall(r"\((\d+)\) Exchange", plan)}
     assert len(node_ids) == 1
     assert "ReadSchema: struct<l_orderkey:bigint>" in plan  # pruned scan
-    # partials (MapInArrow) below the exchange, fold (MapInPandas) above
+    # partials (MapInArrow) below the exchange, fold (MapInArrow) above
     # it in the formatted tree (root prints first)
     tree = plan[: plan.index("(1) Scan")]
-    assert tree.index("MapInPandas") < tree.index("Exchange") < tree.index("MapInArrow")
+    assert _map_in_arrow(plan) == tree.count("MapInArrow") == 2
+    assert tree.index("MapInArrow") < tree.index("Exchange") < tree.rindex("MapInArrow")
 
     # direct path (default above the row threshold; the fixture is tiny,
     # so lower it): the sketch feed has NO parquet Scan and no exchange
@@ -139,11 +183,9 @@ def test_global_sketch_agg_plan_shape(spark):
 def test_keyed_sketch_agg_plan_shape(spark):
     """Regression pin for the keyed plan: pruned scan → the one
     MapInArrow build kernel → ONE exchange (the key repartition)
-    carrying only sketch blobs → the MapInPandas fold.  A pandas build
-    below the exchange, a second exchange or an unpruned scan is a
-    regression."""
+    carrying only sketch blobs → the MapInArrow fold.  A pandas build
+    or fold, a second exchange or an unpruned scan is a regression."""
     import os
-    import re
 
     from stream_lib_spark.agg import SketchSpec, sketch_agg
 
@@ -158,5 +200,5 @@ def test_keyed_sketch_agg_plan_shape(spark):
     assert len(node_ids) == 1
     assert "ReadSchema: struct<l_orderkey:bigint,l_returnflag:string>" in plan  # pruned scan
     tree = plan[: plan.index("(1) Scan")]
-    assert tree.count("MapInPandas") == tree.count("MapInArrow") == 1
-    assert tree.index("MapInPandas") < tree.index("Exchange") < tree.index("MapInArrow")
+    assert _map_in_arrow(plan) == tree.count("MapInArrow") == 2
+    assert tree.index("MapInArrow") < tree.index("Exchange") < tree.rindex("MapInArrow")

@@ -79,7 +79,7 @@ def main():
             header = (
                 "NOTE (r8): executed topology = the partials plan below "
                 "+ a driver-side fold of its <= 64 output blobs inside "
-                "collect_sketch().  The repartition(1) + MapInPandas "
+                "collect_sketch().  The repartition(1) + MapInArrow "
                 "merge tail of the lazy DataFrame is not executed on "
                 "this path (it remains the execution path above the "
                 "fan-in threshold / for distributed consumers).\n\n")
