@@ -4,7 +4,7 @@ addthis/stream-lib, rebuilt Spark-first.
 
 Sketches (HLL/HLL++, Count-Min, t-digest, KLL, Bloom, Space-Saving) are
 commutative-monoid states over numpy buffers; the Spark layer carries
-them as BinaryType columns through vectorized pandas/Arrow UDFs with an
+them as BinaryType columns through vectorized Arrow UDFs with an
 explicit two-level (partition-local partial → tree) merge.
 """
 

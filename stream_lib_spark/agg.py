@@ -680,7 +680,7 @@ def _fold_level(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpe
                 final: bool = True) -> DataFrame:
     """One merge level: shuffle the partials by key (a global fold: into
     one partition) and fold EVERY key group of a partition in one Arrow
-    stream.  A repartition + map, not groupBy.applyInArrow/applyInPandas:
+    stream.  A repartition + map, not a grouped applyInArrow:
     a grouped apply makes a separate Arrow round trip per GROUP —
     measured ~8ms of plumbing per key (200 tools: 1.76s of overhead for
     0.1s of merging).  The exchange moves only sketch blobs, so the

@@ -1,43 +1,42 @@
 """High-level sketch query functions + finalize UDFs.
 
-The finalize step of every sketch (estimate / quantile / membership) is
-exposed two ways:
+The finalize step of every sketch (estimate / quantile / top-k /
+membership) is exposed two ways:
 
-- as vectorized pandas UDFs over the BinaryType state column (for
-  keyed results that stay distributed), and
+- as Arrow UDFs over the BinaryType state column (for keyed results
+  that stay distributed): ``_blob_udf`` answers each state blob,
+  ``_probe_udf`` probes one broadcast sketch with an int64 hash column;
 - as driver-side helpers on collected global sketches (one small blob).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import functools
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .agg import SketchSpec, collect_sketch, sketch_agg, sketch_from_bytes
 
 
-@F.pandas_udf(T.DoubleType())
-def hll_cardinality(state: pd.Series) -> pd.Series:
-    return state.map(lambda b: float(sketch_from_bytes(bytes(b)).cardinality()))
+def _blob_udf(return_type: T.DataType, answer):
+    """Arrow UDF over a state-blob column: ``answer(blob)`` once per
+    non-null row (the answer decodes the blob itself); a null blob
+    gives null."""
+    arrow_type = to_arrow_type(return_type)
+
+    def finalize(blobs):
+        return pa.array([None if b is None else answer(b) for b in blobs.to_pylist()], arrow_type)
+
+    return F.arrow_udf(finalize, return_type)
 
 
-@F.pandas_udf(T.LongType())
-def sketch_weight(state: pd.Series) -> pd.Series:
-    """Total observed weight (CMS.size / tdigest.total / KLL.n)."""
-    def w(b):
-        sk = sketch_from_bytes(bytes(b))
-        for attr in ("size", "total", "n", "count"):
-            if hasattr(sk, attr):
-                return int(getattr(sk, attr))
-        return -1
-    return state.map(w)
+hll_cardinality = _blob_udf(T.DoubleType(), lambda b: float(sketch_from_bytes(b).cardinality()))
 
 
 def quantile_udf(q: float):
-    @F.pandas_udf(T.DoubleType())
-    def _q(state: pd.Series) -> pd.Series:
-        return state.map(lambda b: float(sketch_from_bytes(bytes(b)).quantile(q)))
-    return _q
+    return _blob_udf(T.DoubleType(), lambda b: float(sketch_from_bytes(b).quantile(q)))
 
 
 def _driver_row(df: DataFrame, names: list[str], values) -> DataFrame:
@@ -48,12 +47,17 @@ def _driver_row(df: DataFrame, names: list[str], values) -> DataFrame:
         T.StructType([T.StructField(n, T.DoubleType()) for n in names]))
 
 
-_TOPK_FIELDS = (
+_TOPK = T.StructType([
     T.StructField("item", T.StringType()),
     T.StructField("count", T.LongType()),
     T.StructField("error", T.LongType()),
     T.StructField("rank", T.IntegerType()),
-)
+])
+
+
+def _topk_rows(sk, k: int) -> list:
+    """(item, count, error, rank) rows of a Space-Saving sketch's top k."""
+    return [(str(item), int(cnt), int(err), i) for i, (item, cnt, err) in enumerate(sk.top_k(k), 1)]
 
 
 def approx_count_distinct(df: DataFrame, col: str, keys: list[str] | None = None,
@@ -72,75 +76,50 @@ def approx_count_distinct(df: DataFrame, col: str, keys: list[str] | None = None
 def approx_quantiles(df: DataFrame, col: str, qs: list[float],
                      keys: list[str] | None = None, kind: str = "tdigest", **kw) -> DataFrame:
     """t-digest / KLL quantiles → (keys..., q_<x> double ...); global
-    quantiles are finalized on the driver like approx_count_distinct."""
+    quantiles are finalized on the driver like approx_count_distinct.
+    Keyed quantiles are one struct-typed UDF, so each blob decodes once
+    for all qs."""
     keys = keys or []
     spec = SketchSpec(kind, compression=100.0) if kind == "tdigest" else SketchSpec(kind, k=200)
     merged = sketch_agg(df, keys, col, spec, **kw)
     names = [f"q_{str(q).replace('.', '_')}" for q in qs]
+
+    def row(sk):
+        return tuple(float(sk.quantile(q)) for q in qs)
+
     if not keys:
-        sk = collect_sketch(merged)
-        return _driver_row(df, names, [sk.quantile(q) for q in qs])
-    cols = [quantile_udf(q)(F.col("sketch")).alias(n) for q, n in zip(qs, names)]
-    return merged.select(*keys, *cols)
+        return _driver_row(df, names, row(collect_sketch(merged)))
+    fields = T.StructType([T.StructField(n, T.DoubleType()) for n in names])
+    quantiles = _blob_udf(fields, lambda b: row(sketch_from_bytes(b)))
+    return merged.select(*keys, quantiles("sketch").alias("__q")).select(*keys, "__q.*")
 
 
 def approx_topk(df: DataFrame, col: str, k: int, capacity: int | None = None,
                 keys: list[str] | None = None, **kw) -> DataFrame:
     """Space-Saving top-k → (keys..., item, count, error, rank).  Global
     top-k is finalized on the driver: the merged sketch is one blob and
-    the explode is k rows."""
+    the explode is k rows.  Keyed top-k stays distributed: merged has
+    one row per key, and each blob's rows are inlined from one array
+    UDF, with no extra shuffle."""
     keys = keys or []
     cap = capacity or max(4 * k, 64)
     merged = sketch_agg(df, keys, col, SketchSpec("spacesaving", capacity=cap), **kw)
     if not keys:
-        rows = [(str(item), int(cnt), int(err), i)
-                for i, (item, cnt, err) in enumerate(collect_sketch(merged).top_k(k), 1)]
-        return df.sparkSession.createDataFrame(rows, T.StructType(list(_TOPK_FIELDS)))
-
-    out_fields = [merged.schema[kk] for kk in keys] + list(_TOPK_FIELDS)
-
-    def explode_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for *kvals, blob in zip(*(pdf[c] for c in keys + ["sketch"])):
-            ss = sketch_from_bytes(bytes(blob))
-            for i, (item, cnt, err) in enumerate(ss.top_k(k), 1):
-                rows.append(list(kvals) + [str(item), cnt, err, i])
-        return pd.DataFrame(rows, columns=keys + ["item", "count", "error", "rank"])
-
-    # merged already has exactly ONE row per key, so the keyed case needs
-    # no extra shuffle or per-group Arrow round trip either — explode_topk
-    # iterates rows, so one mapInPandas stream per partition covers both
-    return merged.mapInPandas(lambda it: (explode_topk(pdf) for pdf in it), T.StructType(out_fields))
+        return df.sparkSession.createDataFrame(_topk_rows(collect_sketch(merged), k), _TOPK)
+    topk = _blob_udf(T.ArrayType(_TOPK), lambda b: _topk_rows(sketch_from_bytes(b), k))
+    return merged.select(*keys, F.inline(topk("sketch")))
 
 
 def cms_frequencies(df: DataFrame, col: str, probe_items: list, eps: float = 1e-4,
                     confidence: float = 0.99, **kw) -> DataFrame:
     """Global CMS over df[col], probed at probe_items →
-    (item string, est_count long).  Probe hashing reuses the exact same
-    JVM xxhash64 the update path used."""
-    spark = df.sparkSession
-    cms = collect_sketch(sketch_agg(df, [], col, SketchSpec("cms", eps=eps, confidence=confidence), **kw))
-    probes = spark.createDataFrame([(str(i),) for i in probe_items], ["item"])
-    # hash probe items the same way the update path hashed df[col]; a
-    # probe that cannot cast to the column's type can never equal any
-    # item of the column, so its exact count is 0 — report that instead
-    # of probing at the pseudo-hash of NULL (every uncastable probe
-    # would otherwise alias to xxhash64(NULL) and share a garbage count)
-    field = dict(df.dtypes)[col]
-    cast_col = F.col("item").try_cast(field)
-    hashed = probes.select(
-        "item", F.when(cast_col.isNotNull(), F.xxhash64(cast_col)).alias("h")
-    ).collect()
-    import numpy as np
-
-    items = [r["item"] for r in hashed]
-    hs = [r["h"] for r in hashed]
-    valid = np.array([h is not None for h in hs], dtype=bool)
-    est = np.zeros(len(items), dtype=np.int64)
-    if valid.any():
-        est[valid] = cms.estimate_hashed(
-            np.array([h for h in hs if h is not None], dtype=np.int64))
-    return spark.createDataFrame(list(zip(items, [int(e) for e in est])), ["item", "est_count"])
+    (item string, est_count long): ``cms_frequencies_df`` over a probe
+    frame built on the driver.  A probe that cannot cast to the
+    column's type can never equal any item of the column, so its exact
+    count is 0 — reported as such instead of null."""
+    probes = df.sparkSession.createDataFrame([(str(i),) for i in probe_items], "item string")
+    est = cms_frequencies_df(df, col, probes, "item", eps=eps, confidence=confidence, **kw)
+    return est.select("item", F.coalesce("est_count", F.lit(0)).alias("est_count"))
 
 
 def hll_intersection_estimate(sk_a, sk_b) -> float:
@@ -194,34 +173,23 @@ def cms_frequencies_df(df: DataFrame, col: str, probes: DataFrame,
     ``df[col]``, then probe a probe COLUMN executor-side → ``probes``
     plus ``est_count`` long.
 
-    Unlike ``cms_frequencies`` (driver-side probe list, fine for small
-    ad-hoc sets), the probe table here never touches the driver: the
-    collected sketch blob ships via a cached ``SparkContext.broadcast``
-    and each Arrow batch of probes is estimated with the vectorized
-    kernel — so a 10^9-row candidate list (e.g. decontamination
-    candidates probed against a corpus CMS) is a plain scan + pandas
-    UDF, no collect anywhere.  Probe hashing reuses the exact JVM
-    xxhash64-of-``df[col]``'s-type the update path used."""
+    Unlike ``cms_frequencies`` (a driver-built probe frame over this
+    function, fine for small ad-hoc sets), the probe table here never
+    touches the driver: the collected sketch blob ships via a cached
+    ``SparkContext.broadcast`` and each Arrow batch of probes is
+    estimated with the vectorized kernel — so a 10^9-row candidate list
+    (e.g. decontamination candidates probed against a corpus CMS) is a
+    plain scan + Arrow UDF, no collect anywhere.  Probe hashing reuses
+    the exact JVM xxhash64-of-``df[col]``'s-type the update path used."""
     probe_col = probe_col or col
     cms = collect_sketch(sketch_agg(
         df, [], col,
         SketchSpec("cms", eps=eps, confidence=confidence, conservative=conservative), **kw))
-    bc, tok = _broadcast_blob(probes.sparkSession, cms.to_bytes())
-
-    @F.pandas_udf(T.LongType())
-    def est(h: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from .sketches.cms import CountMinSketch
-
-        sk = _parsed_sketch(tok, bc, CountMinSketch.from_bytes)
-        return pd.Series(sk.estimate_hashed(h.to_numpy().astype(np.int64)).astype(np.int64))
-
-    field = dict(df.dtypes)[col]
+    est = _probe_udf(probes.sparkSession, cms, T.LongType(), "estimate_hashed")
     # null / uncastable probes get a NULL estimate, not the count at the
     # pseudo-hash of NULL (the build path dropped nulls, so membership
     # of such probes is undefined/zero, never hash(NULL)'s bucket)
-    cast_col = F.col(probe_col).try_cast(field)
+    cast_col = F.col(probe_col).try_cast(dict(df.dtypes)[col])
     return probes.withColumn(
         "est_count", F.when(cast_col.isNotNull(), est(F.xxhash64(cast_col))))
 
@@ -235,7 +203,7 @@ def bloom_build(df: DataFrame, col: str, n_elements: int, fpp: float = 0.01, **k
 
 _blob_bcasts: dict = {}  # (app_id, blob_sha) -> Broadcast, see bloom_probe
 
-# Executor-side cache of PARSED probe sketches: a pandas UDF body runs
+# Executor-side cache of PARSED probe sketches: an Arrow UDF body runs
 # once per Arrow batch, and re-parsing a ~24 MB Bloom/CMS blob per
 # batch is a pointless memcpy.  Keyed by a driver-generated token
 # closed into the UDF (worker-side Broadcast objects expose no stable
@@ -244,13 +212,23 @@ _parsed_cache: dict = {}
 _PARSED_CACHE_MAX = 4
 
 
-def _parsed_sketch(token: str, bc, parse):
-    sk = _parsed_cache.get(token)
+def _probe_udf(spark, sketch, return_type: T.DataType, method: str):
+    """Arrow UDF running ``sketch.<method>(hashes)`` on the executors
+    over an int64 hash column.  The sketch blob ships once through
+    ``_broadcast_blob``; its body is the module-level ``_probe`` so the
+    worker's ``_parsed_cache`` outlives one task's copy of the UDF."""
+    bc, tok = _broadcast_blob(spark, sketch.to_bytes())
+    return F.arrow_udf(functools.partial(
+        _probe, tok, bc, type(sketch).from_bytes, method, to_arrow_type(return_type)), return_type)
+
+
+def _probe(tok: str, bc, parse, method: str, arrow_type, hashes):
+    sk = _parsed_cache.get(tok)
     if sk is None:
         if len(_parsed_cache) >= _PARSED_CACHE_MAX:
             _parsed_cache.pop(next(iter(_parsed_cache)))
-        sk = _parsed_cache[token] = parse(bc.value)
-    return sk
+        sk = _parsed_cache[tok] = parse(bc.value)
+    return pa.array(getattr(sk, method)(hashes.to_numpy()), arrow_type)
 
 
 def _broadcast_blob(spark, blob: bytes):
@@ -287,17 +265,7 @@ def bloom_probe(bf, df: DataFrame, col: str) -> DataFrame:
     would break later executions).  Long-lived apps cycling through many
     DISTINCT filters should call ``bloom_probe.clear_cache(destroy=True)``
     between generations once prior results are materialized."""
-    bc, tok = _broadcast_blob(df.sparkSession, bf.to_bytes())
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(h: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from .sketches.bloom import BloomFilter
-
-        filt = _parsed_sketch(tok, bc, BloomFilter.from_bytes)
-        return pd.Series(filt.contains_hashed(h.to_numpy().astype(np.int64)))
-
+    probe = _probe_udf(df.sparkSession, bf, T.BooleanType(), "contains_hashed")
     # NULL probe values were never added (the build path drops nulls),
     # so answer NULL, not the bit pattern at xxhash64(NULL)
     return df.withColumn(

@@ -103,8 +103,8 @@ def main(argv=None):
         # fail FAST at the CLI if any rewritten spec can't construct —
         # the native kinds' param vocabularies (e.g. linearcounting
         # max_n=..., bloom m_bits/k) don't all map onto the reference-
-        # family constructors, and a TypeError inside mapInPandas on an
-        # executor is an opaque way to find that out
+        # family constructors, and a TypeError inside the Arrow build
+        # kernel on an executor is an opaque way to find that out
         for name, _col, spec in ops:
             try:
                 spec.new()

@@ -11,6 +11,7 @@ closures regardless of the driver's cwd/PYTHONPATH.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -21,8 +22,11 @@ _SHIPPED = set()
 
 
 def package_zip() -> str:
-    """Zip the stream_lib_spark package into a temp file (cached per
-    process) and return the path."""
+    """Zip the stream_lib_spark package into a temp file and return the
+    path.  The zip is named after the package directory, so two
+    checkouts on one machine never ship each other's code (executors
+    import the ``addPyFile`` zip ahead of ``PYTHONPATH``), and rebuilt
+    when older than the package's newest ``.py``."""
     import stream_lib_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(stream_lib_spark.__file__))
@@ -39,7 +43,8 @@ def package_zip() -> str:
         if zip_path and os.path.isfile(zip_path):
             return zip_path
         raise RuntimeError(f"cannot locate package source at {pkg_dir}")
-    out = os.path.join(tempfile.gettempdir(), "stream_lib_spark-pyfiles.zip")
+    tree = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"stream_lib_spark-pyfiles-{tree}.zip")
     newest_src = max(
         os.path.getmtime(os.path.join(root, f))
         for root, _d, files in os.walk(pkg_dir)

@@ -38,25 +38,21 @@ Which kinds are exportable is a semantic question, not a format one:
 
 from __future__ import annotations
 
-import pandas as pd
-
 EXPORTABLE = ("hll", "tdigest", "qdigest", "spacesaving", "cms", "bloom",
               "linearcounting", "loglog", "adaptivecounting",
               "countthenestimate", "hllc")
 
 
 def reference_wire_udf(kind: str):
-    """Pandas UDF converting a column of native sketch blobs to
-    reference wire bytes (blob-per-row; state, not rows, crosses)."""
-    from pyspark.sql import functions as F, types as T
+    """Arrow UDF converting a column of native sketch blobs to
+    reference wire bytes (blob-per-row; state, not rows, crosses).
+    NULL blobs (e.g. from an outer join of sketch tables) pass through
+    as NULL rather than TypeError-ing deep in the executor."""
+    from pyspark.sql import types as T
 
-    @F.pandas_udf(T.BinaryType())
-    def conv(blobs: pd.Series) -> pd.Series:
-        # NULL blobs (e.g. from an outer join of sketch tables) pass
-        # through as NULL rather than TypeError-ing deep in the executor
-        return blobs.map(lambda b: None if b is None else to_reference_wire(kind, bytes(b)))
+    from ..functions import _blob_udf
 
-    return conv
+    return _blob_udf(T.BinaryType(), lambda b: to_reference_wire(kind, b))
 
 
 def to_reference_wire(kind: str, blob: bytes) -> bytes:
