@@ -210,6 +210,11 @@ class SketchSpec:
 #   merge       _merge: fan-in level, keyed fold and global fold are each
 #               one _fold_level (the mapInArrow kernel _fold_batches) +
 #               the driver-fold marker; every blob fold is _fold
+#
+# The checkpoint job uses the same parts: phase A is _build keyed by
+# (bucket, keys...) with per-key row counts (__rows) + one _fold_level
+# in build-task order, phase B one _fold_level in bucket order.  Every
+# shuffle moves sketch blobs, never rows.
 # ---------------------------------------------------------------------------
 
 
@@ -286,18 +291,27 @@ def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
 
 def _groups(tbl: pa.Table, keys: list[str]):
     """(key tuple of Python values, the group's rows) per key group of
-    an Arrow table: null keys form their own group, rows keep their
-    order.  Grouping reads the key columns alone; one stable sort by
-    group makes every group a zero-copy slice.  Global (no keys): one
-    group of every row."""
+    an Arrow table, in first-appearance order: null keys form their own
+    group, rows keep their order.  Each key column's dictionary indices
+    are dense first-appearance codes (null encoded as its own value);
+    several keys combine pairwise and re-densify, so a code stays below
+    the row count.  One stable sort by code makes every group a
+    zero-copy slice.  Global (no keys): one group of every row."""
     if not keys:
         return [((), tbl)]
-    codes = tbl.select(keys).to_pandas().groupby(keys, dropna=False, sort=False).ngroup().to_numpy()
+    codes = None
+    for k in keys:
+        enc = pc.dictionary_encode(tbl.column(k).combine_chunks(), null_encoding="encode")
+        c = enc.indices.cast(pa.int64())
+        codes = c if codes is None else pc.dictionary_encode(
+            pc.add(pc.multiply(codes, len(enc.dictionary)), c)).indices.cast(pa.int64())
+    codes = codes.to_numpy()
     order = np.argsort(codes, kind="stable")
     tbl = tbl.take(order).combine_chunks()
     starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
-    return [(tuple(tbl.column(k)[int(i)].as_py() for k in keys), tbl.slice(i, j - i))
-            for i, j in zip(starts, [*starts[1:], len(order)])]
+    firsts = tbl.select(keys).take(starts)
+    return list(zip(zip(*(c.to_pylist() for c in firsts.columns)),
+                    (tbl.slice(i, j - i) for i, j in zip(starts, [*starts[1:], len(order)]))))
 
 
 def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
@@ -305,7 +319,8 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
     """THE build kernel (mapInArrow): fold a partition's Arrow batches
     into one state per (key, sketch) and emit one (keys..., <name>...)
     batch in ``schema`` — exactly one row for a global (zero-key) build,
-    even on no input.
+    even on no input.  A ``__rows`` field in ``schema`` gets each key's
+    input row count.
 
     Buffering: a keyed build buffers every column and folds per key in
     flushes of ~FLUSH_ROWS rows, so the python-call overhead is per
@@ -326,17 +341,23 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
         spec.kind in ("spacesaving", "bottomk") and spec.input_mode == "item"
         and not spec.reference_family)]
     per_batch = [n for n in specs if n not in buffered]
+    first = next(iter(specs))  # every row reaches exactly one fold of it: count there
 
     def build(batches):
-        states: dict[tuple, dict] = {} if keys else {(): {n: s.new() for n, s in specs.items()}}
+        def new():
+            return {"__rows": 0, **{n: s.new() for n, s in specs.items()}}
+
+        states: dict[tuple, dict] = {} if keys else {(): new()}
 
         def fold(tbl: pa.Table, names: list[str]):
             for key, rows in _groups(tbl, keys):
                 group = states.get(key)
                 if group is None:
-                    group = states[key] = {n: s.new() for n, s in specs.items()}
+                    group = states[key] = new()
                 for n in names:
                     _offer(specs[n], group[n], rows.column(f"__in_{n}"), python_hash)
+                if first in names:
+                    group["__rows"] += rows.num_rows
 
         buf, buf_rows = [], 0
         for rb in batches:
@@ -351,7 +372,7 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
         if buf:
             fold(pa.Table.from_batches(buf), buffered)
         yield pa.RecordBatch.from_pylist(
-            [{**dict(zip(keys, key)), **{n: group[n].to_bytes() for n in specs}}
+            [{**dict(zip(keys, key)), "__rows": group["__rows"], **{n: group[n].to_bytes() for n in specs}}
              for key, group in states.items()], schema=schema)
 
     return build
@@ -429,7 +450,7 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
     try:
         schema = df.schema
         if not all(isinstance(schema[k].dataType, T.StringType) for k in keys):
-            return None  # the keyed build groups via pandas; string keys only
+            return None  # string keys only: no other key type has a direct-vs-classic identity test
         for name, (col, spec) in sketches.items():
             if spec.reference_family or spec.kind not in allowed or spec.params.get("conservative"):
                 return None
@@ -563,13 +584,15 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
 
 
 def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
-           hash_mode: str = "xxhash64") -> tuple[DataFrame, int | None]:
+           hash_mode: str = "xxhash64", rows: bool = False) -> tuple[DataFrame, int | None]:
     """Partition-local build of every sketch: one (keys..., <name>
-    BinaryType...) row per key per task.  Returns (partials, n): n is
-    the direct path's exact task count, None on the classic path (whose
-    partition count the merge can only estimate)."""
+    BinaryType...) row per key per task, plus the key's input row count
+    ``__rows`` if ``rows``.  Returns (partials, n): n is the direct
+    path's exact task count, None on the classic path (whose partition
+    count the merge can only estimate)."""
     specs = {name: spec for name, (_, spec) in sketches.items()}
-    schema = T.StructType([df.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs])
+    schema = T.StructType([df.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs]
+                          + ([T.StructField("__rows", T.LongType())] if rows else []))
     direct = _direct_tasks(df, keys, sketches, hash_mode)
     if direct is None:
         feed, python_hash = _project(df, keys, sketches, hash_mode)
@@ -660,35 +683,48 @@ def _fold_batches(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Sche
     one batch in ``schema`` — exactly one row for a global (zero-key)
     fold, even on no input.  Every state is finalized by ``_fold`` when
     ``final``; a fan-in level passes False and emits its states
-    uncompressed, as the build does."""
+    uncompressed, as the build does.  Partials that carry the build's
+    ``__rows`` counts get them summed per key."""
+
+    count = "__rows" in schema.names
 
     def fold(batches):
-        states: dict[tuple, dict] = {} if keys else {(): {}}
+        states: dict[tuple, dict] = {} if keys else {(): {"__rows": 0}}
         for rb in batches:
             for key, rows in _groups(pa.Table.from_batches([rb]), keys):
-                st = states.setdefault(key, {})
+                st = states.setdefault(key, {"__rows": 0})
                 for n, spec in specs.items():
                     st[n] = _fold(rows.column(n).to_pylist(), spec, st.get(n), final=False)
+                if count:
+                    st["__rows"] += pc.sum(rows.column("__rows")).as_py()
         yield pa.RecordBatch.from_pylist(
-            [{**dict(zip(keys, key)), **{n: _fold((), specs[n], st.get(n), final).to_bytes() for n in specs}}
+            [{**dict(zip(keys, key)), "__rows": st["__rows"],
+              **{n: _fold((), specs[n], st.get(n), final).to_bytes() for n in specs}}
              for key, st in states.items()], schema=schema)
 
     return fold
 
 
 def _fold_level(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
-                final: bool = True) -> DataFrame:
-    """One merge level: shuffle the partials by key (a global fold: into
-    one partition) and fold EVERY key group of a partition in one Arrow
-    stream.  A repartition + map, not a grouped applyInArrow:
-    a grouped apply makes a separate Arrow round trip per GROUP —
+                final: bool = True, order: list[str] | None = None,
+                by: list[str] | None = None) -> DataFrame:
+    """One merge level: shuffle the partials by key (or by ``by``, a
+    subset of the keys; a global fold: into one partition) and fold
+    EVERY key group of a partition in one Arrow stream.  A repartition
+    + map, not a grouped applyInArrow: a grouped apply makes a separate
+    Arrow round trip per GROUP —
     measured ~8ms of plumbing per key (200 tools: 1.76s of overhead for
     0.1s of merging).  The exchange moves only sketch blobs, so the
     build upstream stays fully parallel.  Merge order within a key is
-    partition row order; all sketch merges are commutative monoids, so
-    results don't depend on it."""
-    schema = T.StructType([partials.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs])
-    shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
+    partition row order, pinned by ``order`` (sort columns within each
+    shuffled partition) where a digest's bytes must not depend on
+    shuffle arrival; the monoid's answers never do.  A ``__rows``
+    column rides along, summed per key."""
+    schema = T.StructType([partials.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs]
+                          + ([partials.schema["__rows"]] if "__rows" in partials.columns else []))
+    shuffled = partials.repartition(*(by or keys)) if keys else partials.repartition(1)
+    if order:
+        shuffled = shuffled.sortWithinPartitions(*order)
     return shuffled.mapInArrow(_fold_batches(specs, keys, to_arrow_schema(schema), final), schema=schema)
 
 

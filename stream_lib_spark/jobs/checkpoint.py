@@ -5,25 +5,38 @@ resumable from a snapshot checkpoint, with per-partition lineage and
 metrics rows, and the resumed result must be byte-identical to an
 uninterrupted run.
 
-Mechanism (Iceberg-ready, parquet-backed in the sandbox):
+Mechanism (Iceberg-ready, parquet-backed in the sandbox), built from
+the library's one pipeline (``agg._build`` + ``agg._fold_level``), so
+every shuffle moves sketch blobs, never rows:
 
 - rows are assigned to ``n_buckets`` deterministic lineage buckets by a
   stable row key expression (default: xxhash64 of all columns — for the
   transcript table use ``(conv_id, turn_idx)``).  Buckets play the role
   of Iceberg file/partition manifests: content-stable across runs, so
   "which work is done" is a set of bucket ids.
-- phase A builds one partial-sketch row per (bucket, keys...) and
-  appends it to the checkpoint table together with lineage metrics
-  (snapshot_id, bucket, rows_seen, state_sha256, wall_ms).  A resumed
-  run lists finished buckets and processes only the complement —
-  already-persisted partials are never recomputed.
-- phase B folds all bucket partials with the sketch monoid in
-  deterministic bucket order.  Because bucket contents are pure
-  functions of the table snapshot and merges are commutative monoids,
-  the final state is byte-identical however many times the job was
-  interrupted (tested in tests/test_checkpoint.py).
+- phase A builds partials for the buckets not yet done: the
+  partition-local build keyed by (bucket, keys...) in the scan's own
+  tasks, then one blob fold per (bucket, keys...) in build-task order.
+  A build task holds one state per (bucket, key) it sees — never a
+  bucket's rows.  The blobs are shuffled by bucket, so one fold task
+  writes each bucket's rows, with their lineage metrics (bucket, keys,
+  rows_seen, state_sha256), into one file of the checkpoint table: a
+  job killed part-way marks no half-built bucket done.  A resumed run
+  lists finished buckets and processes only the complement — already-
+  persisted partials are never recomputed.
+- phase B folds all bucket partials per key with the sketch monoid in
+  bucket order.  Because bucket contents are pure functions of the
+  table snapshot, build tasks are the snapshot's scan splits (an input
+  that re-deals rows, such as a round-robin repartition, is not) and
+  both fold orders are pinned, the final state is byte-identical however
+  many times the job was interrupted (tested in tests/test_checkpoint.py,
+  tests/test_checkpoint_pipeline.py).  Digests (t-digest, KLL,
+  q-digest) are chunking-sensitive: their bytes hold only while a build
+  task's rows of the buckets being built stay below the build kernel's
+  2^22-row flush; past it a resume moves the flush points, and their
+  bytes (never their bounds) may differ.
 
-Swapping parquet for Iceberg at deploy time = replacing ``_read_done``
+Swapping parquet for Iceberg at deploy time = replacing ``_done_buckets``
 / append with catalog operations on a metrics table; the lineage model
 is unchanged (SURVEY.md §7).
 """
@@ -32,16 +45,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import time
 from dataclasses import dataclass, field
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..agg import STATE_COL, SketchSpec, _fold, _groups, _offer, _project
+from ..agg import STATE_COL, SketchSpec, _build, _fold_level
 
 
 @dataclass
@@ -90,6 +99,22 @@ class CheckpointedSketchJob:
 
     # ------------------------------------------------------------ phase A
 
+    def _partials(self, df: DataFrame, todo: list[int]) -> DataFrame:
+        """Phase A's plan for buckets ``todo``: one (bucket, keys...,
+        sketch, rows_seen, state_sha256) row per (bucket, key) — the
+        partition-local build, then one fold of its per-task partials in
+        build-task order."""
+        keys = ["__bucket", *self.keys]
+        bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
+        parts = _build(bucketed, keys, {STATE_COL: (self.col, self.spec)}, rows=True)[0]
+        # shuffled by bucket alone: one task folds (and writes) every
+        # key of a bucket, so a bucket is one file — the unit of "done"
+        folded = _fold_level(parts.withColumn("__task", F.spark_partition_id()), keys,
+                             {STATE_COL: self.spec}, order=["__task"], by=["__bucket"])
+        return folded.select(F.col("__bucket").alias("bucket"), *self.keys, STATE_COL,
+                             F.col("__rows").alias("rows_seen"),
+                             F.sha2(STATE_COL, 256).alias("state_sha256"))
+
     def build_partials(self, df: DataFrame, max_buckets: int | None = None) -> int:
         """Compute + persist partials for buckets not yet checkpointed.
         ``max_buckets`` caps work for this invocation (used by tests to
@@ -100,55 +125,24 @@ class CheckpointedSketchJob:
             todo = todo[:max_buckets]
         if not todo:
             return 0
-        spec, keys, col = self.spec, self.keys, self.col
-        bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
-        prepared, _ = _project(bucketed, keys + ["__bucket"], {STATE_COL: (col, spec)})
-
-        key_fields = [prepared.schema[k] for k in keys]
-        out_schema = T.StructType(
-            [T.StructField("bucket", T.IntegerType())]
-            + key_fields
-            + [
-                T.StructField(STATE_COL, T.BinaryType()),
-                T.StructField("rows_seen", T.LongType()),
-                T.StructField("state_sha256", T.StringType()),
-                T.StructField("wall_ms", T.LongType()),
-            ]
-        )
-        arrow_schema = to_arrow_schema(out_schema)
-
-        def build(tbl: pa.Table) -> pa.Table:
-            bucket = tbl.column("__bucket")[0].as_py()
-            rows = []
-            for key, sub in _groups(tbl, keys):
-                t0 = time.time()  # per-KEY wall, not cumulative since bucket start
-                blob = _offer(spec, spec.new(), sub.column(f"__in_{STATE_COL}")).to_bytes()
-                rows.append({"bucket": bucket, **dict(zip(keys, key)), STATE_COL: blob,
-                             "rows_seen": sub.num_rows, "state_sha256": hashlib.sha256(blob).hexdigest(),
-                             "wall_ms": int((time.time() - t0) * 1000)})
-            return pa.Table.from_pylist(rows, schema=arrow_schema)
-
-        partials = prepared.groupBy("__bucket").applyInArrow(build, schema=out_schema)
+        partials = self._partials(df, todo)
         partials.write.mode("append").parquet(self.partials_path)
-        # buckets with ZERO matching rows produce no applyInArrow group
-        # and hence no partial row — without a marker they would never be
-        # "done" and every resume would re-scan the full input for them
-        # forever.  Append an empty-sketch marker row (rows_seen=0, keys
-        # null) for each; the keyed final_merge filters markers out, the
-        # global path folds them as the monoid identity.
+        # buckets with ZERO matching rows produce no partial row —
+        # without a marker they would never be "done" and every resume
+        # would re-scan the full input for them forever.  Append an
+        # empty-sketch marker row (rows_seen=0, keys null) for each; the
+        # keyed final_merge filters markers out, the global path folds
+        # them as the monoid identity.
         covered = self._done_buckets()
         missing = [b for b in todo if b not in covered]
         if missing:
-            blob = spec.new().to_bytes()
+            blob = self.spec.new().to_bytes()
             digest = hashlib.sha256(blob).hexdigest()
-            marker_rows = [
-                tuple([b] + [None] * len(keys) + [blob, 0, digest, 0])
-                for b in missing
-            ]
+            marker_rows = [tuple([b] + [None] * len(self.keys) + [blob, 0, digest]) for b in missing]
             # key fields may be non-nullable in the source schema; the
             # markers deliberately carry null keys, so relax nullability
             marker_schema = T.StructType([
-                T.StructField(f.name, f.dataType, True) for f in out_schema.fields
+                T.StructField(f.name, f.dataType, True) for f in partials.schema.fields
             ])
             (self.spark.createDataFrame(marker_rows, schema=marker_schema)
              .write.mode("append").parquet(self.partials_path))
@@ -157,39 +151,19 @@ class CheckpointedSketchJob:
     # ------------------------------------------------------------ phase B
 
     def final_merge(self) -> DataFrame:
-        """Fold all checkpointed partials in deterministic bucket order
-        → one row per key group: (keys..., sketch, rows_seen)."""
+        """Fold all checkpointed partials in bucket order → one row per
+        key group: (keys..., sketch, rows_seen); a global job gives
+        exactly one row, even on empty input."""
         partials = self.spark.read.parquet(self.partials_path)
-        spec, keys = self.spec, self.keys
-        key_fields = [partials.schema[k] for k in keys]
-        out_schema = T.StructType(
-            key_fields
-            + [T.StructField(STATE_COL, T.BinaryType()), T.StructField("rows_seen", T.LongType())]
-        )
-        arrow_schema = to_arrow_schema(out_schema)
-        # computed here: a closure that captures the DataFrame cannot
-        # run on an executor
-        in_schema = to_arrow_schema(partials.schema)
-
-        def merge(tbl: pa.Table) -> pa.Table:
-            tbl = tbl.sort_by("bucket")  # deterministic fold order
-            # the library's one fold: an empty partials table (nothing
-            # built yet) gives the empty sketch, and t-digest/KLL get the
-            # same final compress as every merge — without it the bytes
-            # (and state_sha256) would depend on shuffle arrival
-            sk = _fold(tbl.column(STATE_COL).to_pylist(), spec)
-            return pa.Table.from_pylist([{
-                **{k: tbl.column(k)[0].as_py() for k in keys}, STATE_COL: sk.to_bytes(),
-                "rows_seen": pc.sum(tbl.column("rows_seen")).as_py() or 0}], schema=arrow_schema)
-
-        if keys:
+        if self.keys:
             # drop the empty-bucket marker rows (null keys, rows_seen=0):
             # they exist only to mark lineage coverage, not key groups
-            real = partials.where(F.col("rows_seen") > 0)
-            return real.groupBy(*keys).applyInArrow(merge, schema=out_schema)
-        return partials.repartition(1).mapInArrow(
-            lambda it: merge(pa.Table.from_batches(list(it), schema=in_schema)).to_batches(),
-            schema=out_schema)
+            partials = partials.where(F.col("rows_seen") > 0)
+        # bucket order pins the fold: digest bytes (t-digest, KLL) must
+        # not depend on shuffle arrival
+        merged = _fold_level(partials.withColumnRenamed("rows_seen", "__rows"), self.keys,
+                             {STATE_COL: self.spec}, order=["bucket"])
+        return merged.withColumnRenamed("__rows", "rows_seen")
 
     def run(self, df: DataFrame) -> DataFrame:
         """Build any missing partials, then merge. Safe to re-invoke
@@ -200,6 +174,5 @@ class CheckpointedSketchJob:
     def metrics(self) -> DataFrame:
         """Per-bucket lineage/metrics rows (the ops surface)."""
         return self.spark.read.parquet(self.partials_path).select(
-            "bucket", *self.keys, "rows_seen", "state_sha256", "wall_ms"
-        )
+            "bucket", *self.keys, "rows_seen", "state_sha256")
 

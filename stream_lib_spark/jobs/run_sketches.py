@@ -79,12 +79,17 @@ def main(argv=None):
                          "only — see sketches/wire_export.py)")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
+    if args.checkpoint_dir and args.hash_mode != "xxhash64":
+        # the checkpoint job hashes with xxhash64 only: a silent
+        # xxhash64 build would break the murmur64 parity asked for
+        ap.error(f"--hash-mode {args.hash_mode} is not supported with --checkpoint-dir "
+                 "(the checkpoint job hashes with xxhash64)")
 
     from ..agg import SketchSpec, multi_sketch_agg, sketch_agg
     from .session import get_spark
     from .checkpoint import CheckpointedSketchJob
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession, functions as F
 
     ops = list(map(parse_op, args.ops))
     if args.wire_format == "reference":
@@ -145,9 +150,14 @@ def main(argv=None):
             merged = job.run(df).withColumnRenamed("sketch", name)
             outs.append((name, merged))
             job.metrics().write.mode("overwrite").parquet(f"{args.output}_metrics/{name}")
-        result = outs[0][1]
-        for _, o in outs[1:]:
-            result = result.join(o, args.keys) if args.keys else result.crossJoin(o.drop("rows_seen"))
+        # one rows_seen column (the first op's); null keys are a group
+        # like any other, so the keys join null-safely
+        result = outs[0][1].alias("l")
+        for name, o in outs[1:]:
+            o = o.drop("rows_seen").alias("r")
+            on = [F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in args.keys]
+            joined = result.join(o, on) if on else result.crossJoin(o)
+            result = joined.select("l.*", f"r.{name}").alias("l")
     else:
         sketches = {}
         for name, col, spec in ops:
@@ -155,8 +165,6 @@ def main(argv=None):
         result = multi_sketch_agg(df, sketches, keys=args.keys, hash_mode=args.hash_mode)
 
     if args.wire_format == "reference":
-        from pyspark.sql import functions as F
-
         from ..sketches.wire_export import EXPORTABLE, reference_wire_udf
 
         bad = [name for name, _c, spec in ops if spec.kind not in EXPORTABLE]

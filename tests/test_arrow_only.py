@@ -1,7 +1,8 @@
 """Source scan: the sketch pipeline (build, merge, checkpoint) and every
-finalizer cross the Python boundary as Arrow only.  ``pyspark.sql.pandas.types``
-(Spark↔Arrow schema conversion) and pyarrow's ``Table.to_pandas`` (the
-merge kernel's key grouping) stay allowed."""
+finalizer cross the Python boundary as Arrow only, and the checkpoint
+job runs the library's one pipeline instead of kernels of its own.
+``pyspark.sql.pandas.types`` (Spark↔Arrow schema conversion) stays
+allowed."""
 
 import os
 import re
@@ -15,10 +16,24 @@ ARROW_ONLY = ["agg.py", "functions.py", "sketches/wire_export.py", "jobs/checkpo
 PANDAS_APIS = ("pandas_udf", "mapInPandas", "applyInPandas", "toPandas")
 
 
+def _source(module):
+    with open(os.path.join(PKG, module)) as f:
+        return f.read()
+
+
 @pytest.mark.parametrize("module", ARROW_ONLY)
 def test_module_has_no_pandas_path(module):
-    with open(os.path.join(PKG, module)) as f:
-        src = f.read()
+    src = _source(module)
     assert not re.search(r"^\s*(import|from)\s+pandas\b", src, re.M), f"{module} imports pandas"
     for api in PANDAS_APIS:
         assert api not in src, f"{module} uses {api}"
+
+
+def test_agg_groups_without_pandas():
+    assert "to_pandas" not in _source("agg.py")
+
+
+def test_checkpoint_has_no_private_kernels():
+    src = _source("jobs/checkpoint.py")
+    for name in ("applyInArrow", "_groups", "_offer"):
+        assert name not in src, f"jobs/checkpoint.py uses {name}"

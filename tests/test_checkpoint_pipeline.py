@@ -1,0 +1,175 @@
+"""The checkpoint job runs on the library's one pipeline: phase A is the
+partition-local build plus one blob fold per (bucket, keys), phase B is
+one blob fold in bucket order.  Pins its answers (hll/cms/bloom bytes
+and lineage rows recorded before the rebuild), t-digest kill/resume
+identity over a multi-partition input, and the phase-A plan shape."""
+
+import hashlib
+import json
+
+import pytest
+from conftest import SF_DIR, SF_DIR_CORRECTNESS as SF
+
+from stream_lib_spark.agg import SketchSpec
+from stream_lib_spark.jobs.checkpoint import CheckpointedSketchJob
+
+SPECS = {
+    "hll": SketchSpec("hll", p=12),
+    "cms": SketchSpec("cms", depth=4, width=256),
+    "bloom": SketchSpec("bloom", n_elements=10000, fpp=0.01),
+}
+
+# sha256 of the canonical (final rows, lineage rows) of each job over
+# sf0.01 events repartitioned 6 ways, 16 buckets by event_id; recorded
+# with the applyInArrow bucket build the pipeline rebuild replaced
+PARITY = {
+    ("hll", ()):
+        "e4fa933d4af76909dfc2341b297496042b8a1608dfcdc42808bfed501bec1414",
+    ("hll", ("event_type",)):
+        "fcae3ab233df6781a107d7fed3b6f4e32fb2cf9816cfb2bb5c1cb780f43e20b4",
+    ("cms", ()):
+        "47637786c93fc2bdfcf552d9c9428fa578777fbf23a096b875b92fc1717743d6",
+    ("cms", ("event_type",)):
+        "7f02505b9930a634700e21886cd128b48aa1916331295ac92351d76288f230be",
+    ("bloom", ()):
+        "fb5884b76dc69e4adfae51d2d1624c66fbb534771b41d73546e926e134c18ea3",
+    ("bloom", ("event_type",)):
+        "4c0b1e8c45558a12617d339063f95ac16bb70cf5a969bf87e72d8ff36644ffd8",
+}
+
+
+def _job(spark, tmp_path, spec, col, keys, snap, n_buckets=16):
+    return CheckpointedSketchJob(
+        spark=spark, spec=spec, col=col, keys=list(keys), n_buckets=n_buckets,
+        checkpoint_dir=str(tmp_path / "ckpt"), snapshot_id=snap, bucket_cols=["event_id"])
+
+
+def _canonical(job, final):
+    """(final rows, lineage rows) as sorted plain tuples: blobs by sha256."""
+    keys = job.keys
+    out = sorted(
+        [[r[k] for k in keys], hashlib.sha256(bytes(r["sketch"])).hexdigest(), r["rows_seen"]]
+        for r in final.collect())
+    lineage = sorted(
+        [r["bucket"], [r[k] for k in keys], r["rows_seen"], r["state_sha256"]]
+        for r in job.metrics().collect())
+    return out, lineage
+
+
+def _digest(job, final):
+    return hashlib.sha256(json.dumps(_canonical(job, final), default=str).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("kind,keys", sorted(PARITY))
+def test_checkpoint_parity(spark, tmp_path, kind, keys):
+    ev = spark.read.parquet(f"{SF}/events.parquet").repartition(6)
+    job = _job(spark, tmp_path, SPECS[kind], "user_id", keys, f"parity-{kind}")
+    assert _digest(job, job.run(ev)) == PARITY[(kind, keys)]
+
+
+@pytest.mark.parametrize("keys", [(), ("event_type",)])
+def test_tdigest_resume_matches_uninterrupted(spark, tmp_path, keys):
+    """A t-digest job killed after some buckets and resumed lands on the
+    uninterrupted run's bytes: its final sketches and every lineage
+    row's state_sha256.  The input is a multi-file table, so every
+    bucket's partials come from several build tasks and the fold order
+    across them is what is pinned."""
+    table = str(tmp_path / "events4")
+    spark.read.parquet(f"{SF}/events.parquet").repartition(4).write.parquet(table)
+    ev = spark.read.parquet(table)
+    assert ev.rdd.getNumPartitions() >= 4
+    spec = SketchSpec("tdigest", compression=100)
+
+    full = _job(spark, tmp_path, spec, "value", keys, "td-full", n_buckets=8)
+    want = _canonical(full, full.run(ev))
+    killed = _job(spark, tmp_path, spec, "value", keys, "td-killed", n_buckets=8)
+    assert killed.build_partials(ev, max_buckets=3) == 3
+    assert _canonical(killed, killed.run(ev)) == want
+
+
+def test_phase_a_shuffles_blobs_not_rows(spark, tmp_path):
+    """Phase A's plan: the build runs in the scan's tasks, so the only
+    Exchange sits above the build's MapInArrow, and no grouped Arrow
+    apply (FlatMapGroupsInArrow) is left."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    job = _job(spark, tmp_path, SPECS["hll"], "user_id", ["event_type"], "plan")
+    plan = job._partials(ev, list(range(16)))._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" not in plan
+    lines = plan.splitlines()
+    build = max(i for i, line in enumerate(lines) if "MapInArrow" in line)
+    assert any("Exchange" in line for line in lines[:build])
+    assert not any("Exchange" in line for line in lines[build:]), plan
+
+
+
+def test_each_bucket_is_written_by_one_task(spark, tmp_path):
+    """Phase A's fold spreads a bucket's keys over several tasks; the
+    write re-deals them by bucket, so every bucket's rows land in one
+    checkpoint file and a job killed while committing its files never
+    leaves a bucket that is listed as done but missing keys."""
+    from pyspark.sql import functions as F
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").repartition(6)
+    job = _job(spark, tmp_path, SPECS["hll"], "user_id", ["event_type"], "files")
+    # keep the fold's 4 shuffle partitions apart: coalesced into one,
+    # any write would put a bucket in one file
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        assert job.build_partials(ev) == 16
+    finally:
+        spark.conf.set(conf, before)
+    files = (spark.read.parquet(job.partials_path)
+             .select("bucket", F.input_file_name().alias("file")).distinct()
+             .groupBy("bucket").count().collect())
+    assert len(files) == 16 and all(r["count"] == 1 for r in files), files
+
+def _null_key_table(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "events_null_key")
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    (ev.withColumn("event_type", F.when(F.col("event_id") % 7 != 0, F.col("event_type")))
+       .repartition(3).write.parquet(path))
+    return path
+
+
+@pytest.mark.parametrize("keys", [[], ["event_type"]])
+def test_cli_multi_op_checkpoint(spark, tmp_path, keys):
+    """Multi-op CLI with --checkpoint-dir: one rows_seen column, the
+    null-key group kept, and every op's blob equal to the run without a
+    checkpoint."""
+    from stream_lib_spark.jobs.run_sketches import main
+
+    src = _null_key_table(spark, tmp_path)
+    common = ["--input", src, "--ops", "hll:user_id:p=12", "cms:user_id:depth=4,width=256",
+              "--keys", *keys, "--cpus", "4"]
+    main(common + ["--output", str(tmp_path / "plain")])
+    main(common + ["--output", str(tmp_path / "ckpt_out"), "--checkpoint-dir", str(tmp_path / "ckpt")])
+
+    plain = spark.read.parquet(str(tmp_path / "plain"))
+    ckpt = spark.read.parquet(str(tmp_path / "ckpt_out"))
+    assert ckpt.columns.count("rows_seen") == 1
+    ops = ["hll_user_id", "cms_user_id"]
+
+    def blobs(df):
+        return {tuple(r[k] for k in keys): [bytes(r[o]) for o in ops] for r in df.collect()}
+
+    want = blobs(plain)
+    assert len(want) == (6 if keys else 1) and ((None,) in want) == bool(keys)
+    assert blobs(ckpt) == want
+
+
+def test_cli_rejects_murmur64_with_checkpoint(tmp_path, capsys):
+    """The checkpoint job builds xxhash64 sketches only: asking for
+    murmur64 parity with --checkpoint-dir fails closed, naming both
+    flags, instead of silently building the other hash family."""
+    from stream_lib_spark.jobs.run_sketches import main
+
+    with pytest.raises(SystemExit):
+        main(["--input", f"{SF_DIR}/events.parquet", "--ops", "hll:user_id:p=12",
+              "--output", str(tmp_path / "out"), "--hash-mode", "murmur64",
+              "--checkpoint-dir", str(tmp_path / "ckpt")])
+    err = capsys.readouterr().err
+    assert "--hash-mode" in err and "--checkpoint-dir" in err
