@@ -12,9 +12,11 @@ entry point and any number of sketches per scan:
    per (grouping key) per task straight off the Arrow batches, emitted
    as one BinaryType column per sketch.  This is the map-side combine:
    the shuffle moves O(partitions × keys) sketch blobs, never rows.
-3. **(optional) fan-in** — for global aggregates over many partitions,
-   an intermediate merge level keyed by ``pmod(partial_id, fan_in)``
-   bounds reduce-side state (SURVEY.md §4 item 2).
+3. **fan-in** — a global aggregate over more than 64 partials gets an
+   intermediate merge level of ~sqrt(n) buckets, which bounds
+   reduce-side state (SURVEY.md §4 item 2); the pipeline sizes it, no
+   caller does.  A keyed merge never gets one: its key repartition
+   already spreads the fold over many reducers.
 4. **merge** — fold partials with the sketch's monoid merge.  Every
    merge level (the fan-in level, the keyed fold, the global fold) is
    ONE ``mapInArrow`` fold kernel over ``repartition(keys)`` (global:
@@ -113,6 +115,20 @@ _KIND_TO_CLS = {
     KIND_HLLC_REF: ReferenceFamilyHLLClassic,
 }
 
+#: the kinds that build in the reference's own hash family
+#: (hash_family='reference') and their classes.  'hllc' (the
+#: reference's classic HyperLogLog class) exists only here — the native
+#: classic-HLL shape is SketchSpec('hll', sp=0, estimator='classic') —
+#: and loglog(adaptive=True) builds AdaptiveCounting.
+REFERENCE_FAMILY = {
+    "cms": ReferenceFamilyCMS,
+    "bloom": ReferenceFamilyBloom,
+    "linearcounting": ReferenceFamilyLC,
+    "loglog": ReferenceFamilyLogLog,
+    "countthenestimate": ReferenceFamilyCTE,
+    "hllc": ReferenceFamilyHLLClassic,
+}
+
 
 def sketch_from_bytes(blob: bytes):
     _, kind = unpack_header(blob)
@@ -145,10 +161,7 @@ class SketchSpec:
     }
 
     def __init__(self, kind: str, **params):
-        if kind not in self._FACTORIES and kind != "hllc":
-            # 'hllc' (the reference's classic HyperLogLog class) exists
-            # only as a reference-family build; native classic-HLL shape
-            # is SketchSpec('hll', sp=0, estimator='classic')
+        if kind not in self._FACTORIES and kind not in REFERENCE_FAMILY:
             raise ValueError(f"unknown sketch kind {kind!r}")
         if kind == "hllc" and params.get("hash_family") != "reference":
             raise ValueError("kind 'hllc' requires hash_family='reference'")
@@ -156,16 +169,13 @@ class SketchSpec:
         self.params = params
         if params.get("hash_family", None) not in (None, "reference"):
             raise ValueError("hash_family must be 'reference' (or omitted)")
-        if self.reference_family and kind not in (
-            "cms", "bloom", "linearcounting", "loglog", "countthenestimate",
-            "hllc"
-        ):
+        if self.reference_family and kind not in REFERENCE_FAMILY:
             raise ValueError(f"hash_family='reference' unsupported for {kind!r}")
 
     @property
     def reference_family(self) -> bool:
-        """True = build with the JVM stream-lib hash family (cms, bloom,
-        linearcounting, loglog[, adaptive]) so the state is
+        """True = build with the JVM stream-lib hash family (the kinds
+        of ``REFERENCE_FAMILY``) so the state is
         reference-wire exportable AND JVM-compatible for continued
         updates / cross-system unions; items flow RAW (string or long),
         never pre-hashed."""
@@ -180,19 +190,9 @@ class SketchSpec:
     def new(self):
         if self.reference_family:
             p = {k: v for k, v in self.params.items() if k != "hash_family"}
-            if self.kind == "cms":
-                return ReferenceFamilyCMS(**p)
-            if self.kind == "bloom":
-                return ReferenceFamilyBloom(**p)
-            if self.kind == "linearcounting":
-                return ReferenceFamilyLC(**p)
-            if self.kind == "countthenestimate":
-                return ReferenceFamilyCTE(**p)
-            if self.kind == "hllc":
-                return ReferenceFamilyHLLClassic(**p)
-            if p.pop("adaptive", False):
+            if self.kind == "loglog" and p.pop("adaptive", False):
                 return ReferenceFamilyAdaptiveCounting(**p)
-            return ReferenceFamilyLogLog(**p)
+            return REFERENCE_FAMILY[self.kind](**p)
         return self._FACTORIES[self.kind][0](self.params)
 
 
@@ -207,7 +207,7 @@ class SketchSpec:
 #               the same batches read by pyarrow inside the tasks
 #   kernel      _kernel, one mapInArrow build for every shape (global =
 #               zero keys); every Arrow column enters a sketch via _offer
-#   merge       _merge: fan-in level, keyed fold and global fold are each
+#   merge       _merge: global fan-in level, keyed fold and global fold are each
 #               one _fold_level (the mapInArrow kernel _fold_batches) +
 #               the driver-fold marker; every blob fold is _fold
 #
@@ -396,10 +396,9 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
 #
 # Strict eligibility — EVERY sketch of the request must qualify, else
 # every sketch takes the classic path:
-#   * non-reference-family, not conservative; global kinds
-#     _DIRECT_SCAN_KINDS, keyed kinds _DIRECT_SCAN_KEYED_KINDS with
-#     string keys.  hll/cms/bloom are batching-invariant monoids (direct
-#     result BYTE-identical to the classic path — pinned by
+#   * non-reference-family, not conservative, kind in
+#     _DIRECT_SCAN_KINDS.  hll/cms/bloom are batching-invariant monoids
+#     (direct result BYTE-identical to the classic path — pinned by
 #     tests/test_direct_scan.py); tdigest/kll build state is
 #     batch-boundary-sensitive, so the direct result is deterministic
 #     but not byte-equal — admissible because no declared query exposes
@@ -410,49 +409,34 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
 #     HadoopFsRelation/Parquet (no Filter/Project/Limit above it);
 #   * every input file is file:// (an executor on another host could
 #     not read the driver's local path otherwise; hdfs:/s3: fall back);
-#   * hash mode: xxhash64 over LongType (bit parity pinned);
-#     value mode: DoubleType (try_cast double is the identity there);
-#   * per-file footers are read on the driver only up to
-#     $SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS (default 4096) files — the
-#     same footer metadata Spark itself reads — above that each file
-#     becomes one task without row-group splitting, and above
-#     $SPARK_GRAFT_DIRECT_SCAN_MAX_FILES (default 65536) the path
-#     disengages entirely (driver task-list bound); a malformed knob
-#     disengages it too.
+#   * hash mode: xxhash64 over LongType (bit parity pinned); value mode
+#     (tdigest/kll): DoubleType, global only — keyed quantile queries
+#     expose per-key digests, which must not move with the read path;
+#     keyed: string keys only;
+#   * at most _DIRECT_SCAN_MAX_FILES (4096) input files, and the driver
+#     reads every file's footer — the same metadata Spark itself reads —
+#     to check each requested column's type and to list the row groups;
+#     a file whose column is missing or of another type disengages it.
 # Kill switch: SPARK_GRAFT_DIRECT_SCAN=0.
 _DIRECT_SCAN_KINDS = ("hll", "cms", "tdigest", "kll", "bloom")
-
-#: kinds safe for the KEYED direct build: their per-key merged state is
-#: a batching-invariant monoid, so the result is byte-identical to the
-#: classic path no matter how partial boundaries move.  tdigest/kll are
-#: excluded here (unlike the global whitelist) because keyed quantile
-#: queries expose per-key estimates directly.
-_DIRECT_SCAN_KEYED_KINDS = ("hll", "cms", "bloom")
-
-
-def _env_int(name: str, default: int) -> int | None:
-    """Integer env knob of the direct path; None (path off) if malformed."""
-    try:
-        return int(os.environ.get(name, default))
-    except ValueError:
-        return None
+_DIRECT_SCAN_MAX_FILES = 4096
 
 
 def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
                   hash_mode: str) -> tuple[list, dict] | None:
     """([(local_path, row_group_index)], {name: arrow type}) for a direct
-    read of ``sketches`` (row_group_index -1 = whole file), or None if
-    any guard refuses it."""
+    read of ``sketches``, or None if any guard refuses it.  Every
+    admitted file's footer has been read on the driver: each requested
+    column is there with the type the tasks read."""
     if os.environ.get("SPARK_GRAFT_DIRECT_SCAN", "1") != "1":
         return None
-    allowed = _DIRECT_SCAN_KEYED_KINDS if keys else _DIRECT_SCAN_KINDS
     wants: dict = {}
     try:
         schema = df.schema
         if not all(isinstance(schema[k].dataType, T.StringType) for k in keys):
             return None  # string keys only: no other key type has a direct-vs-classic identity test
         for name, (col, spec) in sketches.items():
-            if spec.reference_family or spec.kind not in allowed or spec.params.get("conservative"):
+            if spec.reference_family or spec.kind not in _DIRECT_SCAN_KINDS or spec.params.get("conservative"):
                 return None
             dtype = schema[col].dataType
             if spec.input_mode == "hash" and hash_mode == "xxhash64" and isinstance(dtype, T.LongType):
@@ -472,19 +456,16 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
         if rel.partitionSchema().size() != 0:  # col could live in the path
             return None
         files = df.inputFiles()
+        # below ~1M total rows the path's constant cost (plan probe, footer
+        # read, one extra job) exceeds the per-row feed saving — measured
+        # crossover on the alternating frozen-bench A/B: 600k-row tables
+        # read 1.1-1.5x slower direct, 6M-row tables 2-3.5x faster.  The
+        # threshold is work-based, not scale-tuned: any production input
+        # is far above it.  A malformed value turns the path off.
+        min_rows = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", 1000000))
     except Exception:
         return None
-    max_files = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", 65536)
-    max_footers = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", 4096)
-    # below ~1M total rows the path's constant cost (plan probe, footer
-    # read, one extra job) exceeds the per-row feed saving — measured
-    # crossover on the alternating frozen-bench A/B: 600k-row tables
-    # read 1.1-1.5x slower direct, 6M-row tables 2-3.5x faster.  The
-    # threshold is work-based, not scale-tuned: any production input is
-    # far above it, and the no-footer branch (file count beyond the
-    # driver's footer budget) implies scale and always engages.
-    min_rows = _env_int("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", 1000000)
-    if None in (max_files, max_footers, min_rows) or not files or len(files) > max_files:
+    if not files or len(files) > _DIRECT_SCAN_MAX_FILES:
         return None
     paths = []
     for uri in files:
@@ -496,31 +477,24 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
     col_types = {k: pa.string() for k in keys}
     col_types.update({sketches[n][0]: want for n, want in wants.items()})
     tasks: list = []
+    total_rows = 0
     try:
-        if len(paths) <= max_footers:
-            import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-            total_rows = 0
-            for p in paths:
-                pf = pq.ParquetFile(p)
-                for c, want in col_types.items():
-                    idx = pf.schema_arrow.get_field_index(c)
-                    if idx < 0:
-                        return None  # renamed/missing column: fall back
-                    got = pf.schema_arrow.field(idx).type
-                    if got != want and not (
-                        want == pa.string() and got == pa.large_string()
-                    ):
-                        return None  # heterogeneous column: fall back
-                total_rows += pf.metadata.num_rows
-                tasks.extend((p, rg) for rg in range(pf.metadata.num_row_groups))
-            if total_rows < min_rows:
-                return None
-        else:
-            tasks = [(p, -1) for p in paths]
+        for p in paths:
+            pf = pq.ParquetFile(p)
+            for c, want in col_types.items():
+                idx = pf.schema_arrow.get_field_index(c)
+                if idx < 0:
+                    return None  # renamed/missing column: fall back
+                got = pf.schema_arrow.field(idx).type
+                if got != want and not (want == pa.string() and got == pa.large_string()):
+                    return None  # heterogeneous column: fall back
+            total_rows += pf.metadata.num_rows
+            tasks.extend((p, rg) for rg in range(pf.metadata.num_row_groups))
     except Exception:
         return None
-    return (tasks, wants) if tasks else None
+    return (tasks, wants) if tasks and total_rows >= min_rows else None
 
 
 def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
@@ -532,8 +506,8 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
     ``xxhash64_long`` where the projection hashes with the JVM's
     xxhash64, with the projection's row rule (a row whose requested
     columns are all null is dropped), other nulls kept for the kernel
-    to skip.  A read or cast failure names the file, the row group and
-    the kill switch."""
+    to skip.  A read failure, or a column whose type differs from the
+    planned one, names the file, the row group and the kill switch."""
     read = list(dict.fromkeys(keys + [col for col, _ in sketches.values()]))
 
     def source(id_batches):
@@ -543,24 +517,19 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
             for i in np.asarray(ids["id"]):
                 p, rg = tasks[int(i)]
                 try:
-                    pf = pq.ParquetFile(p)
-                    tbl = (pf.read_row_group(rg, columns=read) if rg >= 0
-                           else pf.read(columns=read))
+                    tbl = pq.ParquetFile(p).read_row_group(rg, columns=read)
                     cols = {k: tbl.column(k).combine_chunks() for k in keys}
                     for name, (col, _) in sketches.items():
                         arr = tbl.column(col).combine_chunks()
-                        if arr.type != wants[name]:
-                            # only reachable in no-footer mode; the safe cast is
-                            # exactly Spark's schema-widening read (int32→int64)
-                            arr = arr.cast(wants[name])
+                        if arr.type != wants[name]:  # the file changed after planning
+                            raise pa.ArrowTypeError(f"column {col} is {arr.type}, planned {wants[name]}")
                         if arr.type == pa.int64():
                             hashed = xxhash64_long(arr.fill_null(0).to_numpy())
                             arr = pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False))
                         cols[f"__in_{name}"] = arr
                 except (OSError, KeyError, pa.ArrowException) as e:
-                    where = f"row group {rg}" if rg >= 0 else "whole file"
                     raise RuntimeError(
-                        f"direct parquet read of {p} ({where}) failed: {e}; "
+                        f"direct parquet read of {p} (row group {rg}) failed: {e}; "
                         "set SPARK_GRAFT_DIRECT_SCAN=0 to use the classic read") from e
                 rb = pa.RecordBatch.from_pydict(cols)
                 ok = functools.reduce(pc.or_, [rb.column(f"__in_{n}").is_valid() for n in sketches])
@@ -610,12 +579,12 @@ def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sketch
     return feed.mapInArrow(run, schema=schema), n
 
 
-def _auto_fan_in(n_parts: int, threshold: int = 64) -> int | None:
-    """Two-level merge sizing: above ``threshold`` input partitions a
-    global fold gets an intermediate level of ~sqrt(n) buckets, so both
-    levels fold ~sqrt(n) blobs.  At 10^6 input partitions the single
-    reducer would otherwise pull 10^6 × 16 KB-240 KB blobs."""
-    if n_parts <= threshold:
+def _auto_fan_in(n_parts: int) -> int | None:
+    """Two-level merge sizing: above 64 input partitions a global fold
+    gets an intermediate level of ~sqrt(n) buckets, so both levels fold
+    ~sqrt(n) blobs.  At 10^6 input partitions the single reducer would
+    otherwise pull 10^6 × 16 KB-240 KB blobs."""
+    if n_parts <= 64:
         return None
     import math
 
@@ -729,14 +698,14 @@ def _fold_level(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpe
 
 
 def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
-           fan_in: int | None | str = "auto", n_partials: int | None = None) -> DataFrame:
+           n_partials: int | None = None) -> DataFrame:
     """Tree-merge the partials of every sketch to one row per key (see
-    ``merge_partials``); ``n_partials`` is an exact partial count, else
-    ``"auto"`` estimates it.  The fan-in level is the keyed fold with
-    one more key, ``__bkt``, left unfinalized."""
-    if fan_in == "auto":
-        fan_in = None if keys else _auto_fan_in(
-            n_partials if n_partials is not None else _estimate_partitions(partials))
+    ``merge_partials``).  A global merge gets a fan-in level sized by
+    ``_auto_fan_in`` from ``n_partials``, the direct read's exact task
+    count, else from ``_estimate_partitions``; the level is the keyed
+    fold with one more key, ``__bkt``, left unfinalized."""
+    fan_in = None if keys else _auto_fan_in(
+        n_partials if n_partials is not None else _estimate_partitions(partials))
     if fan_in:
         bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
         partials = _fold_level(partials.withColumn("__bkt", bucket), keys + ["__bkt"], specs,
@@ -767,8 +736,7 @@ def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[0]
 
 
-def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
-                   fan_in: int | None | str = "auto") -> DataFrame:
+def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec) -> DataFrame:
     """Tree-merge partial sketches to one row per key.
 
     Every merge level is the same Arrow fold kernel: the partials are
@@ -776,43 +744,44 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec,
     ``mapInArrow`` task folds every key group it holds — exactly one row
     for a global merge, even on no input.
 
-    ``fan_in``: insert an intermediate merge level over buckets of
-    partials (bounds reduce-side fan-in for global aggregates across
-    huge partition counts) — the keyed fold with one more key, the
-    bucket, left unfinalized.  Bucketing is deterministic
-    (pmod(xxhash64 of monotonically_increasing_id), fan_in) only in
-    topology, not in result: all merges are commutative monoids.
-    Default ``"auto"``: for GLOBAL aggregates the level is inserted
-    automatically once the partials span > 64 partitions (estimated
-    from plan metadata; keyed aggregates already spread across the
-    key repartition's reducers; pass an int to force a level there too).
+    A GLOBAL merge whose partials span more than 64 partitions
+    (estimated from plan metadata) first folds them in an intermediate
+    level of ~sqrt(n) buckets — the keyed fold with the bucket as one
+    more key, left unfinalized — which bounds reduce-side fan-in across
+    huge partition counts.  The buckets are fixed only in topology, not
+    in result: all merges are commutative monoids.  A keyed merge never
+    gets the level: the key repartition already spreads it over the
+    reducers.
     """
-    return _merge(partials, keys, {STATE_COL: spec}, fan_in)
+    return _merge(partials, keys, {STATE_COL: spec})
 
 
 def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
-               hash_mode: str = "xxhash64", fan_in: int | None | str = "auto") -> DataFrame:
+               hash_mode: str = "xxhash64") -> DataFrame:
     """Full two-level sketch aggregation → (keys..., sketch): a
     one-sketch ``multi_sketch_agg``.  Global aggregates over >64
-    partials automatically get a third (fan-in) merge level — see
+    partials (the direct read's exact task count, else estimated from
+    plan metadata) get a third (fan-in) merge level — see
     ``merge_partials``; below it ``collect_sketch`` folds the partials
     on the driver.
 
     Rows: null values (and, for value kinds, strings that do not cast)
     are skipped, never an ANSI-mode error; null keys form their own
     group.  Direct read: a bare, unpartitioned, local ``file://``
-    parquet input of at least ``$SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS``
-    (default 1M) rows is read by the tasks themselves with pyarrow, one
-    task per row group, when the sketch is hll/cms/bloom over a LongType
-    column (xxhash64 mode; keyed: string keys only) or, global only,
-    tdigest/kll over a DoubleType column — never reference-family or
-    conservative CMS.  hll/cms/bloom bytes are identical on both paths;
+    parquet input of at most 4096 files and at least
+    ``$SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS`` (default 1M) rows is read by
+    the tasks themselves with pyarrow, one task per row group, when the
+    sketch is hll/cms/bloom over a LongType column (xxhash64 mode;
+    keyed: string keys only) or, global only, tdigest/kll over a
+    DoubleType column — never reference-family or conservative CMS.
+    The driver reads every file's footer first; a file whose column is
+    missing or of another type sends the aggregate to the classic read.  hll/cms/bloom bytes are identical on both paths;
     tdigest/kll bytes differ between the direct and classic paths
     (partial boundaries move), both within the published rank bound.
     ``SPARK_GRAFT_DIRECT_SCAN=0`` turns the direct read off.
     """
     partials, n = _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)
-    return _merge(partials, keys, {STATE_COL: spec}, fan_in, n)
+    return _merge(partials, keys, {STATE_COL: spec}, n)
 
 
 def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
@@ -843,7 +812,7 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
     """
     keys = keys or []
     partials, n = _build(df, keys, sketches, hash_mode)
-    return _merge(partials, keys, {name: spec for name, (_, spec) in sketches.items()}, "auto", n)
+    return _merge(partials, keys, {name: spec for name, (_, spec) in sketches.items()}, n)
 
 
 def collect_sketch(df_or_merged: DataFrame):

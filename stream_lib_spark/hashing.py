@@ -28,10 +28,6 @@ _M = np.uint64(0xC6A4A7935BD1E995)
 _R = np.uint64(47)
 
 
-def _u64(x: int) -> np.uint64:
-    return np.uint64(x & 0xFFFFFFFFFFFFFFFF)
-
-
 def splitmix64(x: np.ndarray | int) -> np.ndarray | np.uint64:
     """SplitMix64 finalizer — deterministic seed derivation."""
     with np.errstate(over="ignore"):

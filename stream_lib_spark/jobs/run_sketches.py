@@ -85,7 +85,7 @@ def main(argv=None):
         ap.error(f"--hash-mode {args.hash_mode} is not supported with --checkpoint-dir "
                  "(the checkpoint job hashes with xxhash64)")
 
-    from ..agg import SketchSpec, multi_sketch_agg, sketch_agg
+    from ..agg import REFERENCE_FAMILY, SketchSpec, multi_sketch_agg
     from .session import get_spark
     from .checkpoint import CheckpointedSketchJob
 
@@ -99,9 +99,7 @@ def main(argv=None):
         ops = [
             (name, col,
              SketchSpec(spec.kind, **{**spec.params, "hash_family": "reference"})
-             if spec.kind in ("cms", "bloom", "linearcounting", "loglog",
-                              "countthenestimate")
-             and not spec.reference_family
+             if spec.kind in REFERENCE_FAMILY and not spec.reference_family
              else spec)
             for name, col, spec in ops
         ]
@@ -151,13 +149,19 @@ def main(argv=None):
             outs.append((name, merged))
             job.metrics().write.mode("overwrite").parquet(f"{args.output}_metrics/{name}")
         # one rows_seen column (the first op's); null keys are a group
-        # like any other, so the keys join null-safely
-        result = outs[0][1].alias("l")
+        # like any other, so the keys join null-safely.  A key whose rows
+        # are null in one op's column has no row in that op's job: the
+        # join is full outer and the gap is that op's empty sketch, as
+        # multi_sketch_agg gives it
+        result = outs[0][1]
         for name, o in outs[1:]:
-            o = o.drop("rows_seen").alias("r")
             on = [F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in args.keys]
-            joined = result.join(o, on) if on else result.crossJoin(o)
-            result = joined.select("l.*", f"r.{name}").alias("l")
+            l, r = result.alias("l"), o.drop("rows_seen").alias("r")
+            joined = l.join(r, on, "full_outer") if on else l.crossJoin(r)
+            result = joined.select(*[F.coalesce(f"l.{k}", f"r.{k}").alias(k) for k in args.keys],
+                                   *[f"l.{c}" for c in result.columns if c not in args.keys], f"r.{name}")
+        fill = {"rows_seen": F.lit(0).cast("long"), **{name: F.lit(spec.new().to_bytes()) for name, _, spec in ops}}
+        result = result.select(*[F.coalesce(c, fill[c]).alias(c) if c in fill else c for c in result.columns])
     else:
         sketches = {}
         for name, col, spec in ops:

@@ -34,11 +34,6 @@ _M32 = np.int32(0x5BD1E995)
 _M32_INT = 0x5BD1E995
 
 
-def _wrap32(x: np.ndarray) -> np.ndarray:
-    """int64 → Java int32 two's-complement wrap."""
-    return (x & 0xFFFFFFFF ^ 0x80000000) - 0x80000000
-
-
 def _lsr32(x: np.ndarray, s: int) -> np.ndarray:
     """Java >>> on int32."""
     return (x.view(np.uint32) >> np.uint32(s)).view(np.int32)

@@ -104,7 +104,6 @@ class SketchStateStore:
 
 def streaming_sketch_query(stream_df: DataFrame, col: str, spec: SketchSpec,
                            state_dir: str, checkpoint_dir: str,
-                           trigger_available_now: bool = True,
                            processing_time: str | None = None, fs=None):
     """Fold a streaming DataFrame's column into a persisted sketch.
 
@@ -112,16 +111,11 @@ def streaming_sketch_query(stream_df: DataFrame, col: str, spec: SketchSpec,
     partials → merge) → monoid-merge into the stored state.  Restart
     safety: batches with id <= stored batch_id are no-ops.
     ``fs``: explicit StateFS (default: resolved from state_dir scheme).
-    Trigger: availableNow replay by default; pass
-    ``processing_time='1 seconds'`` (with ``trigger_available_now=
-    False``) for a LIVE continuous micro-batch cadence — the versioned
+    Trigger: ``processing_time=None`` replays what is available and
+    stops (availableNow); ``processing_time='1 seconds'`` keeps the
+    query up and fires a micro-batch on that cadence — the versioned
     store commits one version per fired batch under either trigger
     (tests/test_streaming.py exercises both)."""
-    if processing_time is not None and trigger_available_now:
-        raise ValueError(
-            "processing_time requires trigger_available_now=False — the "
-            "availableNow default would silently win and the query would "
-            "replay-and-terminate instead of firing on the clock")
     store = SketchStateStore(state_dir, fs=fs)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -134,14 +128,9 @@ def streaming_sketch_query(stream_df: DataFrame, col: str, spec: SketchSpec,
         merged = batch_sketch if current is None else current.merge(batch_sketch)
         store.write(merged, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    trigger = {"availableNow": True} if processing_time is None else {"processingTime": processing_time}
+    return (stream_df.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger).start())
 
 
 def read_state(state_dir: str, fs=None):

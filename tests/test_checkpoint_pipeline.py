@@ -161,6 +161,35 @@ def test_cli_multi_op_checkpoint(spark, tmp_path, keys):
     assert blobs(ckpt) == want
 
 
+def test_cli_multi_op_checkpoint_keeps_key_null_in_one_op(spark, tmp_path):
+    """A key whose rows are null in one op's column keeps its row, with
+    that op's empty sketch, as in the run without a checkpoint."""
+    from pyspark.sql import functions as F
+
+    from stream_lib_spark.jobs.run_sketches import main
+
+    src = str(tmp_path / "events_null_user")
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    (ev.withColumn("user_id", F.when(F.col("event_type") != "click", F.col("user_id")))
+       .repartition(3).write.parquet(src))
+    common = ["--input", src, "--ops", "hll:user_id:p=12", "cms:event_id:depth=4,width=256",
+              "--keys", "event_type", "--cpus", "4"]
+    main(common + ["--output", str(tmp_path / "plain")])
+    main(common + ["--output", str(tmp_path / "ckpt_out"), "--checkpoint-dir", str(tmp_path / "ckpt")])
+    ops = ["hll_user_id", "cms_event_id"]
+
+    def blobs(name):
+        rows = spark.read.parquet(str(tmp_path / name)).collect()
+        return {r["event_type"]: [bytes(r[o]) for o in ops] for r in rows}
+
+    want = blobs("plain")
+    assert len(want) == 5 and want["click"][0] == SketchSpec("hll", p=12).new().to_bytes()
+    assert blobs("ckpt_out") == want
+    ckpt = {r["event_type"]: r["rows_seen"]
+            for r in spark.read.parquet(str(tmp_path / "ckpt_out")).collect()}
+    assert ckpt["click"] == 0 and ckpt["view"] == 188
+
+
 def test_cli_rejects_murmur64_with_checkpoint(tmp_path, capsys):
     """The checkpoint job builds xxhash64 sketches only: asking for
     murmur64 parity with --checkpoint-dir fails closed, naming both

@@ -165,11 +165,10 @@ def test_quantile_kinds_deterministic_and_within_bound(spark):
             assert abs(rank - q) <= bound
 
 
-def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
+def test_many_row_groups_fan_in(spark, tmp_path):
     """Above 64 tasks the direct partials go through the auto fan-in
-    merge level (sized from the exact task count); above the footer
-    budget each file becomes one whole-file task.  Both must stay
-    byte-identical to the classic path."""
+    merge level (sized from the exact task count), byte-identical to
+    the classic path."""
     rng = np.random.default_rng(3)
     vals = pa.array(rng.integers(0, 5_000, size=70_000), type=pa.int64())
     path = str(tmp_path / "many_rg.parquet")
@@ -188,43 +187,56 @@ def test_many_row_groups_fan_in_and_no_footer_mode(spark, tmp_path):
     direct, classic = _both(df, "k", spec)
     assert direct.to_bytes() == classic.to_bytes()
 
-    # no-footer mode: file count above the driver's footer budget →
-    # one whole-file task, row threshold waived (scale implied)
-    ddir = tmp_path / "two_files.parquet"
+
+def _two_files(tmp_path, name="two.parquet"):
+    ddir = tmp_path / name
     ddir.mkdir()
-    pq.write_table(pa.table({"k": vals[:30_000]}), str(ddir / "a.parquet"))
-    pq.write_table(pa.table({"k": vals[30_000:]}), str(ddir / "b.parquet"))
-    df2 = spark.read.parquet(str(ddir))
-    os.environ["SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS"] = "1"
-    try:
-        assert _direct_count(df2, [], "k", spec) == 2
-        assert hasattr(sketch_agg(df2, [], "k", spec), "_slp_driver_fold")
-        direct, _ = _both(df2, "k", spec)
-    finally:
-        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", None)
-    _, classic = _both(df2, "k", spec)
-    assert direct.to_bytes() == classic.to_bytes()
+    for f, lo in (("a.parquet", 0), ("b.parquet", 100)):
+        pq.write_table(pa.table({"k": pa.array(range(lo, lo + 100), type=pa.int64())}), str(ddir / f))
+    return ddir
 
 
 def test_task_read_error_names_kill_switch(spark, tmp_path):
-    """No-footer mode never opens the files on the driver, so schema
-    drift surfaces inside a task: the error must name the file, the row
-    group and the kill switch instead of a bare pyarrow error."""
-    ddir = tmp_path / "drift.parquet"
-    ddir.mkdir()
-    pq.write_table(pa.table({"k": pa.array(range(100), type=pa.int64())}), str(ddir / "a.parquet"))
-    pq.write_table(pa.table({"j": pa.array(range(100), type=pa.int64())}), str(ddir / "b.parquet"))
-    df = spark.read.schema("k long").parquet(str(ddir))
+    """A file that changes between planning (the driver read its
+    footer) and the task's read fails inside the task — the column
+    gone, or of another type — and the error must name the file, the
+    row group and the kill switch instead of a bare pyarrow error."""
     spec = SketchSpec("hll", p=12)
-    os.environ["SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS"] = "1"
-    try:
+    for i, drifted in enumerate(({"j": pa.array(range(100), type=pa.int64())},
+                                 {"k": pa.array(range(100), type=pa.int32())})):
+        ddir = _two_files(tmp_path, f"drift{i}.parquet")
+        df = spark.read.parquet(str(ddir))
         assert _direct_count(df, [], "k", spec) == 2
+        merged = sketch_agg(df, [], "k", spec)
+        pq.write_table(pa.table(drifted), str(ddir / "b.parquet"))
         with pytest.raises(Exception) as err:
-            collect_sketch(sketch_agg(df, [], "k", spec))
-    finally:
-        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", None)
-    msg = str(err.value)
-    assert "SPARK_GRAFT_DIRECT_SCAN=0" in msg and "b.parquet" in msg and "whole file" in msg
+            collect_sketch(merged)
+        msg = str(err.value)
+        assert "SPARK_GRAFT_DIRECT_SCAN=0" in msg and "b.parquet" in msg and "row group 0" in msg
+
+
+def test_file_bound_disengages_before_any_footer(spark, tmp_path, monkeypatch):
+    """Above _DIRECT_SCAN_MAX_FILES input files the direct read does not
+    engage, and the driver opens no footer to find that out."""
+    import stream_lib_spark.agg as agg
+
+    df = spark.read.parquet(str(_two_files(tmp_path)))
+    spec = SketchSpec("hll", p=12)
+    assert _direct_count(df, [], "k", spec) == 2
+    opened = []
+    real = pq.ParquetFile
+
+    def spy(path, *a, **kw):
+        opened.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", spy)
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MAX_FILES", 1)
+    assert agg._direct_tasks(df, [], {STATE_COL: ("k", spec)}, "xxhash64") is None
+    assert opened == []
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MAX_FILES", 2)
+    tasks, _ = agg._direct_tasks(df, [], {STATE_COL: ("k", spec)}, "xxhash64")
+    assert len(tasks) == 2 and len(opened) == 2
 
 
 def _both_keyed(df, keys, col, spec):
@@ -314,9 +326,7 @@ def test_ineligible_shapes_fall_back(spark, sf_dir):
     assert direct.to_bytes() == classic.to_bytes()
 
 
-@pytest.mark.parametrize("knob", ["SPARK_GRAFT_DIRECT_SCAN_MAX_FILES",
-                                  "SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS",
-                                  "SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"])
+@pytest.mark.parametrize("knob", ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"])
 def test_malformed_knob_fails_closed(spark, sf_dir, knob):
     """A malformed integer knob turns the direct read off (classic
     result) instead of raising ValueError out of the aggregation."""

@@ -10,8 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_lib_spark.agg import (
+    STATE_COL,
     SketchSpec,
     _auto_fan_in,
+    _merge,
     merge_partials,
     multi_sketch_agg,
     sketch_agg,
@@ -69,48 +71,32 @@ def test_multi_sketch_fan_in_byte_identical(spark):
     assert bytes(w["h"]) == bytes(n["h"]) and bytes(w["c"]) == bytes(n["c"])
 
 
-def test_explicit_fan_in_still_respected(spark):
+def test_keyed_merge_has_no_fan_in_level(spark):
+    """A keyed merge is one fold over the key repartition, however many
+    partials feed it: no fan-in level, even at an exact count of 96."""
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    partials = sketch_partials(ev.repartition(8), [], "user_id", SketchSpec("hll", p=12))
-    forced = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=3)
-    off = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=None)
-    assert _map_in_arrow(_plan(forced)) == 3
-    assert _map_in_arrow(_plan(off)) == 2
-    assert bytes(forced.collect()[0]["sketch"]) == bytes(off.collect()[0]["sketch"])
+    spec = SketchSpec("hll", p=12)
+    partials = sketch_partials(ev.repartition(96), ["event_type"], "event_id", spec)
+    assert _map_in_arrow(_plan(merge_partials(partials, ["event_type"], spec))) == 2
+    assert _map_in_arrow(_plan(_merge(partials, ["event_type"], {STATE_COL: spec}, 96))) == 2
 
 
-@pytest.mark.parametrize("spec", [
-    SketchSpec("hll", p=12),
-    SketchSpec("cms", eps=1e-2, confidence=0.99),
-], ids=["hll", "cms"])
-def test_keyed_fan_in_byte_identical(spark, spec):
-    """A forced fan-in level on a KEYED merge (the keyed fold with the
-    bucket as one more key) gives every key the same bytes as no level."""
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    partials = sketch_partials(ev.repartition(8), ["event_type"], "event_id", spec)
-    forced = merge_partials(partials, ["event_type"], spec, fan_in=3)
-    off = merge_partials(partials, ["event_type"], spec, fan_in=None)
-    assert _map_in_arrow(_plan(forced)) == 3
-    assert _map_in_arrow(_plan(off)) == 2
-    f = {r["event_type"]: bytes(r["sketch"]) for r in forced.collect()}
-    o = {r["event_type"]: bytes(r["sketch"]) for r in off.collect()}
-    assert len(f) == 5
-    assert f == o
-
-
-@pytest.mark.parametrize("fan_in", [None, 3])
-def test_empty_input_distributed(spark, fan_in):
+@pytest.mark.parametrize("n_partials", [None, 96])
+def test_empty_input_distributed(spark, n_partials):
     """Executed distributed (``.collect()``, never the driver fold): a
     global aggregate over no rows is exactly one row holding the empty
     sketch, a keyed one is zero rows — for tasks that see no rows and
-    for an input with no partitions at all."""
+    for an input with no partitions at all, with (96 partials) and
+    without the fan-in level."""
     spec = SketchSpec("hll", p=12)
     ev = spark.read.parquet(f"{SF}/events.parquet")
     for empty in (ev.repartition(4).where(F.col("user_id") < 0), spark.createDataFrame([], ev.schema)):
-        rows = sketch_agg(empty, [], "user_id", spec, fan_in=fan_in).collect()
+        merged = _merge(sketch_partials(empty, [], "user_id", spec), [], {STATE_COL: spec}, n_partials)
+        assert _map_in_arrow(_plan(merged)) == (3 if n_partials else 2)
+        rows = merged.collect()
         assert len(rows) == 1
         assert bytes(rows[0]["sketch"]) == spec.new().to_bytes()
-        assert sketch_agg(empty, ["event_type"], "user_id", spec, fan_in=fan_in).collect() == []
+        assert sketch_agg(empty, ["event_type"], "user_id", spec).collect() == []
 
 
 @pytest.mark.parametrize("kind,spec", [
@@ -124,8 +110,8 @@ def test_quantile_sketch_fan_in_topology(spark, kind, spec):
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_extendedprice")
     partials = sketch_partials(li.repartition(8), [], "l_extendedprice", spec)
     partials = partials.localCheckpoint()  # FIX the partials across both folds
-    forced = bytes(merge_partials(partials, [], spec, fan_in=3).collect()[0]["sketch"])
-    off = bytes(merge_partials(partials, [], spec, fan_in=None).collect()[0]["sketch"])
+    forced = bytes(_merge(partials, [], {STATE_COL: spec}, 96).collect()[0]["sketch"])
+    off = bytes(merge_partials(partials, [], spec).collect()[0]["sketch"])
     from stream_lib_spark.agg import sketch_from_bytes
 
     if kind == "kll":

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from stream_lib_spark.agg import (
     STATE_COL,
     SketchSpec,
+    _merge,
     collect_sketch,
     merge_partials,
     sketch_agg,
@@ -67,10 +68,10 @@ def test_driver_fold_empty_input(events):
 
 def test_fan_in_level_disables_driver_fold(events):
     partials = sketch_partials(events, [], "user_id", SketchSpec("hll", p=12))
-    forced = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=3)
+    forced = _merge(partials, [], {STATE_COL: SketchSpec("hll", p=12)}, n_partials=96)
     assert not hasattr(forced, "_slp_driver_fold")
     # and the distributed result still matches the no-fan-in fold
-    plain = merge_partials(partials, [], SketchSpec("hll", p=12), fan_in=None)
+    plain = merge_partials(partials, [], SketchSpec("hll", p=12))
     assert _distributed_blob(forced) == collect_sketch(plain).to_bytes()
 
 

@@ -588,15 +588,6 @@ def test_cli_rejects_unmappable_reference_params(tmp_path):
               "--wire-format", "reference"])
 
 
-def test_streaming_trigger_flags_mutually_exclusive(tmp_path):
-    from stream_lib_spark.agg import SketchSpec
-    from stream_lib_spark.streaming import streaming_sketch_query
-
-    with pytest.raises(ValueError, match="trigger_available_now=False"):
-        streaming_sketch_query(None, "c", SketchSpec("hll", p=8),
-                               str(tmp_path / "s"), str(tmp_path / "c"),
-                               processing_time="1 seconds")
-
 
 def test_cte_family_raw_string_nul_semantics():
     """Code-review r6 #2: the untipped phase counts RAW strings — a

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_lib_spark.agg import (
+    STATE_COL,
     SketchSpec,
+    _merge,
     collect_sketch,
     merge_partials,
     sketch_agg,
@@ -56,12 +58,11 @@ def test_partitioning_invariance_byte_identical(spark, events):
 
 
 def test_fan_in_level_same_result(spark, events):
-    partials = sketch_partials(events.repartition(8), [], "user_id", SketchSpec("hll", p=13))
-    direct = bytes(merge_partials(partials, [], SketchSpec("hll", p=13)).collect()[0]["sketch"])
-    fanned = bytes(
-        merge_partials(partials, [], SketchSpec("hll", p=13), fan_in=3).collect()[0]["sketch"]
-    )
-    assert direct == fanned
+    partials = sketch_partials(events.repartition(96), [], "user_id", SketchSpec("hll", p=13))
+    fanned = merge_partials(partials, [], SketchSpec("hll", p=13))
+    assert not hasattr(fanned, "_slp_driver_fold")  # 96 partials: a fan-in level
+    direct = _merge(partials, [], {STATE_COL: SketchSpec("hll", p=13)}, n_partials=1)
+    assert bytes(direct.collect()[0]["sketch"]) == bytes(fanned.collect()[0]["sketch"])
 
 
 def test_cms_heavy_hitters(spark, events):

@@ -435,7 +435,6 @@ def test_processing_time_trigger_live_parity(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).load(str(drip)))
     q = streaming_sketch_query(stream, "user_id", spec,
                                str(tmp_path / "state"), str(tmp_path / "ckpt"),
-                               trigger_available_now=False,
                                processing_time="1 seconds")
     store = SketchStateStore(str(tmp_path / "state"))
     try:
