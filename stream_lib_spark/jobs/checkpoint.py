@@ -5,6 +5,16 @@ resumable from a snapshot checkpoint, with per-partition lineage and
 metrics rows, and the resumed result must be byte-identical to an
 uninterrupted run.
 
+One job builds N sketches in one scan: ``sketches={name: (column,
+spec)}``, the shape ``multi_sketch_agg`` takes (``spec=``/``col=`` is
+the one-sketch job ``{"sketch": (col, spec)}``).  Its checkpoint table
+has one blob column per sketch and one ``rows_seen``, which counts a
+key's rows with ANY requested column non-null (``multi_sketch_agg``'s
+row rule).  ``state_sha256`` is ``sha2(concat(<blob columns in
+sketches order>), 256)`` — for one sketch, the sha256 of its blob.  A
+resume whose sketch names differ from the table's blob columns is
+refused: the table's done buckets hold no state for a new sketch.
+
 Mechanism (Iceberg-ready, parquet-backed in the sandbox), built from
 the library's one pipeline (``agg._build`` + ``agg._fold_level``), so
 every shuffle moves sketch blobs, never rows:
@@ -21,9 +31,11 @@ every shuffle moves sketch blobs, never rows:
   bucket's rows.  The blobs are shuffled by bucket, so one fold task
   writes each bucket's rows, with their lineage metrics (bucket, keys,
   rows_seen, state_sha256), into one file of the checkpoint table: a
-  job killed part-way marks no half-built bucket done.  A resumed run
-  lists finished buckets and processes only the complement — already-
-  persisted partials are never recomputed.
+  job killed part-way marks no half-built bucket done.  A bucket with
+  no rows gets a marker row instead (null keys, rows_seen 0, one empty
+  blob per sketch), so it too is done.  A resumed run lists finished
+  buckets and processes only the complement — already-persisted
+  partials are never recomputed.
 - phase B folds all bucket partials per key with the sketch monoid in
   bucket order.  Because bucket contents are pure functions of the
   table snapshot, build tasks are the snapshot's scan splits (an input
@@ -56,13 +68,22 @@ from ..agg import STATE_COL, SketchSpec, _build, _fold_level
 @dataclass
 class CheckpointedSketchJob:
     spark: SparkSession
-    spec: SketchSpec
-    col: str
+    spec: SketchSpec | None = None
+    col: str | None = None
     keys: list[str] = field(default_factory=list)
     n_buckets: int = 64
     checkpoint_dir: str = "/tmp/sketch_checkpoints"
     snapshot_id: str = "snap-0"
     bucket_cols: list[str] | None = None  # stable row identity; None = all cols
+    sketches: dict[str, tuple[str, SketchSpec]] | None = None  # {name: (col, spec)}
+
+    def __post_init__(self):
+        if self.sketches is None and self.spec is not None and self.col is not None:
+            self.sketches = {STATE_COL: (self.col, self.spec)}
+        elif not self.sketches or self.spec is not None or self.col is not None:
+            raise ValueError("CheckpointedSketchJob takes sketches={name: (col, spec)} "
+                             "or spec= with col=, not both or neither")
+        self.specs = {name: spec for name, (_, spec) in self.sketches.items()}
 
     # ------------------------------------------------------------ paths
 
@@ -94,6 +115,12 @@ class CheckpointedSketchJob:
             if (cls and "PATH_NOT_FOUND" in cls) or "Path does not exist" in str(e):
                 return set()
             raise
+        blobs = [c for c in partials.columns if c not in ("bucket", *self.keys, "rows_seen", "state_sha256")]
+        if blobs != list(self.specs):
+            # a done bucket holds no state for a sketch the table lacks:
+            # resuming would skip that sketch's build for those buckets
+            raise ValueError(f"checkpoint table {self.partials_path} holds sketches {blobs}, "
+                             f"the job builds {list(self.specs)}: use a new snapshot id")
         rows = partials.select("bucket").distinct().collect()
         return {r["bucket"] for r in rows}
 
@@ -101,19 +128,19 @@ class CheckpointedSketchJob:
 
     def _partials(self, df: DataFrame, todo: list[int]) -> DataFrame:
         """Phase A's plan for buckets ``todo``: one (bucket, keys...,
-        sketch, rows_seen, state_sha256) row per (bucket, key) — the
-        partition-local build, then one fold of its per-task partials in
-        build-task order."""
+        <name>..., rows_seen, state_sha256) row per (bucket, key) — the
+        partition-local build of every sketch in one scan, then one fold
+        of its per-task partials in build-task order."""
         keys = ["__bucket", *self.keys]
         bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
-        parts = _build(bucketed, keys, {STATE_COL: (self.col, self.spec)}, rows=True)[0]
+        parts = _build(bucketed, keys, self.sketches, rows=True)[0]
         # shuffled by bucket alone: one task folds (and writes) every
         # key of a bucket, so a bucket is one file — the unit of "done"
         folded = _fold_level(parts.withColumn("__task", F.spark_partition_id()), keys,
-                             {STATE_COL: self.spec}, order=["__task"], by=["__bucket"])
-        return folded.select(F.col("__bucket").alias("bucket"), *self.keys, STATE_COL,
+                             self.specs, order=["__task"], by=["__bucket"])
+        return folded.select(F.col("__bucket").alias("bucket"), *self.keys, *self.specs,
                              F.col("__rows").alias("rows_seen"),
-                             F.sha2(STATE_COL, 256).alias("state_sha256"))
+                             F.sha2(F.concat(*self.specs), 256).alias("state_sha256"))
 
     def build_partials(self, df: DataFrame, max_buckets: int | None = None) -> int:
         """Compute + persist partials for buckets not yet checkpointed.
@@ -129,16 +156,16 @@ class CheckpointedSketchJob:
         partials.write.mode("append").parquet(self.partials_path)
         # buckets with ZERO matching rows produce no partial row —
         # without a marker they would never be "done" and every resume
-        # would re-scan the full input for them forever.  Append an
-        # empty-sketch marker row (rows_seen=0, keys null) for each; the
-        # keyed final_merge filters markers out, the global path folds
-        # them as the monoid identity.
+        # would re-scan the full input for them forever.  Append a
+        # marker row (keys null, one empty blob per sketch, rows_seen=0)
+        # for each; the keyed final_merge filters markers out, the global
+        # path folds them as the monoid identity.
         covered = self._done_buckets()
         missing = [b for b in todo if b not in covered]
         if missing:
-            blob = self.spec.new().to_bytes()
-            digest = hashlib.sha256(blob).hexdigest()
-            marker_rows = [tuple([b] + [None] * len(self.keys) + [blob, 0, digest]) for b in missing]
+            blobs = [spec.new().to_bytes() for spec in self.specs.values()]
+            digest = hashlib.sha256(b"".join(blobs)).hexdigest()
+            marker_rows = [(b, *[None] * len(self.keys), *blobs, 0, digest) for b in missing]
             # key fields may be non-nullable in the source schema; the
             # markers deliberately carry null keys, so relax nullability
             marker_schema = T.StructType([
@@ -152,7 +179,7 @@ class CheckpointedSketchJob:
 
     def final_merge(self) -> DataFrame:
         """Fold all checkpointed partials in bucket order → one row per
-        key group: (keys..., sketch, rows_seen); a global job gives
+        key group: (keys..., <name>..., rows_seen); a global job gives
         exactly one row, even on empty input."""
         partials = self.spark.read.parquet(self.partials_path)
         if self.keys:
@@ -162,7 +189,7 @@ class CheckpointedSketchJob:
         # bucket order pins the fold: digest bytes (t-digest, KLL) must
         # not depend on shuffle arrival
         merged = _fold_level(partials.withColumnRenamed("rows_seen", "__rows"), self.keys,
-                             {STATE_COL: self.spec}, order=["bucket"])
+                             self.specs, order=["bucket"])
         return merged.withColumnRenamed("__rows", "rows_seen")
 
     def run(self, df: DataFrame) -> DataFrame:

@@ -24,8 +24,14 @@ time, so export soundness is a build-time property; add
 numeric columns).  See ``sketches/wire_export.py``.
 
 With ``--checkpoint-dir`` the job runs through the resumable lineage
-path (jobs/checkpoint.py): re-running after a kill resumes from the
-last completed lineage bucket and produces byte-identical output.
+path (jobs/checkpoint.py): ONE checkpointed job builds every op in one
+scan, with its checkpoint table at
+``<checkpoint-dir>/<snapshot-id>/partials`` and its per-bucket lineage
+rows written to ``<output>_metrics``; the output gets one ``rows_seen``
+column (a key's rows with any op's column non-null).  Re-running after
+a kill resumes from the last completed lineage bucket and produces
+byte-identical output.  A changed op set is refused on resume: give it
+a new ``--snapshot-id``.
 """
 
 from __future__ import annotations
@@ -136,36 +142,13 @@ def main(argv=None):
     t0 = time.time()
     n_rows = df.count()
 
+    sketches = {name: (col, spec) for name, col, spec in ops}
     if args.checkpoint_dir:
-        # resumable path: one checkpointed job per op (lineage + metrics)
-        outs = []
-        for name, col, spec in ops:
-            job = CheckpointedSketchJob(
-                spark=spark, spec=spec, col=col, keys=args.keys,
-                checkpoint_dir=args.checkpoint_dir,
-                snapshot_id=f"{args.snapshot_id}-{name}",
-            )
-            merged = job.run(df).withColumnRenamed("sketch", name)
-            outs.append((name, merged))
-            job.metrics().write.mode("overwrite").parquet(f"{args.output}_metrics/{name}")
-        # one rows_seen column (the first op's); null keys are a group
-        # like any other, so the keys join null-safely.  A key whose rows
-        # are null in one op's column has no row in that op's job: the
-        # join is full outer and the gap is that op's empty sketch, as
-        # multi_sketch_agg gives it
-        result = outs[0][1]
-        for name, o in outs[1:]:
-            on = [F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")) for k in args.keys]
-            l, r = result.alias("l"), o.drop("rows_seen").alias("r")
-            joined = l.join(r, on, "full_outer") if on else l.crossJoin(r)
-            result = joined.select(*[F.coalesce(f"l.{k}", f"r.{k}").alias(k) for k in args.keys],
-                                   *[f"l.{c}" for c in result.columns if c not in args.keys], f"r.{name}")
-        fill = {"rows_seen": F.lit(0).cast("long"), **{name: F.lit(spec.new().to_bytes()) for name, _, spec in ops}}
-        result = result.select(*[F.coalesce(c, fill[c]).alias(c) if c in fill else c for c in result.columns])
+        job = CheckpointedSketchJob(spark=spark, sketches=sketches, keys=args.keys,
+                                    checkpoint_dir=args.checkpoint_dir, snapshot_id=args.snapshot_id)
+        result = job.run(df)
+        job.metrics().write.mode("overwrite").parquet(f"{args.output}_metrics")
     else:
-        sketches = {}
-        for name, col, spec in ops:
-            sketches[name] = (col, spec)
         result = multi_sketch_agg(df, sketches, keys=args.keys, hash_mode=args.hash_mode)
 
     if args.wire_format == "reference":

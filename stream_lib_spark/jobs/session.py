@@ -80,15 +80,23 @@ def ensure_shipped(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
+def half_mem_total_mb() -> int:
+    """Half of this machine's physical memory (MemTotal), in MiB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+
+
 def get_spark(app_name: str = "stream_lib_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Tuned local session (sandbox stand-in for the cluster deploy;
     see /opt/skills/guides/pyspark_guide.md session pattern).
     ``extra_conf``: additional spark confs (e.g. executor-container JVM
-    sizing flags for the scaling harness)."""
+    sizing flags for the scaling harness).  Sized from the box unless
+    ``$SPARK_GRAFT_CPUS`` / ``$SPARK_GRAFT_DRIVER_MEM`` say otherwise:
+    one task slot per CPU this process may run on, a driver of half of
+    MemTotal."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = SparkSession.builder
@@ -96,7 +104,7 @@ def get_spark(app_name: str = "stream_lib_spark", cpus: int | None = None,
         builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{half_mem_total_mb()}m")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # r8: let AQE convert a shuffle join to broadcast when the

@@ -132,7 +132,15 @@ def test_qdigest_checkpoint_resume_byte_identical(spark, tmp_path):
     assert interrupted == clean
 
 
-def test_empty_buckets_marked_done_and_resume_converges(spark, tmp_path):
+# the one-sketch job, and a two-sketch job whose hll column keeps the
+# one-sketch name: the marker rows carry one empty blob per sketch
+HLL_ONLY = {"spec": SketchSpec("hll", p=10), "col": "user_id"}
+HLL_AND_CMS = {"sketches": {"sketch": ("user_id", SketchSpec("hll", p=10)),
+                            "cms": ("event_id", SketchSpec("cms", depth=4, width=64))}}
+
+
+@pytest.mark.parametrize("sketches", [HLL_ONLY, HLL_AND_CMS], ids=["one", "two"])
+def test_empty_buckets_marked_done_and_resume_converges(spark, tmp_path, sketches):
     """A table with fewer rows than buckets: every bucket (including the
     empty ones) is marked done after one pass, so the next invocation
     has NO work — the resume done-set converges instead of re-scanning
@@ -142,7 +150,7 @@ def test_empty_buckets_marked_done_and_resume_converges(spark, tmp_path):
 
     df = spark.range(0, 20).selectExpr("id AS event_id", "id % 7 AS user_id")
     job = CheckpointedSketchJob(
-        spark=spark, spec=SketchSpec("hll", p=10), col="user_id",
+        spark=spark, **sketches,
         n_buckets=64, checkpoint_dir=str(tmp_path / "ckpt"),
         snapshot_id="snap-sparse", bucket_cols=["event_id"])
     assert job.build_partials(df) == 64
@@ -154,7 +162,8 @@ def test_empty_buckets_marked_done_and_resume_converges(spark, tmp_path):
     assert out["rows_seen"] == 20
 
 
-def test_keyed_markers_do_not_leak_null_key_rows(spark, tmp_path):
+@pytest.mark.parametrize("sketches", [HLL_ONLY, HLL_AND_CMS], ids=["one", "two"])
+def test_keyed_markers_do_not_leak_null_key_rows(spark, tmp_path, sketches):
     """Keyed job over a sparse table: empty-bucket lineage markers must
     not surface as a null-key output group."""
     from stream_lib_spark.agg import SketchSpec, sketch_from_bytes
@@ -164,7 +173,7 @@ def test_keyed_markers_do_not_leak_null_key_rows(spark, tmp_path):
         "id AS event_id", "id % 5 AS user_id",
         "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS grp")
     job = CheckpointedSketchJob(
-        spark=spark, spec=SketchSpec("hll", p=10), col="user_id",
+        spark=spark, **sketches,
         keys=["grp"], n_buckets=32, checkpoint_dir=str(tmp_path / "ckpt"),
         snapshot_id="snap-keyed-sparse", bucket_cols=["event_id"])
     rows = {r["grp"]: r for r in job.run(df).collect()}

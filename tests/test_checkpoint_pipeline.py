@@ -2,7 +2,9 @@
 partition-local build plus one blob fold per (bucket, keys), phase B is
 one blob fold in bucket order.  Pins its answers (hll/cms/bloom bytes
 and lineage rows recorded before the rebuild), t-digest kill/resume
-identity over a multi-partition input, and the phase-A plan shape."""
+identity over a multi-partition input, the phase-A plan shape, and the
+N-sketch job: one scan, resume identity, one-sketch bytes, the CLI's
+one job."""
 
 import hashlib
 import json
@@ -45,10 +47,12 @@ def _job(spark, tmp_path, spec, col, keys, snap, n_buckets=16):
 
 
 def _canonical(job, final):
-    """(final rows, lineage rows) as sorted plain tuples: blobs by sha256."""
+    """(final rows, lineage rows) as sorted plain tuples: blobs by sha256,
+    one per sketch in the job's order."""
     keys = job.keys
     out = sorted(
-        [[r[k] for k in keys], hashlib.sha256(bytes(r["sketch"])).hexdigest(), r["rows_seen"]]
+        [[r[k] for k in keys], *[hashlib.sha256(bytes(r[n])).hexdigest() for n in job.sketches],
+         r["rows_seen"]]
         for r in final.collect())
     lineage = sorted(
         [r["bucket"], [r[k] for k in keys], r["rows_seen"], r["state_sha256"]]
@@ -100,6 +104,81 @@ def test_phase_a_shuffles_blobs_not_rows(spark, tmp_path):
     assert any("Exchange" in line for line in lines[:build])
     assert not any("Exchange" in line for line in lines[build:]), plan
 
+
+
+N_SKETCHES = {
+    "hll": ("user_id", SPECS["hll"]),
+    "cms": ("user_id", SPECS["cms"]),
+    "td": ("value", SketchSpec("tdigest", compression=100)),
+}
+
+
+def _n_job(spark, tmp_path, keys, snap, sketches=N_SKETCHES, n_buckets=8):
+    return CheckpointedSketchJob(
+        spark=spark, sketches=sketches, keys=list(keys), n_buckets=n_buckets,
+        checkpoint_dir=str(tmp_path / "ckpt"), snapshot_id=snap, bucket_cols=["event_id"])
+
+
+def test_phase_a_scans_once_for_n_sketches(spark, tmp_path):
+    """Three sketches, one pass: below phase A's first Exchange sit one
+    parquet scan and one build MapInArrow."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    job = _n_job(spark, tmp_path, ["event_type"], "plan-n")
+    plan = job._partials(ev, list(range(8)))._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    below = lines[next(i for i, line in enumerate(lines) if "Exchange" in line):]
+    assert sum("Scan parquet" in line for line in below) == 1, plan
+    assert sum("MapInArrow" in line for line in below) == 1, plan
+
+
+@pytest.mark.parametrize("keys", [(), ("event_type",)])
+def test_n_sketch_resume_matches_uninterrupted(spark, tmp_path, keys):
+    """hll + cms + t-digest in one job over a multi-file table, killed
+    after 3 buckets and resumed, land on the uninterrupted run's final
+    and lineage rows; its hll and cms columns are the one-sketch jobs'
+    blobs byte for byte."""
+    table = str(tmp_path / "events4")
+    spark.read.parquet(f"{SF}/events.parquet").repartition(4).write.parquet(table)
+    ev = spark.read.parquet(table)
+
+    full = _n_job(spark, tmp_path, keys, "n-full")
+    final = full.run(ev)
+    want = _canonical(full, final)
+    killed = _n_job(spark, tmp_path, keys, "n-killed")
+    assert killed.build_partials(ev, max_buckets=3) == 3
+    assert _canonical(killed, killed.run(ev)) == want
+
+    got = {tuple(r[k] for k in keys): r for r in final.collect()}
+    for name in ("hll", "cms"):
+        col, spec = N_SKETCHES[name]
+        one = _job(spark, tmp_path, spec, col, keys, f"one-{name}", n_buckets=8).run(ev)
+        assert {tuple(r[k] for k in keys): bytes(r["sketch"]) for r in one.collect()} == \
+            {k: bytes(r[name]) for k, r in got.items()}
+
+
+def test_resume_refuses_changed_sketches(spark, tmp_path):
+    """A checkpoint built for {hll} has no cms state in its done buckets:
+    resuming it with {hll, cms} fails closed, naming the table and both
+    sketch lists."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    one = {"hll": N_SKETCHES["hll"]}
+    assert _n_job(spark, tmp_path, (), "changed", sketches=one).build_partials(ev, max_buckets=2) == 2
+    job = _n_job(spark, tmp_path, (), "changed", sketches={**one, "cms": N_SKETCHES["cms"]})
+    with pytest.raises(ValueError) as e:
+        job.build_partials(ev)
+    assert job.partials_path in str(e.value)
+    assert "['hll']" in str(e.value) and "['hll', 'cms']" in str(e.value)
+
+
+@pytest.mark.parametrize("kw", [
+    {},
+    {"spec": SPECS["hll"]},
+    {"spec": SPECS["hll"], "col": "user_id", "sketches": {"hll": N_SKETCHES["hll"]}},
+    {"sketches": {}},
+])
+def test_job_takes_one_form_of_sketches(kw):
+    with pytest.raises(ValueError, match="not both or neither"):
+        CheckpointedSketchJob(spark=None, **kw)
 
 
 def test_each_bucket_is_written_by_one_task(spark, tmp_path):
@@ -187,7 +266,31 @@ def test_cli_multi_op_checkpoint_keeps_key_null_in_one_op(spark, tmp_path):
     assert blobs("ckpt_out") == want
     ckpt = {r["event_type"]: r["rows_seen"]
             for r in spark.read.parquet(str(tmp_path / "ckpt_out")).collect()}
-    assert ckpt["click"] == 0 and ckpt["view"] == 188
+    # rows_seen follows multi_sketch_agg's row rule: a row counts if any
+    # requested column is non-null ('click' has no user_id, every event_id)
+    any_set = F.col("user_id").isNotNull() | F.col("event_id").isNotNull()
+    exact = spark.read.parquet(src).where(any_set).groupBy("event_type").count().collect()
+    assert ckpt == {r["event_type"]: r["count"] for r in exact}
+    assert ckpt["click"] == 210 and ckpt["view"] == 188
+
+
+def test_cli_checkpoint_writes_one_metrics_table(spark, tmp_path):
+    """A multi-op --checkpoint-dir run writes one lineage table at
+    <output>_metrics; its rows_seen, summed per key, is the output's."""
+    from pyspark.sql import functions as F
+
+    from stream_lib_spark.jobs.run_sketches import main
+
+    src, out = _null_key_table(spark, tmp_path), str(tmp_path / "out")
+    main(["--input", src, "--ops", "hll:user_id:p=12", "cms:event_id:depth=4,width=256",
+          "--keys", "event_type", "--cpus", "4", "--output", out,
+          "--checkpoint-dir", str(tmp_path / "ckpt")])
+    metrics = spark.read.parquet(f"{out}_metrics")
+    assert set(metrics.columns) == {"bucket", "event_type", "rows_seen", "state_sha256"}
+    lineage = {r["event_type"]: r["n"] for r in metrics.where(F.col("rows_seen") > 0)
+               .groupBy("event_type").agg(F.sum("rows_seen").alias("n")).collect()}
+    assert lineage == {r["event_type"]: r["rows_seen"] for r in spark.read.parquet(out).collect()}
+    assert sum(lineage.values()) == spark.read.parquet(src).count()
 
 
 def test_cli_rejects_murmur64_with_checkpoint(tmp_path, capsys):

@@ -261,27 +261,15 @@ def run(spark) -> dict:
 
 
 if __name__ == "__main__":
-    from stream_lib_spark.jobs.session import get_spark
+    from stream_lib_spark.jobs.session import get_spark, half_mem_total_mb
 
     # r8: at a 10x-of-sf1 corpus (500k docs) the gram/pair aggregations
     # legitimately fill a 16 g heap's execution memory and the session
     # runs all eight operators back-to-back; the r7 driver artifact
-    # recorded this section dying with a heap OOM.  This harness
-    # subprocess (not the library, not bench.py) defaults to a larger
-    # heap — it runs alone, and the corpus grows with the driver's
-    # scale factor, so the default ADAPTS to the box instead of pinning
-    # a constant that a bigger sf outgrows: half of MemTotal, clamped
-    # to [28g, 64g].  SPARK_GRAFT_DRIVER_MEM still overrides.
-    def _default_heap_gb() -> int:
-        try:
-            with open("/proc/meminfo") as f:
-                kb = int(next(line for line in f
-                              if line.startswith("MemTotal")).split()[1])
-            return max(28, min(64, kb // (2 * 1024 * 1024)))
-        except Exception:
-            return 28
-
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_default_heap_gb()}g")
+    # recorded this section dying with a heap OOM.  This harness runs
+    # alone, so its heap is get_spark's default, half of MemTotal,
+    # capped at 64 g.  SPARK_GRAFT_DRIVER_MEM still overrides.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(64 << 10, half_mem_total_mb())}m")
     spark = get_spark("bench-scale-trend")
     # ONE line: bench.py runs this as a subprocess and parses the last
     # stdout line (full process isolation — a stopped SparkContext's JVM
