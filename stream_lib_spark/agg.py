@@ -12,11 +12,13 @@ entry point and any number of sketches per scan:
    per (grouping key) per task straight off the Arrow batches, emitted
    as one BinaryType column per sketch.  This is the map-side combine:
    the shuffle moves O(partitions × keys) sketch blobs, never rows.
-3. **fan-in** — a global aggregate over more than 64 partials gets an
+3. **fan-in** — a global aggregate over more than 64 partials (the
+   partition count read off the partials' physical plan by
+   ``_n_partitions``; exact unless a scan waits on a subquery) gets an
    intermediate merge level of ~sqrt(n) buckets, which bounds
    reduce-side state (SURVEY.md §4 item 2); the pipeline sizes it, no
-   caller does.  A keyed merge never gets one: its key repartition
-   already spreads the fold over many reducers.
+   caller does.  A keyed merge never gets one:
+   its key repartition already spreads the fold over many reducers.
 4. **merge** — fold partials with the sketch's monoid merge.  Every
    merge level (the fan-in level, the keyed fold, the global fold) is
    ONE ``mapInArrow`` fold kernel over ``repartition(keys)`` (global:
@@ -42,11 +44,13 @@ rows.
 from __future__ import annotations
 
 import functools
+import math
 import operator
 import os
 import urllib.parse
 
 import numpy as np
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -207,9 +211,10 @@ class SketchSpec:
 #               the same batches read by pyarrow inside the tasks
 #   kernel      _kernel, one mapInArrow build for every shape (global =
 #               zero keys); every Arrow column enters a sketch via _offer
-#   merge       _merge: global fan-in level, keyed fold and global fold are each
-#               one _fold_level (the mapInArrow kernel _fold_batches) +
-#               the driver-fold marker; every blob fold is _fold
+#   merge       _merge: global fan-in level (sized from _n_partitions),
+#               keyed fold and global fold are each one _fold_level (the
+#               mapInArrow kernel _fold_batches) + the driver-fold
+#               marker; every blob fold is _fold
 #
 # The checkpoint job uses the same parts: phase A is _build keyed by
 # (bucket, keys...) with per-key row counts (__rows) + one _fold_level
@@ -553,30 +558,25 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
 
 
 def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
-           hash_mode: str = "xxhash64", rows: bool = False) -> tuple[DataFrame, int | None]:
+           hash_mode: str = "xxhash64", rows: bool = False) -> DataFrame:
     """Partition-local build of every sketch: one (keys..., <name>
     BinaryType...) row per key per task, plus the key's input row count
-    ``__rows`` if ``rows``.  Returns (partials, n): n is the direct
-    path's exact task count, None on the classic path (whose partition
-    count the merge can only estimate)."""
+    ``__rows`` if ``rows``."""
     specs = {name: spec for name, (_, spec) in sketches.items()}
     schema = T.StructType([df.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs]
                           + ([T.StructField("__rows", T.LongType())] if rows else []))
+    kernel = _kernel(specs, keys, to_arrow_schema(schema), hash_mode != "xxhash64")
     direct = _direct_tasks(df, keys, sketches, hash_mode)
     if direct is None:
-        feed, python_hash = _project(df, keys, sketches, hash_mode)
-        source = n = None
-    else:
-        tasks, wants = direct
-        # one Range partition per task: a pure-JVM feed of one long each (a
-        # createDataFrame of the task rows would route through a Python RDD
-        # — two extra worker crossings per task, measured ~0.4 s of fixed
-        # overhead at sf0.1)
-        feed = df.sparkSession.range(0, len(tasks), 1, numPartitions=len(tasks))
-        source, python_hash, n = _row_groups(tasks, keys, sketches, wants), False, len(tasks)
-    kernel = _kernel(specs, keys, to_arrow_schema(schema), python_hash)
-    run = kernel if source is None else lambda it: kernel(source(it))
-    return feed.mapInArrow(run, schema=schema), n
+        return _project(df, keys, sketches, hash_mode)[0].mapInArrow(kernel, schema=schema)
+    tasks, wants = direct
+    source = _row_groups(tasks, keys, sketches, wants)
+    # one Range partition per task: a pure-JVM feed of one long each (a
+    # createDataFrame of the task rows would route through a Python RDD
+    # — two extra worker crossings per task, measured ~0.4 s of fixed
+    # overhead at sf0.1)
+    feed = df.sparkSession.range(0, len(tasks), 1, numPartitions=len(tasks))
+    return feed.mapInArrow(lambda it: kernel(source(it)), schema=schema)
 
 
 def _auto_fan_in(n_parts: int) -> int | None:
@@ -584,49 +584,50 @@ def _auto_fan_in(n_parts: int) -> int | None:
     gets an intermediate level of ~sqrt(n) buckets, so both levels fold
     ~sqrt(n) blobs.  At 10^6 input partitions the single reducer would
     otherwise pull 10^6 × 16 KB-240 KB blobs."""
-    if n_parts <= 64:
-        return None
-    import math
-
-    return int(math.ceil(math.sqrt(n_parts)))
+    return None if n_parts <= 64 else math.isqrt(n_parts - 1) + 1  # ceil(sqrt(n))
 
 
-def _estimate_partitions(df: DataFrame) -> int:
-    """Cheap static UPPER BOUND on a DataFrame's partition count for
-    fan-in sizing.  Deliberately NOT ``df.rdd.getNumPartitions()``:
-    under AQE, materializing the RDD finalizes the adaptive plan, which
-    EXECUTES the upstream query stages — it silently ran the whole
-    window+sketch pipeline once before the real collect (the round-2
-    ``transcript_latency_tdigest`` +22% regression, measured 1.85s for
-    the "metadata" probe vs 0.06s for ``inputFiles``).  Fan-in sizing
-    only needs the order of magnitude, so estimate from metadata:
-    max(#leaf files, shuffle-partitions conf, defaultParallelism,
-    explicit Repartition(n) nodes in the analyzed logical plan).
-    Over-estimating just buys an extra ~sqrt(n) merge level over blob
-    rows (harmless); the terms jointly bound every plan shape — scans
-    by file count (file *splits* exceed it only by the small
-    size/maxPartitionBytes factor), wide ops by the shuffle conf, local
-    relations by defaultParallelism, user repartitions by the plan
-    scan."""
-    sess = df.sparkSession
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    try:
-        shuffle_conf = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_conf = 0
-    n_repart = 0
-    try:
-        import re
+def _n_partitions(df: DataFrame) -> int:
+    """``df``'s partition count, read off its physical plan without
+    running anything.  Not ``df.rdd.getNumPartitions()``: under AQE that
+    finalizes the adaptive plan, which EXECUTES the upstream query
+    stages (it once ran a whole window+sketch pipeline before the real
+    collect).  The walk reads AQE's initial plan, exchanges included, so
+    a shuffle counts its pre-coalescing partitions:
 
-        analyzed = df._jdf.queryExecution().analyzed().toString()
-        for m in re.finditer(r"Repartition (\d+)|RepartitionByExpression \[[^\n]*\], (\d+)", analyzed):
-            n_repart = max(n_repart, int(m.group(1) or m.group(2)))
-    except Exception:
-        pass
-    return max(n_files, shuffle_conf, sess.sparkContext.defaultParallelism, n_repart)
+    * a node that states its partition count gives it (an exchange,
+      a range, a coalesce; a leaf scan's partitioning states none);
+    * a union sums its children, any other inner node takes its widest
+      child;
+    * a leaf builds its RDD (no job) and counts it — except a leaf whose
+      expressions hold a subquery (a dynamic-pruning or scalar-subquery
+      partition filter), where building the RDD would run the subquery:
+      a file scan then gives its unpruned file count, an estimate (files
+      may be split, packed or pruned), and any other such leaf gives 0;
+    * AQE's plan and a cached frame's plan are walked, never executed:
+      asking an unmaterialized cache for its partitioning runs it."""
+
+    def walk(node) -> int:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name == "InMemoryTableScanExec":
+            return walk(node.relation().cachedPlan())
+        n = node.outputPartitioning().numPartitions()
+        if n:
+            return n
+        kids = node.children()
+        counts = [walk(kids.apply(i)) for i in range(kids.size())]
+        if counts:
+            return sum(counts) if name == "UnionExec" else max(counts)
+        if node.subqueries().isEmpty():
+            return node.execute().getNumPartitions()
+        try:  # building the RDD would run (or, for dynamic pruning, refuse) the subquery
+            return len(node.relation().inputFiles())
+        except Py4JError:  # not a file scan: no count, so no fan-in level
+            return 0
+
+    return walk(df._jdf.queryExecution().executedPlan())
 
 
 def _fold(blobs, spec: SketchSpec, sk=None, final: bool = True):
@@ -697,15 +698,13 @@ def _fold_level(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpe
     return shuffled.mapInArrow(_fold_batches(specs, keys, to_arrow_schema(schema), final), schema=schema)
 
 
-def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec],
-           n_partials: int | None = None) -> DataFrame:
+def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec]) -> DataFrame:
     """Tree-merge the partials of every sketch to one row per key (see
     ``merge_partials``).  A global merge gets a fan-in level sized by
-    ``_auto_fan_in`` from ``n_partials``, the direct read's exact task
-    count, else from ``_estimate_partitions``; the level is the keyed
-    fold with one more key, ``__bkt``, left unfinalized."""
-    fan_in = None if keys else _auto_fan_in(
-        n_partials if n_partials is not None else _estimate_partitions(partials))
+    ``_auto_fan_in`` from the partials' partition count
+    (``_n_partitions``); the level is the keyed fold with one more key,
+    ``__bkt``, left unfinalized.  A keyed merge never counts."""
+    fan_in = None if keys else _auto_fan_in(_n_partitions(partials))
     if fan_in:
         bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
         partials = _fold_level(partials.withColumn("__bkt", bucket), keys + ["__bkt"], specs,
@@ -733,7 +732,7 @@ def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     row per key per partition (per row group on the direct read).
     Vectorized: numpy kernels over whole Arrow batches — no per-row
     Python anywhere."""
-    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[0]
+    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)
 
 
 def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec) -> DataFrame:
@@ -744,8 +743,8 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec) -> Da
     ``mapInArrow`` task folds every key group it holds — exactly one row
     for a global merge, even on no input.
 
-    A GLOBAL merge whose partials span more than 64 partitions
-    (estimated from plan metadata) first folds them in an intermediate
+    A GLOBAL merge whose partials span more than 64 partitions (counted
+    off their physical plan) first folds them in an intermediate
     level of ~sqrt(n) buckets — the keyed fold with the bucket as one
     more key, left unfinalized — which bounds reduce-side fan-in across
     huge partition counts.  The buckets are fixed only in topology, not
@@ -760,10 +759,10 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
                hash_mode: str = "xxhash64") -> DataFrame:
     """Full two-level sketch aggregation → (keys..., sketch): a
     one-sketch ``multi_sketch_agg``.  Global aggregates over >64
-    partials (the direct read's exact task count, else estimated from
-    plan metadata) get a third (fan-in) merge level — see
-    ``merge_partials``; below it ``collect_sketch`` folds the partials
-    on the driver.
+    partials (the build's partition count: its scan splits, the direct
+    read's tasks, or an upstream exchange's partitions) get a
+    third (fan-in) merge level — see ``merge_partials``; below it
+    ``collect_sketch`` folds the partials on the driver.
 
     Rows: null values (and, for value kinds, strings that do not cast)
     are skipped, never an ANSI-mode error; null keys form their own
@@ -775,13 +774,13 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     keyed: string keys only) or, global only, tdigest/kll over a
     DoubleType column — never reference-family or conservative CMS.
     The driver reads every file's footer first; a file whose column is
-    missing or of another type sends the aggregate to the classic read.  hll/cms/bloom bytes are identical on both paths;
-    tdigest/kll bytes differ between the direct and classic paths
-    (partial boundaries move), both within the published rank bound.
+    missing or of another type sends the aggregate to the classic read.
+    hll/cms/bloom bytes are identical on both paths; tdigest/kll bytes
+    differ between the direct and classic paths (partial boundaries
+    move), both within the published rank bound.
     ``SPARK_GRAFT_DIRECT_SCAN=0`` turns the direct read off.
     """
-    partials, n = _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)
-    return _merge(partials, keys, {STATE_COL: spec}, n)
+    return _merge(_build(df, keys, {STATE_COL: (col, spec)}, hash_mode), keys, {STATE_COL: spec})
 
 
 def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
@@ -811,8 +810,8 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
     bytes differ between the two paths, both within the rank bound.
     """
     keys = keys or []
-    partials, n = _build(df, keys, sketches, hash_mode)
-    return _merge(partials, keys, {name: spec for name, (_, spec) in sketches.items()}, n)
+    return _merge(_build(df, keys, sketches, hash_mode), keys,
+                  {name: spec for name, (_, spec) in sketches.items()})
 
 
 def collect_sketch(df_or_merged: DataFrame):
@@ -830,9 +829,9 @@ def collect_sketch(df_or_merged: DataFrame):
         partials, specs = fold
         # toArrow: an Arrow transfer of the binary blobs; py4j row
         # collect pickles each ~1 MB CMS partial through the gateway
-        # socket instead
-        blobs = partials.select(STATE_COL).toArrow().column(STATE_COL).to_pylist()
-        return _fold(blobs, specs[STATE_COL])
+        # socket instead.  The partials DataFrame itself, not a
+        # projection of it: its plan is the one ``_merge`` counted
+        return _fold(partials.toArrow().column(STATE_COL).to_pylist(), specs[STATE_COL])
     row = df_or_merged.select(STATE_COL).collect()
     if len(row) != 1:
         raise ValueError(f"expected one merged sketch row, got {len(row)}")

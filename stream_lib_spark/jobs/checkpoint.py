@@ -133,7 +133,7 @@ class CheckpointedSketchJob:
         of its per-task partials in build-task order."""
         keys = ["__bucket", *self.keys]
         bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
-        parts = _build(bucketed, keys, self.sketches, rows=True)[0]
+        parts = _build(bucketed, keys, self.sketches, rows=True)
         # shuffled by bucket alone: one task folds (and writes) every
         # key of a bucket, so a bucket is one file — the unit of "done"
         folded = _fold_level(parts.withColumn("__task", F.spark_partition_id()), keys,

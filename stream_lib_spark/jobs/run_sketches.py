@@ -98,6 +98,11 @@ def main(argv=None):
     from pyspark.sql import SparkSession, functions as F
 
     ops = list(map(parse_op, args.ops))
+    named: dict = {}
+    for (name, _col, _spec), op in zip(ops, args.ops):
+        if name in named:  # the output holds one column per name: one op would vanish
+            ap.error(f"--ops {named[name]!r} and {op!r} both name the output column {name!r}")
+        named[name] = op
     if args.wire_format == "reference":
         # export soundness for cms/bloom is a BUILD-time property: the
         # JVM re-hashes probes with its own family at query time, so

@@ -209,7 +209,7 @@ def _row(head: dict, sk, blob: bytes, **extra):
 
 def _fold_pdfs(sk, pdfs, spec: SketchSpec):
     """Fold an iterator of micro-batch pandas frames into sketch ``sk``
-    — the update every stateful backend runs: each frame's LAST column
+    — the update every stateful operator runs: each frame's LAST column
     (the ``_project`` input column) goes through the library's one
     Arrow update, ``agg._offer``."""
     for pdf in pdfs:
@@ -228,10 +228,6 @@ def keyed_streaming_sketch(stream_df: DataFrame, keys: list[str], col: str,
     Spark stateful operator — state lives in the state store
     (RocksDB/HDFS-backed on a cluster), so it survives restarts with
     Structured Streaming's exactly-once guarantees.
-
-    See ``keyed_streaming_sketch_tws`` for the same operator on the
-    Spark 4 ``transformWithStateInPandas`` engine — state bytes are
-    identical between the two backends (byte-parity tested).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -243,65 +239,7 @@ def keyed_streaming_sketch(stream_df: DataFrame, keys: list[str], col: str,
         state.update((blob,))
         yield _row({k: str(v) for k, v in zip(keys, key)}, sk, blob)
 
+    schema = ", ".join(f"{k} string" for k in keys) + ", sketch binary, estimate double"
     return prepared.groupBy(*keys).applyInPandasWithState(
-        fold, _keyed_schema(keys), "blob binary", "Update", GroupStateTimeout.NoTimeout
+        fold, schema, "blob binary", "Update", GroupStateTimeout.NoTimeout
     )
-
-
-def _keyed_schema(keys: list[str]) -> str:
-    """Output schema of both keyed backends."""
-    return ", ".join(f"{k} string" for k in keys) + ", sketch binary, estimate double"
-
-
-def keyed_streaming_sketch_tws(stream_df: DataFrame, keys: list[str], col: str,
-                               spec: SketchSpec):
-    """``keyed_streaming_sketch`` on the Spark 4
-    ``transformWithStateInPandas`` engine (SPARK-49564): the same
-    prepared projection and the same fold loop, with per-key sketch
-    bytes in a named ``ValueState`` instead of the legacy GroupState
-    tuple.  Output schema and state BYTES are identical to the classic
-    backend — the sketches are exactly associative, so backend choice
-    can never change a stored estimate (parity-tested both ways).
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider``) — transformWithState is only
-    implemented there; the HDFS-backed default store raises at query
-    start.  The engine's Python state-server protocol additionally
-    needs ``protobuf`` at runtime (any real PySpark deployment has it;
-    this sandbox does not, so the end-to-end engine test auto-skips
-    and the processor's fold/state logic is byte-parity-tested against
-    the classic backend through a state-protocol fake instead).
-    Prefer this backend on Spark 4+: state schema evolution, TTL,
-    timers, and multiple named state variables come with the new
-    engine, none of which the legacy operator offers."""
-    prepared, _ = _project(stream_df, keys, {STATE_COL: (col, spec)})
-    return prepared.groupBy(*keys).transformWithStateInPandas(
-        make_sketch_processor(keys, spec.input_mode, spec), outputStructType=_keyed_schema(keys),
-        outputMode="Update", timeMode="None",
-    )
-
-
-def make_sketch_processor(keys: list[str], mode: str, spec: SketchSpec):
-    """The ``StatefulProcessor`` behind ``keyed_streaming_sketch_tws``,
-    exposed so its fold/state logic is testable without the TWS engine
-    (whose Python protocol needs protobuf): anything implementing
-    ``getValueState(name, schema) -> {get(), update(tuple)}`` drives it.
-    ``mode`` is ``spec.input_mode``; the update reads it from ``spec``."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _SketchProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("sketch_blob", "blob binary")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prior = self._state.get()
-            sk = sketch_from_bytes(bytes(prior[0])) if prior is not None else spec.new()
-            blob = _fold_pdfs(sk, rows, spec).to_bytes()
-            self._state.update((blob,))
-            yield _row({k: str(v) for k, v in zip(keys, key)}, sk, blob)
-
-        def close(self) -> None:
-            pass
-
-    return _SketchProcessor()

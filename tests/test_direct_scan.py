@@ -35,10 +35,12 @@ from pyspark.sql import functions as F
 from stream_lib_spark.agg import (
     STATE_COL,
     SketchSpec,
-    _build,
+    _direct_tasks,
+    _n_partitions,
     collect_sketch,
     multi_sketch_agg,
     sketch_agg,
+    sketch_partials,
 )
 from stream_lib_spark.hashing import xxhash64_long
 
@@ -56,8 +58,11 @@ def _engage_at_any_size():
 
 
 def _direct_count(df, keys, col, spec, hash_mode="xxhash64"):
-    """Exact task count of the direct build; None = classic path."""
-    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[1]
+    """Task count of the direct build, read off its plan by the merge's
+    own count; None = classic path."""
+    if _direct_tasks(df, keys, {STATE_COL: (col, spec)}, hash_mode) is None:
+        return None
+    return _n_partitions(sketch_partials(df, keys, col, spec, hash_mode))
 
 
 def _plan(df) -> str:
@@ -367,7 +372,7 @@ def test_multi_sketch_mixed_request_goes_classic(spark):
     li = spark.read.parquet(f"{SF_CORRECTNESS}/lineitem.parquet")
     hll = SketchSpec("hll", p=14)
     mixed = {"h": ("l_orderkey", hll), "f": ("l_returnflag", hll)}
-    assert _build(li, [], mixed)[1] is None
+    assert _direct_tasks(li, [], mixed, "xxhash64") is None
     multi = multi_sketch_agg(li, mixed)
     assert "Scan parquet" in _plan(multi)
     assert bytes(multi.collect()[0]["h"]) == collect_sketch(
@@ -394,7 +399,7 @@ def test_multi_sketch_keyed_direct_read(spark, tmp_path):
     df = spark.read.parquet(path)
     hll, cms = SketchSpec("hll", p=12), SketchSpec("cms", eps=1e-3, confidence=0.99)
     sketches = {"h": ("a", hll), "c": ("b", cms)}
-    assert _build(df, ["k"], sketches)[1] is not None
+    assert _direct_tasks(df, ["k"], sketches, "xxhash64") is not None
     multi = multi_sketch_agg(df, sketches, keys=["k"])
     assert "Scan parquet" not in _plan(multi)
     rows = multi.collect()

@@ -14,6 +14,7 @@ from stream_lib_spark.agg import (
     SketchSpec,
     _auto_fan_in,
     _merge,
+    _n_partitions,
     merge_partials,
     multi_sketch_agg,
     sketch_agg,
@@ -73,12 +74,14 @@ def test_multi_sketch_fan_in_byte_identical(spark):
 
 def test_keyed_merge_has_no_fan_in_level(spark):
     """A keyed merge is one fold over the key repartition, however many
-    partials feed it: no fan-in level, even at an exact count of 96."""
+    partials feed it: no fan-in level, even at an exact count of 96
+    (where a global merge of the same partials gets one)."""
     ev = spark.read.parquet(f"{SF}/events.parquet")
     spec = SketchSpec("hll", p=12)
     partials = sketch_partials(ev.repartition(96), ["event_type"], "event_id", spec)
+    assert _n_partitions(partials) == 96
     assert _map_in_arrow(_plan(merge_partials(partials, ["event_type"], spec))) == 2
-    assert _map_in_arrow(_plan(_merge(partials, ["event_type"], {STATE_COL: spec}, 96))) == 2
+    assert _map_in_arrow(_plan(_merge(partials, [], {STATE_COL: spec}))) == 3
 
 
 @pytest.mark.parametrize("n_partials", [None, 96])
@@ -87,11 +90,14 @@ def test_empty_input_distributed(spark, n_partials):
     global aggregate over no rows is exactly one row holding the empty
     sketch, a keyed one is zero rows — for tasks that see no rows and
     for an input with no partitions at all, with (96 partials) and
-    without the fan-in level."""
+    without the fan-in level. The level is forced through a 96-partition
+    input, so only that case repartitions the partitionless input."""
     spec = SketchSpec("hll", p=12)
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    for empty in (ev.repartition(4).where(F.col("user_id") < 0), spark.createDataFrame([], ev.schema)):
-        merged = _merge(sketch_partials(empty, [], "user_id", spec), [], {STATE_COL: spec}, n_partials)
+    none = spark.createDataFrame([], ev.schema)
+    for empty in (ev.repartition(n_partials or 4).where(F.col("user_id") < 0),
+                  none.repartition(n_partials) if n_partials else none):
+        merged = merge_partials(sketch_partials(empty, [], "user_id", spec), [], spec)
         assert _map_in_arrow(_plan(merged)) == (3 if n_partials else 2)
         rows = merged.collect()
         assert len(rows) == 1
@@ -110,7 +116,9 @@ def test_quantile_sketch_fan_in_topology(spark, kind, spec):
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_extendedprice")
     partials = sketch_partials(li.repartition(8), [], "l_extendedprice", spec)
     partials = partials.localCheckpoint()  # FIX the partials across both folds
-    forced = bytes(_merge(partials, [], {STATE_COL: spec}, 96).collect()[0]["sketch"])
+    forced = merge_partials(partials.repartition(96), [], spec)
+    assert _map_in_arrow(_plan(forced)) == 2  # fan-in level + fold; the build is checkpointed
+    forced = bytes(forced.collect()[0]["sketch"])
     off = bytes(merge_partials(partials, [], spec).collect()[0]["sketch"])
     from stream_lib_spark.agg import sketch_from_bytes
 

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from stream_lib_spark.agg import (
     STATE_COL,
     SketchSpec,
-    _merge,
     collect_sketch,
     merge_partials,
     sketch_agg,
@@ -68,7 +67,7 @@ def test_driver_fold_empty_input(events):
 
 def test_fan_in_level_disables_driver_fold(events):
     partials = sketch_partials(events, [], "user_id", SketchSpec("hll", p=12))
-    forced = _merge(partials, [], {STATE_COL: SketchSpec("hll", p=12)}, n_partials=96)
+    forced = merge_partials(partials.repartition(96), [], SketchSpec("hll", p=12))
     assert not hasattr(forced, "_slp_driver_fold")
     # and the distributed result still matches the no-fan-in fold
     plain = merge_partials(partials, [], SketchSpec("hll", p=12))

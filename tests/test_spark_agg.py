@@ -9,9 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_lib_spark.agg import (
-    STATE_COL,
     SketchSpec,
-    _merge,
     collect_sketch,
     merge_partials,
     sketch_agg,
@@ -61,7 +59,8 @@ def test_fan_in_level_same_result(spark, events):
     partials = sketch_partials(events.repartition(96), [], "user_id", SketchSpec("hll", p=13))
     fanned = merge_partials(partials, [], SketchSpec("hll", p=13))
     assert not hasattr(fanned, "_slp_driver_fold")  # 96 partials: a fan-in level
-    direct = _merge(partials, [], {STATE_COL: SketchSpec("hll", p=13)}, n_partials=1)
+    direct = merge_partials(partials.coalesce(8), [], SketchSpec("hll", p=13))
+    assert hasattr(direct, "_slp_driver_fold")  # 8 partials: none
     assert bytes(direct.collect()[0]["sketch"]) == bytes(fanned.collect()[0]["sketch"])
 
 

@@ -134,6 +134,22 @@ def test_cli_wire_format_rejects_unsound_kinds(tmp_path):
               "--wire-format", "reference"])
 
 
+def test_cli_refuses_two_ops_with_one_name(tmp_path, capsys):
+    """Two --ops that map to one output name (same kind and column) are
+    refused before any Spark work, naming the name and both ops;
+    otherwise the output would silently keep only the last op's column."""
+    from stream_lib_spark.jobs.run_sketches import main
+
+    out = tmp_path / "clash"
+    with pytest.raises(SystemExit):
+        main(["--input", f"{SF}/events.parquet",
+              "--ops", "hll:user_id:p=12", "cms:user_id:eps=0.01,confidence=0.99", "hll:user_id:p=14",
+              "--output", str(out), "--cpus", "4"])
+    err = capsys.readouterr().err
+    assert "hll_user_id" in err and "hll:user_id:p=12" in err and "hll:user_id:p=14" in err
+    assert not out.exists()
+
+
 def test_cli_hllc_op(spark, tmp_path):
     """The 'hllc' op (classic HyperLogLog, reference-family-only) works
     end-to-end from the CLI; with --wire-format reference the output is

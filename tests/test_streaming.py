@@ -87,7 +87,8 @@ def test_keyed_stateful_streaming(spark, dirs, sf_dir):
     for i in range(3):
         ev.where(F.pmod("event_id", F.lit(3)) == i).write.mode("append").parquet(dirs["input"])
     stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(dirs["input"])
-    out = keyed_streaming_sketch(stream, ["event_type"], "user_id", SketchSpec("hll", p=12))
+    spec = SketchSpec("hll", p=12)
+    out = keyed_streaming_sketch(stream, ["event_type"], "user_id", spec)
     # last update per key (by batch id) is the full-stream state
     final = _final_by_batch(out, "event_type", dirs["ckpt"] + "-keyed")
     exact = dict(ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("d")).collect())
@@ -95,6 +96,10 @@ def test_keyed_stateful_streaming(spark, dirs, sf_dir):
     for et, row in final.items():
         bound = max(3 * exact[et] * 1.04 / math.sqrt(1 << 12), 1)
         assert abs(row["estimate"] - exact[et]) <= bound, (et, row["estimate"], exact[et])
+    # per-key state bytes equal the batch build's, micro-batch folds and all
+    batch = {r["event_type"]: bytes(r["sketch"])
+             for r in sketch_agg(ev, ["event_type"], "user_id", spec).collect()}
+    assert {et: bytes(row["sketch"]) for et, row in final.items()} == batch
 
 
 def test_keyed_streaming_skips_malformed_numeric_strings(spark, dirs):
@@ -114,123 +119,6 @@ def test_keyed_streaming_skips_malformed_numeric_strings(spark, dirs):
     want = {r["k"]: sketch_from_bytes(bytes(r["sketch"])).total
             for r in sketch_agg(df, ["k"], "s", spec).collect()}
     assert got == want == {"a": 1, "b": 1}
-
-
-def test_tws_processor_fold_parity(spark, dirs, sf_dir):
-    """The Spark 4 TWS backend's StatefulProcessor must land per-key
-    state BYTES identical to the classic applyInPandasWithState backend
-    run through the real streaming engine.  The TWS engine's Python
-    state protocol needs protobuf (absent in this sandbox), so the
-    processor is driven through a state-protocol fake over the SAME
-    per-file micro-batches the classic query consumes — same fold loop,
-    exactly associative state, so backend choice can never change a
-    stored estimate."""
-    from stream_lib_spark.streaming import (keyed_streaming_sketch,
-                                            make_sketch_processor)
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    for i in range(3):
-        ev.where(F.pmod("event_id", F.lit(3)) == i).write.mode("append").parquet(dirs["input"])
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(dirs["input"])
-    spec = SketchSpec("hll", p=12)
-
-    classic_rows = _final_by_batch(
-        keyed_streaming_sketch(stream, ["event_type"], "user_id", spec),
-        "event_type", dirs["ckpt"] + "-twsf")
-    classic = {et: bytes(d["sketch"]) for et, d in classic_rows.items()}
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, t):
-            self.v = tuple(t)
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeValueState())
-
-    # drive the processor with the same three micro-batches, keyed
-    batches = [
-        ev.where((F.pmod("event_id", F.lit(3)) == i) & F.col("user_id").isNotNull())
-        .select("event_type", F.xxhash64("user_id").alias("__in")).toPandas()
-        for i in range(3)
-    ]
-    procs = {}
-    outs = {}
-    for b in batches:
-        for et, grp in b.groupby("event_type"):
-            if et not in procs:
-                p = make_sketch_processor(["event_type"], "hash", spec)
-                p.init(FakeHandle())
-                procs[et] = p
-            (out,) = list(procs[et].handleInputRows((et,), iter([grp[["__in"]]]), None))
-            outs[et] = bytes(out["sketch"].iloc[0])
-    for p in procs.values():
-        p.close()
-    assert set(outs) == set(classic) and len(outs) > 0
-    for et in classic:
-        assert outs[et] == classic[et], f"backend state bytes differ for {et}"
-    batch = {r["event_type"]: bytes(r["sketch"])
-             for r in sketch_agg(ev.where(F.col("user_id").isNotNull()),
-                                 ["event_type"], "user_id", spec).collect()}
-    assert outs == batch
-
-
-def test_keyed_tws_backend_byte_parity(spark, dirs, sf_dir):
-    """End-to-end engine parity (runs wherever protobuf is installed —
-    the TWS Python state protocol needs it; auto-skips in this
-    sandbox): the transformWithStateInPandas backend must produce
-    per-key state BYTES identical to the classic applyInPandasWithState
-    backend AND to the batch sketch_agg.  TWS requires the RocksDB
-    state store provider; the conf is set only for the TWS query and
-    restored after."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="TWS Python state protocol needs protobuf (absent in sandbox)")
-    from stream_lib_spark.streaming import (keyed_streaming_sketch,
-                                            keyed_streaming_sketch_tws)
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    for i in range(3):
-        ev.where(F.pmod("event_id", F.lit(3)) == i).write.mode("append").parquet(dirs["input"])
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(dirs["input"])
-    spec = SketchSpec("hll", p=12)
-
-    def run(name, build, **conf):
-        prior = {k: spark.conf.get(k, None) for k in conf}
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        try:
-            rows = _final_by_batch(
-                build(stream, ["event_type"], "user_id", spec),
-                "event_type", dirs["ckpt"] + "-" + name)
-        finally:
-            for k, v in prior.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        return {et: bytes(d["sketch"]) for et, d in rows.items()}
-
-    classic = run("tws_parity_classic", keyed_streaming_sketch)
-    tws = run(
-        "tws_parity_new", keyed_streaming_sketch_tws,
-        **{"spark.sql.streaming.stateStore.providerClass":
-           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"})
-    assert set(tws) == set(classic) and len(tws) > 0
-    for et in classic:
-        assert tws[et] == classic[et], f"backend state bytes differ for {et}"
-    batch = {r["event_type"]: bytes(r["sketch"])
-             for r in sketch_agg(ev.where(F.col("user_id").isNotNull()),
-                                 ["event_type"], "user_id", spec).collect()}
-    assert {et: tws[et] for et in tws} == batch
 
 
 def test_windowed_streaming_sketch(spark, dirs, sf_dir):
