@@ -23,8 +23,11 @@ entry point and any number of sketches per scan:
    merge level (the fan-in level, the keyed fold, the global fold) is
    ONE ``mapInArrow`` fold kernel over ``repartition(keys)`` (global:
    ``repartition(1)``); below the fan-in threshold a global fold runs
-   on the driver in ``collect_sketch`` instead.  Every blob fold is
-   ``_fold``.
+   on the driver in ``collect_sketch`` instead.  A keyed build over
+   exactly one partition (an exact count: no exchange below the build,
+   no estimate) has one partial per key, so its kernel finalizes every
+   state and no merge level runs: no exchange, no fold stage.  Every
+   blob fold, the kernel's finalize included, is ``_fold``.
 5. **finalize** — estimate/quantile/top-k, driver-side or via UDF.
 
 Hashing happens **JVM-side** (``F.xxhash64``, whole-stage codegen) by
@@ -214,12 +217,15 @@ class SketchSpec:
 #   merge       _merge: global fan-in level (sized from _n_partitions),
 #               keyed fold and global fold are each one _fold_level (the
 #               mapInArrow kernel _fold_batches) + the driver-fold
-#               marker; every blob fold is _fold
+#               marker; every blob fold is _fold.  A keyed build over
+#               exactly one partition skips it: the kernel finalizes
+#               (_build's one-task shortcut, taken by _aggregate)
 #
 # The checkpoint job uses the same parts: phase A is _build keyed by
 # (bucket, keys...) with per-key row counts (__rows) + one _fold_level
-# in build-task order, phase B one _fold_level in bucket order.  Every
-# shuffle moves sketch blobs, never rows.
+# in build-task order (none after a one-task build), phase B one
+# _fold_level in bucket order.  Every shuffle moves sketch blobs, never
+# rows.
 # ---------------------------------------------------------------------------
 
 
@@ -320,12 +326,13 @@ def _groups(tbl: pa.Table, keys: list[str]):
 
 
 def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
-            python_hash: bool):
+            python_hash: bool, final: bool):
     """THE build kernel (mapInArrow): fold a partition's Arrow batches
     into one state per (key, sketch) and emit one (keys..., <name>...)
     batch in ``schema`` — exactly one row for a global (zero-key) build,
     even on no input.  A ``__rows`` field in ``schema`` gets each key's
-    input row count.
+    input row count.  ``final`` finalizes every state through ``_fold``,
+    as a merge's last fold does (``_build``'s one-task shortcut).
 
     Buffering: a keyed build buffers every column and folds per key in
     flushes of ~FLUSH_ROWS rows, so the python-call overhead is per
@@ -377,7 +384,8 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
         if buf:
             fold(pa.Table.from_batches(buf), buffered)
         yield pa.RecordBatch.from_pylist(
-            [{**dict(zip(keys, key)), "__rows": group["__rows"], **{n: group[n].to_bytes() for n in specs}}
+            [{**dict(zip(keys, key)), "__rows": group["__rows"],
+              **{n: (_fold((), specs[n], group[n]) if final else group[n]).to_bytes() for n in specs}}
              for key, group in states.items()], schema=schema)
 
     return build
@@ -558,25 +566,38 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
 
 
 def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
-           hash_mode: str = "xxhash64", rows: bool = False) -> DataFrame:
+           hash_mode: str = "xxhash64", rows: bool = False,
+           final: bool = False) -> tuple[DataFrame, bool]:
     """Partition-local build of every sketch: one (keys..., <name>
     BinaryType...) row per key per task, plus the key's input row count
-    ``__rows`` if ``rows``."""
+    ``__rows`` if ``rows``.  Returns (partials, finalized).
+
+    ``final`` asks for the one-task shortcut: if the batch source has
+    exactly one partition (the projection's exact ``_n_partitions``, or
+    one direct-read task), every key has exactly one partial, so the
+    kernel finalizes each state as the merge's last fold would and
+    ``finalized`` is True: the partials are the merged rows, and no
+    merge level runs.  The count is read before the kernel is made,
+    because the finalize flag is part of its closure."""
     specs = {name: spec for name, (_, spec) in sketches.items()}
     schema = T.StructType([df.schema[k] for k in keys] + [T.StructField(n, T.BinaryType()) for n in specs]
                           + ([T.StructField("__rows", T.LongType())] if rows else []))
-    kernel = _kernel(specs, keys, to_arrow_schema(schema), hash_mode != "xxhash64")
     direct = _direct_tasks(df, keys, sketches, hash_mode)
     if direct is None:
-        return _project(df, keys, sketches, hash_mode)[0].mapInArrow(kernel, schema=schema)
+        src, python_hash = _project(df, keys, sketches, hash_mode)
+        one = final and _n_partitions(src, exact=True) == 1
+        return src.mapInArrow(_kernel(specs, keys, to_arrow_schema(schema), python_hash, one),
+                              schema=schema), one
     tasks, wants = direct
+    one = final and len(tasks) == 1
+    kernel = _kernel(specs, keys, to_arrow_schema(schema), False, one)  # _row_groups hashes longs itself
     source = _row_groups(tasks, keys, sketches, wants)
     # one Range partition per task: a pure-JVM feed of one long each (a
     # createDataFrame of the task rows would route through a Python RDD
     # — two extra worker crossings per task, measured ~0.4 s of fixed
     # overhead at sf0.1)
     feed = df.sparkSession.range(0, len(tasks), 1, numPartitions=len(tasks))
-    return feed.mapInArrow(lambda it: kernel(source(it)), schema=schema)
+    return feed.mapInArrow(lambda it: kernel(source(it)), schema=schema), one
 
 
 def _auto_fan_in(n_parts: int) -> int | None:
@@ -587,7 +608,7 @@ def _auto_fan_in(n_parts: int) -> int | None:
     return None if n_parts <= 64 else math.isqrt(n_parts - 1) + 1  # ceil(sqrt(n))
 
 
-def _n_partitions(df: DataFrame) -> int:
+def _n_partitions(df: DataFrame, exact: bool = False) -> int:
     """``df``'s partition count, read off its physical plan without
     running anything.  Not ``df.rdd.getNumPartitions()``: under AQE that
     finalizes the adaptive plan, which EXECUTES the upstream query
@@ -605,7 +626,14 @@ def _n_partitions(df: DataFrame) -> int:
       a file scan then gives its unpruned file count, an estimate (files
       may be split, packed or pruned), and any other such leaf gives 0;
     * AQE's plan and a cached frame's plan are walked, never executed:
-      asking an unmaterialized cache for its partitioning runs it."""
+      asking an unmaterialized cache for its partitioning runs it.
+
+    ``exact`` gives 0 unless the count is certain: an exchange anywhere
+    in the plan (AQE may coalesce or split its partitions at run time)
+    or a subquery leaf's estimate makes it uncertain."""
+
+    class Uncertain(Exception):
+        pass
 
     def walk(node) -> int:
         name = node.getClass().getSimpleName()
@@ -613,21 +641,30 @@ def _n_partitions(df: DataFrame) -> int:
             return walk(node.executedPlan())
         if name == "InMemoryTableScanExec":
             return walk(node.relation().cachedPlan())
+        if exact and "Exchange" in name:
+            raise Uncertain
         n = node.outputPartitioning().numPartitions()
+        kids = node.children()
+        # an exact count visits every node: an exchange below a node
+        # that states its count still makes that count uncertain
+        counts = [walk(kids.apply(i)) for i in range(kids.size())] if exact or not n else []
         if n:
             return n
-        kids = node.children()
-        counts = [walk(kids.apply(i)) for i in range(kids.size())]
         if counts:
             return sum(counts) if name == "UnionExec" else max(counts)
         if node.subqueries().isEmpty():
             return node.execute().getNumPartitions()
+        if exact:
+            raise Uncertain
         try:  # building the RDD would run (or, for dynamic pruning, refuse) the subquery
             return len(node.relation().inputFiles())
         except Py4JError:  # not a file scan: no count, so no fan-in level
             return 0
 
-    return walk(df._jdf.queryExecution().executedPlan())
+    try:
+        return walk(df._jdf.queryExecution().executedPlan())
+    except Uncertain:
+        return 0
 
 
 def _fold(blobs, spec: SketchSpec, sk=None, final: bool = True):
@@ -703,7 +740,9 @@ def _merge(partials: DataFrame, keys: list[str], specs: dict[str, SketchSpec]) -
     ``merge_partials``).  A global merge gets a fan-in level sized by
     ``_auto_fan_in`` from the partials' partition count
     (``_n_partitions``); the level is the keyed fold with one more key,
-    ``__bkt``, left unfinalized.  A keyed merge never counts."""
+    ``__bkt``, left unfinalized.  A keyed merge always folds, even over
+    one partition: only the build knows that a partition holds one row
+    per key, so the one-partition rule lives in ``_build``."""
     fan_in = None if keys else _auto_fan_in(_n_partitions(partials))
     if fan_in:
         bucket = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(fan_in)).cast("int")
@@ -732,7 +771,7 @@ def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     row per key per partition (per row group on the direct read).
     Vectorized: numpy kernels over whole Arrow batches — no per-row
     Python anywhere."""
-    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)
+    return _build(df, keys, {STATE_COL: (col, spec)}, hash_mode)[0]
 
 
 def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec) -> DataFrame:
@@ -751,6 +790,11 @@ def merge_partials(partials: DataFrame, keys: list[str], spec: SketchSpec) -> Da
     in result: all merges are commutative monoids.  A keyed merge never
     gets the level: the key repartition already spreads it over the
     reducers.
+
+    A keyed merge here always folds, even over one partition: partials
+    of unknown origin may hold several rows per key in one partition.
+    Only ``sketch_agg`` / ``multi_sketch_agg`` skip the fold, where
+    their own one-task build finalized each key's only partial.
     """
     return _merge(partials, keys, {STATE_COL: spec})
 
@@ -762,7 +806,11 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     partials (the build's partition count: its scan splits, the direct
     read's tasks, or an upstream exchange's partitions) get a
     third (fan-in) merge level — see ``merge_partials``; below it
-    ``collect_sketch`` folds the partials on the driver.
+    ``collect_sketch`` folds the partials on the driver.  A keyed
+    aggregate whose build runs in exactly one task (a one-split scan
+    or one direct-read task, with no exchange below the build) has one
+    partial per key: the build kernel finalizes it, with the bytes the
+    keyed fold would give, and no exchange or fold stage runs.
 
     Rows: null values (and, for value kinds, strings that do not cast)
     are skipped, never an ANSI-mode error; null keys form their own
@@ -780,7 +828,7 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     move), both within the published rank bound.
     ``SPARK_GRAFT_DIRECT_SCAN=0`` turns the direct read off.
     """
-    return _merge(_build(df, keys, {STATE_COL: (col, spec)}, hash_mode), keys, {STATE_COL: spec})
+    return _aggregate(df, keys, {STATE_COL: (col, spec)}, hash_mode)
 
 
 def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
@@ -808,10 +856,22 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
     keys); one task then reads all requested columns of its row group
     once.  Otherwise every sketch takes the classic path.  tdigest/kll
     bytes differ between the two paths, both within the rank bound.
+
+    Merge: as ``sketch_agg``'s — a keyed build in exactly one task
+    finalizes in its kernel and skips the exchange and the fold.
     """
-    keys = keys or []
-    return _merge(_build(df, keys, sketches, hash_mode), keys,
-                  {name: spec for name, (_, spec) in sketches.items()})
+    return _aggregate(df, keys or [], sketches, hash_mode)
+
+
+def _aggregate(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
+               hash_mode: str) -> DataFrame:
+    """Build and merge: the whole of ``sketch_agg`` and
+    ``multi_sketch_agg``.  A keyed build over exactly one partition
+    finalizes in its kernel and is the answer (``_build``'s shortcut);
+    a global build always goes to ``_merge`` (at <= 64 partials, its
+    fold runs on the driver in ``collect_sketch``)."""
+    partials, finalized = _build(df, keys, sketches, hash_mode, final=bool(keys))
+    return partials if finalized else _merge(partials, keys, {n: s for n, (_, s) in sketches.items()})
 
 
 def collect_sketch(df_or_merged: DataFrame):

@@ -31,9 +31,12 @@ every shuffle moves sketch blobs, never rows:
   bucket's rows.  The blobs are shuffled by bucket, so one fold task
   writes each bucket's rows, with their lineage metrics (bucket, keys,
   rows_seen, state_sha256), into one file of the checkpoint table: a
-  job killed part-way marks no half-built bucket done.  A bucket with
-  no rows gets a marker row instead (null keys, rows_seen 0, one empty
-  blob per sketch), so it too is done.  A resumed run lists finished
+  job killed part-way marks no half-built bucket done.  A build over
+  exactly one partition needs no fold: its one task finalizes every
+  (bucket, key) state and writes every todo bucket into one file, so a
+  bucket is still one file.  A bucket with no rows gets a marker row
+  instead (null keys, rows_seen 0, one empty blob per sketch), so it
+  too is done.  A resumed run lists finished
   buckets and processes only the complement — already-persisted
   partials are never recomputed.
 - phase B folds all bucket partials per key with the sketch monoid in
@@ -130,17 +133,20 @@ class CheckpointedSketchJob:
         """Phase A's plan for buckets ``todo``: one (bucket, keys...,
         <name>..., rows_seen, state_sha256) row per (bucket, key) — the
         partition-local build of every sketch in one scan, then one fold
-        of its per-task partials in build-task order."""
+        of its per-task partials in build-task order.  A build over
+        exactly one partition finalizes in its kernel instead and needs
+        no fold (``_build``'s one-task shortcut)."""
         keys = ["__bucket", *self.keys]
         bucketed = self._with_bucket(df).where(F.col("__bucket").isin(todo))
-        parts = _build(bucketed, keys, self.sketches, rows=True)
-        # shuffled by bucket alone: one task folds (and writes) every
-        # key of a bucket, so a bucket is one file — the unit of "done"
-        folded = _fold_level(parts.withColumn("__task", F.spark_partition_id()), keys,
-                             self.specs, order=["__task"], by=["__bucket"])
-        return folded.select(F.col("__bucket").alias("bucket"), *self.keys, *self.specs,
-                             F.col("__rows").alias("rows_seen"),
-                             F.sha2(F.concat(*self.specs), 256).alias("state_sha256"))
+        parts, finalized = _build(bucketed, keys, self.sketches, rows=True, final=True)
+        if not finalized:
+            # shuffled by bucket alone: one task folds (and writes) every
+            # key of a bucket, so a bucket is one file — the unit of "done"
+            parts = _fold_level(parts.withColumn("__task", F.spark_partition_id()), keys,
+                                self.specs, order=["__task"], by=["__bucket"])
+        return parts.select(F.col("__bucket").alias("bucket"), *self.keys, *self.specs,
+                            F.col("__rows").alias("rows_seen"),
+                            F.sha2(F.concat(*self.specs), 256).alias("state_sha256"))
 
     def build_partials(self, df: DataFrame, max_buckets: int | None = None) -> int:
         """Compute + persist partials for buckets not yet checkpointed.

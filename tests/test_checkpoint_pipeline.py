@@ -91,11 +91,21 @@ def test_tdigest_resume_matches_uninterrupted(spark, tmp_path, keys):
     assert _canonical(killed, killed.run(ev)) == want
 
 
+def _multi_file(spark, tmp_path):
+    """The events table copied into 4 files: a multi-task build."""
+    path = str(tmp_path / "events4-plan")
+    spark.read.parquet(f"{SF}/events.parquet").repartition(4).write.parquet(path)
+    ev = spark.read.parquet(path)
+    assert ev.rdd.getNumPartitions() > 1
+    return ev
+
+
 def test_phase_a_shuffles_blobs_not_rows(spark, tmp_path):
-    """Phase A's plan: the build runs in the scan's tasks, so the only
-    Exchange sits above the build's MapInArrow, and no grouped Arrow
-    apply (FlatMapGroupsInArrow) is left."""
-    ev = spark.read.parquet(f"{SF}/events.parquet")
+    """Phase A's plan over a multi-file input: the build runs in the
+    scan's tasks, so the only Exchange sits above the build's
+    MapInArrow, and no grouped Arrow apply (FlatMapGroupsInArrow) is
+    left."""
+    ev = _multi_file(spark, tmp_path)
     job = _job(spark, tmp_path, SPECS["hll"], "user_id", ["event_type"], "plan")
     plan = job._partials(ev, list(range(16)))._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInArrow" not in plan
@@ -104,6 +114,15 @@ def test_phase_a_shuffles_blobs_not_rows(spark, tmp_path):
     assert any("Exchange" in line for line in lines[:build])
     assert not any("Exchange" in line for line in lines[build:]), plan
 
+
+def test_phase_a_one_file_has_no_fold(spark, tmp_path):
+    """Phase A over a one-file input builds in one task, which finalizes
+    every (bucket, key) state: no Exchange, one MapInArrow."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    job = _job(spark, tmp_path, SPECS["hll"], "user_id", ["event_type"], "plan-one")
+    plan = job._partials(ev, list(range(16)))._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert sum("MapInArrow" in line for line in plan.splitlines()) == 1, plan
 
 
 N_SKETCHES = {
@@ -120,9 +139,9 @@ def _n_job(spark, tmp_path, keys, snap, sketches=N_SKETCHES, n_buckets=8):
 
 
 def test_phase_a_scans_once_for_n_sketches(spark, tmp_path):
-    """Three sketches, one pass: below phase A's first Exchange sit one
-    parquet scan and one build MapInArrow."""
-    ev = spark.read.parquet(f"{SF}/events.parquet")
+    """Three sketches, one pass over a multi-file input: below phase A's
+    first Exchange sit one parquet scan and one build MapInArrow."""
+    ev = _multi_file(spark, tmp_path)
     job = _n_job(spark, tmp_path, ["event_type"], "plan-n")
     plan = job._partials(ev, list(range(8)))._jdf.queryExecution().executedPlan().toString()
     lines = plan.splitlines()

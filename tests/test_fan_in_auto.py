@@ -174,16 +174,20 @@ def test_global_sketch_agg_plan_shape(spark):
     assert "MapInArrow" in dplan and "Range" in dplan  # pure-JVM task feed
 
 
-def test_keyed_sketch_agg_plan_shape(spark):
-    """Regression pin for the keyed plan: pruned scan → the one
-    MapInArrow build kernel → ONE exchange (the key repartition)
-    carrying only sketch blobs → the MapInArrow fold.  A pandas build
-    or fold, a second exchange or an unpruned scan is a regression."""
+def test_keyed_sketch_agg_plan_shape(spark, tmp_path):
+    """Regression pin for the keyed plan over a multi-file input:
+    pruned scan → the one MapInArrow build kernel → ONE exchange (the
+    key repartition) carrying only sketch blobs → the MapInArrow fold.
+    A pandas build or fold, a second exchange or an unpruned scan is a
+    regression."""
     import os
 
     from stream_lib_spark.agg import SketchSpec, sketch_agg
 
-    df = spark.read.parquet(f"{SF}/lineitem.parquet")
+    path = str(tmp_path / "lineitem3")
+    spark.read.parquet(f"{SF}/lineitem.parquet").repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert _n_partitions(df) > 1
     os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
     try:
         out = sketch_agg(df, ["l_returnflag"], "l_orderkey", SketchSpec("hll", p=12))
@@ -196,3 +200,23 @@ def test_keyed_sketch_agg_plan_shape(spark):
     tree = plan[: plan.index("(1) Scan")]
     assert _map_in_arrow(plan) == tree.count("MapInArrow") == 2
     assert tree.index("MapInArrow") < tree.index("Exchange") < tree.rindex("MapInArrow")
+
+
+def test_one_file_keyed_sketch_agg_plan_shape(spark):
+    """A keyed aggregate over a one-file input builds in one task, so
+    its kernel finalizes: pruned scan → the one MapInArrow, and no
+    exchange or fold above it."""
+    import os
+
+    from stream_lib_spark.agg import SketchSpec, sketch_agg
+
+    df = spark.read.parquet(f"{SF}/lineitem.parquet")
+    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
+    try:
+        out = sketch_agg(df, ["l_returnflag"], "l_orderkey", SketchSpec("hll", p=12))
+    finally:
+        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
+    plan = _plan(out)
+    assert not re.findall(r"\((\d+)\) Exchange", plan), plan
+    assert "ReadSchema: struct<l_orderkey:bigint,l_returnflag:string>" in plan  # pruned scan
+    assert _map_in_arrow(plan) == 1
