@@ -50,7 +50,7 @@ def run_phases(spark) -> dict:
 
     def phases(name, df, col, spec):
         spark.sparkContext.setJobDescription(f"{name}: scan+hash only")
-        prepared, _ = _project(df, [], {STATE_COL: (col, spec)})
+        prepared = _project(df, [], {STATE_COL: (col, spec)})
         out[f"{name}.scan_hash"] = _best(lambda: _noop(prepared))
         spark.sparkContext.setJobDescription(f"{name}: + partial build")
         out[f"{name}.partials"] = _best(

@@ -230,17 +230,15 @@ class SketchSpec:
 
 
 def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
-             hash_mode: str = "xxhash64") -> tuple[DataFrame, bool]:
+             hash_mode: str = "xxhash64") -> DataFrame:
     """Project to (keys..., __in_<name>...) with JVM-side hashing /
     casting.  A row enters only if at least one requested column is
     non-null after its cast (offer(null) is a no-op; also keeps
     xxhash64(NULL)==seed out of the hash domain); each column keeps its
     own nulls for the kernel to skip (Arrow keeps an int64 column's
     validity bitmap, so a nullable long reaches numpy unrounded).  The
-    input columns come last, in ``sketches`` order.  Returns (df,
-    python_hash) — python_hash=True means the kernel murmur-hashes the
-    raw strings of hash-mode columns itself."""
-    python_hash = hash_mode != "xxhash64"
+    input columns come last, in ``sketches`` order.  In murmur64 mode a
+    hash-mode column stays a raw string, which ``_offer`` hashes."""
     valid, proj = [], [F.col(k) for k in keys]
     for name, (col, spec) in sketches.items():
         c, mode = F.col(col), spec.input_mode
@@ -250,7 +248,7 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
             # string would otherwise abort the job; a failed cast is null
             expr = c.try_cast("double" if mode == "value" else "long")
             ok = ok & expr.isNotNull()
-        elif mode == "hash" and not python_hash:
+        elif mode == "hash" and hash_mode == "xxhash64":
             expr = F.xxhash64(c)
             if len(sketches) > 1:  # the row filter alone covers one sketch
                 expr = F.when(ok, expr)  # xxhash64(NULL) is the seed, not null
@@ -258,13 +256,15 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
             expr = c.cast("string")
         valid.append(ok)
         proj.append(expr.alias(f"__in_{name}"))
-    return df.where(functools.reduce(operator.or_, valid)).select(*proj), python_hash
+    return df.where(functools.reduce(operator.or_, valid)).select(*proj)
 
 
-def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
+def _offer(spec: SketchSpec, sk, arr):
     """THE update: fold one Arrow column into ``sk`` with no per-row
-    Python, dispatched on ``spec.input_mode``.  Nulls are dropped;
-    string hashing reads the Arrow offsets/data buffers directly
+    Python, dispatched on ``spec.input_mode``.  Nulls are dropped; a
+    hash-mode column arrives hashed (int64: the JVM's ``xxhash64`` or
+    the direct read's ``xxhash64_long``) or as raw strings (murmur64
+    mode), which are hashed here off the Arrow offsets/data buffers
     (``murmur64a_chunked``); numeric columns are zero-copy views;
     'item' mode folds the exact (values, counts) table of Arrow's C++
     value_counts, 'ivalue' mode the exact counts of ``np.unique``."""
@@ -283,7 +283,7 @@ def _offer(spec: SketchSpec, sk, arr, python_hash: bool = False):
         # 0.15s per 1M rows; bytes identical)
         sk.update_batch(vc.field("values").to_numpy(zero_copy_only=False), vc.field("counts").to_numpy())
         return sk
-    if mode == "hash" and python_hash:
+    if mode == "hash" and not pa.types.is_integer(arr.type):
         width = 8 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else 4
         offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64 if width == 8 else np.int32,
                                 count=len(arr) + 1, offset=arr.offset * width)
@@ -325,8 +325,7 @@ def _groups(tbl: pa.Table, keys: list[str]):
                     (tbl.slice(i, j - i) for i, j in zip(starts, [*starts[1:], len(order)]))))
 
 
-def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
-            python_hash: bool, final: bool):
+def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema, final: bool):
     """THE build kernel (mapInArrow): fold a partition's Arrow batches
     into one state per (key, sketch) and emit one (keys..., <name>...)
     batch in ``schema`` — exactly one row for a global (zero-key) build,
@@ -367,7 +366,7 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
                 if group is None:
                     group = states[key] = new()
                 for n in names:
-                    _offer(specs[n], group[n], rows.column(f"__in_{n}"), python_hash)
+                    _offer(specs[n], group[n], rows.column(f"__in_{n}"))
                 if first in names:
                     group["__rows"] += rows.num_rows
 
@@ -433,6 +432,12 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema,
 # Kill switch: SPARK_GRAFT_DIRECT_SCAN=0.
 _DIRECT_SCAN_KINDS = ("hll", "cms", "tdigest", "kll", "bloom")
 _DIRECT_SCAN_MAX_FILES = 4096
+# below ~1M total rows the path's constant cost (plan probe, footer
+# read, one extra job) exceeds the per-row feed saving — measured
+# crossover on the alternating frozen-bench A/B: 600k-row tables read
+# 1.1-1.5x slower direct, 6M-row tables 2-3.5x faster.  The threshold is
+# work-based, not scale-tuned: any production input is far above it.
+_DIRECT_SCAN_MIN_ROWS = 1_000_000
 
 
 def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
@@ -469,13 +474,6 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
         if rel.partitionSchema().size() != 0:  # col could live in the path
             return None
         files = df.inputFiles()
-        # below ~1M total rows the path's constant cost (plan probe, footer
-        # read, one extra job) exceeds the per-row feed saving — measured
-        # crossover on the alternating frozen-bench A/B: 600k-row tables
-        # read 1.1-1.5x slower direct, 6M-row tables 2-3.5x faster.  The
-        # threshold is work-based, not scale-tuned: any production input
-        # is far above it.  A malformed value turns the path off.
-        min_rows = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", 1000000))
     except Exception:
         return None
     if not files or len(files) > _DIRECT_SCAN_MAX_FILES:
@@ -507,7 +505,7 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
             tasks.extend((p, rg) for rg in range(pf.metadata.num_row_groups))
     except Exception:
         return None
-    return (tasks, wants) if tasks and total_rows >= min_rows else None
+    return (tasks, wants) if tasks and total_rows >= _DIRECT_SCAN_MIN_ROWS else None
 
 
 def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
@@ -584,13 +582,12 @@ def _build(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sketch
                           + ([T.StructField("__rows", T.LongType())] if rows else []))
     direct = _direct_tasks(df, keys, sketches, hash_mode)
     if direct is None:
-        src, python_hash = _project(df, keys, sketches, hash_mode)
+        src = _project(df, keys, sketches, hash_mode)
         one = final and _n_partitions(src, exact=True) == 1
-        return src.mapInArrow(_kernel(specs, keys, to_arrow_schema(schema), python_hash, one),
-                              schema=schema), one
+        return src.mapInArrow(_kernel(specs, keys, to_arrow_schema(schema), one), schema=schema), one
     tasks, wants = direct
     one = final and len(tasks) == 1
-    kernel = _kernel(specs, keys, to_arrow_schema(schema), False, one)  # _row_groups hashes longs itself
+    kernel = _kernel(specs, keys, to_arrow_schema(schema), one)
     source = _row_groups(tasks, keys, sketches, wants)
     # one Range partition per task: a pure-JVM feed of one long each (a
     # createDataFrame of the task rows would route through a Python RDD
@@ -815,8 +812,8 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     Rows: null values (and, for value kinds, strings that do not cast)
     are skipped, never an ANSI-mode error; null keys form their own
     group.  Direct read: a bare, unpartitioned, local ``file://``
-    parquet input of at most 4096 files and at least
-    ``$SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS`` (default 1M) rows is read by
+    parquet input of at most 4096 files and at least 1M rows
+    (``_DIRECT_SCAN_MIN_ROWS``) is read by
     the tasks themselves with pyarrow, one task per row group, when the
     sketch is hll/cms/bloom over a LongType column (xxhash64 mode;
     keyed: string keys only) or, global only, tdigest/kll over a
@@ -896,6 +893,17 @@ def collect_sketch(df_or_merged: DataFrame):
     if len(row) != 1:
         raise ValueError(f"expected one merged sketch row, got {len(row)}")
     return sketch_from_bytes(bytes(row[0][0]))
+
+
+def _local_frame(spark, schema: T.StructType, rows: list) -> DataFrame:
+    """DataFrame of driver-held ``rows`` (tuples in ``schema`` order),
+    handed to Spark as one Arrow table: it plans as a
+    ``LocalTableScan``, so collecting it runs no job.  A
+    ``createDataFrame`` of a Python list goes through a pickled Python
+    RDD instead, whose collect runs a job through a Python worker."""
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def salted_split(df: DataFrame, key: str, salts: int, col_name: str = "__salt") -> DataFrame:

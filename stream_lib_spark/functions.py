@@ -6,7 +6,11 @@ membership) is exposed two ways:
 - as Arrow UDFs over the BinaryType state column (for keyed results
   that stay distributed): ``_blob_udf`` answers each state blob,
   ``_probe_udf`` probes one broadcast sketch with an int64 hash column;
-- as driver-side helpers on collected global sketches (one small blob).
+- on the driver, over a collected global sketch (one small blob).  Rows
+  held on the driver go back into Spark only as an Arrow table
+  (``agg._local_frame``): a ``LocalRelation``, whose collect runs no
+  job, never a ``createDataFrame`` of a Python list (a pickled Python
+  RDD, collected through a Python worker).
 """
 
 from __future__ import annotations
@@ -17,7 +21,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from .agg import SketchSpec, collect_sketch, sketch_agg, sketch_from_bytes
+from .agg import STATE_COL, SketchSpec, _local_frame, collect_sketch, sketch_agg, sketch_from_bytes
 
 
 def _blob_udf(return_type: T.DataType, answer):
@@ -39,14 +43,6 @@ def quantile_udf(q: float):
     return _blob_udf(T.DoubleType(), lambda b: float(sketch_from_bytes(b).quantile(q)))
 
 
-def _driver_row(df: DataFrame, names: list[str], values) -> DataFrame:
-    """One-row DataFrame of doubles: a global sketch finalized on the
-    driver."""
-    return df.sparkSession.createDataFrame(
-        [tuple(float(v) for v in values)],
-        T.StructType([T.StructField(n, T.DoubleType()) for n in names]))
-
-
 _TOPK = T.StructType([
     T.StructField("item", T.StringType()),
     T.StructField("count", T.LongType()),
@@ -55,59 +51,48 @@ _TOPK = T.StructType([
 ])
 
 
-def _topk_rows(sk, k: int) -> list:
-    """(item, count, error, rank) rows of a Space-Saving sketch's top k."""
-    return [(str(item), int(cnt), int(err), i) for i, (item, cnt, err) in enumerate(sk.top_k(k), 1)]
+def _answer(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
+            fields: T.StructType, rows, **kw) -> DataFrame:
+    """THE finalize of the ``approx_*`` functions: ``sketch_agg`` then
+    ``rows(sketch)``, the sketch's answer rows in ``fields``.  Keyed:
+    one array UDF per merged blob, inlined, with no extra shuffle.
+    Global: the merged sketch is collected (``collect_sketch``) and its
+    rows become a driver-built ``_local_frame``."""
+    merged = sketch_agg(df, keys, col, spec, **kw)
+    if not keys:
+        return _local_frame(df.sparkSession, fields, rows(collect_sketch(merged)))
+    answer = _blob_udf(T.ArrayType(fields), lambda b: rows(sketch_from_bytes(b)))
+    return merged.select(*keys, F.inline(answer(STATE_COL)))
+
+
+def _doubles(names: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(n, T.DoubleType()) for n in names])
 
 
 def approx_count_distinct(df: DataFrame, col: str, keys: list[str] | None = None,
                           p: int = 14, **kw) -> DataFrame:
-    """HLL++ distinct count → (keys..., approx_distinct double).  A
-    global count is finalized on the driver (``collect_sketch``), which
-    skips the merge exchange/stage AND the ArrowEvalPython finalize
-    stage below the fan-in threshold; value identical."""
-    keys = keys or []
-    merged = sketch_agg(df, keys, col, SketchSpec("hll", p=p), **kw)
-    if not keys:
-        return _driver_row(df, ["approx_distinct"], [collect_sketch(merged).cardinality()])
-    return merged.select(*keys, hll_cardinality(F.col("sketch")).alias("approx_distinct"))
+    """HLL++ distinct count → (keys..., approx_distinct double)."""
+    return _answer(df, keys or [], col, SketchSpec("hll", p=p), _doubles(["approx_distinct"]),
+                   lambda sk: [(float(sk.cardinality()),)], **kw)
 
 
 def approx_quantiles(df: DataFrame, col: str, qs: list[float],
                      keys: list[str] | None = None, kind: str = "tdigest", **kw) -> DataFrame:
-    """t-digest / KLL quantiles → (keys..., q_<x> double ...); global
-    quantiles are finalized on the driver like approx_count_distinct.
-    Keyed quantiles are one struct-typed UDF, so each blob decodes once
-    for all qs."""
-    keys = keys or []
+    """t-digest / KLL quantiles → (keys..., q_<x> double ...); each blob
+    decodes once for all qs."""
     spec = SketchSpec(kind, compression=100.0) if kind == "tdigest" else SketchSpec(kind, k=200)
-    merged = sketch_agg(df, keys, col, spec, **kw)
-    names = [f"q_{str(q).replace('.', '_')}" for q in qs]
-
-    def row(sk):
-        return tuple(float(sk.quantile(q)) for q in qs)
-
-    if not keys:
-        return _driver_row(df, names, row(collect_sketch(merged)))
-    fields = T.StructType([T.StructField(n, T.DoubleType()) for n in names])
-    quantiles = _blob_udf(fields, lambda b: row(sketch_from_bytes(b)))
-    return merged.select(*keys, quantiles("sketch").alias("__q")).select(*keys, "__q.*")
+    return _answer(df, keys or [], col, spec, _doubles([f"q_{str(q).replace('.', '_')}" for q in qs]),
+                   lambda sk: [tuple(float(sk.quantile(q)) for q in qs)], **kw)
 
 
 def approx_topk(df: DataFrame, col: str, k: int, capacity: int | None = None,
                 keys: list[str] | None = None, **kw) -> DataFrame:
-    """Space-Saving top-k → (keys..., item, count, error, rank).  Global
-    top-k is finalized on the driver: the merged sketch is one blob and
-    the explode is k rows.  Keyed top-k stays distributed: merged has
-    one row per key, and each blob's rows are inlined from one array
-    UDF, with no extra shuffle."""
-    keys = keys or []
-    cap = capacity or max(4 * k, 64)
-    merged = sketch_agg(df, keys, col, SketchSpec("spacesaving", capacity=cap), **kw)
-    if not keys:
-        return df.sparkSession.createDataFrame(_topk_rows(collect_sketch(merged), k), _TOPK)
-    topk = _blob_udf(T.ArrayType(_TOPK), lambda b: _topk_rows(sketch_from_bytes(b), k))
-    return merged.select(*keys, F.inline(topk("sketch")))
+    """Space-Saving top-k → (keys..., item, count, error, rank): the
+    sketch's top k as up to k rows per key (or per global answer)."""
+    spec = SketchSpec("spacesaving", capacity=capacity or max(4 * k, 64))
+    return _answer(df, keys or [], col, spec, _TOPK,
+                   lambda sk: [(str(item), int(cnt), int(err), i)
+                               for i, (item, cnt, err) in enumerate(sk.top_k(k), 1)], **kw)
 
 
 def cms_frequencies(df: DataFrame, col: str, probe_items: list, eps: float = 1e-4,
@@ -117,7 +102,8 @@ def cms_frequencies(df: DataFrame, col: str, probe_items: list, eps: float = 1e-
     frame built on the driver.  A probe that cannot cast to the
     column's type can never equal any item of the column, so its exact
     count is 0 — reported as such instead of null."""
-    probes = df.sparkSession.createDataFrame([(str(i),) for i in probe_items], "item string")
+    probes = _local_frame(df.sparkSession, T.StructType([T.StructField("item", T.StringType())]),
+                          [(str(i),) for i in probe_items])
     est = cms_frequencies_df(df, col, probes, "item", eps=eps, confidence=confidence, **kw)
     return est.select("item", F.coalesce("est_count", F.lit(0)).alias("est_count"))
 

@@ -65,7 +65,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
-from ..agg import STATE_COL, SketchSpec, _build, _fold_level
+from ..agg import STATE_COL, SketchSpec, _build, _fold_level, _local_frame
 
 
 @dataclass
@@ -177,7 +177,7 @@ class CheckpointedSketchJob:
             marker_schema = T.StructType([
                 T.StructField(f.name, f.dataType, True) for f in partials.schema.fields
             ])
-            (self.spark.createDataFrame(marker_rows, schema=marker_schema)
+            (_local_frame(self.spark, marker_schema, marker_rows)
              .write.mode("append").parquet(self.partials_path))
         return len(todo)
 

@@ -170,7 +170,7 @@ def windowed_streaming_sketch(stream_df: DataFrame, ts_col: str, duration: str,
              .withColumn("window_start", win["start"].cast("string"))
              .withColumn("__wend", win["end"]))
     # the watermarked attribute stays in the plan as a pass-through key
-    prepared, _ = _project(timed, [ts_col, "window_start", "__wend"], {STATE_COL: (col, spec)})
+    prepared = _project(timed, [ts_col, "window_start", "__wend"], {STATE_COL: (col, spec)})
     out_schema = "window_start string, sketch binary, estimate double, is_final boolean"
 
     def fold(key, pdfs, state: GroupState):
@@ -231,7 +231,7 @@ def keyed_streaming_sketch(stream_df: DataFrame, keys: list[str], col: str,
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    prepared, _ = _project(stream_df, keys, {STATE_COL: (col, spec)})
+    prepared = _project(stream_df, keys, {STATE_COL: (col, spec)})
 
     def fold(key, pdfs, state: GroupState):
         sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else spec.new()

@@ -37,3 +37,14 @@ def test_checkpoint_has_no_private_kernels():
     src = _source("jobs/checkpoint.py")
     for name in ("applyInArrow", "_groups", "_offer"):
         assert name not in src, f"jobs/checkpoint.py uses {name}"
+
+
+def test_driver_rows_enter_spark_as_arrow():
+    """Rows held on the driver reach Spark through ``agg._local_frame``
+    (an Arrow table, planned as a LocalTableScan) and nowhere else: no
+    ``createDataFrame`` of a Python list, which is a pickled Python RDD."""
+    jobs = sorted(f"jobs/{f}" for f in os.listdir(os.path.join(PKG, "jobs")) if f.endswith(".py"))
+    calls = {m: _source(m).count("createDataFrame(") for m in ["agg.py", "functions.py", *jobs]}
+    assert calls.pop("agg.py") == 1 and not any(calls.values()), calls
+    local_frame = _source("agg.py").split("def _local_frame(")[1].split("\ndef ")[0]
+    assert "createDataFrame(" in local_frame

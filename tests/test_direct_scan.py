@@ -14,7 +14,7 @@ Contract under test:
     digest bytes — quantile gates output within_bound booleans);
   * every ineligible shape (filter/project above the scan, non-xxhash64
     hash mode, non-long hash column, non-whitelisted kind, conservative
-    CMS, kill switch, malformed knob) falls back to the classic path;
+    CMS, kill switch, a kill-switch value other than "1") falls back to the classic path;
   * a multi-sketch request reads directly only when every sketch is
     eligible, with the same bytes as the one-sketch builds.
 """
@@ -32,6 +32,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from stream_lib_spark import agg
 from stream_lib_spark.agg import (
     STATE_COL,
     SketchSpec,
@@ -48,13 +49,11 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(autouse=True)
-def _engage_at_any_size():
+def _engage_at_any_size(monkeypatch):
     """The fixtures here are far below the production row threshold;
     pin the MECHANISM with the threshold lowered (the threshold itself
     is covered by test_min_rows_threshold)."""
-    os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
-    yield
-    os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", None)
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MIN_ROWS", 0)
 
 
 def _direct_count(df, keys, col, spec, hash_mode="xxhash64"):
@@ -87,16 +86,14 @@ def _both(df, col, spec, hash_mode="xxhash64"):
     return direct, classic
 
 
-def test_min_rows_threshold(spark, sf_dir):
-    """Below SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS the constant cost of the
-    path exceeds the per-row feed saving; it must disengage."""
+def test_min_rows_threshold(spark, sf_dir, monkeypatch):
+    """Below ``_DIRECT_SCAN_MIN_ROWS`` the constant cost of the path
+    exceeds the per-row feed saving; it must disengage."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     hll = SketchSpec("hll", p=12)
-    os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = str(10**12)
-    try:
-        assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is None
-    finally:
-        os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MIN_ROWS", 10**12)
+    assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is None
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MIN_ROWS", 0)
     assert _direct_count(li, [], "l_orderkey", hll, "xxhash64") is not None
 
 
@@ -331,22 +328,17 @@ def test_ineligible_shapes_fall_back(spark, sf_dir):
     assert direct.to_bytes() == classic.to_bytes()
 
 
-@pytest.mark.parametrize("knob", ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"])
-def test_malformed_knob_fails_closed(spark, sf_dir, knob):
-    """A malformed integer knob turns the direct read off (classic
-    result) instead of raising ValueError out of the aggregation."""
+@pytest.mark.parametrize("value", ["garbage", "true", "01"])
+def test_malformed_knob_fails_closed(spark, sf_dir, value, monkeypatch):
+    """The kill switch engages the direct read only at exactly "1": any
+    other value turns it off (classic result) instead of raising out of
+    the aggregation."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     hll = SketchSpec("hll", p=12)
-    old = os.environ.get(knob)
-    os.environ[knob] = "garbage"
-    try:
-        assert _direct_count(li, [], "l_orderkey", hll) is None
-        got = collect_sketch(sketch_agg(li, [], "l_orderkey", hll))
-    finally:
-        if old is None:
-            os.environ.pop(knob, None)
-        else:
-            os.environ[knob] = old
+    monkeypatch.setenv("SPARK_GRAFT_DIRECT_SCAN", value)
+    assert _direct_count(li, [], "l_orderkey", hll) is None
+    got = collect_sketch(sketch_agg(li, [], "l_orderkey", hll))
+    monkeypatch.delenv("SPARK_GRAFT_DIRECT_SCAN")
     _, classic = _both(li, "l_orderkey", hll)
     assert got.to_bytes() == classic.to_bytes()
 

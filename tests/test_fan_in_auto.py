@@ -9,6 +9,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
+from stream_lib_spark import agg
 from stream_lib_spark.agg import (
     STATE_COL,
     SketchSpec,
@@ -94,7 +95,8 @@ def test_empty_input_distributed(spark, n_partials):
     input, so only that case repartitions the partitionless input."""
     spec = SketchSpec("hll", p=12)
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    none = spark.createDataFrame([], ev.schema)
+    none = spark.createDataFrame(spark.sparkContext.emptyRDD(), ev.schema)
+    assert _n_partitions(none) == 0  # no partitions at all
     for empty in (ev.repartition(n_partials or 4).where(F.col("user_id") < 0),
                   none.repartition(n_partials) if n_partials else none):
         merged = merge_partials(sketch_partials(empty, [], "user_id", spec), [], spec)
@@ -129,7 +131,7 @@ def test_quantile_sketch_fan_in_topology(spark, kind, spec):
         assert sketch_from_bytes(forced).total == sketch_from_bytes(off).total == li.count()
 
 
-def test_global_sketch_agg_plan_shape(spark):
+def test_global_sketch_agg_plan_shape(spark, monkeypatch):
     """Regression pin for the global-aggregate plan: pruned scan →
     partition-local MapInArrow partials → ONE exchange carrying only
     sketch blobs → single MapInArrow fold.  A second exchange or an
@@ -162,11 +164,8 @@ def test_global_sketch_agg_plan_shape(spark):
     # direct path (default above the row threshold; the fixture is tiny,
     # so lower it): the sketch feed has NO parquet Scan and no exchange
     # below the partials — the only exchange is the blob fold's
-    os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
-    try:
-        direct = sketch_agg(df, [], "l_orderkey", SketchSpec("hll", p=12))
-    finally:
-        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", None)
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MIN_ROWS", 0)
+    direct = sketch_agg(df, [], "l_orderkey", SketchSpec("hll", p=12))
     dplan = _plan(direct)
     assert "ReadSchema" not in dplan  # no JVM parquet feed of data rows
     node_ids = {m for m in re.findall(r"\((\d+)\) Exchange", dplan)}

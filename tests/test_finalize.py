@@ -66,20 +66,25 @@ def test_keyed_topk_matches_driver_decode(events):
     ])
 
 
-@pytest.mark.parametrize("finalizer", ["hll_cardinality", "quantile_udf"])
+@pytest.mark.parametrize("finalizer", ["hll_cardinality", "quantile_udf", "approx_count_distinct"])
 def test_blob_udfs_match_driver_decode(events, finalizer):
     from stream_lib_spark import functions as fn
 
-    if finalizer == "hll_cardinality":
-        merged = sketch_agg(events, KEYS, "user_id", SketchSpec("hll", p=12))
-        udf, answer = fn.hll_cardinality, lambda sk: [float(sk.cardinality())]
-    else:
+    name = "est"
+    if finalizer == "quantile_udf":
         merged = sketch_agg(events, KEYS, "value", SketchSpec("tdigest", compression=100.0))
         udf, answer = fn.quantile_udf(0.5), lambda sk: [float(sk.quantile(0.5))]
-    out = merged.select("event_type", udf("sketch").alias("est"))
+    else:
+        merged = sketch_agg(events, KEYS, "user_id", SketchSpec("hll", p=12))
+        udf, answer = fn.hll_cardinality, lambda sk: [float(sk.cardinality())]
+    if finalizer == "approx_count_distinct":
+        name = "approx_distinct"
+        out = fn.approx_count_distinct(events, "user_id", keys=KEYS, p=12)
+    else:
+        out = merged.select("event_type", udf("sketch").alias(name))
     assert _rows(out) == _driver_rows(merged, answer)
     assert out.schema == T.StructType(
-        [merged.schema["event_type"], T.StructField("est", T.DoubleType())])
+        [merged.schema["event_type"], T.StructField(name, T.DoubleType())])
 
 
 def test_keyed_quantiles_decode_each_blob_once(events):

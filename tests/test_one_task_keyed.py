@@ -14,6 +14,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
+from stream_lib_spark import agg
 from stream_lib_spark.agg import (
     SketchSpec,
     _direct_tasks,
@@ -123,7 +124,7 @@ def test_one_task_multi_sketch_agg(events):
 def test_one_task_direct_read(events, monkeypatch):
     """The keyed direct read over one row group is one task: it takes
     the shortcut, with the fold's bytes."""
-    monkeypatch.setenv("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", "0")
+    monkeypatch.setattr(agg, "_DIRECT_SCAN_MIN_ROWS", 0)
     col, spec = KINDS["hll"]
     direct = _direct_tasks(events, ["event_type"], {"sketch": (col, spec)}, "xxhash64")
     assert direct is not None and len(direct[0]) == 1
