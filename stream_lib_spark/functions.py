@@ -82,7 +82,7 @@ def approx_quantiles(df: DataFrame, col: str, qs: list[float],
     decodes once for all qs."""
     spec = SketchSpec(kind, compression=100.0) if kind == "tdigest" else SketchSpec(kind, k=200)
     return _answer(df, keys or [], col, spec, _doubles([f"q_{str(q).replace('.', '_')}" for q in qs]),
-                   lambda sk: [tuple(float(sk.quantile(q)) for q in qs)], **kw)
+                   lambda sk: [tuple(float(x) for x in sk.quantiles(qs))], **kw)
 
 
 def approx_topk(df: DataFrame, col: str, k: int, capacity: int | None = None,

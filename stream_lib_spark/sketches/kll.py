@@ -148,16 +148,17 @@ class KLL:
         return v[order], w[order]
 
     def quantile(self, q: float) -> float:
-        v, w = self._weighted_items()
-        if len(v) == 0:
-            return float("nan")
-        cum = np.cumsum(w)
-        rank = q * cum[-1]
-        i = int(np.searchsorted(cum, rank, side="left"))
-        return float(v[min(i, len(v) - 1)])
+        return float(self.quantiles([q])[0])
 
     def quantiles(self, qs) -> np.ndarray:
-        return np.array([self.quantile(float(q)) for q in qs])
+        """The item at rank q of every q, over one sort of the items."""
+        v, w = self._weighted_items()
+        qs = np.asarray(qs, dtype=np.float64)
+        if len(v) == 0:
+            return np.full(qs.shape, np.nan)
+        cum = np.cumsum(w)
+        i = np.searchsorted(cum, qs * cum[-1], side="left")
+        return v[np.minimum(i, len(v) - 1)]
 
     def rank(self, x: float) -> float:
         """Estimated fraction of items <= x."""

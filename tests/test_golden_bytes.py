@@ -45,6 +45,19 @@ def test_tdigest_golden_bytes():
     assert _sha(sk.to_bytes()) == "a7bb982ebed068b5"
 
 
+def test_tdigest_keyed_golden_bytes():
+    # 1,000 per-key digests of 48 values, built and finalized as the
+    # keyed kernel does; at compression 20 every digest cuts
+    # multi-value clusters (weighted means), at 100 (the keyed
+    # benchmark's) every cluster is one value or one repeated atom
+    rng = np.random.default_rng(48)
+    h = hashlib.sha256()
+    for key in range(1000):
+        values = np.round(rng.lognormal(0.0, 1.0, 48), 2)
+        h.update(TDigest.from_values(values, (100.0, 20.0)[key % 2]).compress().to_bytes())
+    assert h.hexdigest()[:16] == "0e69272390716149"
+
+
 def test_kll_golden_bytes():
     sk = KLL(k=16).add_values(np.arange(1000, dtype=np.float64))
     assert _sha(sk.to_bytes()) == "fc51ab3082d3830d"
