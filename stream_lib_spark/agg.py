@@ -60,6 +60,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .arrowbuf import string_bytes
 from .hashing import murmur64a_chunked, xxhash64_long
 from .sketches.base import (
     KIND_BLOOM,
@@ -284,11 +285,7 @@ def _offer(spec: SketchSpec, sk, arr):
         sk.update_batch(vc.field("values").to_numpy(zero_copy_only=False), vc.field("counts").to_numpy())
         return sk
     if mode == "hash" and not pa.types.is_integer(arr.type):
-        width = 8 if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type) else 4
-        offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64 if width == 8 else np.int32,
-                                count=len(arr) + 1, offset=arr.offset * width)
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-        vals = murmur64a_chunked(data, offsets).view(np.int64)
+        vals = murmur64a_chunked(*string_bytes(arr)).view(np.int64)
     else:
         vals = arr.to_numpy(zero_copy_only=False).astype(np.float64 if mode == "value" else np.int64, copy=False)
     if mode == "hash":

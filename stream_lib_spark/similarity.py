@@ -4,7 +4,7 @@ Two tiers (the standard ANN scale ladder):
 
 - ``brute_force_topk`` — exact cosine top-k. The query side is tiny and
   **broadcast**; the corpus side streams through a vectorized numpy
-  matmul in ``mapInPandas`` (one BLAS GEMM per Arrow batch, no per-row
+  matmul in ``mapInArrow`` (one BLAS GEMM per Arrow batch, no per-row
   Python).  At 100 TB the corpus scan is embarrassingly parallel and
   the only shuffle is the final global top-k (k rows per partition).
 - ``lsh_bucketed_topk`` — approximate: random-hyperplane signatures
@@ -12,6 +12,11 @@ Two tiers (the standard ANN scale ladder):
   scored exactly within buckets only.  Trades recall for pruning the
   corpus scan; bucket join is an equi-join Spark can shuffle/broadcast
   on its own.
+
+Every kernel crosses into Python as Arrow only (``mapInArrow`` and
+``F.arrow_udf``): an embedding batch becomes one (n, dim) matrix by a
+reshape of the list values, and list outputs leave as one Arrow list
+array over the result matrix.
 """
 
 from __future__ import annotations
@@ -19,10 +24,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F, types as T
 
+from .arrowbuf import fixed_lists, list_values
 from .hashing import splitmix64
 
 _OUT = T.StructType([
@@ -32,12 +38,12 @@ _OUT = T.StructType([
 ])
 
 
-@F.pandas_udf(T.DoubleType())
-def _cos_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+@F.arrow_udf(T.DoubleType())
+def _cos_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     """Exact cosine of two embedding columns (one normalized GEMM per
     Arrow batch) — the single verify kernel every candidate path uses."""
     ma, mb = _normalize(_as_matrix(a)), _normalize(_as_matrix(b))
-    return pd.Series((ma * mb).sum(axis=1))
+    return pa.array((ma * mb).sum(axis=1))
 
 
 def _global_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -53,8 +59,13 @@ def _global_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _as_matrix(series: pd.Series) -> np.ndarray:
-    return np.array([np.asarray(v, dtype=np.float64) for v in series], dtype=np.float64)
+def _as_matrix(arr: pa.ListArray) -> np.ndarray:
+    """(rows, dim) float64 matrix of an embedding list column."""
+    vals, offs = list_values(arr)
+    dim = int(offs[1]) if len(offs) > 1 else 0
+    if (np.diff(offs) != dim).any():
+        raise ValueError("embedding vectors differ in length (or are null)")
+    return vals.astype(np.float64).reshape(len(offs) - 1, dim)
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -71,31 +82,29 @@ def _brute_partials(corpus: DataFrame, get_queries, k: int,
     executed on the executor, so the query matrix can come from a
     closure or from a SparkContext broadcast variable."""
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, q_mat = get_queries()
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            ids = pdf[id_col].to_numpy().astype(np.int64)
-            m = _normalize(_as_matrix(pdf[vec_col]))
+            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            m = _normalize(_as_matrix(rb.column(1)))
             sims = q_mat @ m.T  # (n_q, n_corpus)
             if exclude_self:
                 sims[q_ids[:, None] == ids[None, :]] = -np.inf
             kk = min(k, sims.shape[1])
             top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                idx = top[qi]
-                # drop the -inf self-mask rows rather than emit them:
-                # with fewer than k non-self candidates the masked self
-                # entry would otherwise survive the global rank
-                idx = idx[np.isfinite(sims[qi, idx])]
-                out_q.extend([q_ids[qi]] * len(idx))
-                out_n.extend(ids[idx].tolist())
-                out_s.extend(sims[qi, idx].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine": out_s})
+            top_sims = np.take_along_axis(sims, top, axis=1)
+            # drop the -inf self-mask entries rather than emit them:
+            # with fewer than k non-self candidates the masked self
+            # entry would otherwise survive the global rank
+            keep = np.isfinite(top_sims)
+            yield pa.record_batch(
+                [pa.array(np.broadcast_to(q_ids[:, None], top.shape)[keep]),
+                 pa.array(ids[top][keep]), pa.array(top_sims[keep])],
+                names=_OUT.names)
 
-    return corpus.select(id_col, vec_col).mapInPandas(score, schema=_OUT)
+    return corpus.select(id_col, vec_col).mapInArrow(score, schema=_OUT)
 
 
 def brute_force_topk(corpus: DataFrame, queries: list[tuple[int, list[float]]], k: int = 5,
@@ -161,15 +170,12 @@ def hyperplane_signature(df: DataFrame, dim: int, n_planes: int = 16, seed: int 
     every executor, no broadcast needed."""
     planes = _planes(dim, n_planes * n_bands, seed)
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def sig(v: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def sig(v: pa.Array) -> pa.Array:
         m = _as_matrix(v)
         bits = (m @ planes.T) > 0  # (n, n_bands*n_planes)
-        weights = np.arange(n_planes)
-        out = []
-        for row in bits.reshape(len(m), n_bands, n_planes).astype(np.int64):
-            out.append(((row << weights).sum(axis=1)).astype(np.int32).tolist())
-        return pd.Series(out)
+        codes = bits.reshape(len(m), n_bands, n_planes).astype(np.int64) << np.arange(n_planes)
+        return fixed_lists(codes.sum(axis=2).astype(np.int32))
 
     return df.withColumn("lsh_sigs", sig(F.col(vec_col)))
 
@@ -326,10 +332,10 @@ def ivf_assign(corpus: DataFrame, centroids: np.ndarray,
     """Add ``list_id``: argmax-cosine coarse assignment (one GEMM per
     Arrow batch against the closed-over centroid matrix)."""
 
-    @F.pandas_udf(T.IntegerType())
-    def assign(v: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.IntegerType())
+    def assign(v: pa.Array) -> pa.Array:
         m = _normalize(_as_matrix(v))
-        return pd.Series((m @ centroids.T).argmax(axis=1).astype(np.int32))
+        return pa.array((m @ centroids.T).argmax(axis=1).astype(np.int32))
 
     return corpus.withColumn("list_id", assign(F.col(vec_col)))
 
@@ -341,11 +347,11 @@ def ivf_probe_lists(queries: DataFrame, centroids: np.ndarray, n_probe: int,
     ``ivf_assign``, so an arbitrarily large query TABLE is probed
     without ever touching the driver."""
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probes(v: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def probes(v: pa.Array) -> pa.Array:
         m = _normalize(_as_matrix(v))
         idx = np.argsort(-(m @ centroids.T), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype(np.int32).tolist() for row in idx])
+        return fixed_lists(idx.astype(np.int32))
 
     return queries.withColumn("probe_lists", probes(F.col(vec_col)))
 

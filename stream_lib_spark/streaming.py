@@ -155,45 +155,16 @@ def windowed_streaming_sketch(stream_df: DataFrame, ts_col: str, duration: str,
     later ones), the window emits a final row (``is_final=true``) and
     its GroupState is REMOVED, so state size tracks the number of OPEN
     windows, not stream lifetime."""
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if watermark is None:
-        df = stream_df.withColumn(
-            "window_start", F.window(F.col(ts_col), duration)["start"].cast("string")
-        )
-        return keyed_streaming_sketch(df, ["window_start"], col, spec)
 
     win = F.window(F.col(ts_col), duration)
+    if watermark is None:
+        df = stream_df.withColumn("window_start", win["start"].cast("string"))
+        return keyed_streaming_sketch(df, ["window_start"], col, spec)
     timed = (stream_df.withWatermark(ts_col, watermark)
              .withColumn("window_start", win["start"].cast("string"))
              .withColumn("__wend", win["end"]))
-    # the watermarked attribute stays in the plan as a pass-through key
-    prepared = _project(timed, [ts_col, "window_start", "__wend"], {STATE_COL: (col, spec)})
-    out_schema = "window_start string, sketch binary, estimate double, is_final boolean"
-
-    def fold(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed window end: finalize and EVICT
-            blob = bytes(state.get[0])
-            state.remove()
-            yield _row({"window_start": key[0]}, sketch_from_bytes(blob), blob, is_final=True)
-            return
-        sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else spec.new()
-        pdfs = [pdf for pdf in pdfs if len(pdf)]
-        blob = _fold_pdfs(sk, pdfs, spec).to_bytes()
-        state.update((blob,))
-        if pdfs:
-            # evict when the watermark passes the window end (must stay
-            # strictly ahead of the current watermark)
-            wend_ms = int(pd.Timestamp(pdfs[0]["__wend"].iloc[0]).value // 1_000_000)
-            state.setTimeoutTimestamp(max(wend_ms, state.getCurrentWatermarkMs() + 1))
-        yield _row({"window_start": key[0]}, sk, blob, is_final=False)
-
-    return prepared.groupBy("window_start").applyInPandasWithState(
-        fold, out_schema, "blob binary", "Update", GroupStateTimeout.EventTimeTimeout
-    )
+    return _stateful_sketch(timed, ["window_start"], col, spec, event_time=(ts_col, "__wend"))
 
 
 def _row(head: dict, sk, blob: bytes, **extra):
@@ -229,17 +200,45 @@ def keyed_streaming_sketch(stream_df: DataFrame, keys: list[str], col: str,
     (RocksDB/HDFS-backed on a cluster), so it survives restarts with
     Structured Streaming's exactly-once guarantees.
     """
+    return _stateful_sketch(stream_df, keys, col, spec)
+
+
+def _stateful_sketch(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
+                     event_time: tuple[str, str] | None = None):
+    """THE stateful fold of the keyed and windowed streaming sketches:
+    per ``keys`` group, the GroupState blob folds each micro-batch's new
+    rows and one (keys..., sketch, estimate) row is emitted in Update
+    mode.  ``event_time`` = (watermarked column, window-end column)
+    turns on eviction: the group times out once the watermark passes
+    its window end, emits a last row with ``is_final=true`` and drops
+    its state; every row then carries ``is_final``."""
+    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    prepared = _project(stream_df, keys, {STATE_COL: (col, spec)})
+    # the watermarked attribute stays in the plan as a pass-through column
+    prepared = _project(df, [*(event_time or ()), *keys], {STATE_COL: (col, spec)})
+    final = {} if event_time is None else {"is_final": False}
 
     def fold(key, pdfs, state: GroupState):
+        head = {k: str(v) for k, v in zip(keys, key)}
+        if state.hasTimedOut:
+            # watermark passed window end: finalize and EVICT
+            blob = bytes(state.get[0])
+            state.remove()
+            yield _row(head, sketch_from_bytes(blob), blob, is_final=True)
+            return
         sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else spec.new()
+        pdfs = [pdf for pdf in pdfs if len(pdf)]
         blob = _fold_pdfs(sk, pdfs, spec).to_bytes()
         state.update((blob,))
-        yield _row({k: str(v) for k, v in zip(keys, key)}, sk, blob)
+        if event_time and pdfs:
+            # evict when the watermark passes the window end (must stay
+            # strictly ahead of the current watermark)
+            wend_ms = int(pd.Timestamp(pdfs[0][event_time[1]].iloc[0]).value // 1_000_000)
+            state.setTimeoutTimestamp(max(wend_ms, state.getCurrentWatermarkMs() + 1))
+        yield _row(head, sk, blob, **final)
 
-    schema = ", ".join(f"{k} string" for k in keys) + ", sketch binary, estimate double"
-    return prepared.groupBy(*keys).applyInPandasWithState(
-        fold, schema, "blob binary", "Update", GroupStateTimeout.NoTimeout
-    )
+    schema = "".join(f"{k} string, " for k in keys) + "sketch binary, estimate double"
+    schema += ", is_final boolean" if event_time else ""
+    timeout = GroupStateTimeout.EventTimeTimeout if event_time else GroupStateTimeout.NoTimeout
+    return prepared.groupBy(*keys).applyInPandasWithState(fold, schema, "blob binary", "Update", timeout)

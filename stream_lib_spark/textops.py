@@ -4,7 +4,9 @@ near-dup, language ID, quality scoring, token counting, fingerprints).
 
 Design rule: everything that CAN be a built-in JVM expression IS one
 (whole-stage codegen, pushdown-friendly); Python appears only in the
-MinHash/SimHash kernels, as Arrow-vectorized ``mapInPandas`` over numpy.
+MinHash/SimHash/winnowing kernels, as ``mapInArrow`` over numpy: each
+reads its input as flat Arrow values and offsets (``arrowbuf``) and
+emits Arrow arrays, with no pandas in between.
 Each exact operator has a matching ANSI-SQL oracle in
 ``__spark_entry__.oracle_sql`` so the DuckDB gate checks values, not
 just shapes.
@@ -15,10 +17,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
+from .agg import _n_partitions
+from .arrowbuf import fixed_lists, list_values, string_bytes
 from .hashing import splitmix64
 
 # --------------------------------------------------------------------- exact
@@ -147,15 +150,17 @@ def md5_word_hash(w):
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def _flat_word_hashes(wh_series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Flatten a pandas Series of int64 word-hash arrays into
-    (values uint64, doc start offsets int64, lens)."""
-    arrs = [np.asarray(a, dtype=np.int64) for a in wh_series]
-    lens = np.array([len(a) for a in arrs], dtype=np.int64)
-    vals = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-    starts = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:]) if len(lens) > 1 else None
-    return vals.view(np.uint64), starts, lens
+def _in_one_doc(n_windows: int, starts: np.ndarray, lens: np.ndarray,
+                width: int) -> np.ndarray:
+    """Mask over the ``n_windows`` windows of ``width`` items of a flat
+    buffer holding docs at ``starts`` with ``lens``: True where the
+    window lies inside one doc, False where it straddles a boundary
+    (interval cumsum: +1 at each doc's first window, -1 past its last)."""
+    ok = lens >= width
+    delta = np.zeros(n_windows + 1, dtype=np.int64)
+    np.add.at(delta, starts[ok], 1)
+    np.add.at(delta, starts[ok] + lens[ok] - width + 1, -1)
+    return np.cumsum(delta[:-1]) > 0
 
 
 def _shingle_hash_flat(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray,
@@ -180,16 +185,12 @@ def _shingle_hash_flat(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray,
     n_windows = len(vals) - n + 1
     if big.any() and n_windows > 0:
         # every n-word window in the flat buffer, then mask out the
-        # windows that straddle a doc boundary (interval cumsum trick)
+        # windows that straddle a doc boundary
         wins = np.ascontiguousarray(sliding_window_view(b, 8 * n)[::8])
         wh = _murmur64a_fixed(wins, 8 * n, np.uint64(0xE17A1465))
-        delta = np.zeros(n_windows + 1, dtype=np.int64)
-        np.add.at(delta, starts[big], 1)
-        np.add.at(delta, starts[big] + lens[big] - n + 1, -1)
-        valid = np.cumsum(delta[:-1]) > 0
         big_out = np.ones(len(out), dtype=bool)
         big_out[out_starts[~big]] = False
-        out[big_out] = wh[valid]
+        out[big_out] = wh[_in_one_doc(n_windows, starts, lens, n)]
     if (~big).any():
         # whole-doc fallback shingles: variable byte lengths → chunked
         small_starts, small_lens = starts[~big], lens[~big]
@@ -211,9 +212,16 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     otherwise run the whole Python kernel single-threaded).  No-op at
     scale, where input partitions >> cores."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if _n_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def _word_hashes(docs: DataFrame, id_col: str, text_col: str, word_hash=None) -> DataFrame:
+    """(id long, ``__wh`` word hashes): the input of the MinHash and
+    SimHash kernels."""
+    return _ensure_parallelism(docs.select(F.col(id_col).cast("long").alias(id_col), text_col)).select(
+        id_col, word_hash_array(text_col, word_hash).alias("__wh"))
 
 
 # shingles per permutation-matrix chunk: bounds the (num_hashes, chunk)
@@ -255,20 +263,17 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, shingle: int = 5,
     only sees int64 word hashes through Arrow and is fully vectorized:
     stride-tricks window hashing for shingles, a splitmix64 permutation
     matrix chunked at doc boundaries (memory-bounded), and
-    ``np.minimum.reduceat`` at doc offsets for the per-doc min."""
+    ``np.minimum.reduceat`` at doc offsets for the per-doc min; the
+    signatures leave as one Arrow list array over the (docs, k) matrix."""
     seeds = splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
 
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("signature", T.ArrayType(T.LongType())),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            vals, starts, lens = _flat_word_hashes(pdf["__wh"])
-            sh, sh_starts = _shingle_hash_flat(vals, starts, lens, shingle)
+            vals, offs = list_values(rb.column(1))
+            lens = np.diff(offs)
+            sh, sh_starts = _shingle_hash_flat(vals.view(np.uint64), offs[:-1], lens, shingle)
             n_docs = len(lens)
             ends = np.append(sh_starts, len(sh))
             sigs = np.empty((n_docs, num_hashes), dtype=np.uint64)
@@ -282,17 +287,11 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, shingle: int = 5,
                     mins = np.minimum.reduceat(perms, sh_starts[d0:d1] - ends[d0], axis=1)
                     sigs[d0:d1] = mins.T
                     d0 = d1
-            sigs = sigs.view(np.int64)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                # one C-level call for the whole (n_docs, k) matrix
-                "signature": sigs.tolist(),
-            })
+            yield pa.record_batch([rb.column(0), fixed_lists(sigs.view(np.int64))],
+                                  names=[id_col, "signature"])
 
-    prepared = _ensure_parallelism(docs.select(id_col, F.col(text_col))).select(
-        id_col, word_hash_array(text_col).alias("__wh")
-    )
-    return prepared.mapInPandas(gen, schema=schema)
+    return _word_hashes(docs, id_col, text_col).mapInArrow(
+        gen, schema=f"{id_col} long, signature array<long>")
 
 
 def _banded_keys(sigs: DataFrame, num_hashes: int, bands: int,
@@ -450,28 +449,23 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     with ``np.add.reduceat`` — no per-doc Python.  Pass
     ``word_hash=md5_word_hash`` for the SQL-portable variant the DuckDB
     gate oracle mirrors bit-for-bit."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("simhash", T.LongType()),
-    ])
     weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            vals, starts, lens = _flat_word_hashes(pdf["__wh"])
+            vals, offs = list_values(rb.column(1))
             bits = np.unpackbits(vals.view(np.uint8).reshape(-1, 8), axis=1,
                                  bitorder="little").astype(np.int64)  # (N, 64)
-            ones = np.add.reduceat(bits, starts, axis=0)  # (docs, 64)
-            maj = (2 * ones) > lens[:, None]
+            ones = np.add.reduceat(bits, offs[:-1], axis=0)  # (docs, 64)
+            maj = (2 * ones) > np.diff(offs)[:, None]
             out = (maj.astype(np.uint64) * weights[None, :]).sum(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "simhash": out.view(np.int64)})
+            yield pa.record_batch([rb.column(0), pa.array(out.view(np.int64))],
+                                  names=[id_col, "simhash"])
 
-    prepared = _ensure_parallelism(docs.select(id_col, F.col(text_col))).select(
-        id_col, word_hash_array(text_col, word_hash).alias("__wh")
-    )
-    return prepared.mapInPandas(gen, schema=schema)
+    return _word_hashes(docs, id_col, text_col, word_hash).mapInArrow(
+        gen, schema=f"{id_col} long, simhash long")
 
 
 # SimHash bucketing (round 6): 6 blocks x C(6,3)=20 three-block
@@ -876,8 +870,8 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, window: int = 4,
     runs JVM-side, the kernel reads the Arrow string buffers flat (one
     byte array + doc offsets), hashes every k-gram of the whole batch in
     ONE murmur pass, takes sliding-window minima over the flat gram-hash
-    array, and masks windows straddling doc boundaries with the same
-    interval-cumsum trick as ``_shingle_hash_flat``; per-doc uniqueness
+    array, and masks windows straddling doc boundaries with
+    ``_in_one_doc``, as ``_shingle_hash_flat`` does; per-doc uniqueness
     is a lexsort + consecutive-dup drop.
 
     Returns (id, fingerprint long) exploded rows — the join key for
@@ -896,32 +890,16 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, window: int = 4,
             n_docs = rb.num_rows
             if n_docs == 0:
                 continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            txt = rb.column(1)
-            width = 8 if pa.types.is_large_string(txt.type) else 4
-            odt = np.int64 if width == 8 else np.int32
-            offs = np.frombuffer(txt.buffers()[1], dtype=odt,
-                                 count=n_docs + 1, offset=txt.offset * width).astype(np.int64)
-            dbuf = txt.buffers()[2]
-            if dbuf is None:  # every string in the batch is empty
-                continue
-            data = np.frombuffer(dbuf, dtype=np.uint8)
-            b = data[offs[0]:offs[-1]]
-            rel_starts = offs[:-1] - offs[0]
-            lens = offs[1:] - offs[:-1]
+            b, offs = string_bytes(rb.column(1))
+            lens = np.diff(offs)
             if len(b) < k:
                 continue
             # 1. hash every k-gram window of the FLAT byte buffer, then
             #    mask out windows straddling a doc boundary
-            okdoc = lens >= k
-            nw = len(b) - k + 1
             wins = np.ascontiguousarray(sliding_window_view(b, k))
             h_all = _murmur64a_fixed(wins, k, np.uint64(0xE17A1465))
-            delta = np.zeros(nw + 1, dtype=np.int64)
-            np.add.at(delta, rel_starts[okdoc], 1)
-            np.add.at(delta, rel_starts[okdoc] + lens[okdoc] - k + 1, -1)
-            h = h_all[np.cumsum(delta[:-1]) > 0]
-            gcounts = np.where(okdoc, lens - k + 1, 0)
+            h = h_all[_in_one_doc(len(b) - k + 1, offs[:-1], lens, k)]
+            gcounts = np.where(lens >= k, lens - k + 1, 0)
             gstarts = np.zeros(n_docs, dtype=np.int64)
             np.cumsum(gcounts[:-1], out=gstarts[1:]) if n_docs > 1 else None
             if len(h) == 0:
@@ -934,10 +912,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, window: int = 4,
             nwin = len(h) - window + 1
             if big.any() and nwin > 0:
                 wmins = sliding_window_view(h, window).min(axis=1)
-                d2 = np.zeros(nwin + 1, dtype=np.int64)
-                np.add.at(d2, gstarts[big], 1)
-                np.add.at(d2, gstarts[big] + gcounts[big] - window + 1, -1)
-                parts_fp.append(wmins[np.cumsum(d2[:-1]) > 0])
+                parts_fp.append(wmins[_in_one_doc(nwin, gstarts, gcounts, window)])
                 parts_doc.append(np.repeat(np.arange(n_docs), np.where(big, gcounts - window + 1, 0)))
             small = (gcounts > 0) & ~big
             if small.any():
@@ -954,7 +929,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, window: int = 4,
             keep[1:] = (di[1:] != di[:-1]) | (fp[1:] != fp[:-1])
             di, fp = di[keep], fp[keep]
             yield pa.record_batch(
-                [pa.array(ids[di]), pa.array(fp.view(np.int64))],
+                [rb.column(0).take(di), pa.array(fp.view(np.int64))],
                 names=[id_col, "fingerprint"],
             )
 

@@ -1,6 +1,7 @@
-"""Source scan: the sketch pipeline (build, merge, checkpoint) and every
-finalizer cross the Python boundary as Arrow only, and the checkpoint
-job runs the library's one pipeline instead of kernels of its own.
+"""Source scan: the sketch pipeline (build, merge, checkpoint), every
+finalizer, and the text and vector kernels cross the Python boundary
+as Arrow only, and the checkpoint job runs the library's one pipeline
+instead of kernels of its own.
 ``pyspark.sql.pandas.types`` (Spark↔Arrow schema conversion) stays
 allowed."""
 
@@ -12,7 +13,8 @@ import pytest
 import stream_lib_spark
 
 PKG = os.path.dirname(os.path.abspath(stream_lib_spark.__file__))
-ARROW_ONLY = ["agg.py", "functions.py", "sketches/wire_export.py", "jobs/checkpoint.py"]
+ARROW_ONLY = ["agg.py", "functions.py", "sketches/wire_export.py", "jobs/checkpoint.py",
+              "textops.py", "similarity.py"]
 PANDAS_APIS = ("pandas_udf", "mapInPandas", "applyInPandas", "toPandas")
 
 

@@ -134,3 +134,21 @@ def test_default_session_global_agg_has_no_fan_in_level(spark, sf_dir):
             out.explain("formatted")
         assert len(set(re.findall(r"\((\d+)\) MapInArrow", buf.getvalue()))) == 2
         assert hasattr(out, "_slp_driver_fold")
+
+
+def test_ensure_parallelism_counts_without_a_job(spark):
+    """The text kernels' input count is ``_n_partitions``: over a shuffled
+    input it reads the exchange's count off the plan, where
+    ``df.rdd.getNumPartitions()`` under AQE runs the upstream shuffle
+    stage (one job) just to count."""
+    from stream_lib_spark.textops import _ensure_parallelism
+
+    docs = spark.createDataFrame([(i, f"doc {i % 13}") for i in range(60)],
+                                 "doc_id long, text string").repartition(5, "text")
+    tracker = spark.sparkContext.statusTracker()
+    with _conf(spark, **{"spark.sql.adaptive.enabled": "true"}):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = _ensure_parallelism(docs)
+        assert set(tracker.getJobIdsForGroup(None)) == before, "the count started a Spark job"
+    want_same = 5 >= spark.sparkContext.defaultParallelism
+    assert (out is docs) == want_same
