@@ -32,7 +32,9 @@ entry point and any number of sketches per scan:
 
 Hashing happens **JVM-side** (``F.xxhash64``, whole-stage codegen) by
 default, so the Python worker only ever sees int64 hashes / float64
-values through Arrow — no per-row Python anywhere.  A murmur64 mode
+values through Arrow — no per-row Python anywhere.  The direct
+row-group read computes the same hashes in numpy (``xxhash64_long``,
+and ``xxhash64_utf8`` over each string column's parquet dictionary).  A murmur64 mode
 (``hash_mode='murmur64'``) hashes in numpy for bit-parity with the
 reference's MurmurHash64A dispatch (``hash/MurmurHash.java:135-217``).
 
@@ -61,7 +63,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .arrowbuf import string_bytes
-from .hashing import murmur64a_chunked, xxhash64_long
+from .hashing import murmur64a_chunked, xxhash64_long, xxhash64_utf8
 from .sketches.base import (
     KIND_BLOOM,
     KIND_CMS,
@@ -260,13 +262,21 @@ def _project(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, Sket
     return df.where(functools.reduce(operator.or_, valid)).select(*proj)
 
 
+#: rows per hash-mode update: a direct read hands the kernel a whole row
+#: group, and an update's temporaries (``clz64``'s passes, CMS's
+#: ``np.unique``) grow with the rows it is given.  Hash-mode bytes do not
+#: depend on batching.
+_HASH_CHUNK = 1 << 16
+
+
 def _offer(spec: SketchSpec, sk, arr):
     """THE update: fold one Arrow column into ``sk`` with no per-row
     Python, dispatched on ``spec.input_mode``.  Nulls are dropped; a
     hash-mode column arrives hashed (int64: the JVM's ``xxhash64`` or
-    the direct read's ``xxhash64_long``) or as raw strings (murmur64
-    mode), which are hashed here off the Arrow offsets/data buffers
-    (``murmur64a_chunked``); numeric columns are zero-copy views;
+    the direct read's ``xxhash64_long`` / ``xxhash64_utf8``) or as raw
+    strings (murmur64 mode), which are hashed here off the Arrow
+    offsets/data buffers (``murmur64a_chunked``), and enters its sketch
+    ``_HASH_CHUNK`` rows at a time; numeric columns are zero-copy views;
     'item' mode folds the exact (values, counts) table of Arrow's C++
     value_counts, 'ivalue' mode the exact counts of ``np.unique``."""
     if isinstance(arr, pa.ChunkedArray):
@@ -289,7 +299,9 @@ def _offer(spec: SketchSpec, sk, arr):
     else:
         vals = arr.to_numpy(zero_copy_only=False).astype(np.float64 if mode == "value" else np.int64, copy=False)
     if mode == "hash":
-        sk.add_hashed(vals) if spec.kind == "bloom" else sk.update_hashed(vals)
+        update = sk.add_hashed if spec.kind == "bloom" else sk.update_hashed
+        for lo in range(0, len(vals), _HASH_CHUNK):
+            update(vals[lo:lo + _HASH_CHUNK])
     elif mode == "value":
         sk.add_values(vals)
     else:  # ivalue: non-negative ints folded as exact counts
@@ -398,10 +410,15 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema, fi
 # a bare local-filesystem parquet scan, the same rows can be read
 # straight off the column chunks by pyarrow INSIDE the Python task
 # (~0.02 s per 1M int64 rows), with hashing done by the bit-parity
-# ``xxhash64_long`` kernel.  Spark still distributes the work: the task
-# list is one row per parquet row group, so parallelism equals the
-# scan's natural split and scales with input size.  One task reads all
-# requested columns of its row group once and feeds the same kernel.
+# ``xxhash64_long`` / ``xxhash64_utf8`` kernels.  A string column is read
+# as its parquet dictionary: each distinct value is hashed once and the
+# hashes are taken by the dictionary indices (a 534k-row ``conv_id``
+# chunk of 13k distinct values: ~8 ms against ~87 ms to read and hash
+# every row, process CPU with one numpy thread on a 4-core VM,
+# ``tools/bench_xxhash64_utf8.py``).  Spark still distributes the work:
+# the task list is one row per parquet row group, so parallelism equals
+# the scan's natural split and scales with input size.  One task reads
+# all requested columns of its row group once and feeds the same kernel.
 #
 # Strict eligibility — EVERY sketch of the request must qualify, else
 # every sketch takes the classic path:
@@ -418,10 +435,11 @@ def _kernel(specs: dict[str, SketchSpec], keys: list[str], schema: pa.Schema, fi
 #     HadoopFsRelation/Parquet (no Filter/Project/Limit above it);
 #   * every input file is file:// (an executor on another host could
 #     not read the driver's local path otherwise; hdfs:/s3: fall back);
-#   * hash mode: xxhash64 over LongType (bit parity pinned); value mode
-#     (tdigest/kll): DoubleType, global only — keyed quantile queries
-#     expose per-key digests, which must not move with the read path;
-#     keyed: string keys only;
+#   * hash mode: xxhash64 over LongType or StringType (default
+#     UTF8_BINARY collation; bit parity with the JVM pinned for both);
+#     value mode (tdigest/kll): DoubleType, global only — keyed quantile
+#     queries expose per-key digests, which must not move with the read
+#     path; keyed: string keys only;
 #   * at most _DIRECT_SCAN_MAX_FILES (4096) input files, and the driver
 #     reads every file's footer — the same metadata Spark itself reads —
 #     to check each requested column's type and to list the row groups;
@@ -448,14 +466,14 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
     wants: dict = {}
     try:
         schema = df.schema
-        if not all(isinstance(schema[k].dataType, T.StringType) for k in keys):
+        if not all(schema[k].dataType == T.StringType() for k in keys):
             return None  # string keys only: no other key type has a direct-vs-classic identity test
         for name, (col, spec) in sketches.items():
             if spec.reference_family or spec.kind not in _DIRECT_SCAN_KINDS or spec.params.get("conservative"):
                 return None
             dtype = schema[col].dataType
-            if spec.input_mode == "hash" and hash_mode == "xxhash64" and isinstance(dtype, T.LongType):
-                wants[name] = pa.int64()
+            if spec.input_mode == "hash" and hash_mode == "xxhash64" and dtype in (T.LongType(), T.StringType()):
+                wants[name] = pa.int64() if dtype == T.LongType() else pa.string()
             elif spec.input_mode == "value" and not keys and isinstance(dtype, T.DoubleType):
                 wants[name] = pa.float64()
             else:
@@ -470,7 +488,10 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
             return None
         if rel.partitionSchema().size() != 0:  # col could live in the path
             return None
-        files = df.inputFiles()
+        # the file list in one gateway call: DataFrame.inputFiles() makes
+        # one round trip per file (64 files: ~36 ms against ~4 ms)
+        listed = df.sparkSession._jvm.scala.Predef.genericWrapArray(df._jdf.inputFiles())
+        files = [f for f in listed.mkString("\n").split("\n") if f]
     except Exception:
         return None
     if not files or len(files) > _DIRECT_SCAN_MAX_FILES:
@@ -511,12 +532,30 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
     list rides in the closure): each task reads its row groups' column
     chunks with pyarrow and yields one Arrow record batch per row group
     shaped like the projection's — (keys..., __in_<name>...), hashed by
-    ``xxhash64_long`` where the projection hashes with the JVM's
-    xxhash64, with the projection's row rule (a row whose requested
-    columns are all null is dropped), other nulls kept for the kernel
-    to skip.  A read failure, or a column whose type differs from the
-    planned one, names the file, the row group and the kill switch."""
+    ``xxhash64_long`` / ``xxhash64_utf8`` where the projection hashes
+    with the JVM's xxhash64, with the projection's row rule (a row whose
+    requested columns are all null is dropped), other nulls kept for the
+    kernel to skip.  A string hash column that is not a key is read as
+    its dictionary, and each hashed column is hashed once per row group
+    however many sketches read it.  A read failure, or a column whose
+    type differs from the planned one, names the file, the row group
+    and the kill switch."""
     read = list(dict.fromkeys(keys + [col for col, _ in sketches.values()]))
+    by_dict = list(dict.fromkeys(col for n, (col, _) in sketches.items() if wants[n] == pa.string() and col not in keys))
+
+    def whole(arr: pa.ChunkedArray) -> pa.Array:
+        return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()  # no copy of one chunk
+
+    def xxhash64(arr: pa.Array) -> pa.Array:
+        """Spark's xxhash64 of one chunk, nulls kept; a dictionary chunk
+        hashes its dictionary and takes the hashes by its indices."""
+        if pa.types.is_dictionary(arr.type):
+            return pc.take(xxhash64(arr.dictionary), arr.indices)
+        if pa.types.is_integer(arr.type):
+            hashed = xxhash64_long(arr.fill_null(0).to_numpy())
+        else:
+            hashed = xxhash64_utf8(*string_bytes(arr))
+        return pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False) if arr.null_count else None)
 
     def source(id_batches):
         import pyarrow.parquet as pq
@@ -525,16 +564,21 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
             for i in np.asarray(ids["id"]):
                 p, rg = tasks[int(i)]
                 try:
-                    tbl = pq.ParquetFile(p).read_row_group(rg, columns=read)
-                    cols = {k: tbl.column(k).combine_chunks() for k in keys}
-                    for name, (col, _) in sketches.items():
-                        arr = tbl.column(col).combine_chunks()
-                        if arr.type != wants[name]:  # the file changed after planning
+                    tbl = pq.ParquetFile(p, read_dictionary=by_dict).read_row_group(rg, columns=read)
+                    cols = {k: whole(tbl.column(k)) for k in keys}
+                    hashed: dict = {}
+                    for name, (col, spec) in sketches.items():
+                        arr = tbl.column(col)
+                        got = arr.type.value_type if pa.types.is_dictionary(arr.type) else arr.type
+                        if got != wants[name] and not (wants[name] == pa.string() and got == pa.large_string()):
+                            # the file changed after planning
                             raise pa.ArrowTypeError(f"column {col} is {arr.type}, planned {wants[name]}")
-                        if arr.type == pa.int64():
-                            hashed = xxhash64_long(arr.fill_null(0).to_numpy())
-                            arr = pa.array(hashed, mask=arr.is_null().to_numpy(zero_copy_only=False))
-                        cols[f"__in_{name}"] = arr
+                        if spec.input_mode == "value":
+                            cols[f"__in_{name}"] = whole(arr)
+                            continue
+                        if col not in hashed:
+                            hashed[col] = whole(pa.chunked_array([xxhash64(c) for c in arr.chunks], pa.int64()))
+                        cols[f"__in_{name}"] = hashed[col]
                 except (OSError, KeyError, pa.ArrowException) as e:
                     raise RuntimeError(
                         f"direct parquet read of {p} (row group {rg}) failed: {e}; "
@@ -812,9 +856,12 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
     parquet input of at most 4096 files and at least 1M rows
     (``_DIRECT_SCAN_MIN_ROWS``) is read by
     the tasks themselves with pyarrow, one task per row group, when the
-    sketch is hll/cms/bloom over a LongType column (xxhash64 mode;
-    keyed: string keys only) or, global only, tdigest/kll over a
-    DoubleType column — never reference-family or conservative CMS.
+    sketch is hll/cms/bloom over a LongType or StringType column
+    (xxhash64 mode, hashed bit-identically to the JVM; a string column
+    is read as its parquet dictionary, whose distinct values are hashed
+    once per row group; keyed: string keys only) or, global only,
+    tdigest/kll over a DoubleType column — never reference-family or
+    conservative CMS.
     The driver reads every file's footer first; a file whose column is
     missing or of another type sends the aggregate to the classic read.
     hll/cms/bloom bytes are identical on both paths; tdigest/kll bytes
@@ -845,11 +892,13 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
     whose rows are null in every requested column yields no row.
 
     Direct read: engages only if EVERY sketch of the request qualifies
-    under ``sketch_agg``'s rules (global: hll/cms/bloom over LongType,
-    tdigest/kll over DoubleType; keyed: hll/cms/bloom with string
-    keys); one task then reads all requested columns of its row group
-    once.  Otherwise every sketch takes the classic path.  tdigest/kll
-    bytes differ between the two paths, both within the rank bound.
+    under ``sketch_agg``'s rules (global: hll/cms/bloom over LongType
+    or StringType, tdigest/kll over DoubleType; keyed: hll/cms/bloom
+    with string keys); one task then reads all requested columns of its
+    row group once, and hashes each hashed column once however many
+    sketches read it.  Otherwise every sketch takes the classic path.
+    tdigest/kll bytes differ between the two paths, both within the
+    rank bound.
 
     Merge: as ``sketch_agg``'s — a keyed build in exactly one task
     finalizes in its kernel and skips the exchange and the fold.

@@ -11,7 +11,9 @@ specification (Austin Appleby, public domain), not translated from the
 reference source.
 
 Also provides splitmix64 (Steele et al., public domain) for deriving
-deterministic per-row hash seeds (CMS rows, Bloom double hashing).
+deterministic per-row hash seeds (CMS rows, Bloom double hashing), and
+XXH64 bit-identical to Spark's ``xxhash64`` over long and string
+columns (the direct row-group read's hash).
 
 All arithmetic is modulo 2**64 via ``np.uint64``; numpy overflow
 warnings are intentionally suppressed inside these kernels.
@@ -166,41 +168,45 @@ def clz64(x: np.ndarray) -> np.ndarray:
     return n
 
 
+def _by_length(data: np.ndarray, offsets: np.ndarray, fixed, seed) -> np.ndarray:
+    """uint64 hash of each variable-length byte string given as Arrow
+    buffers: ``data`` = concatenated bytes (uint8), ``offsets`` = int
+    offsets of length n+1.  Zero per-row Python: rows are grouped by byte
+    length and ``fixed(buf, L, seed)`` hashes each group as a dense
+    (n, L) uint8 matrix gathered straight from the data buffer, about
+    1 MB of string bytes at a time, so the gather's int64 index matrix
+    stays near 8 MB."""
+    offsets = offsets.astype(np.int64, copy=False)
+    starts, lengths = offsets[:-1], np.diff(offsets)
+    out = np.zeros(len(starts), dtype=U64)
+    order = np.argsort(lengths, kind="stable")
+    for sel in np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1):
+        if not len(sel):
+            continue
+        L = int(lengths[sel[0]])
+        step = max(1, (1 << 20) // max(L, 1))
+        for lo in range(0, len(sel), step):
+            part = sel[lo:lo + step]
+            out[part] = fixed(data[starts[part][:, None] + np.arange(L, dtype=np.int64)[None, :]], L, seed)
+    return out
+
+
 def murmur64a_chunked(data: np.ndarray, offsets: np.ndarray,
                       seed: int | np.uint64 = MURMUR64_DEFAULT_SEED) -> np.ndarray:
     """MurmurHash64A over variable-length byte strings given as Arrow
-    buffers: ``data`` = concatenated UTF-8 bytes (uint8), ``offsets`` =
-    int offsets of length n+1.  Zero per-row Python: rows are grouped by
-    byte length and each group is hashed as a dense (n, L) uint8 matrix
-    gathered straight from the Arrow data buffer."""
-    offsets = offsets.astype(np.int64, copy=False)
-    starts, lengths = offsets[:-1], np.diff(offsets)
-    n = len(starts)
-    out = np.zeros(n, dtype=U64)
-    if n == 0:
-        return out
-    with np.errstate(over="ignore"):
-        for L in np.unique(lengths):
-            sel = np.nonzero(lengths == L)[0]
-            if L == 0:
-                h = U64(seed) ^ U64(0)
-                h ^= h >> _R
-                h = h * _M
-                h ^= h >> _R
-                out[sel] = h
-                continue
-            # vectorized gather: (n_sel, L) matrix from the flat buffer
-            buf = data[starts[sel][:, None] + np.arange(L, dtype=np.int64)[None, :]]
-            out[sel] = _murmur64a_fixed(buf, int(L), seed)
-    return out
+    buffers (``arrowbuf.string_bytes``), grouped by byte length
+    (``_by_length``).  Returns uint64."""
+    return _by_length(data, offsets, _murmur64a_fixed, seed)
 
 
 # ---------------------------------------------------------------------------
 # XXH64 (Spark ``xxhash64`` parity) — written from the public xxHash
 # specification (Yann Collet, BSD 2-clause).  Spark's ``F.xxhash64`` over
-# a LongType column hashes each value's 8-byte little-endian encoding
-# with seed 42; bit parity with the JVM is pinned by
-# tests/test_direct_scan.py (golden literals + random fuzz).
+# a LongType column hashes each value's 8-byte little-endian encoding,
+# over a StringType column each value's UTF-8 bytes, with seed 42; bit
+# parity with the JVM is pinned by tests/test_direct_scan.py (longs:
+# golden literals + random fuzz) and tests/test_xxhash64_utf8.py
+# (strings).  Both go through the one matrix kernel ``_xxhash64_fixed``.
 
 _XXP1 = U64(0x9E3779B185EBCA87)
 _XXP2 = U64(0xC2B2AE3D27D4EB4F)
@@ -220,14 +226,60 @@ def xxhash64_long(values: np.ndarray, seed: int | np.uint64 = SPARK_XXHASH64_SEE
     """Vectorized XXH64 of each int64 value (8-byte little-endian input,
     i.e. exactly what Spark's ``xxhash64(longCol)`` computes).  Returns
     int64 (Spark's signed representation)."""
+    x = np.ascontiguousarray(values, dtype="<i8")
+    return _xxhash64_fixed(x.view(np.uint8).reshape(-1, 8), 8, seed).view(np.int64)
+
+
+def _xxround(lane: np.ndarray, acc=None) -> np.ndarray:
+    """XXH64's round; ``acc=None`` is the round over a zero accumulator."""
+    x = lane * _XXP2 if acc is None else acc + lane * _XXP2
+    return _rotl64(x, 31) * _XXP1
+
+
+def _xxhash64_fixed(buf: np.ndarray, length: int, seed: int | np.uint64):
+    """XXH64 over an (n, length) uint8 matrix, vectorized: the 32-byte
+    stripe loop, then the 8-, 4- and 1-byte tails.  The state stays a
+    scalar until the first lane meets it, so a length-0 group gets one
+    0-d hash for all of its rows."""
+    n = buf.shape[0]
+    n_words = length // 8
+    words = np.ascontiguousarray(buf[:, : n_words * 8]).view("<u8")  # (n, n_words)
+    seed = U64(int(seed) & 0xFFFFFFFFFFFFFFFF)
     with np.errstate(over="ignore"):
-        x = np.asarray(values).astype(np.int64, copy=False).view(U64)
-        h = U64(int(seed) & 0xFFFFFFFFFFFFFFFF) + _XXP5 + U64(8)
-        k1 = _rotl64(x * _XXP2, 31) * _XXP1
-        h = _rotl64(h ^ k1, 27) * _XXP1 + _XXP4
+        if length >= 32:
+            v = [np.full(n, seed + _XXP1 + _XXP2), np.full(n, seed + _XXP2),
+                 np.full(n, seed), np.full(n, seed - _XXP1)]
+            for w in range(0, (length // 32) * 4, 4):
+                v = [_xxround(words[:, w + i], v[i]) for i in range(4)]
+            h = _rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+            for lane in v:
+                h = (h ^ _xxround(lane)) * _XXP1 + _XXP4
+            h = h + U64(length)
+        else:
+            h = seed + _XXP5 + U64(length)
+        for w in range((length // 32) * 4, n_words):
+            h = _rotl64(h ^ _xxround(words[:, w]), 27) * _XXP1 + _XXP4
+        pos = n_words * 8
+        if length - pos >= 4:
+            k = np.ascontiguousarray(buf[:, pos:pos + 4]).view("<u4")[:, 0].astype(U64)
+            h = _rotl64(h ^ (k * _XXP1), 23) * _XXP2 + _XXP3
+            pos += 4
+        for j in range(pos, length):
+            h = _rotl64(h ^ (buf[:, j].astype(U64) * _XXP5), 11) * _XXP1
+        h = np.asarray(h)  # a fresh array, or 0-d for a length-0 group
         h ^= h >> U64(33)
         h *= _XXP2
         h ^= h >> U64(29)
         h *= _XXP3
         h ^= h >> U64(32)
-    return h.view(np.int64)
+    return h
+
+
+def xxhash64_utf8(data: np.ndarray, offsets: np.ndarray,
+                  seed: int | np.uint64 = SPARK_XXHASH64_SEED) -> np.ndarray:
+    """Vectorized XXH64 of variable-length byte strings given as Arrow
+    buffers (``arrowbuf.string_bytes``), grouped by byte length
+    (``_by_length``): exactly what Spark's ``xxhash64(stringCol)``
+    computes over each value's UTF-8 bytes.  Returns int64 (Spark's
+    signed representation)."""
+    return _by_length(data, offsets, _xxhash64_fixed, seed).view(np.int64)

@@ -13,10 +13,16 @@ Contract under test:
     published rank bound the gates assert (no declared query exposes
     digest bytes — quantile gates output within_bound booleans);
   * every ineligible shape (filter/project above the scan, non-xxhash64
-    hash mode, non-long hash column, non-whitelisted kind, conservative
-    CMS, kill switch, a kill-switch value other than "1") falls back to the classic path;
+    hash mode, a hash column neither long nor string, non-whitelisted
+    kind, conservative CMS, kill switch, a kill-switch value other than
+    "1") falls back to the classic path;
   * a multi-sketch request reads directly only when every sketch is
-    eligible, with the same bytes as the one-sketch builds.
+    eligible, with the same bytes as the one-sketch builds;
+  * a string hash column is read as its parquet dictionary (plain pages,
+    mostly-null and all-null row groups, ``large_string`` files, string
+    keys) with hll/cms/bloom bytes identical to the classic path, and
+    its dictionary is hashed once per row group however many sketches
+    read it.
 """
 from __future__ import annotations
 
@@ -71,19 +77,25 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def _both(df, col, spec, hash_mode="xxhash64"):
+def _direct_and_classic(run):
+    """(run() with the direct read on, run() with it off); the kill
+    switch's earlier value is restored after."""
     old = os.environ.get("SPARK_GRAFT_DIRECT_SCAN")
     try:
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
-        direct = collect_sketch(sketch_agg(df, [], col, spec, hash_mode))
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-        classic = collect_sketch(sketch_agg(df, [], col, spec, hash_mode))
+        out = []
+        for mode in ("1", "0"):
+            os.environ["SPARK_GRAFT_DIRECT_SCAN"] = mode
+            out.append(run())
+        return tuple(out)
     finally:
         if old is None:
             os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
         else:
             os.environ["SPARK_GRAFT_DIRECT_SCAN"] = old
-    return direct, classic
+
+
+def _both(df, col, spec, hash_mode="xxhash64"):
+    return _direct_and_classic(lambda: collect_sketch(sketch_agg(df, [], col, spec, hash_mode)))
 
 
 def test_min_rows_threshold(spark, sf_dir, monkeypatch):
@@ -247,18 +259,7 @@ def _both_keyed(df, keys, col, spec):
         out["sketch"] = out["sketch"].map(bytes)
         return out.sort_values(keys, na_position="first",
                                ignore_index=True)
-    old = os.environ.get("SPARK_GRAFT_DIRECT_SCAN")
-    try:
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
-        direct = run()
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-        classic = run()
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
-        else:
-            os.environ["SPARK_GRAFT_DIRECT_SCAN"] = old
-    return direct, classic
+    return _direct_and_classic(run)
 
 
 def test_keyed_byte_identical(spark, sf_dir):
@@ -312,7 +313,7 @@ def test_ineligible_shapes_fall_back(spark, sf_dir):
     assert _direct_count(li.limit(10), [],
                          "l_orderkey", hll, "xxhash64") is None
     assert _direct_count(li, [], "l_orderkey", hll, "murmur64") is None
-    assert _direct_count(li, [], "l_returnflag", hll, "xxhash64") is None
+    assert _direct_count(li, [], "l_linenumber", hll, "xxhash64") is None  # int32
     assert _direct_count(li, [], "l_quantity", SketchSpec("qdigest", compression_factor=64),
         "xxhash64") is None
     assert _direct_count(li, [], "l_partkey",
@@ -359,11 +360,12 @@ def test_multi_sketch_direct_read(spark):
 
 
 def test_multi_sketch_mixed_request_goes_classic(spark):
-    """One ineligible sketch (a string hash column) sends every sketch
-    of the request down the classic path."""
+    """One ineligible sketch (a conservative CMS) sends every sketch of
+    the request down the classic path."""
     li = spark.read.parquet(f"{SF_CORRECTNESS}/lineitem.parquet")
     hll = SketchSpec("hll", p=14)
-    mixed = {"h": ("l_orderkey", hll), "f": ("l_returnflag", hll)}
+    conservative = SketchSpec("cms", eps=1e-3, confidence=0.99, conservative=True)
+    mixed = {"h": ("l_orderkey", hll), "c": ("l_partkey", conservative)}
     assert _direct_tasks(li, [], mixed, "xxhash64") is None
     multi = multi_sketch_agg(li, mixed)
     assert "Scan parquet" in _plan(multi)
@@ -401,3 +403,129 @@ def test_multi_sketch_keyed_direct_read(spark, tmp_path):
         want = {k if isinstance(k, str) else None: b
                 for k, b in zip(classic["k"], classic["sketch"])}
         assert {r["k"]: bytes(r[name]) for r in rows} == want
+
+
+STRING_SKETCHES = {"h": SketchSpec("hll", p=12), "c": SketchSpec("cms", eps=1e-3, confidence=0.99),
+                   "b": SketchSpec("bloom", n_elements=20_000, fpp=0.01)}
+
+
+def _string_values(rng, n, null_frac=0.05, distinct=3_000):
+    vocab = [f"v{i}" + "é中😀\x00"[: i % 5] + "x" * (i % 41) for i in range(distinct)]
+    return pa.array([None if r < null_frac else vocab[int(r * 7919) % distinct]
+                     for r in rng.random(n)], type=pa.string())
+
+
+def _collect_both(df, sketches, keys=()):
+    """{(key tuple, name): bytes} of a multi_sketch_agg, direct and classic."""
+    return _direct_and_classic(lambda: {
+        (tuple(r[k] for k in keys), n): bytes(r[n])
+        for r in multi_sketch_agg(df, sketches, keys=list(keys)).collect() for n in sketches})
+
+
+@pytest.mark.parametrize("layout", ["dictionary", "plain", "mostly_null", "all_null_row_group",
+                                    "large_string"])
+def test_string_hash_byte_identical(spark, tmp_path, layout):
+    """hll/cms/bloom over a string column: the direct read (the
+    column's dictionary hashed, the hashes taken by its indices) gives
+    the classic path's bytes on every page layout."""
+    rng = np.random.default_rng(18)
+    n = 20_000
+    s = _string_values(rng, n, null_frac=0.95 if layout == "mostly_null" else 0.05)
+    if layout == "all_null_row_group":
+        s = pa.concat_arrays([pa.nulls(4_000, pa.string()), s.slice(4_000)])
+    if layout == "large_string":
+        s = s.cast(pa.large_string())
+    path = str(tmp_path / f"{layout}.parquet")
+    pq.write_table(pa.table({"s": s}), path, row_group_size=4_000,
+                   use_dictionary=layout != "plain")
+    df = spark.read.parquet(path)
+    sketches = {n: ("s", spec) for n, spec in STRING_SKETCHES.items()}
+    tasks, wants = _direct_tasks(df, [], sketches, "xxhash64")
+    assert len(tasks) == 5 and set(wants.values()) == {pa.string()}
+    assert "Scan parquet" not in _plan(multi_sketch_agg(df, sketches))
+    direct, classic = _collect_both(df, sketches)
+    assert direct == classic
+    for name, spec in STRING_SKETCHES.items():  # and each equals its one-sketch build
+        assert direct[((), name)] == collect_sketch(sketch_agg(df, [], "s", spec)).to_bytes()
+
+
+def test_keyed_string_key_and_string_value(spark, tmp_path):
+    """Keyed direct build with a string key and a string value, nulls in
+    both; the key column read as itself (hashed row by row when it is
+    also the value) and the value column read as its dictionary."""
+    rng = np.random.default_rng(19)
+    n = 20_000
+    keys = pa.array([None if r < 0.1 else f"k{int(r * 6)}" for r in rng.random(n)], type=pa.string())
+    path = str(tmp_path / "keyed_strings.parquet")
+    pq.write_table(pa.table({"k": keys, "s": _string_values(rng, n)}), path, row_group_size=4_000)
+    df = spark.read.parquet(path)
+    sketches = {n: ("s", spec) for n, spec in STRING_SKETCHES.items()}
+    assert _direct_tasks(df, ["k"], sketches, "xxhash64") is not None
+    direct, classic = _collect_both(df, sketches, keys=["k"])
+    assert direct == classic and ((None,), "h") in direct
+    by_self = {"h": ("k", STRING_SKETCHES["h"])}
+    assert _direct_tasks(df, ["k"], by_self, "xxhash64") is not None
+    direct, classic = _collect_both(df, by_self, keys=["k"])
+    assert direct == classic
+
+
+def test_string_column_hashed_once_per_row_group(tmp_path, monkeypatch):
+    """hll and bloom over one string column hash its dictionary once per
+    row group, and both sketches get the same hash array."""
+    rng = np.random.default_rng(20)
+    path = str(tmp_path / "shared.parquet")
+    pq.write_table(pa.table({"s": _string_values(rng, 9_000)}), path, row_group_size=3_000)
+    calls = []
+    real = agg.xxhash64_utf8
+
+    def spy(data, offsets, *a):
+        calls.append(len(offsets) - 1)
+        return real(data, offsets, *a)
+
+    monkeypatch.setattr(agg, "xxhash64_utf8", spy)
+    sketches = {"h": ("s", STRING_SKETCHES["h"]), "b": ("s", STRING_SKETCHES["b"])}
+    source = agg._row_groups([(path, rg) for rg in range(3)], [], sketches, {"h": pa.string(), "b": pa.string()})
+    batches = list(source([{"id": [0, 1, 2]}]))
+    assert len(calls) == 3 and max(calls) <= 3_000  # one dictionary per row group
+    for rb in batches:
+        assert rb.column("__in_h").equals(rb.column("__in_b"))
+
+
+def test_string_column_rewritten_as_long_fails_closed(spark, tmp_path):
+    """A string column that is a long by the time the task reads it
+    fails with the file, the row group and the kill switch named."""
+    ddir = tmp_path / "drift_string.parquet"
+    ddir.mkdir()
+    for f, lo in (("a.parquet", 0), ("b.parquet", 100)):
+        pq.write_table(pa.table({"k": pa.array([f"s{i}" for i in range(lo, lo + 100)])}), str(ddir / f))
+    df = spark.read.parquet(str(ddir))
+    spec = SketchSpec("hll", p=12)
+    assert _direct_count(df, [], "k", spec) == 2
+    merged = sketch_agg(df, [], "k", spec)
+    pq.write_table(pa.table({"k": pa.array(range(100), type=pa.int64())}), str(ddir / "b.parquet"))
+    with pytest.raises(Exception) as err:
+        collect_sketch(merged)
+    msg = str(err.value)
+    assert "SPARK_GRAFT_DIRECT_SCAN=0" in msg and "b.parquet" in msg and "row group 0" in msg
+
+
+@pytest.mark.parametrize("spec", STRING_SKETCHES.values(), ids=STRING_SKETCHES.keys())
+def test_hash_updates_capped_and_batching_invariant(spec):
+    """``_offer`` feeds a hash-mode sketch at most ``_HASH_CHUNK`` rows
+    per update, with the bytes of one whole-batch update."""
+    hashes = np.random.default_rng(21).integers(-2**63, 2**63 - 1, size=200_000, dtype=np.int64)
+    whole = spec.new()
+    (whole.add_hashed if spec.kind == "bloom" else whole.update_hashed)(hashes)
+    sizes = []
+    sk = spec.new()
+    name = "add_hashed" if spec.kind == "bloom" else "update_hashed"
+    real = getattr(sk, name)
+
+    def spy(h):
+        sizes.append(len(h))
+        return real(h)
+
+    setattr(sk, name, spy)
+    agg._offer(spec, sk, pa.array(hashes))
+    assert max(sizes) == agg._HASH_CHUNK and sum(sizes) == len(hashes)
+    assert sk.to_bytes() == whole.to_bytes()
