@@ -62,7 +62,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .arrowbuf import string_bytes
+from .arrowbuf import one_array, string_bytes
 from .hashing import murmur64a_chunked, xxhash64_long, xxhash64_utf8
 from .sketches.base import (
     KIND_BLOOM,
@@ -279,8 +279,7 @@ def _offer(spec: SketchSpec, sk, arr):
     ``_HASH_CHUNK`` rows at a time; numeric columns are zero-copy views;
     'item' mode folds the exact (values, counts) table of Arrow's C++
     value_counts, 'ivalue' mode the exact counts of ``np.unique``."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    arr = one_array(arr)
     if arr.null_count:
         arr = arr.drop_null()
     mode = spec.input_mode
@@ -455,6 +454,13 @@ _DIRECT_SCAN_MAX_FILES = 4096
 _DIRECT_SCAN_MIN_ROWS = 1_000_000
 
 
+def _as_planned(got: pa.DataType, want: pa.DataType) -> bool:
+    """A direct-read column of type ``got`` reads as the planned
+    ``want``; a string column accepts large_string, whose values are
+    the same."""
+    return got == want or (want == pa.string() and got == pa.large_string())
+
+
 def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str, SketchSpec]],
                   hash_mode: str) -> tuple[list, dict] | None:
     """([(local_path, row_group_index)], {name: arrow type}) for a direct
@@ -502,7 +508,6 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
         if parsed.scheme not in ("file", ""):
             return None
         paths.append(urllib.parse.unquote(parsed.path))
-    # a string column accepts large_string — same values either way
     col_types = {k: pa.string() for k in keys}
     col_types.update({sketches[n][0]: want for n, want in wants.items()})
     tasks: list = []
@@ -516,8 +521,7 @@ def _direct_tasks(df: DataFrame, keys: list[str], sketches: dict[str, tuple[str,
                 idx = pf.schema_arrow.get_field_index(c)
                 if idx < 0:
                     return None  # renamed/missing column: fall back
-                got = pf.schema_arrow.field(idx).type
-                if got != want and not (want == pa.string() and got == pa.large_string()):
+                if not _as_planned(pf.schema_arrow.field(idx).type, want):
                     return None  # heterogeneous column: fall back
             total_rows += pf.metadata.num_rows
             tasks.extend((p, rg) for rg in range(pf.metadata.num_row_groups))
@@ -543,9 +547,6 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
     read = list(dict.fromkeys(keys + [col for col, _ in sketches.values()]))
     by_dict = list(dict.fromkeys(col for n, (col, _) in sketches.items() if wants[n] == pa.string() and col not in keys))
 
-    def whole(arr: pa.ChunkedArray) -> pa.Array:
-        return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()  # no copy of one chunk
-
     def xxhash64(arr: pa.Array) -> pa.Array:
         """Spark's xxhash64 of one chunk, nulls kept; a dictionary chunk
         hashes its dictionary and takes the hashes by its indices."""
@@ -565,19 +566,19 @@ def _row_groups(tasks: list, keys: list[str], sketches: dict[str, tuple[str, Ske
                 p, rg = tasks[int(i)]
                 try:
                     tbl = pq.ParquetFile(p, read_dictionary=by_dict).read_row_group(rg, columns=read)
-                    cols = {k: whole(tbl.column(k)) for k in keys}
+                    cols = {k: one_array(tbl.column(k)) for k in keys}
                     hashed: dict = {}
                     for name, (col, spec) in sketches.items():
                         arr = tbl.column(col)
                         got = arr.type.value_type if pa.types.is_dictionary(arr.type) else arr.type
-                        if got != wants[name] and not (wants[name] == pa.string() and got == pa.large_string()):
+                        if not _as_planned(got, wants[name]):
                             # the file changed after planning
                             raise pa.ArrowTypeError(f"column {col} is {arr.type}, planned {wants[name]}")
                         if spec.input_mode == "value":
-                            cols[f"__in_{name}"] = whole(arr)
+                            cols[f"__in_{name}"] = one_array(arr)
                             continue
                         if col not in hashed:
-                            hashed[col] = whole(pa.chunked_array([xxhash64(c) for c in arr.chunks], pa.int64()))
+                            hashed[col] = one_array(pa.chunked_array([xxhash64(c) for c in arr.chunks], pa.int64()))
                         cols[f"__in_{name}"] = hashed[col]
                 except (OSError, KeyError, pa.ArrowException) as e:
                     raise RuntimeError(

@@ -14,6 +14,14 @@ import numpy as np
 import pyarrow as pa
 
 
+def one_array(arr: pa.Array | pa.ChunkedArray) -> pa.Array:
+    """``arr`` as one Array: a lone chunk is returned as it is, with no
+    copy; more chunks are combined."""
+    if isinstance(arr, pa.ChunkedArray):
+        return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    return arr
+
+
 def string_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(uint8 data, int64 offsets) of a string or binary array, read
     off its offsets and data buffers without copying the data."""

@@ -15,6 +15,16 @@ deterministic per-row hash seeds (CMS rows, Bloom double hashing), and
 XXH64 bit-identical to Spark's ``xxhash64`` over long and string
 columns (the direct row-group read's hash).
 
+Each hash has one mixer, a kernel over an (n, L) uint8 matrix of
+equal-length inputs: ``_murmur64a_fixed``, ``_xxhash64_fixed``, and the
+reference murmur2-32 ``sketches.cms_wire.murmur2_32_fixed``.  A long
+is one 8-byte row.  Variable-length strings have one grouping,
+``_by_length``, which every string hash goes through: Arrow buffers,
+encoded Python items (``murmur64a_array``, the reference CMS, Bloom,
+LinearCounting and LogLog wire updates) and the text kernels' whole-doc
+shingles.  The scalar ``murmur64a_bytes`` and
+``cms_wire._murmur2_32_py`` are the tests' oracles.
+
 All arithmetic is modulo 2**64 via ``np.uint64``; numpy overflow
 warnings are intentionally suppressed inside these kernels.
 """
@@ -22,6 +32,7 @@ warnings are intentionally suppressed inside these kernels.
 from __future__ import annotations
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
 U64 = np.uint64
 
@@ -72,34 +83,12 @@ def murmur64a_bytes(data: bytes, seed: int | np.uint64 = MURMUR64_DEFAULT_SEED) 
 
 
 def murmur64a_array(strings: np.ndarray, seed: int | np.uint64 = MURMUR64_DEFAULT_SEED) -> np.ndarray:
-    """Vectorized MurmurHash64A over an object array of str/bytes.
-
-    Groups inputs by byte length so each group is processed as a dense
-    ``(n, L)`` uint8 matrix with fully vectorized 8-byte block mixing.
-    Returns uint64 array of the same shape.
-    """
-    n = len(strings)
-    out = np.zeros(n, dtype=U64)
-    if n == 0:
-        return out
-    enc = np.array(
-        [s if isinstance(s, bytes) else ("" if s is None else str(s)).encode("utf-8") for s in strings],
-        dtype=object,
-    )
-    lengths = np.array([len(b) for b in enc], dtype=np.int64)
-    with np.errstate(over="ignore"):
-        for L in np.unique(lengths):
-            idx = np.nonzero(lengths == L)[0]
-            if L == 0:
-                h = U64(seed) ^ U64(0)
-                h ^= h >> _R
-                h = h * _M
-                h ^= h >> _R
-                out[idx] = h
-                continue
-            buf = np.frombuffer(b"".join(enc[idx]), dtype=np.uint8).reshape(len(idx), L)
-            out[idx] = _murmur64a_fixed(buf, int(L), seed)
-    return out
+    """Vectorized MurmurHash64A over an object array of str/bytes: bytes
+    as they are, ``None`` as ``b""``, anything else as the UTF-8 bytes of
+    its ``str``, grouped by byte length (``_by_length``).  Returns
+    uint64."""
+    enc = [s if isinstance(s, bytes) else ("" if s is None else str(s)).encode("utf-8") for s in strings]
+    return _hash_by_length(*_joined(enc), _murmur64a_fixed, seed)
 
 
 def _murmur64a_fixed(buf: np.ndarray, length: int, seed: int | np.uint64) -> np.ndarray:
@@ -110,7 +99,7 @@ def _murmur64a_fixed(buf: np.ndarray, length: int, seed: int | np.uint64) -> np.
     h = np.full(n, init, dtype=U64)
     n_blocks = length // 8
     if n_blocks:
-        blocks = buf[:, : n_blocks * 8].copy().view("<u8")  # (n, n_blocks)
+        blocks = np.ascontiguousarray(buf[:, : n_blocks * 8]).view("<u8")  # (n, n_blocks)
         for j in range(n_blocks):
             k = blocks[:, j] * _M
             k ^= k >> _R
@@ -131,8 +120,9 @@ def _murmur64a_fixed(buf: np.ndarray, length: int, seed: int | np.uint64) -> np.
 
 
 def murmur64a_int64(values: np.ndarray, seed: int | np.uint64 = MURMUR64_DEFAULT_SEED) -> np.ndarray:
-    """MurmurHash64A of int64 values serialized as 8 little-endian bytes.
-    Fully vectorized single-block path.
+    """MurmurHash64A of int64 values serialized as 8 little-endian bytes:
+    ``_murmur64a_fixed`` over an (n, 8) matrix, as ``xxhash64_long`` is
+    ``_xxhash64_fixed``.
 
     NOTE: this is a fast numeric hash, NOT reference parity for numeric
     inputs — the reference's ``hash64(Object)`` routes ``Long`` through
@@ -140,17 +130,8 @@ def murmur64a_int64(values: np.ndarray, seed: int | np.uint64 = MURMUR64_DEFAULT
     string overload).  The murmur parity mode in ``agg.py`` is
     unaffected: it casts items to string before hashing.
     """
-    with np.errstate(over="ignore"):
-        k = values.astype(np.int64).view(U64) * _M
-        k ^= k >> _R
-        k *= _M
-        h = np.full(len(values), U64(seed) ^ (U64(8) * _M), dtype=U64)
-        h ^= k
-        h *= _M
-        h ^= h >> _R
-        h *= _M
-        h ^= h >> _R
-    return h
+    x = np.ascontiguousarray(values, dtype="<i8")
+    return _murmur64a_fixed(x.view(np.uint8).reshape(-1, 8), 8, seed)
 
 
 def clz64(x: np.ndarray) -> np.ndarray:
@@ -168,27 +149,42 @@ def clz64(x: np.ndarray) -> np.ndarray:
     return n
 
 
-def _by_length(data: np.ndarray, offsets: np.ndarray, fixed, seed) -> np.ndarray:
-    """uint64 hash of each variable-length byte string given as Arrow
-    buffers: ``data`` = concatenated bytes (uint8), ``offsets`` = int
-    offsets of length n+1.  Zero per-row Python: rows are grouped by byte
-    length and ``fixed(buf, L, seed)`` hashes each group as a dense
-    (n, L) uint8 matrix gathered straight from the data buffer, about
-    1 MB of string bytes at a time, so the gather's int64 index matrix
-    stays near 8 MB."""
-    offsets = offsets.astype(np.int64, copy=False)
-    starts, lengths = offsets[:-1], np.diff(offsets)
-    out = np.zeros(len(starts), dtype=U64)
+def _by_length(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray):
+    """The one grouping of variable-length byte strings behind every
+    string hash: yields ``(rows, (k, L) uint8 matrix, L)`` over the
+    strings ``data[starts[i]:starts[i] + lengths[i]]``, every row of a
+    matrix ``L`` bytes long, so a fixed-length kernel hashes each group
+    with no per-row Python.  A group's rows are copied out of a
+    sliding-window view of ``data`` (one index per row, none per byte),
+    about 1 MB of string bytes at a time."""
+    lengths = np.asarray(lengths, dtype=np.int64)
     order = np.argsort(lengths, kind="stable")
     for sel in np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1):
         if not len(sel):
             continue
         L = int(lengths[sel[0]])
+        windows = sliding_window_view(data, L)
         step = max(1, (1 << 20) // max(L, 1))
         for lo in range(0, len(sel), step):
-            part = sel[lo:lo + step]
-            out[part] = fixed(data[starts[part][:, None] + np.arange(L, dtype=np.int64)[None, :]], L, seed)
+            rows = sel[lo:lo + step]
+            yield rows, windows[starts[rows]], L
+
+
+def _hash_by_length(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+                    fixed, seed) -> np.ndarray:
+    """uint64 hash of each byte string of ``_by_length``, each group
+    hashed by the matrix kernel ``fixed(buf, L, seed)``."""
+    out = np.zeros(len(starts), dtype=U64)
+    for rows, buf, L in _by_length(data, starts, lengths):
+        out[rows] = fixed(buf, L, seed)
     return out
+
+
+def _joined(enc: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(uint8 data, starts, lengths) of a list of byte strings laid end
+    to end: what ``_by_length`` reads."""
+    lengths = np.fromiter(map(len, enc), dtype=np.int64, count=len(enc))
+    return np.frombuffer(b"".join(enc), dtype=np.uint8), np.cumsum(lengths) - lengths, lengths
 
 
 def murmur64a_chunked(data: np.ndarray, offsets: np.ndarray,
@@ -196,7 +192,7 @@ def murmur64a_chunked(data: np.ndarray, offsets: np.ndarray,
     """MurmurHash64A over variable-length byte strings given as Arrow
     buffers (``arrowbuf.string_bytes``), grouped by byte length
     (``_by_length``).  Returns uint64."""
-    return _by_length(data, offsets, _murmur64a_fixed, seed)
+    return _hash_by_length(data, offsets[:-1], np.diff(offsets), _murmur64a_fixed, seed)
 
 
 # ---------------------------------------------------------------------------
@@ -282,4 +278,4 @@ def xxhash64_utf8(data: np.ndarray, offsets: np.ndarray,
     (``_by_length``): exactly what Spark's ``xxhash64(stringCol)``
     computes over each value's UTF-8 bytes.  Returns int64 (Spark's
     signed representation)."""
-    return _by_length(data, offsets, _xxhash64_fixed, seed).view(np.int64)
+    return _hash_by_length(data, offsets[:-1], np.diff(offsets), _xxhash64_fixed, seed).view(np.int64)

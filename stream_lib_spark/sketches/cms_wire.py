@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..hashing import _by_length, _joined
 from .base import SketchMergeError
 
 _M32 = np.int32(0x5BD1E995)
@@ -139,22 +140,6 @@ def _as_str_objects(arr: np.ndarray) -> np.ndarray:
     return arr
 
 
-def bucket_encoded(enc: list):
-    """Group a list of encoded byte strings by length and yield
-    ``(sel_indices, (k, L) uint8 buffer, L)`` — the shared shape every
-    per-item encode path feeds into the fixed-width murmur kernels
-    (also used by lc_wire._murmur32_items; one copy, not three)."""
-    lengths = np.array([len(b) for b in enc], dtype=np.int64)
-    enc_arr = np.array(enc, dtype=object)
-    for L in np.unique(lengths):
-        sel = np.nonzero(lengths == L)[0]
-        buf = (
-            np.frombuffer(b"".join(enc_arr[sel]), dtype=np.uint8).reshape(len(sel), int(L))
-            if L else np.empty((len(sel), 0), dtype=np.uint8)
-        )
-        yield sel, buf, int(L)
-
-
 def string_hash_buckets(items, depth: int, width: int) -> np.ndarray:
     """(n, depth) bucket indices — Filter.getHashBuckets semantics.
     Java's "UTF-16" charset = big-endian BOM + UTF-16BE payload.
@@ -169,16 +154,18 @@ def string_hash_buckets(items, depth: int, width: int) -> np.ndarray:
     hazards and stays O(total bytes).  The length-bucketed kernel and
     the scalar big-int path for long rows (~100x on multi-MB items) are
     where the real vectorization lives; see BENCH.md "encoder
-    micro-bench"."""
+    micro-bench".  The encoded items are grouped by byte length
+    (``hashing._by_length``), and each group's h1/h2 pair comes from one
+    matrix."""
     arr = _coerce_batch(items)
     if arr.dtype.kind == "O":
         arr = _as_str_objects(arr)
     enc = [b"\xfe\xff" + str(s).encode("utf-16-be") for s in arr]
     out = np.empty((len(enc), depth), dtype=np.int64)
     rows32 = np.arange(depth, dtype=np.int32)
-    for sel, buf, L in bucket_encoded(enc):
-        h1 = murmur2_32_fixed(buf, int(L), 0)
-        h2 = murmur2_32_fixed(buf, int(L), h1)
+    for sel, buf, L in _by_length(*_joined(enc)):
+        h1 = murmur2_32_fixed(buf, L, 0)
+        h2 = murmur2_32_fixed(buf, L, h1)
         with np.errstate(over="ignore"):
             # (h1 + i*h2) in WRAPPING int32 = Java's int arithmetic
             v = h1[:, None] + rows32[None, :] * h2[:, None]

@@ -16,6 +16,7 @@ import math
 
 import numpy as np
 
+from ..hashing import _by_length, _joined
 from .base import SketchMergeError
 from .cms_wire import murmur2_32_fixed
 
@@ -26,13 +27,12 @@ def _murmur32_items(items) -> np.ndarray:
     # 0.29s vs 0.50s per 1M ASCII items (str.encode is near-free for
     # ASCII; the U-cast chain is not).  Both the UTF-8 path here and
     # the UTF-16 path (cms_wire.string_hash_buckets) use per-item
-    # encode listcomps feeding the shared bucket_encoded kernel — the
-    # hardened vectorized encoder measured slower and was deleted.
-    from .cms_wire import bucket_encoded
-
+    # encode listcomps feeding the one length grouping every string
+    # hash shares (hashing._by_length) — the hardened vectorized
+    # encoder measured slower and was deleted.
     enc = [str(s).encode("utf-8") for s in items]
     out = np.empty(len(enc), dtype=np.int32)
-    for sel, buf, L in bucket_encoded(enc):
+    for sel, buf, L in _by_length(*_joined(enc)):
         out[sel] = murmur2_32_fixed(buf, L, -1)
     return out
 

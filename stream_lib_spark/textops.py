@@ -172,7 +172,7 @@ def _shingle_hash_flat(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray,
     string building.  Returns (flat shingle hashes, per-doc starts)."""
     from numpy.lib.stride_tricks import sliding_window_view
 
-    from .hashing import _murmur64a_fixed
+    from .hashing import _hash_by_length, _murmur64a_fixed
 
     n_docs = len(lens)
     counts = np.where(lens >= n, lens - n + 1, 1)
@@ -192,17 +192,10 @@ def _shingle_hash_flat(vals: np.ndarray, starts: np.ndarray, lens: np.ndarray,
         big_out[out_starts[~big]] = False
         out[big_out] = wh[_in_one_doc(n_windows, starts, lens, n)]
     if (~big).any():
-        # whole-doc fallback shingles: variable byte lengths → chunked
-        small_starts, small_lens = starts[~big], lens[~big]
-        offs = np.empty(len(small_starts) + 1, dtype=np.int64)
-        offs[0] = 0
-        np.cumsum(small_lens * 8, out=offs[1:])
-        buf = np.concatenate(
-            [b[s * 8 : (s + L) * 8] for s, L in zip(small_starts, small_lens)]
-        ) if len(small_starts) else np.empty(0, dtype=np.uint8)
-        from .hashing import murmur64a_chunked
-
-        out[out_starts[~big]] = murmur64a_chunked(buf, offs)
+        # whole-doc fallback shingles: each short doc's span of the flat
+        # buffer, hashed in place at its variable byte length
+        out[out_starts[~big]] = _hash_by_length(
+            b, starts[~big] * 8, lens[~big] * 8, _murmur64a_fixed, np.uint64(0xE17A1465))
     return out, out_starts
 
 

@@ -90,7 +90,10 @@ def test_string_hash_buckets_edge_parity():
     tricky = ["", "a", "ab\u0100", "\u0100", "x\x00", "\x00", "inner\x00nul",
               "emoji \U0001F600 mixed", "\u0100" * 7, "plain",
               "\u00fcn\u00efc\u00f8d\u00e9", "\u65e5\u672c\u8a9e"]
-    items = tricky + [f"user-{i}" for i in range(200)] + list(range(50))
+    # 300 UTF-16 items of 4,002 bytes span more than one ~1 MB gather
+    # step ((1 << 20) // 4002 = 262 rows)
+    spanning = [f"{i:04d}" + "\u0100" * 1996 for i in range(300)]
+    items = tricky + [f"user-{i}" for i in range(200)] + list(range(50)) + spanning
     got = string_hash_buckets(items, 5, 997)
     rows32 = np.arange(5, dtype=np.int32)
     for i, s in enumerate(items):
@@ -110,7 +113,7 @@ def test_string_hash_buckets_edge_parity():
 
 def test_long_item_split_and_scalar_murmur():
     """Code-review r6 #5: huge items must not blow up batch memory
-    (bucket_encoded is O(total bytes)), and the murmur kernel's scalar
+    (the length grouping is O(total bytes)), and the murmur kernel's scalar
     big-int path handles long few-row buckets bit-identically (~100x
     faster than the numpy-scalar-per-4-bytes loop)."""
     from stream_lib_spark.sketches.cms_wire import (

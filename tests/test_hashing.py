@@ -19,9 +19,14 @@ def test_murmur64a_smhasher_golden():
 
 def test_vectorized_matches_scalar():
     strs = ["", "a", "ab", "abcdefg", "abcdefgh", "abcdefghi", "hashthis", "héllo wörld", "x" * 100]
+    # None hashes as b"", bytes as they are; 300 rows of 4,000 bytes
+    # span more than one ~1 MB gather step ((1 << 20) // 4000 = 262 rows)
+    strs += [None, b"", b"\x00\xff raw", "nul\x00inside\x00", "\u65e5\u672c\U0001F600", b"\x80" * 9]
+    strs += [f"{i:04d}" + "\u00e9" * 1998 for i in range(300)]
     vec = murmur64a_array(np.array(strs, dtype=object))
     for s, v in zip(strs, vec):
-        assert murmur64a_bytes(s.encode("utf-8")) == int(v)
+        b = s if isinstance(s, bytes) else ("" if s is None else s).encode("utf-8")
+        assert murmur64a_bytes(b) == int(v)
 
 
 def test_int64_path_matches_bytes():

@@ -8,6 +8,7 @@ import os
 
 import numpy as np
 
+from stream_lib_spark.sketches.cms_wire import _murmur2_32_py
 from stream_lib_spark.sketches.lc_wire import ReferenceLC
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "..", "tools", "golden",
@@ -32,6 +33,13 @@ def test_bitmap_and_estimate_parity():
         assert lc.cardinality() == ref_card
         assert lc.to_bytes() == blob
         assert lc.is_set([f"item-{i}" for i in range(min(n, 50))]).all()
+    # 300 items of 4,000 UTF-8 bytes span more than one ~1 MB gather step
+    # ((1 << 20) // 4000 = 262 rows): each bit position is the scalar
+    # murmur2-32 (seed -1) of its item
+    spanning = [f"{i:04d}" + "\u00e9" * 1998 for i in range(300)]
+    lc = ReferenceLC.new(4096)
+    want = [(_murmur2_32_py(s.encode("utf-8"), 4000, -1) & 0xFFFFFFFF) % lc.length for s in spanning]
+    assert lc._positions(spanning).tolist() == want
 
 
 def test_split_merge_equals_whole():
